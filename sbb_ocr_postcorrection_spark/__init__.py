@@ -11,7 +11,8 @@ string)``:
   character-ngram noisy-span detector;
 * stage 2 (the Translator analog): a deterministic confusion-pattern +
   dictionary-argmin correction kernel applied only to flagged spans;
-* everything per-document runs as batched Arrow ``mapInPandas`` kernels,
+* everything per-document runs as batched Arrow kernels (the extraction
+  kernel as ``mapInArrow``, the operator library's as ``mapInPandas``),
   everything cross-document as DataFrame/Catalyst relational ops.
 
 Layout:
@@ -21,7 +22,7 @@ Layout:
   correct        confusion+dictionary corrector (pure)
   kernel         per-document oracle: html bytes → extraction result
   datagen        deterministic synthetic pages generator
-  kernels_spark  mapInPandas wrappers for stage 1/2
+  kernels_spark  the fused stage 1+2 kernel as one mapInArrow stage
   pipeline       end-to-end job: partition layout, salting, resume manifest
   operators/     relational operator library (SURVEY.md §2 mappings)
   queries        the driver-facing queries()/oracle_sql() registry

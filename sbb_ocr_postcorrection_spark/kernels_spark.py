@@ -1,15 +1,20 @@
-"""Arrow-batched Spark kernels wrapping the pure per-document kernel.
+"""Arrow-batched Spark kernel wrapping the pure per-document kernel.
 
-Both stages are ``mapInPandas`` iterator kernels (SURVEY.md §2.9 M1-M8
-mapping): Spark feeds Arrow batches, we run the *same* pure functions the
-oracle uses (kernel.py), so Spark output is byte-identical to the oracle by
-construction — the per-row invariant of BASELINE.json input_hint.
+``extract_stage`` is a ``mapInArrow`` iterator kernel (SURVEY.md §2.9 M1-M8
+mapping): Spark feeds Arrow record batches, we run the *same* pure function
+the oracle uses (``kernel.run_document``), so Spark output is
+byte-identical to the oracle by construction — the per-row invariant of
+BASELINE.json input_hint. Batch and stream (streaming/ingest.py) share
+this one stage.
 
 Scale notes:
 * html is BinaryType and KB-MB per row — callers must cap
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pipeline.py does) and
-  prune the column as soon as stage 1 consumed it;
-* the kernels are per-document pure functions: no cross-row state, no
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pipeline.py does; it
+  bounds ``mapInArrow`` batches too) and the kernel drops the column;
+* no pandas on the hop: ``url``, ``warc_ts`` and ``lang`` pass through as
+  the input Arrow columns, and ``spans`` is built as one list array over
+  three flat child arrays instead of per-row Python tuples;
+* the kernel is a per-document pure function: no cross-row state, no
   shuffle, safe under task retries and speculative execution;
 * stage 2 routes internally on the stage-1 flags (the reference's
   detector→translator routing, mt/cli_correct.py:1160-1186) — flagged spans
@@ -19,21 +24,13 @@ Scale notes:
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
-from .kernel import correct_document, detect_document, BlockDetection
+from .kernel import run_document
 
-# stage-1 output schema: html is dropped, detections carried as JSON
-DETECT_SCHEMA = (
-    "url string, warc_ts timestamp, host string, lang string, "
-    "detections string, n_blocks int, n_content_blocks int, "
-    "n_spans int, n_flagged int, chars_in long"
-)
-
-# stage-2 (final) schema — spans is a typed struct array (FIXTURES.md §1
+# output schema — spans is a typed struct array (FIXTURES.md §1
 # companion-table contract), not a JSON string
 EXTRACT_SCHEMA = (
     "url string, warc_ts timestamp, host string, lang string, "
@@ -43,148 +40,92 @@ EXTRACT_SCHEMA = (
     "chars_in long, chars_out long"
 )
 
+# Arrow types of EXTRACT_SCHEMA's computed columns (the pass-through ones
+# keep the type Spark sent)
+_SPAN_TYPE = pa.struct(
+    [("start", pa.int32()), ("end", pa.int32()), ("flagged", pa.bool_())]
+)
+_SPANS_TYPE = pa.list_(_SPAN_TYPE)
+
 
 def _host_of(url: str) -> str:
     rest = url.split("://", 1)[-1]
     return rest.split("/", 1)[0]
 
 
-def detect_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 1 mapInPandas kernel: (url, warc_ts, html, lang) → detections."""
-    for pdf in batches:
-        rows = []
-        for url, ts, html, lang in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-        ):
-            detections, n_blocks, chars_in = detect_document(
-                bytes(html) if html is not None else b""
-            )
-            n_spans = sum(len(d.spans) for d in detections)
-            n_flagged = sum(d.n_flagged for d in detections)
-            rows.append(
-                {
-                    "url": url,
-                    "warc_ts": ts,
-                    "host": _host_of(url),
-                    "lang": lang,
-                    "detections": json.dumps(
-                        # spans are plain tuples; json serializes them as
-                        # [start, end, flagged] arrays directly
-                        [[d.block_index, d.text, d.spans] for d in detections],
-                        ensure_ascii=False,
-                    ),
-                    "n_blocks": n_blocks,
-                    "n_content_blocks": len(detections),
-                    "n_spans": n_spans,
-                    "n_flagged": n_flagged,
-                    "chars_in": chars_in,
-                }
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "url", "warc_ts", "host", "lang", "detections", "n_blocks",
-                "n_content_blocks", "n_spans", "n_flagged", "chars_in",
-            ],
-        )
+def _spans_array(offsets: list[int], flat: list[tuple[int, int, bool]]) -> pa.Array:
+    """One list<struct> array from the batch's spans laid end to end."""
+    starts, ends, flags = zip(*flat) if flat else ((), (), ())
+    values = pa.StructArray.from_arrays(
+        [
+            pa.array(starts, pa.int32()),
+            pa.array(ends, pa.int32()),
+            pa.array(flags, pa.bool_()),
+        ],
+        fields=list(_SPAN_TYPE),
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), values, type=_SPANS_TYPE
+    )
 
 
-def correct_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Stage 2 mapInPandas kernel: detections → corrected extracted_text."""
-    for pdf in batches:
-        out = pdf.copy()
-        texts, spans_col, chars_out = [], [], []
-        for det_json in pdf["detections"]:
-            detections = [
-                BlockDetection(
-                    block_index=bi,
-                    text=text,
-                    spans=tuple((s, e, f) for s, e, f in spans),
-                    n_flagged=sum(1 for s in spans if s[2]),
-                )
-                for bi, text, spans in json.loads(det_json)
-            ]
-            text, spans = correct_document(detections)
-            texts.append(text)
-            spans_col.append(
-                [{"start": s, "end": e, "flagged": f} for s, e, f in spans]
-            )
-            chars_out.append(len(text))
-        out = out.drop(columns=["detections"])
-        out["extracted_text"] = texts
-        out["spans"] = spans_col
-        out["chars_out"] = chars_out
-        yield out[
-            [
-                "url", "warc_ts", "host", "lang", "extracted_text", "spans",
-                "n_blocks", "n_content_blocks", "n_spans", "n_flagged",
-                "chars_in", "chars_out",
-            ]
-        ]
-
-
-def fused_extract_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def extract_stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Fused detect→correct kernel: both stages inside ONE Python worker
     pass (the reference's in-kernel detector→translator routing,
     mt/cli_correct.py:1160-1186). Fusing matters operationally: chaining two
-    mapInPandas operators runs TWO Python workers per task (2× CPU
-    oversubscription at full parallelism) and ships the bulky intermediate
-    detections through the JVM — measured 6× slower at 32-way than fused."""
-    from .kernel import run_document
-
-    for pdf in batches:
-        # columnar build: list-of-row-dicts + dict-per-span was ~26% of
-        # stage wall time (measured offline, 5000 docs: 0.42 s on a 1.17 s
-        # kernel) — pandas re-scans every dict's keys and each span dict is
-        # an allocation. Arrow converts tuple structs directly (and ~40%
-        # faster than dict structs), so r.spans passes through untouched.
-        hosts, texts, spans = [], [], []
+    map operators runs TWO Python workers per task (2× CPU oversubscription
+    at full parallelism) and ships the bulky intermediate detections
+    through the JVM — measured 6× slower at 32-way than fused."""
+    for batch in batches:
+        hosts, texts = [], []
         n_blocks, n_content, n_spans, n_flagged = [], [], [], []
         chars_in, chars_out = [], []
-        for url, html in zip(pdf["url"], pdf["html"]):
+        offsets, flat = [0], []
+        for url, html in zip(
+            batch.column("url").to_pylist(), batch.column("html").to_pylist()
+        ):
             # null html = fetch failure row: emit an empty extraction, never
             # crash the partition (a task retry would just re-crash)
-            r = run_document(bytes(html) if html is not None else b"")
+            r = run_document(html if html is not None else b"")
             hosts.append(_host_of(url))
             texts.append(r.extracted_text)
-            spans.append(r.spans)
+            flat.extend(r.spans)
+            offsets.append(len(flat))
             n_blocks.append(r.n_blocks)
             n_content.append(r.n_content_blocks)
             n_spans.append(r.n_spans)
             n_flagged.append(r.n_flagged)
             chars_in.append(r.chars_in)
             chars_out.append(r.chars_out)
-        # pass-through columns as numpy (positional — a Series would align
-        # on the incoming batch index and silently misplace rows)
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"].to_numpy(),
-                "warc_ts": pdf["warc_ts"].to_numpy(),
-                "host": hosts,
-                "lang": pdf["lang"].to_numpy(),
-                "extracted_text": texts,
-                "spans": spans,
-                "n_blocks": n_blocks,
-                "n_content_blocks": n_content,
-                "n_spans": n_spans,
-                "n_flagged": n_flagged,
-                "chars_in": chars_in,
-                "chars_out": chars_out,
-            }
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("url"),
+                batch.column("warc_ts"),
+                pa.array(hosts, pa.string()),
+                batch.column("lang"),
+                pa.array(texts, pa.string()),
+                _spans_array(offsets, flat),
+                pa.array(n_blocks, pa.int32()),
+                pa.array(n_content, pa.int32()),
+                pa.array(n_spans, pa.int32()),
+                pa.array(n_flagged, pa.int32()),
+                pa.array(chars_in, pa.int64()),
+                pa.array(chars_out, pa.int64()),
+            ],
+            names=[
+                "url", "warc_ts", "host", "lang", "extracted_text", "spans",
+                "n_blocks", "n_content_blocks", "n_spans", "n_flagged",
+                "chars_in", "chars_out",
+            ],
         )
 
 
-def extract_pages(pages_df, two_stage: bool = False):
+def extract_pages(pages_df):
     """DataFrame-level extraction: pages → extraction table.
 
     ``pages_df`` needs columns (url, warc_ts, html, lang); extra columns are
-    pruned (never carry html further than stage 1). Default is the fused
-    single-worker kernel; ``two_stage=True`` materializes the stage-1
-    detections as a DataFrame boundary (useful when a caller wants to
-    persist/inspect detections between the stages).
+    pruned, and html goes no further than the kernel.
     """
-    src = pages_df.select("url", "warc_ts", "html", "lang")
-    if two_stage:
-        stage1 = src.mapInPandas(detect_stage, schema=DETECT_SCHEMA)
-        return stage1.mapInPandas(correct_stage, schema=EXTRACT_SCHEMA)
-    return src.mapInPandas(fused_extract_stage, schema=EXTRACT_SCHEMA)
+    return pages_df.select("url", "warc_ts", "html", "lang").mapInArrow(
+        extract_stage, schema=EXTRACT_SCHEMA
+    )

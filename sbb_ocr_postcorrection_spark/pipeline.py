@@ -20,12 +20,21 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .kernels_spark import extract_pages
 
 N_URL_BUCKETS = 16
 N_SALTS = 8  # host-aggregation salting fan-out
+
+MANIFEST_SCHEMA = (
+    "dt date, bkt int, n_docs long, chars_in long, chars_out long, "
+    "n_flagged long, n_spans long, completed_at_epoch long, "
+    "snapshot_id long"
+)
 
 
 def build_session(
@@ -34,9 +43,10 @@ def build_session(
     shuffle_partitions: int | None = None,
     arrow_batch: int = 256,
 ) -> SparkSession:
-    """Tuned local session. ``arrow_batch`` caps Arrow batch row count so
-    html-binary batches stay memory-bounded (SURVEY.md §7.3 binary-heavy
-    rows)."""
+    """Tuned local session. ``arrow_batch`` caps the row count of every
+    Arrow batch, the extraction kernel's ``mapInArrow`` batches included,
+    so html-binary batches stay memory-bounded (SURVEY.md §7.3
+    binary-heavy rows)."""
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # ship this package to Python workers regardless of the driver's cwd —
@@ -127,6 +137,22 @@ def _manifest_path(output_dir: str) -> str:
     return os.path.join(output_dir, "_manifest")
 
 
+def _arrow_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-side frame (``rows`` of tuples in ``ddl`` column
+    order) built by way of a ``pyarrow.Table``: it plans as a
+    LocalTableScan and starts no Python task. ``createDataFrame`` of a
+    Python list is a Python RDD scan instead, and every evaluation of it
+    starts Python workers on the control path."""
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def load_manifest(spark: SparkSession, output_dir: str) -> DataFrame:
     """Completed-partition manifest (dt, bkt, metrics...). Empty if absent.
 
@@ -143,12 +169,7 @@ def load_manifest(spark: SparkSession, output_dir: str) -> DataFrame:
         msg = str(exc)
         if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
             raise
-        return spark.createDataFrame(
-            [],
-            "dt date, bkt int, n_docs long, chars_in long, chars_out long, "
-            "n_flagged long, n_spans long, completed_at_epoch long, "
-            "snapshot_id long",
-        )
+        return _arrow_frame(spark, [], MANIFEST_SCHEMA)
     if "snapshot_id" not in m.columns:
         # pre-snapshot-log manifest (legacy layout): nothing to dedupe
         # against, every row predates snapshot 1
@@ -244,7 +265,7 @@ def _run_claimed(
     intent and snapshot commit (any failure here releases the intent)."""
     from . import snapshots
 
-    pending = spark.createDataFrame(pending_rows, "dt date, bkt int")
+    pending = _arrow_frame(spark, pending_rows, "dt date, bkt int")
 
     # process only pending partitions; broadcast the (small) pending list.
     # dt/bkt are pure functions of (url, warc_ts), so they are recomputed
@@ -293,12 +314,7 @@ def _run_claimed(
         .withColumn("snapshot_id", F.lit(ticket["next_id"]))
         .collect()
     )
-    manifest_df = spark.createDataFrame(
-        metric_rows,
-        "dt date, bkt int, n_docs long, chars_in long, chars_out long, "
-        "n_flagged long, n_spans long, completed_at_epoch long, "
-        "snapshot_id long",
-    )
+    manifest_df = _arrow_frame(spark, metric_rows, MANIFEST_SCHEMA)
     # resume=False reprocesses everything: supersede the manifest
     # instead of appending duplicate (dt, bkt) rows
     manifest_mode = "append" if resume else "overwrite"

@@ -565,8 +565,8 @@ def synth_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end two-stage extraction over synthesized pages: detect →
-    correct kernels, then the per-url output with metrics + content digest."""
+    """The end-to-end two-stage extraction over synthesized pages: the
+    fused detect → correct kernel, then the per-url output with metrics + content digest."""
     from .kernels_spark import extract_pages
 
     _pin(spark)

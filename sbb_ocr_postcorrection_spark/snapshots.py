@@ -264,6 +264,8 @@ def read_extractions(spark, output_dir: str):
     scan via dynamic partition pruning, never a full-table filter."""
     from pyspark.sql import functions as F
 
+    from .pipeline import _arrow_frame
+
     df = spark.read.parquet(os.path.join(output_dir, "extractions"))
     snap = current_snapshot(output_dir)
     if snap is None:
@@ -271,7 +273,7 @@ def read_extractions(spark, output_dir: str):
     parts = [(p[0], int(p[1])) for p in snap["partitions"]]
     if not parts:
         return df.where(F.lit(False))
-    vis = spark.createDataFrame(parts, "dt string, bkt int").select(
+    vis = _arrow_frame(spark, parts, "dt string, bkt int").select(
         F.col("dt").cast("date").alias("dt"), "bkt"
     )
     return df.join(F.broadcast(vis), ["dt", "bkt"], "left_semi")

@@ -3,7 +3,9 @@ per-crawl-day metric windows.
 
 Design notes for the 100-TB continuous-crawl extension:
 * the fused kernel is partition-local and stateless, so it lifts to a
-  stream unchanged (`mapInPandas` works on streaming DataFrames);
+  stream unchanged: ``extract_stream`` runs the batch job's own
+  ``mapInArrow`` stage (``kernels_spark.extract_stage``) on the streaming
+  DataFrame;
 * metrics aggregate over event-time windows of ``warc_ts`` with a
   watermark — late WARC records (re-crawls, delayed uploads) fold into
   their window until the watermark passes;
@@ -16,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..kernels_spark import EXTRACT_SCHEMA, fused_extract_stage
+from ..kernels_spark import extract_pages
 from ..operators.urls import blocklist_cols
 from ..sources.pages_io import PAGES_SCHEMA
 
@@ -31,10 +33,9 @@ def read_pages_stream(spark: SparkSession, path: str, max_files: int = 4) -> Dat
 
 
 def extract_stream(pages_stream: DataFrame) -> DataFrame:
-    """The batch kernel, lifted: same schema, same bytes per url."""
-    return pages_stream.select("url", "warc_ts", "html", "lang").mapInPandas(
-        fused_extract_stage, schema=EXTRACT_SCHEMA
-    )
+    """The batch kernel, lifted: same stage, same schema, same bytes per
+    url."""
+    return extract_pages(pages_stream)
 
 
 def robots_gate_stream(

@@ -13,7 +13,7 @@ sys.path.insert(0, REPO)
 
 SHOW = [
     ("extract_pipeline",
-     "single narrow mapInPandas pipeline; only Exchange = input-spread repartition below the kernel"),
+     "single narrow MapInArrow pipeline; only Exchange = input-spread repartition below the kernel"),
     ("filter_project",
      "PushedFilters on l_shipdate/l_discount reach the parquet scan; ReadSchema pruned to 4 columns"),
     ("broadcast_dim_join",

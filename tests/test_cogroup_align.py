@@ -10,24 +10,25 @@ from sbb_ocr_postcorrection_spark.operators.cogroup_align import cogroup_alignme
 def _split_sides(spark, pages_df):
     """Decompose pages into the two line relations the reference consumed:
     OCR = extracted content blocks, GT = text-column lines."""
-    from sbb_ocr_postcorrection_spark.kernels_spark import detect_stage, DETECT_SCHEMA
-    import json
 
-    s1 = pages_df.select("url", "warc_ts", "html", "lang").mapInPandas(
-        detect_stage, schema=DETECT_SCHEMA
-    )
-
-    def to_lines(batches):
+    def ocr_lines(batches):
+        # test-local kernel: one row per content block, in block order,
+        # straight from the stage-1 oracle
         import pandas as pd
+
+        from sbb_ocr_postcorrection_spark.kernel import detect_document
 
         for pdf in batches:
             rows = []
-            for url, lang, det in zip(pdf["url"], pdf["lang"], pdf["detections"]):
-                for pos, (_bi, text, _spans) in enumerate(json.loads(det)):
-                    rows.append({"doc_id": url, "pos": pos, "line": text, "lang": lang})
+            for url, lang, html in zip(pdf["url"], pdf["lang"], pdf["html"]):
+                detections, _, _ = detect_document(bytes(html) if html is not None else b"")
+                for pos, d in enumerate(detections):
+                    rows.append({"doc_id": url, "pos": pos, "line": d.text, "lang": lang})
             yield pd.DataFrame(rows, columns=["doc_id", "pos", "line", "lang"])
 
-    ocr = s1.mapInPandas(to_lines, schema="doc_id string, pos int, line string, lang string")
+    ocr = pages_df.select("url", "html", "lang").mapInPandas(
+        ocr_lines, schema="doc_id string, pos int, line string, lang string"
+    )
     gt = (
         pages_df.select(
             F.col("url").alias("doc_id"),

@@ -47,16 +47,16 @@ def test_semi_anti_are_joins_not_scans(spark):
 
 
 def test_extract_kernel_no_shuffle(spark):
-    """The two-stage extract itself is shuffle-free; the only Exchange in
+    """The fused extract itself is shuffle-free; the only Exchange in
     the flagship plan is the deliberate input-spread repartition below the
-    kernels (toy parquet = one split)."""
+    kernel (toy parquet = one split)."""
     from sbb_ocr_postcorrection_spark.queries import extract_flagship
 
     plan = plan_of(extract_flagship(spark, SF_DIR))
     assert plan.count("Exchange") == 1
     assert "REPARTITION_BY_NUM" in plan
-    # no exchange above the kernels: the repartition must precede both
-    assert plan.index("Exchange") > plan.index("MapInPandas")
+    # no exchange above the kernel: the repartition must precede it
+    assert plan.index("Exchange") > plan.index("MapInArrow")
 
 
 def test_agg_is_two_phase(spark):
