@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from .dedup import candidate_jaccard, exact_groups, minhash_lsh_candidates_from, minhash_signatures_from, shingle_table
+from .dedup import exact_groups, minhash_doc_arrays, near_dup_pairs
 from .relational import load, persist_slot
 
 
@@ -130,11 +130,13 @@ def duplicate_components(
     """Cluster-level dedup verdict: every document labeled with its
     duplicate-component id and the component size.
 
-    Edges = exact-duplicate pairs (doc → digest-group keeper) ∪ LSH-verified
-    near-dup pairs (same parameters as deduplicate_corpus, so the two
-    operators agree on what counts as a duplicate). Singleton documents get
-    their own id as component. A pipeline keeps min(doc_id) per component —
-    exactly one survivor per transitive duplicate cluster."""
+    Edges = exact-duplicate pairs (doc → digest-group keeper) ∪
+    near_dup_pairs over the persisted doc-array relation — the SAME
+    function and defaults deduplicate_corpus runs, so the two operators
+    agree on what counts as a duplicate by construction. Singleton
+    documents get their own id as component. A pipeline keeps min(doc_id)
+    per component — exactly one survivor per transitive duplicate
+    cluster."""
     d = load(spark, sf_dir, "documents")
     exact_edges = (
         d.select("doc_id", F.md5("text").alias("content_hash"))
@@ -142,15 +144,10 @@ def duplicate_components(
         .filter(F.col("doc_id") != F.col("keeper_id"))
         .select(F.col("doc_id").alias("src"), F.col("keeper_id").alias("dst"))
     )
-    sh = persist_slot("dup_components_shingles", shingle_table(spark, sf_dir))
-    cands = minhash_lsh_candidates_from(
-        minhash_signatures_from(sh), max_bucket_size=max_bucket_size
-    )
-    near_edges = (
-        candidate_jaccard(cands, sh, max_shingle_df=max_shingle_df)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    )
+    base = persist_slot("dup_components_base", minhash_doc_arrays(spark, sf_dir))
+    near_edges = near_dup_pairs(
+        base, jaccard_threshold, max_shingle_df, max_bucket_size
+    ).select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
     comp = connected_components(exact_edges.unionByName(near_edges))
     labeled = d.select("doc_id").join(
         comp, d["doc_id"] == comp["node"], "left"

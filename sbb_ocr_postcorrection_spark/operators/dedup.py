@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .relational import load
+from .relational import load, persist_slot
 
 # MinHash parameters: 16 permutations, 4 bands × 4 rows. The modulus is
 # Mersenne-31 so a*h+b stays far below 2^63 (Spark 4 runs ANSI mode: long
@@ -388,16 +388,22 @@ def bloom_gate(
 
 def shingle_table(spark, sf_dir) -> DataFrame:
     """(doc_id, lang, shingle) exploded distinct-shingle relation — the
-    shared input of jaccard/minhash.
+    input of jaccard_pairs and decontaminate.
 
-    Two deliberate plan choices:
+    Three deliberate plan choices:
     * tokens are materialized as a column BEFORE the shingle transform —
       inlining the tokenizer into the lambda makes Spark re-evaluate
       split+filter for every element_at (measured 10× slowdown);
     * the scan is repartitioned to the session's parallelism — a small
       parquet file arrives as one partition and would run the CPU-heavy
       explode single-threaded (at real scale the input has enough splits;
-      this keeps the toy-scale plan shaped like the real one)."""
+      this keeps the toy-scale plan shaped like the real one);
+    * the explode takes the INLINE _shingles(toks) expression, never a
+      projected sh_arr attribute: over an attribute Spark's
+      InferFiltersFromGenerate adds size(sh_arr) > 0 and pushes it, the
+      tokenizer with it, into the scan below the round-robin repartition,
+      so every document would be shingled twice, once on a single
+      partition. Explode sh_arr only off a persisted relation."""
     d = load(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -407,26 +413,27 @@ def shingle_table(spark, sf_dir) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    spark,
-    sf_dir,
-    threshold: float = 0.0,
-    k: int = 100,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs within a language block.
+def _jaccard(n_common, n1, n2):
+    """|A∩B| / |A∪B| from the intersection and the two set sizes, rounded
+    to the oracle's 6 decimals — the ONE Jaccard expression of the family."""
+    return F.round(n_common / (n1 + n2 - n_common), 6)
 
-    Plan: explode shingles → self-equi-join on (lang, shingle) → pair
-    intersection counts → join per-doc sizes → J = |∩| / (|a|+|b|-|∩|).
-    At scale the shingle join is the standard blocking trick: only documents
-    sharing a shingle ever meet (no O(n²) cross join).
+
+def _shingle_overlap(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
+    """(id1, id2, n_common, n_sh1, n_sh2) for every same-language pair
+    (id1 < id2) sharing at least one shingle, over an exploded
+    (doc_id, lang, shingle) relation — the ONE all-pairs overlap join.
+
+    Plan: self-equi-join on (lang, shingle) → pair intersection counts →
+    join per-doc sizes. At scale the shingle join is the standard blocking
+    trick: only documents sharing a shingle ever meet (no O(n²) cross
+    join).
 
     ``max_shingle_df`` is the 100-TB knob: drop shingles whose document
     frequency exceeds the cap from the INTERSECTION join (boilerplate
     n-grams pair everything with everything — C(df,2) blows up on hot
     shingles while carrying no near-dup signal). Sizes keep counting all
-    shingles, so capped Jaccard is a lower bound of exact Jaccard. Default
-    None = exact (the DuckDB-oracle-checked configuration).
+    shingles, so capped overlap is a lower bound of the exact one.
 
     r7 note: two rewrites were measured and REJECTED — per-shingle
     posting-list collection (one exchange, but string-keyed collect_list
@@ -435,7 +442,6 @@ def jaccard_pairs(
     rejoins (widens the corpus-sized shuffle rows for a join whose
     post-aggregation side is small: 3.0 s vs 1.8 s). The r6 shape is
     the measured winner and stays."""
-    sh = shingle_table(spark, sf_dir)
     if max_shingle_df is not None:
         hot = (
             sh.groupBy("shingle")
@@ -461,34 +467,43 @@ def jaccard_pairs(
     )
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
-    jac = (
+    return (
         inter.join(sa, F.col("id1") == F.col("sa.doc_id"))
         .join(sb, F.col("id2") == F.col("sb.doc_id"))
         .select(
             "id1",
             "id2",
-            F.round(
-                F.col("n_common")
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
+            "n_common",
+            F.col("sa.n_sh").alias("n_sh1"),
+            F.col("sb.n_sh").alias("n_sh2"),
+        )
+    )
+
+
+def jaccard_pairs(
+    spark,
+    sf_dir,
+    threshold: float = 0.0,
+    k: int = 100,
+    max_shingle_df: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs within a language block: the
+    shingle overlap join (_shingle_overlap, df cap included) scored as
+    J = |∩| / (|a|+|b|-|∩|), top-k by Jaccard. Default max_shingle_df
+    None = exact (the DuckDB-oracle-checked configuration)."""
+    ov = _shingle_overlap(shingle_table(spark, sf_dir), max_shingle_df)
+    return (
+        ov.select(
+            "id1",
+            "id2",
+            _jaccard(F.col("n_common"), F.col("n_sh1"), F.col("n_sh2")).alias(
+                "jaccard"
+            ),
         )
         .filter(F.col("jaccard") > threshold)
         .orderBy(F.desc("jaccard"), F.asc("id1"), F.asc("id2"))
         .limit(k)
     )
-    return jac
-
-
-def minhash_signatures_from(sh: DataFrame) -> DataFrame:
-    """16-permutation MinHash signature per document, fully JVM-side:
-    sig_j = min over shingles of (a_j * (md5_60(shingle) mod M) + b_j) mod M."""
-    h = sh.withColumn("h", F.pmod(md5_60("shingle"), F.lit(_MERSENNE)))
-    sig_cols = [
-        F.min(F.pmod(F.col("h") * F.lit(a) + F.lit(b), F.lit(_MERSENNE))).alias(f"mh_{j}")
-        for j, (a, b) in enumerate(_MINHASH_PERMS)
-    ]
-    return h.groupBy("doc_id").agg(*sig_cols)
 
 
 def _shingle_arrays(spark, sf_dir, d=None) -> DataFrame:
@@ -527,13 +542,12 @@ def minhash_doc_arrays(spark, sf_dir, d=None) -> DataFrame:
 
 
 def minhash_signatures_arr(base: DataFrame) -> DataFrame:
-    """In-array MinHash signatures over minhash_doc_arrays: sig_j =
-    array_min of (a_j*h + b_j) mod M — identical values to
-    minhash_signatures_from (min over the same per-doc hash multiset),
-    with ZERO exchange: the explode + corpus-wide groupBy(doc_id) of the
-    relational form disappears because the per-doc hash set never leaves
-    its row. sh_arr is never empty (_shingles emits >= 1 shingle), so
-    array_min never returns NULL."""
+    """16-permutation MinHash signature per document over
+    minhash_doc_arrays: sig_j = array_min of (a_j*h + b_j) mod M, with
+    h = md5_60(shingle) mod M. ZERO exchange: the per-doc hash set never
+    leaves its row, so no explode + corpus-wide groupBy(doc_id). sh_arr
+    is never empty (_shingles emits >= 1 shingle), so array_min never
+    returns NULL."""
     sig_cols = [
         F.array_min(
             F.transform(
@@ -652,16 +666,13 @@ def minhash_lsh_candidates_salted(
     intra + both self-join sides, and the pushed-down join filters defeat
     ReuseExchange (the signature pipeline would run 3×)."""
     bt = _band_table(minhash_signatures(spark, sf_dir))
-    from .relational import persist_slot
-
-    W = Window
 
     # deterministic chunk assignment: rank within the bucket by doc_id;
     # bucket size rides along so the cap matches the plain form exactly
-    w = W.partitionBy("band", "band_hash").orderBy("doc_id")
+    w = Window.partitionBy("band", "band_hash").orderBy("doc_id")
     chunked = bt.withColumn(
         "chunk", ((F.row_number().over(w) - 1) / chunk_size).cast("int")
-    ).withColumn("bsz", F.count(F.lit(1)).over(W.partitionBy("band", "band_hash")))
+    ).withColumn("bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "band_hash")))
     if max_bucket_size is not None:
         chunked = chunked.filter(F.col("bsz") <= max_bucket_size)
     per_chunk = persist_slot(
@@ -717,74 +728,28 @@ def lsh_bucket_stats(spark, sf_dir, max_bucket_size: int = 1_000) -> DataFrame:
 
 
 def candidate_jaccard(
-    cands: DataFrame, sh: DataFrame, max_shingle_df: int | None = None
+    cands: DataFrame, base: DataFrame, max_shingle_df: int | None = None
 ) -> DataFrame:
-    """Exact Jaccard computed ONLY for candidate pairs (id1 < id2).
-
-    This is the scale-correct verification shape (VERDICT r1 "What's wrong"
-    #2): instead of the all-pairs shingle self-join, each candidate pair is
-    joined to its two shingle sets — shuffle keys are id1, then
-    (id2, lang, shingle) — so work is O(|candidates| × shingles/doc), never
-    C(df, 2) over hot shingles, and there is no global sort or limit.
+    """Exact Jaccard computed ONLY for candidate pairs (id1, id2) over the
+    per-document ARRAY relation (minhash_doc_arrays) — the scale-correct
+    verification shape (VERDICT r1 "What's wrong" #2): work is
+    O(|candidates| × shingles/doc), never C(df, 2) over hot shingles, no
+    global sort or limit, and zero shuffle of the shingle relation.
 
     ``max_shingle_df`` drops boilerplate shingles (df > cap) from the
-    intersection count only; per-doc sizes keep counting all shingles, so a
-    capped Jaccard is a lower bound of the exact one."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        sh_f = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    else:
-        sh_f = sh
-    a = sh_f.select(
-        F.col("doc_id").alias("id1"), F.col("lang").alias("lang1"), "shingle"
-    )
-    b = sh_f.select(
-        F.col("doc_id").alias("id2"), F.col("lang").alias("lang2"), "shingle"
-    )
-    inter = (
-        cands.join(a, "id1")
-        .join(b, ["id2", "shingle"])
-        .filter(F.col("lang1") == F.col("lang2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    return (
-        inter.join(sa, F.col("id1") == F.col("sa.doc_id"))
-        .join(sb, F.col("id2") == F.col("sb.doc_id"))
-        .select(
-            "id1",
-            "id2",
-            F.round(
-                F.col("n_common")
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
+    intersection count only; per-doc sizes keep counting all shingles, so
+    a capped Jaccard is a lower bound of the exact one. Pairs across
+    languages or with no (uncapped) shingle in common emit no row.
 
-
-def _candidate_jaccard_arr(
-    cands: DataFrame, base: DataFrame, max_shingle_df: int | None
-) -> DataFrame:
-    """candidate_jaccard over the per-document ARRAY relation
-    (minhash_doc_arrays): identical (id1, id2, jaccard) rows, zero
-    shuffle of the shingle relation. The candidate pair set is
-    LSH-collision-bounded (tiny next to the corpus), so it broadcasts
-    into the two array-attach joins and the intersection is one
-    array_intersect per pair row — no exploded pair join, no per-pair
-    aggregation, no sizes rollup (n_sh = size(sh_arr) rides the row).
-    The df cap still aggregates the full corpus (a boilerplate
-    shingle's document frequency counts ALL documents); its result is
-    boilerplate-vocabulary-sized and attaches as a one-row broadcast on
-    a constant equality key (BroadcastHashJoin, not a nested loop)."""
+    Plan: the candidate pair set is LSH-collision-bounded (tiny next to
+    the corpus), so it broadcasts into the two array-attach joins and the
+    intersection is one array_intersect per pair row — no exploded pair
+    join, no per-pair aggregation, no sizes rollup (n_sh = size(sh_arr)
+    rides the row). The df cap still aggregates the full corpus (a
+    boilerplate shingle's document frequency counts ALL documents); its
+    result is boilerplate-vocabulary-sized and attaches as a one-row
+    broadcast on a constant equality key (BroadcastHashJoin, not a
+    nested loop)."""
     b1 = base.select(
         F.col("doc_id").alias("id1"),
         F.col("lang").alias("lang1"),
@@ -833,12 +798,30 @@ def _candidate_jaccard_arr(
         .select(
             "id1",
             "id2",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_sh1") + F.col("n_sh2") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
+            _jaccard(F.col("n_common"), F.col("n_sh1"), F.col("n_sh2")).alias(
+                "jaccard"
+            ),
         )
+    )
+
+
+def near_dup_pairs(
+    base: DataFrame,
+    jaccard_threshold: float,
+    max_shingle_df: int | None,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """(id1, id2, jaccard) verified near-duplicate pairs over the
+    doc-array relation (minhash_doc_arrays): banded-LSH candidates from
+    the in-array signatures, exact candidate-only Jaccard, kept at
+    jaccard >= jaccard_threshold — the ONE definition of a near-duplicate
+    pair, shared by deduplicate_corpus and components.duplicate_components
+    so the two agree by construction."""
+    cands = minhash_lsh_candidates_from(
+        minhash_signatures_arr(base), max_bucket_size=max_bucket_size
+    )
+    return candidate_jaccard(cands, base, max_shingle_df=max_shingle_df).filter(
+        F.col("jaccard") >= jaccard_threshold
     )
 
 
@@ -848,7 +831,6 @@ def deduplicate_corpus(
     jaccard_threshold: float = 0.8,
     max_shingle_df: int | None = 10_000,
     max_bucket_size: int | None = 1_000,
-    sh=None,
     base=None,
 ) -> DataFrame:
     """The composite dedup flow a training pipeline runs: exact dedup →
@@ -873,11 +855,10 @@ def deduplicate_corpus(
     repartition under that join (VERDICT r6 wrong-#1) is gone — the only
     repartition left sits under the CPU-heavy shingle scan; the default
     path persists per-document shingle ARRAYS (minhash_doc_arrays), so
-    signatures are zero-shuffle in-array minima and verification is
-    per-pair array_intersect (_candidate_jaccard_arr) instead of two
-    corpus-wide exploded-shingle join exchanges. A composition can
-    inject ``base`` (the array relation, preferred) or legacy ``sh``
-    (the exploded relation, which keeps the relational verify path)."""
+    near_dup_pairs takes zero-shuffle in-array signatures and verifies
+    per pair with array_intersect — no corpus-wide exploded-shingle join
+    exchange. A composition (curation) can inject its own persisted
+    ``base`` array relation."""
     d = load(spark, sf_dir, "documents")
     # exact dup losers: one hash agg on the digest, no join-back. NULL text
     # carries no identity (md5(NULL) IS NULL) and never joined in the old
@@ -896,29 +877,12 @@ def deduplicate_corpus(
     # one shingle pass feeds signatures AND verification; persisted so the
     # tokenize+shingle subtree runs once (at production scale this is a
     # materialized intermediate table, not a cache); slot-keyed so repeated
-    # invocations don't leak cache entries. A composition (curation) can
-    # inject its own shared slot instead.
-    if sh is not None:
-        sig = minhash_signatures_from(sh)
-        cands = minhash_lsh_candidates_from(
-            sig, max_bucket_size=max_bucket_size
-        )
-        verified = candidate_jaccard(
-            cands, sh, max_shingle_df=max_shingle_df
-        ).filter(F.col("jaccard") >= jaccard_threshold)
-    else:
-        if base is None:
-            from .relational import persist_slot
-
-            base = persist_slot(
-                "dedup_corpus_base", minhash_doc_arrays(spark, sf_dir)
-            )
-        cands = minhash_lsh_candidates_from(
-            minhash_signatures_arr(base), max_bucket_size=max_bucket_size
-        )
-        verified = _candidate_jaccard_arr(
-            cands, base, max_shingle_df=max_shingle_df
-        ).filter(F.col("jaccard") >= jaccard_threshold)
+    # invocations don't leak cache entries
+    if base is None:
+        base = persist_slot("dedup_corpus_base", minhash_doc_arrays(spark, sf_dir))
+    verified = near_dup_pairs(
+        base, jaccard_threshold, max_shingle_df, max_bucket_size
+    )
     near_losers = verified.select(
         F.col("id2").alias("doc_id"), F.lit("near_dup").alias("drop_reason")
     ).distinct()
@@ -951,9 +915,7 @@ def embedding_cosine_pairs(
     input vectors — at that point the O(n²) BroadcastNestedLoop is a
     cluster-killer, and the caller wants the bucketed variant. Pass a
     larger max_rows only to deliberately pay the quadratic cost."""
-    from .relational import load as _load
-
-    e = _load(spark, sf_dir, "embeddings").repartition(
+    e = load(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
     n = e.count()
@@ -1102,8 +1064,6 @@ def decontaminate(
     would otherwise tokenize+shingle the corpus once per consuming branch
     (bench filter + train filter)."""
     if sh is None:
-        from .relational import persist_slot
-
         sh = persist_slot("decontaminate_shingles", shingle_table(spark, sf_dir))
     is_bench = F.col("doc_id") % bench_mod == 0
     bench = sh.filter(is_bench).select("shingle").distinct()
@@ -1191,59 +1151,22 @@ def containment_pairs(
     boilerplate shingles from the JOIN (C(df,2) hot-key blowup carries no
     containment signal) while per-doc sizes keep counting everything, so
     capped containment is a lower bound. No all-pairs, no windows."""
-    from .relational import persist_slot
-
     d = load(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    docs2 = _quote_augmented(d)
-    toks = docs2.select("doc_id", "lang", _tokens(F.col("text")).alias("toks"))
+    # explode off the persisted array relation (see shingle_table on why
+    # never off a live projection)
     sh = persist_slot(
-        "containment_shingles",
-        toks.select(
-            "doc_id", "lang", F.explode(_shingles(F.col("toks"))).alias("shingle")
-        ),
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        sh_join = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    else:
-        sh_join = sh
-    a = sh_join.alias("a")
-    b = sh_join.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    scored = (
-        inter.join(sa, F.col("id1") == F.col("sa.doc_id"))
-        .join(sb, F.col("id2") == F.col("sb.doc_id"))
-        .select(
-            "id1",
-            "id2",
-            "n_common",
-            F.round(F.col("n_common") / F.col("sa.n_sh"), 6).alias("containment1"),
-            F.round(F.col("n_common") / F.col("sb.n_sh"), 6).alias("containment2"),
-            F.round(
-                F.col("n_common")
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
+        "containment_shingles", _shingle_arrays(spark, sf_dir, d=_quote_augmented(d))
+    ).select("doc_id", "lang", F.explode("sh_arr").alias("shingle"))
+    n_common, n1, n2 = F.col("n_common"), F.col("n_sh1"), F.col("n_sh2")
+    scored = _shingle_overlap(sh, max_shingle_df).select(
+        "id1",
+        "id2",
+        "n_common",
+        F.round(n_common / n1, 6).alias("containment1"),
+        F.round(n_common / n2, 6).alias("containment2"),
+        _jaccard(n_common, n1, n2).alias("jaccard"),
     )
     return scored.where(
         F.greatest("containment1", "containment2") >= threshold
@@ -1358,62 +1281,23 @@ def lsh_recall_eval(spark, sf_dir, max_shingle_df: int | None = 10_000) -> DataF
     Scale shape: both inputs are the existing candidate-capped relations
     (shingle-equality blocking, banded buckets — never all-pairs); the
     comparison is one (id1, id2) equality left join + a 4-row rollup."""
-    from .relational import persist_slot
-
     d = _partial_variants(
         load(spark, sf_dir, "documents").repartition(
             spark.sparkContext.defaultParallelism
         )
     )
-    toksd = d.select("doc_id", "lang", _tokens(F.col("text")).alias("toks"))
-    sh = persist_slot(
-        "lsh_recall_shingles",
-        toksd.select(
-            "doc_id", "lang", F.explode(_shingles(F.col("toks"))).alias("shingle")
+    base = persist_slot("lsh_recall_base", minhash_doc_arrays(spark, sf_dir, d=d))
+    sh = base.select("doc_id", "lang", F.explode("sh_arr").alias("shingle"))
+    truth = _shingle_overlap(sh, max_shingle_df).select(
+        "id1",
+        "id2",
+        _jaccard(F.col("n_common"), F.col("n_sh1"), F.col("n_sh2")).alias(
+            "jaccard"
         ),
+    ).where(F.col("jaccard") >= RECALL_BANDS[0][0])
+    cands = minhash_lsh_candidates_from(minhash_signatures_arr(base)).withColumn(
+        "hit", F.lit(1)
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        shf = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    else:
-        shf = sh
-    a = shf.alias("a")
-    b = shf.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id1"), F.col("b.doc_id").alias("id2"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    truth = (
-        inter.join(sa, F.col("id1") == F.col("sa.doc_id"))
-        .join(sb, F.col("id2") == F.col("sb.doc_id"))
-        .select(
-            "id1",
-            "id2",
-            F.round(
-                F.col("n_common")
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= RECALL_BANDS[0][0])
-    )
-    cands = minhash_lsh_candidates_from(
-        minhash_signatures_from(sh)
-    ).withColumn("hit", F.lit(1))
     j = truth.join(cands, ["id1", "id2"], "left")
     band = None
     for lo, hi in RECALL_BANDS:
@@ -1507,8 +1391,6 @@ def minhash_incremental(spark, sf_dir, jaccard_dup: float = 0.8) -> DataFrame:
     verify AND the output join), and verification is the per-pair
     array_intersect form — no corpus-wide exploded-shingle exchange
     anywhere."""
-    from .relational import persist_slot
-
     base = persist_slot("mh_incr_base", minhash_doc_arrays(spark, sf_dir))
     bt = _band_table(minhash_signatures_arr(base))
     hist = bt.where(F.col("doc_id") % 2 == 0).select(
@@ -1523,12 +1405,9 @@ def minhash_incremental(spark, sf_dir, jaccard_dup: float = 0.8) -> DataFrame:
             "batch_id", "hist_id"
         ).agg(F.count(F.lit(1)).cast("long").alias("n_band_hits")),
     )
-    ver = _candidate_jaccard_arr(
-        cand.select(
-            F.col("batch_id").alias("id1"), F.col("hist_id").alias("id2")
-        ),
+    ver = candidate_jaccard(
+        cand.select(F.col("batch_id").alias("id1"), F.col("hist_id").alias("id2")),
         base,
-        max_shingle_df=None,
     ).select(
         F.col("id1").alias("batch_id"),
         F.col("id2").alias("hist_id"),

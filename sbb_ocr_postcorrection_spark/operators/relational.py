@@ -24,7 +24,7 @@ def persist_slot(key: str, df: DataFrame) -> DataFrame:
     """Persist df, unpersisting whatever the SAME key persisted before.
 
     Operators that cache a branch consumed twice in one returned plan
-    (deduplicate_corpus's shingle table, pdf_layout_query's synthesized
+    (deduplicate_corpus's doc-array relation, pdf_layout_query's synthesized
     pdfs) cannot unpersist inside their own lazy plan — but repeated
     invocations in a long session (bench loops, the driver harness) must
     not accumulate orphaned cache entries. One slot per operator bounds the

@@ -184,9 +184,10 @@ def commit_snapshot(
     """Finalize the claimed commit: re-validate the intent is still ours
     (a reclaim_stale=True steal of a live writer must surface as
     ConcurrentWriteError here, not as silent history rewrite), write
-    v{N}.json atomically AND exclusively (tmp + os.link — link fails
-    loud if the id was somehow committed by someone else, unlike the
-    silent os.replace overwrite; ADVICE r6), then release the intent.
+    v{N}.json exclusively (_create_exclusive: tmp + os.link, or an O_EXCL
+    create where hardlinks are unsupported — either fails loud if the id
+    was somehow committed by someone else, unlike the silent os.replace
+    overwrite; ADVICE r6), then release the intent.
     `partitions` is the table's FULL visible partition set after this
     commit, as (dt_iso, bkt)."""
     if not _intent_matches(output_dir, ticket):
@@ -208,24 +209,46 @@ def commit_snapshot(
     if extra:
         snap.update(extra)
     path = _snap_path(output_dir, ticket["next_id"])
-    tmp = path + f".tmp.{ticket['nonce']}"
-    with open(tmp, "w") as fh:
-        json.dump(snap, fh, sort_keys=True)
     try:
-        os.link(tmp, path)  # atomic + exclusive: raises if v{N} exists
+        _create_exclusive(path, json.dumps(snap, sort_keys=True), ticket["nonce"])
     except FileExistsError:
         raise ConcurrentWriteError(
             f"snapshot v{ticket['next_id']} already exists in "
             f"{output_dir} — another writer committed this id; "
             "append-only history preserved, this commit is void"
         ) from None
+    abort_commit(output_dir, ticket)
+    return snap
+
+
+def _create_exclusive(path: str, body: str, nonce: str) -> None:
+    """Create `path` holding `body`; FileExistsError if it already exists.
+
+    tmp + os.link is atomic AND exclusive: readers never see a partial
+    file. Filesystems without hardlinks (object-store FUSE mounts, some
+    NFS/SMB configs) fail the link with another OSError; there the file
+    is created with O_EXCL, written, flushed and fsynced before the
+    commit returns — still exclusive, though not atomic to a reader that
+    races the write."""
+    tmp = f"{path}.tmp.{nonce}"
+    with open(tmp, "w") as fh:
+        fh.write(body)
+    try:
+        os.link(tmp, path)
+        return
+    except FileExistsError:
+        raise
+    except OSError:
+        pass  # no hardlinks here: fall through to the O_EXCL create
     finally:
         try:
             os.unlink(tmp)
         except FileNotFoundError:
             pass
-    abort_commit(output_dir, ticket)
-    return snap
+    with open(path, "x") as fh:
+        fh.write(body)
+        fh.flush()
+        os.fsync(fh.fileno())
 
 
 def snapshot_partition_set(snap: dict | None) -> set[tuple[str, int]]:

@@ -55,7 +55,7 @@ SHOW = [
     ("host_communities",
      "per LPA round: one adjacency-on-labels equality join + combinable min-struct argmax; localCheckpoint truncates iterated lineage — no graph-sized window, no cartesian"),
     ("lsh_recall_eval",
-     "truth = shingle-equality blocking, candidates = banded buckets; the comparison is one (id1,id2) equality left join — never all-pairs"),
+     "one persisted doc-array relation feeds both sides: truth = shingle-equality blocking over its exploded cache, candidates = banded buckets of in-array signatures; the comparison is one (id1,id2) equality left join — never all-pairs"),
     ("dedup_incremental",
      "two hashpartitioning exchanges on content_hash (batch + history digests); the first-occurrence Window runs on the probe join's output partitioning — no third shuffle"),
     ("seq_pack",

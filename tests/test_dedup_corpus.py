@@ -149,9 +149,9 @@ def test_duplicate_components_match_union_find(spark):
     from sbb_ocr_postcorrection_spark.operators.dedup import (
         candidate_jaccard,
         exact_groups,
+        minhash_doc_arrays,
         minhash_lsh_candidates_from,
-        minhash_signatures_from,
-        shingle_table,
+        minhash_signatures_arr,
     )
     from pyspark.sql import functions as F
 
@@ -164,14 +164,14 @@ def test_duplicate_components_match_union_find(spark):
         .filter(F.col("doc_id") != F.col("keeper_id"))
         .collect()
     ]
-    sh = shingle_table(spark, sf)
+    base = minhash_doc_arrays(spark, sf)
     near_edges = [
         (r["id1"], r["id2"])
         for r in candidate_jaccard(
             minhash_lsh_candidates_from(
-                minhash_signatures_from(sh), max_bucket_size=1_000
+                minhash_signatures_arr(base), max_bucket_size=1_000
             ),
-            sh,
+            base,
             max_shingle_df=10_000,
         )
         .filter(F.col("jaccard") >= 0.8)

@@ -410,3 +410,31 @@ def test_r6_late_ops_plan_shapes(spark):
 
     tm = plan_of(triplet_mining(spark, SF_DIR))
     assert "CartesianProduct" not in tm
+
+
+def test_shingle_explode_filter_stays_off_the_scan(spark):
+    """shingle_table explodes the inline shingle expression, never a
+    projected array attribute: over an attribute, InferFiltersFromGenerate
+    adds size(<array>) > 0 and pushes it — tokenizer and array_distinct
+    included — into the scan below the input-spread repartition, so
+    every document is shingled twice, once on a single partition. Array
+    relations are exploded only off a persisted cache, where the inferred
+    filter reads the cached column."""
+    import re
+
+    from sbb_ocr_postcorrection_spark.operators.dedup import (
+        containment_pairs,
+        decontaminate,
+        jaccard_pairs,
+    )
+
+    node = re.compile(r"^[\s:+\-|*()\d]*Filter\b")
+    for df in (
+        jaccard_pairs(spark, SF_DIR),
+        decontaminate(spark, SF_DIR),
+        containment_pairs(spark, SF_DIR),
+    ):
+        filters = [ln for ln in plan_of(df).splitlines() if node.match(ln)]
+        assert filters, "expected Filter nodes in the plan"
+        bad = [ln for ln in filters if "array_distinct" in ln]
+        assert not bad, "shingling leaked into a Filter:\n" + "\n".join(bad)

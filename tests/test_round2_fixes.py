@@ -34,28 +34,35 @@ def test_dedup_corpus_plan_has_no_all_pairs_join(spark):
     assert "GlobalLimit" not in plan
 
 
-def test_candidate_jaccard_matches_all_pairs_on_candidates(spark):
-    """The candidate-restricted Jaccard must equal the all-pairs Jaccard on
-    every candidate pair (same intersection/size math, different join
-    shape)."""
+@pytest.mark.parametrize("max_shingle_df", [None, 3])
+def test_candidate_jaccard_matches_all_pairs_on_candidates(spark, max_shingle_df):
+    """The candidate-restricted Jaccard over the doc-array relation must
+    equal the all-pairs Jaccard on every candidate pair (same intersection
+    /size math, different join shape) — also under a df cap that actually
+    drops shingles (cap 3 removes pairs at sf0.001)."""
     from sbb_ocr_postcorrection_spark.operators.dedup import (
         candidate_jaccard,
         jaccard_pairs,
-        minhash_lsh_candidates,
-        shingle_table,
+        minhash_doc_arrays,
+        minhash_lsh_candidates_from,
+        minhash_signatures_arr,
     )
 
-    cands = minhash_lsh_candidates(spark, SF_SMALL)
-    sh = shingle_table(spark, SF_SMALL)
+    base = minhash_doc_arrays(spark, SF_SMALL).cache()
+    cands = minhash_lsh_candidates_from(minhash_signatures_arr(base))
     by_cand = {
         (r["id1"], r["id2"]): r["jaccard"]
-        for r in candidate_jaccard(cands, sh).collect()
+        for r in candidate_jaccard(cands, base, max_shingle_df=max_shingle_df).collect()
     }
     all_pairs = {
         (r["id1"], r["id2"]): r["jaccard"]
-        for r in jaccard_pairs(spark, SF_SMALL, threshold=0.0, k=1_000_000).collect()
+        for r in jaccard_pairs(
+            spark, SF_SMALL, threshold=0.0, k=1_000_000, max_shingle_df=max_shingle_df
+        ).collect()
     }
     cand_keys = {(r["id1"], r["id2"]) for r in cands.collect()}
+    base.unpersist()
+    assert by_cand
     for key in cand_keys:
         assert by_cand.get(key) == all_pairs.get(key), key
 

@@ -3,6 +3,7 @@ history, rollback-as-forward-commit, snapshot-consistent reads, the
 concurrent-writer fence, and stale-intent reclaim after a dead writer.
 """
 
+import errno
 import json
 import os
 
@@ -213,3 +214,32 @@ def test_next_id_assigned_after_claim(tmp_path):
     # append-only history preserved: the forged file was not replaced
     with open(forged) as fh:
         assert json.load(fh)["partitions"] == []
+
+
+def test_commit_without_hardlinks(tmp_path, monkeypatch):
+    """On a filesystem where os.link is unsupported (EPERM), the commit
+    falls back to an exclusive create: same JSON, an id collision still
+    raises ConcurrentWriteError, and no tmp file is left behind."""
+
+    def no_link(src, dst):
+        raise OSError(errno.EPERM, "hardlinks not supported", dst)
+
+    monkeypatch.setattr(os, "link", no_link)
+    out = str(tmp_path / "out")
+    t1 = begin_commit(out)
+    snap = commit_snapshot(out, t1, [("2024-01-01", 0)], op="append")
+    path = snapshots._snap_path(out, 1)
+    with open(path) as fh:
+        assert fh.read() == json.dumps(snap, sort_keys=True)
+    assert current_snapshot(out) == snap
+    # a second commit of the same id must not overwrite history
+    t2 = begin_commit(out)
+    t2["next_id"] = 1
+    with pytest.raises(ConcurrentWriteError):
+        commit_snapshot(out, t2, [("2024-01-02", 1)], op="append")
+    with open(path) as fh:
+        assert json.load(fh) == snap
+    snapshots.abort_commit(out, t2)
+    assert not [
+        n for n in os.listdir(snapshots._snap_dir(out)) if ".tmp." in n
+    ]
