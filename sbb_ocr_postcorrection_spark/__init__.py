@@ -22,7 +22,8 @@ Layout:
   correct        confusion+dictionary corrector (pure)
   kernel         per-document oracle: html bytes → extraction result
   datagen        deterministic synthetic pages generator
-  kernels_spark  the fused stage 1+2 kernel as one mapInArrow stage
+  kernels_spark  the fused stage 1+2 kernel as a mapInArrow stage, and the
+                 job's writer stage around it
   pipeline       end-to-end job: partition layout, salting, resume manifest
   operators/     relational operator library (SURVEY.md §2 mappings)
   queries        the driver-facing queries()/oracle_sql() registry

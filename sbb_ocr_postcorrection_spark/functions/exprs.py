@@ -43,12 +43,6 @@ def cents_expr(col) -> Column:
     return F.round(c * 100, 0).cast("long")
 
 
-def host_expr(url_col) -> Column:
-    """Host component of a url column (JVM-side)."""
-    c = F.col(url_col) if isinstance(url_col, str) else url_col
-    return F.element_at(F.split(F.element_at(F.split(c, "://"), -1), "/"), 1)
-
-
 def lang_cols(
     text_col, stops_de, stops_en, conf_threshold: float = 0.05, toks=None
 ) -> dict[str, Column]:

@@ -2,10 +2,10 @@
 
 The reference moved data through five ad-hoc file formats (JSON corpus
 dumps, SQLite, .npy, pickle, plain text — S5-S10); here one canonical
-schema flows through partitioned parquet (Iceberg-layout emulation; the
-container has no Iceberg jars — swapping the writer for
-``df.writeTo(...).overwritePartitions()`` is sink-local). JSON remains as a
-debug-dump sink only, mirroring the reference's S5 use.
+schema flows through partitioned parquet. The (dt, bkt)-partitioned
+extraction table has one writer, the extraction job's own
+(``pipeline.run_extraction_job``). JSON remains as a debug-dump sink only,
+mirroring the reference's S5 use.
 """
 
 from __future__ import annotations
@@ -44,14 +44,6 @@ def read_pages_pruned(
     if lang is not None:
         df = df.filter(F.col("lang") == lang)
     return df
-
-
-def write_extractions(df: DataFrame, path: str) -> None:
-    """S6/S10-analog sink: idempotent overwrite of (dt, bkt) partitions
-    (requires spark.sql.sources.partitionOverwriteMode=dynamic, set by
-    pipeline.build_session). Never a blind append — contrast the
-    reference's append=True default (preprocessing/database.py:14-15)."""
-    df.write.mode("overwrite").partitionBy("dt", "bkt").parquet(path)
 
 
 def dump_debug_json(df: DataFrame, path: str, limit: int = 1000) -> None:

@@ -6,6 +6,10 @@ Cluster use (north_rule contract):
     spark-submit --py-files dist/pkg.zip scripts/run_job.py \
         --input /data/pages --output /data/out --lang de
 
+    The extraction job's --output must be a POSIX path that the driver
+    and every executor reach (a shared mount such as NFS): tasks write
+    their parquet files under it and the driver renames them into place.
+
 Local sandbox use (this container):
     python scripts/run_job.py --input <pages.parquet> --output <dir> \
         [--cores 32] [--lang de] [--no-resume] [--generate N]

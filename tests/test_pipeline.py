@@ -134,3 +134,36 @@ def test_export_training_corpus(spark, tmp_path):
     disk = json.loads((tmp_path / "export_manifest.json").read_text())
     assert disk == m
     assert glob.glob(str(tmp_path / "corpus" / "part-*.json"))
+
+
+def test_null_url_does_not_kill_the_job(spark, tmp_path):
+    """A null url extracts with a null host instead of failing its task
+    (every retry of which would fail the same way)."""
+    import pyarrow as pa
+
+    table = pages_to_arrow(generate_pages(20, seed=4))
+    urls = table.column("url").to_pylist()
+    urls[3] = None
+    table = table.set_column(0, "url", pa.array(urls, pa.string()))
+    src = str(tmp_path / "pages.parquet")
+    pq.write_table(table, src)
+
+    out = str(tmp_path / "out")
+    r = run_extraction_job(spark, spark.read.parquet(src), out)
+    assert r["docs"] == 20
+    rows = spark.read.parquet(f"{out}/extractions").where(F.col("url").isNull()).collect()
+    assert len(rows) == 1 and rows[0]["host"] is None
+
+
+def test_resume_after_kill_inside_first_manifest_append(spark, tmp_path, pages_parquet):
+    """A run killed while Spark committed the table's first manifest append
+    leaves ``_manifest`` holding only ``_temporary``: that records no
+    completed partition, so the next run extracts everything instead of
+    failing on schema inference."""
+    import os
+
+    out = str(tmp_path / "out")
+    os.makedirs(f"{out}/_manifest/_temporary/0/_temporary")
+    assert load_manifest(spark, out).count() == 0
+    r = run_extraction_job(spark, spark.read.parquet(pages_parquet), out)
+    assert r["docs"] == 150 and r["partitions_skipped"] == 0

@@ -29,19 +29,23 @@ def test_pruned_scan_drops_html(spark, pages_path):
     assert set(df.columns) == {"url", "warc_ts", "lang", "text"}
 
 
-def test_partition_pruning_on_layout_key(spark, pages_path, tmp_path):
+@pytest.fixture(scope="module")
+def extractions_path(spark, pages_path, tmp_path_factory):
+    """The (dt, bkt)-partitioned extraction table the job writes."""
+    from sbb_ocr_postcorrection_spark.pipeline import run_extraction_job
+
+    out = str(tmp_path_factory.mktemp("job") / "out")
+    run_extraction_job(spark, pages_io.read_pages(spark, pages_path), out)
+    return f"{out}/extractions"
+
+
+def test_partition_pruning_on_layout_key(spark, extractions_path):
     """A dt-filtered read of the partitioned output must prune partitions
     at planning time (PartitionFilters on the scan), not scan-and-filter —
     the property that makes day-scoped queries cheap at 10^12 docs."""
     from pyspark.sql import functions as F
-    from sbb_ocr_postcorrection_spark.pipeline import with_partition_cols
-    from sbb_ocr_postcorrection_spark.kernels_spark import extract_pages
 
-    pages = pages_io.read_pages(spark, pages_path)
-    out = with_partition_cols(extract_pages(pages))
-    dest = str(tmp_path / "pruned")
-    pages_io.write_extractions(out, dest)
-
+    dest = extractions_path
     some_dt = spark.read.parquet(dest).select("dt").first()["dt"]
     q = spark.read.parquet(dest).filter(F.col("dt") == F.lit(some_dt))
     plan = q._jdf.queryExecution().executedPlan().toString()
@@ -75,15 +79,8 @@ def test_bucketed_join_has_no_exchange(spark, pages_path):
         spark.sql("DROP TABLE IF EXISTS t_meta_b")
 
 
-def test_partitioned_sink_roundtrip(spark, pages_path, tmp_path):
-    from sbb_ocr_postcorrection_spark.pipeline import with_partition_cols
-    from sbb_ocr_postcorrection_spark.kernels_spark import extract_pages
-
-    pages = pages_io.read_pages(spark, pages_path)
-    out = with_partition_cols(extract_pages(pages))
-    dest = str(tmp_path / "sink")
-    pages_io.write_extractions(out, dest)
-    back = spark.read.parquet(dest)
+def test_partitioned_sink_roundtrip(spark, extractions_path):
+    back = spark.read.parquet(extractions_path)
     assert back.count() == 60
     assert {"dt", "bkt"} <= set(back.columns)
 
