@@ -36,13 +36,6 @@ def cer_band_expr(col) -> Column:
     )
 
 
-def cents_expr(col) -> Column:
-    """Money column → exact integer cents (cross-engine-safe arithmetic;
-    see operators/relational.cents for the rationale)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100, 0).cast("long")
-
-
 def lang_cols(
     text_col, stops_de, stops_en, conf_threshold: float = 0.05, toks=None
 ) -> dict[str, Column]:

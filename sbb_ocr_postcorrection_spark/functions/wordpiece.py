@@ -25,14 +25,6 @@ N_SPECIAL = 5
 SEQ_LEN = 40  # the reference's padded sequence length
 
 
-def token_pieces(token: str, max_n: int = 3) -> list[str]:
-    """All character n-grams (n=1..max_n) of a token."""
-    out = []
-    for n in range(1, max_n + 1):
-        out.extend(token[i : i + n] for i in range(len(token) - n + 1))
-    return out
-
-
 def build_vocab_df(df: DataFrame, text_col: str, k: int = 1000) -> DataFrame:
     """Distributed vocab: explode tokens → explode 1..3-gram pieces →
     two-phase count → top-k (count desc, piece asc). All JVM-side."""

@@ -4,12 +4,14 @@
   JVM-side dot product via zip_with + aggregate, row_number top-k. The
   correctness baseline; O(probes × corpus) but embarrassingly parallel.
 * lsh_bucketed_topk — the scale path: random-hyperplane LSH signatures
-  bucket the corpus; probes only score candidates in their bucket
-  (equality join on the bucket key instead of a cross join).
+  (lsh_signatures) bucket the corpus; probes only score candidates in
+  their bucket (equality join on the bucket key instead of a cross join).
 * embedding_norms — per-vector L2 norm + per-label stats (sanity/oracle).
 
 Dot products run in double precision with sequential fold order, matching
-the DuckDB oracle bit-for-bit before rounding.
+the DuckDB oracle bit-for-bit before rounding. Each behaviour has one
+JVM implementation; its DuckDB oracle is the differential check (a
+BLAS matmul twin would not be bit-pinned to that fold order).
 """
 
 from __future__ import annotations
@@ -93,59 +95,6 @@ def brute_force_topk(spark, sf_dir, n_probes: int = 5, k: int = 5) -> DataFrame:
         _dot(F.col("pv"), F.col("cv")) / (F.col("pnorm") * F.col("cnorm")), 4
     ).alias("cosine")
     scored = corpus.crossJoin(F.broadcast(probes)).select("probe_id", "cand_id", sim)
-    w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "cand_id", "cosine")
-    )
-
-
-def brute_force_topk_np(spark, sf_dir, n_probes: int = 5, k: int = 5) -> DataFrame:
-    """Arrow/NumPy variant of brute_force_topk — the 100-TB fast path: one
-    matmul per Arrow batch against the broadcast probe matrix instead of
-    per-pair interpreted array expressions (~50× less Python/expr overhead
-    at production dims). Results match the JVM version after rounding; the
-    JVM version stays the DuckDB-parity oracle (BLAS reduction order is
-    not bit-pinned)."""
-    import numpy as np
-    import pandas as pd
-
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    probe_rows = (
-        e.filter(F.col("vec_id") < n_probes).select("vec_id", "embedding").collect()
-    )
-    if not probe_rows:  # empty probe set: empty result, not an np.AxisError
-        return spark.createDataFrame(
-            [], "probe_id long, rank int, cand_id long, cosine double"
-        )
-    probe_ids = np.array([r["vec_id"] for r in probe_rows])
-    P = np.array([r["embedding"] for r in probe_rows], dtype=np.float64)
-    Pn = P / np.linalg.norm(P, axis=1, keepdims=True)
-
-    def score(batches):
-        for pdf in batches:
-            mask = pdf["vec_id"] >= n_probes
-            if not mask.any():
-                continue
-            ids = pdf.loc[mask, "vec_id"].to_numpy()
-            C = np.array(list(pdf.loc[mask, "embedding"]), dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            sims = Cn @ Pn.T  # (batch, probes)
-            out = pd.DataFrame(
-                {
-                    "probe_id": np.repeat(probe_ids, len(ids)),
-                    "cand_id": np.tile(ids, len(probe_ids)),
-                    "cosine": np.round(sims.T.ravel(), 4),
-                }
-            )
-            yield out
-
-    scored = e.select("vec_id", "embedding").mapInPandas(
-        score, schema="probe_id long, cand_id long, cosine double"
-    )
     w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -528,56 +477,6 @@ def lsh_signatures(spark, sf_dir) -> DataFrame:
         )
         sig = sig + F.when(proj > 0, F.lit(2 ** p).cast("long")).otherwise(0)
     return v.select("vec_id", "label", sig.alias("lsh_bucket"), "v")
-
-
-def lsh_signatures_np(spark, sf_dir) -> DataFrame:
-    """Arrow/NumPy fast path for lsh_signatures (VERDICT r2 next-step #3):
-    ONE matmul per Arrow batch against the (planes × dim) weight matrix
-    instead of dim × _N_PLANES interpreted plan literals folded per row —
-    at production dims (768+) the literal form is ~6k constants and an
-    interpreted aggregate per row; the matmul is BLAS. Same _plane_weight
-    weights, same >0 sign rule, so buckets are identical to the JVM form
-    (which stays the DuckDB oracle — the driver gate certifies np == SQL
-    every round via this query's oracle). Boundary caveat: a projection
-    within one ulp of 0.0 could sign-flip between fold and BLAS summation
-    orders; real-valued embeddings never sit there."""
-    import numpy as np
-    import pandas as pd
-
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    first = e.select(F.size("embedding").alias("d")).first()
-    dim = int(first["d"]) if first else 0
-    if dim == 0:
-        return e.select(
-            "vec_id", "label", F.lit(0).cast("long").alias("lsh_bucket"),
-            _as_double(F.col("embedding")).alias("v"),
-        )
-    P = np.array(
-        [[_plane_weight(p, d) for d in range(dim)] for p in range(_N_PLANES)],
-        dtype=np.float64,
-    )
-    pows = (2 ** np.arange(_N_PLANES)).astype(np.int64)
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(list(pdf["embedding"]), dtype=np.float64)
-            buckets = ((V @ P.T) > 0).astype(np.int64) @ pows
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "lsh_bucket": buckets,
-                    "v": list(V),
-                }
-            )
-
-    return e.select("vec_id", "label", "embedding").mapInPandas(
-        kern, schema="vec_id long, label int, lsh_bucket long, v array<double>"
-    )
 
 
 def lsh_bucketed_topk(spark, sf_dir, n_probes: int = 5, k: int = 3) -> DataFrame:

@@ -340,7 +340,7 @@ def fingerprints(spark, sf_dir) -> DataFrame:
     # (one bogus fold step → 217) while the oracle folds nothing (7).
     # NULL text ≡ empty document (repo convention): coalesce BEFORE the
     # length test, else when(NULL==0) is null-false and the fold
-    # null-propagates — diverging from fingerprints_np's 7
+    # null-propagates to NULL instead of the oracle's 7
     t = F.coalesce(F.col("text"), F.lit(""))
     rolling = F.when(F.length(t) == 0, F.lit(7).cast("long")).otherwise(
         F.aggregate(
@@ -354,80 +354,6 @@ def fingerprints(spark, sf_dir) -> DataFrame:
         F.md5(canon).alias("fingerprint"),
         rolling.alias("rolling_fp"),
         F.size(F.array_distinct(_tokens(F.col("text")))).alias("n_distinct_tokens"),
-    )
-
-
-_FP_MOD = 2147483647
-
-
-def fingerprints_np(spark, sf_dir) -> DataFrame:
-    """Arrow-batched fast path for fingerprints (VERDICT r2 next-step #5):
-    the JVM form folds F.split(text, '') character-by-character through an
-    interpreted `aggregate` — O(chars) interpreted-expr steps per row. Here
-    the rolling hash is one vectorized codepoint-array pass per document
-    (utf-32 decode → numpy multiply-accumulate against precomputed powers
-    of 31 mod 2^31-1), and the canon-form md5 is hashlib over the same
-    token normalization. Same outputs bit-for-bit; the JVM form keeps the
-    DuckDB oracle, and this query is certified against that SAME oracle by
-    the driver gate every round."""
-    import hashlib as _hl
-
-    import numpy as np
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-    def kern(batches):
-        pows = np.array([1], dtype=np.int64)  # grown on demand per batch
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            texts = ["" if t is None else t for t in pdf["text"]]
-            need = max((len(t) for t in texts), default=1)
-            if len(pows) < need:
-                grown = np.empty(need, dtype=np.int64)
-                grown[: len(pows)] = pows
-                for i in range(len(pows), need):
-                    grown[i] = (grown[i - 1] * 31) % _FP_MOD
-                pows = grown
-            fps, rolls, dist = [], [], []
-            for t in texts:
-                toks = sorted({w for w in t.lower().split(" ") if w})
-                fps.append(_hl.md5(" ".join(toks).encode()).hexdigest())
-                dist.append(len(toks))
-                if not t:
-                    rolls.append(7)
-                    continue
-                cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(
-                    np.int64
-                )
-                # h = (7·31^n + Σ cp_i · 31^(n-1-i)) mod M; each product is
-                # < 2^52 (codepoint < 2^21 × power < 2^31), reduced mod M
-                # per term so the int64 sum is safe for any document length
-                p = pows[: len(cp)][::-1]
-                rolls.append(
-                    int(
-                        (7 * pow(31, len(cp), _FP_MOD)
-                         + int(((cp * p) % _FP_MOD).sum()))
-                        % _FP_MOD
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "fingerprint": fps,
-                    "rolling_fp": rolls,
-                    "n_distinct_tokens": dist,
-                }
-            )
-
-    return d.select("doc_id", "text").mapInPandas(
-        kern,
-        schema="doc_id long, fingerprint string, rolling_fp long, "
-        "n_distinct_tokens int",
     )
 
 

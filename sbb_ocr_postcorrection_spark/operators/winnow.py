@@ -12,28 +12,27 @@ guarantee is the published algorithm's whole point and what makes it the
 standard cross-document overlap detector.
 
 Engine-exactness: k-gram hashes are the repo's md5_60 (DuckDB replays
-md5 bit-for-bit), window minima are row_number over (hash asc, pos desc)
-— plain SQL in both engines — and match scores are integer counts with
-one guarded IEEE division.
+md5 bit-for-bit), window minima are the rightmost minimum hash per
+window — row_number over (hash asc, pos desc) in the oracle — and match
+scores are integer counts with one guarded IEEE division.
 
-Scale shape: fingerprint SELECTION is per-document by definition, so the
-production path (`winnow_fingerprints_np`, `_winnow_doc_fps`) computes
-it inside an Arrow kernel with ZERO shuffle and emits only the ~2n/(w+1)
-selected rows; the relational form (`winnow_fingerprints`) is the
-oracle-certifying twin (≤w× position fanout into ONE (doc, window)
-aggregation). Cross-doc matching is an equality join on the fingerprint
-hash with a document-frequency cap (boilerplate fingerprints pair
-everything and carry no plagiarism signal — the jaccard_pairs df-cap
-discipline), never all-pairs. Non-vacuity: the containment family's
+Scale shape: fingerprint SELECTION is per-document by definition, so
+`winnow_fingerprints` and `_winnow_doc_fps` compute it inside an Arrow
+kernel with ZERO shuffle and emit only the ~2n/(w+1) selected rows; the
+DuckDB oracle's relational replay certifies the kernel. Cross-doc
+matching is an equality join on the fingerprint hash with a
+document-frequency cap (boilerplate fingerprints pair everything and
+carry no plagiarism signal — the jaccard_pairs df-cap discipline),
+never all-pairs. Non-vacuity: the containment family's
 quote pages (dedup._quote_augmented) are injected — an excerpt shares
 long substrings with its source, so winnowing MUST pair them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .dedup import _quote_augmented, md5_60
+from .dedup import _quote_augmented
 from .relational import load
 
 # Guarantee: any shared substring of length >= WIN_K + WIN_W - 1 = 27
@@ -47,71 +46,6 @@ WIN_K = 20          # k-gram length (chars)
 WIN_W = 8           # winnowing window (k-gram hashes per window)
 WIN_MAX_DF = 16     # fingerprint document-frequency cap
 WIN_MIN_SHARED = 3  # min shared fingerprints to report a pair
-
-
-def winnow_fingerprints(spark, sf_dir, docs=None) -> DataFrame:
-    """(doc_id, fp_hash, pos): the selected winnowing fingerprints of the
-    quote-augmented corpus — min k-gram hash per sliding window,
-    rightmost on ties, deduplicated. Relational form: the
-    oracle-certifying twin of winnow_fingerprints_np."""
-    d = (
-        docs
-        if docs is not None
-        else _quote_augmented(
-            load(spark, sf_dir, "documents").repartition(
-                spark.sparkContext.defaultParallelism
-            )
-        )
-    )
-    t = F.lower(F.coalesce(F.col("text"), F.lit("")))
-    base = d.select("doc_id", t.alias("t"), F.length(t).alias("n"))
-    # k-gram hash at every position
-    kg = base.where(F.col("n") >= WIN_K).select(
-        "doc_id",
-        "n",
-        F.explode(
-            F.sequence(F.lit(1), F.col("n") - (WIN_K - 1))
-        ).alias("i"),
-        "t",
-    ).select(
-        "doc_id",
-        "n",
-        "i",
-        md5_60(F.expr(f"substr(t, i, {WIN_K})")).alias("h"),
-    )
-    # each position i belongs to windows s ∈ [i-w+1, i] (clamped)
-    n_windows = F.col("n") - (WIN_K - 1) - (WIN_W - 1)
-    spread = kg.where(n_windows >= 1).select(
-        "doc_id",
-        "i",
-        "h",
-        F.explode(
-            F.sequence(
-                F.greatest(F.col("i") - (WIN_W - 1), F.lit(1)),
-                F.least(F.col("i"), n_windows),
-            )
-        ).alias("s"),
-    )
-    # per-window minimum as an AGGREGATION, not a sort window: min over
-    # (h asc, i desc) == lexicographic min of struct(h, -i), which gets
-    # map-side partial aggregation (a row_number window must first SORT
-    # every (doc, s) partition — measured 7.1 s -> this form is the same
-    # result from one combinable agg over the w-times-larger spread)
-    sel = (
-        spread.groupBy("doc_id", "s")
-        .agg(
-            F.min(
-                F.struct(F.col("h"), (-F.col("i")).alias("ni"))
-            ).alias("m")
-        )
-        .select(
-            "doc_id",
-            F.col("m.h").alias("fp_hash"),
-            (-F.col("m.ni")).alias("pos"),
-        )
-        .distinct()
-    )
-    return sel
 
 
 def _doc_selected(t: str):
@@ -176,18 +110,14 @@ def _winnow_base(spark, sf_dir, docs):
     )
 
 
-def winnow_fingerprints_np(spark, sf_dir, docs=None) -> DataFrame:
-    """Arrow-kernel fast path for winnow_fingerprints: identical output
-    (equality-tested against the relational twin, same DuckDB oracle).
-    The relational form must explode one row per character position,
-    spread each ×W into its windows, and exchange a corpus-character-
-    count-sized relation into groupBy(doc_id, s); this kernel computes
-    the k-gram hashes and the rightmost-min window selection per
-    document in NumPy and emits ONLY the selected fingerprints
-    (≈ 2n/(w+1) rows) with ZERO shuffle — the fingerprints_np /
-    lsh_signatures_np convention. Winnowing is per-document by
-    definition, so partition-local work is the correct distribution at
-    any scale."""
+def winnow_fingerprints(spark, sf_dir, docs=None) -> DataFrame:
+    """(doc_id, fp_hash, pos): the selected winnowing fingerprints of the
+    quote-augmented corpus — min k-gram hash per sliding window,
+    rightmost on ties, deduplicated. The k-gram hashes and the window
+    selection run per document in NumPy inside an Arrow kernel, which
+    emits only the selected fingerprints (≈ 2n/(w+1) rows) with ZERO
+    shuffle: winnowing is per-document by definition, so partition-local
+    work is the correct distribution at any scale."""
     from collections.abc import Iterator
 
     import pandas as pd

@@ -17,11 +17,14 @@ every worker can reach (a local disk in local mode, a shared mount on a
 cluster). The commit renames files within it, and snapshots.py's
 ``os.link``/``open(path, "x")`` fence already requires it.
 
-Resume contract (north_rule): a killed job restarts, anti-joins the pending
-partition list against the manifest of completed partitions, and processes
-only the remainder; partition writes are idempotent overwrites, never blind
-appends (contrast the reference's append=True default,
-preprocessing/database.py:14-15).
+Resume contract (north_rule): a killed job restarts, removes from the
+pending partition list every partition the current snapshot of the
+append-only log (snapshots.py) names, and processes only the remainder. A
+partition is done only once the snapshot naming it committed: manifest
+rows of a run that died before its snapshot commit do not count, so a
+kill before the first commit re-extracts everything. Partition writes are
+idempotent overwrites, never blind appends (contrast the reference's
+append=True default, preprocessing/database.py:14-15).
 """
 
 from __future__ import annotations
@@ -185,10 +188,6 @@ def load_manifest(spark: SparkSession, output_dir: str) -> DataFrame:
         if not any(k in msg for k in empty):
             raise
         return _arrow_frame(spark, [], MANIFEST_SCHEMA)
-    if "snapshot_id" not in m.columns:
-        # pre-snapshot-log manifest (legacy layout): nothing to dedupe
-        # against, every row predates snapshot 1
-        m = m.withColumn("snapshot_id", F.lit(0).cast("long"))
     # a partition re-extracted after a rollback (or a kill between the
     # manifest append and the snapshot commit) appends a second row for
     # the same (dt, bkt): keep only the LATEST attempt per partition —
@@ -218,9 +217,10 @@ def run_extraction_job(
     (dt, bkt), resumable at partition granularity.
 
     Every completing run commits one snapshot to the append-only log
-    (snapshots.py): the done-set is derived from the CURRENT snapshot
-    when a log exists (so a rollback makes the next run re-extract what
-    it hid) and from the legacy manifest otherwise; the commit intent is
+    (snapshots.py): the done-set is the CURRENT snapshot's partition set,
+    and empty before the first commit (so a rollback makes the next run
+    re-extract what it hid, and a run killed before its commit is
+    redone, whatever manifest rows it appended); the commit intent is
     claimed BEFORE any data is written, so a second writer racing on the
     same table loses cleanly with ConcurrentWriteError. reclaim_stale
     force-reclaims an intent left by a writer that died on ANOTHER host
@@ -238,16 +238,9 @@ def run_extraction_job(
     # pending partitions = all partitions − done-set (driver-side set math;
     # the partition list is tiny even at 10^12 docs: days × buckets)
     all_rows = pages.select("dt", "bkt").distinct().collect()
-    snap = snapshots.current_snapshot(output_dir)
-    if snap is not None:
-        done_set = snapshots.snapshot_partition_set(snap)
-    else:
-        done_set = {
-            (r["dt"].isoformat(), r["bkt"])
-            for r in load_manifest(spark, output_dir)
-            .select("dt", "bkt")
-            .collect()
-        }
+    done_set = snapshots.snapshot_partition_set(
+        snapshots.current_snapshot(output_dir)
+    )
     pending_rows = [
         r
         for r in all_rows

@@ -947,12 +947,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh_multiprobe": pinned(similarity.lsh_multiprobe_topk),
         "ann_ivf": pinned(similarity.ivf_topk),
         "ann_ivf_pinned": pinned(similarity.ivf_topk_pinned),
-        "fingerprints_np": pinned(textstats.fingerprints_np),
-        # the NumPy signature fast path, hash-certified against the
-        # JVM/SQL plane formula every round
+        # kept name: one fingerprint implementation serves both
+        "fingerprints_np": pinned(textstats.fingerprints),
+        # kept name: the bucket column of the one signature
+        # implementation (the form ann_lsh_* consume), hash-certified
+        # against the md5-parity plane formula
         "lsh_signatures_np": lambda spark, sf_dir: (
             _pin(spark)
-            or similarity.lsh_signatures_np(spark, sf_dir).select(
+            or similarity.lsh_signatures(spark, sf_dir).select(
                 "vec_id", "label", "lsh_bucket"
             )
         ),
@@ -1078,10 +1080,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semantic_dedup": pinned(similarity.semantic_dedup),
         # winnowing (SIGMOD'03 / MOSS): position-robust fingerprint
         # selection + cross-doc plagiarism/contamination match pairs
+        # (selection computed per-doc in an Arrow kernel, zero shuffle;
+        # the _np name is kept and serves the same implementation)
         "winnow_fingerprints": pinned(winnow.winnow_fingerprints),
-        # Arrow-kernel fast path: selection computed per-doc in NumPy,
-        # zero shuffle; same oracle as the relational twin above
-        "winnow_fingerprints_np": pinned(winnow.winnow_fingerprints_np),
+        "winnow_fingerprints_np": pinned(winnow.winnow_fingerprints),
         "winnow_matches": pinned(winnow.winnow_matches),
         # RAG-export chunking: overlapping fixed-size token windows
         "passage_windows": pinned(lines.passage_windows),
@@ -3292,8 +3294,7 @@ def oracle_sql() -> dict[str, str]:
                        FROM scored)
             SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= 3
         """,
-        # the NumPy matmul path must land in the SAME buckets as the
-        # md5-parity plane formula (the JVM/interpreted form's oracle)
+        # lsh_signatures' buckets must equal the md5-parity plane formula
         "lsh_signatures_np": f"""
             WITH {_lsh_sig_cte()}
             SELECT s.vec_id, e2.label, CAST(s.bucket AS BIGINT) AS lsh_bucket
@@ -3900,8 +3901,7 @@ def oracle_sql() -> dict[str, str]:
                       % {1 << CUR_KEY_BITS} AS BIGINT) AS curriculum_key
         FROM q2, thr
     """
-    # the Arrow-batched fingerprint kernel must reproduce the JVM fold's
-    # oracle bit-for-bit — same SQL, so the driver certifies the fast path
+    # the _np alias serves the same implementation, so the same oracle
     sql["fingerprints_np"] = sql["fingerprints"]
     # the .warc.gz scan must inflate back to EXACTLY the plain archive's
     # records — same oracle, so the driver certifies the member walk +
@@ -4923,8 +4923,7 @@ def oracle_sql() -> dict[str, str]:
                CAST(pos AS INTEGER) AS pos
         FROM sel
     """
-    # the Arrow-kernel winnow selection must reproduce the relational
-    # twin's oracle bit-for-bit — same SQL, driver certifies the fast path
+    # the _np alias serves the same kernel, so the same oracle
     sql["winnow_fingerprints_np"] = sql["winnow_fingerprints"]
     sql["winnow_matches"] = f"""
         WITH {_winnow_sel},

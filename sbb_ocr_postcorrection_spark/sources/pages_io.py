@@ -46,11 +46,6 @@ def read_pages_pruned(
     return df
 
 
-def dump_debug_json(df: DataFrame, path: str, limit: int = 1000) -> None:
-    """S5-analog: tiny JSON debug dumps only (never a pipeline boundary)."""
-    df.limit(limit).coalesce(1).write.mode("overwrite").json(path)
-
-
 def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16) -> None:
     """Bucketed managed table on the join key: later url-equi-joins between
     tables bucketed the same way are co-located — no exchange on either

@@ -36,14 +36,6 @@ def tokenize(s: str) -> list[str]:
     return [t for t in _WS_RE.split(s) if t]
 
 
-_WORDPUNCT_RE = re.compile(r"\w+|[^\w\s]+", re.UNICODE)
-
-
-def wordpunct_tokenize(s: str) -> list[str]:
-    """Word/punctuation tokenizer (F17 analog)."""
-    return _WORDPUNCT_RE.findall(s)
-
-
 def _levenshtein_np(a: str, b: str) -> int:
     """Row-vectorized DP for long strings: the substitution/deletion mins
     vectorize per row; the insertion term is a running minimum (cumulative),
@@ -289,20 +281,6 @@ def cer_clusters(ocr: str, gt: str) -> float:
     if n == 0:
         return float("inf")
     return d / n
-
-
-def char_ngrams(s: str, n: int) -> list[str]:
-    """Character n-grams of s (detector features)."""
-    if len(s) < n:
-        return [s] if s else []
-    return [s[i : i + n] for i in range(len(s) - n + 1)]
-
-
-def word_shingles(tokens: list[str], n: int) -> list[str]:
-    """Word n-gram shingles (dedup features)."""
-    if len(tokens) < n:
-        return [" ".join(tokens)] if tokens else []
-    return [" ".join(tokens[i : i + n]) for i in range(len(tokens) - n + 1)]
 
 
 def split_iter(s: str, sep: str = " ") -> list[str]:

@@ -59,10 +59,9 @@ def test_job_control_frames_are_local(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pipeline, "_arrow_frame", recording)
     r = run_extraction_job(spark, spark.read.parquet(src), out)
 
-    # fresh table, no snapshot log: the empty manifest, the pending list
-    # and the manifest rows
+    # fresh table, no snapshot log: the pending list and the manifest
+    # rows (the done-set comes from the snapshot log, so no manifest read)
     assert [(ddl, n) for ddl, n, _ in built] == [
-        (MANIFEST_SCHEMA, 0),
         (PENDING_SCHEMA, r["partitions_done"]),
         (MANIFEST_SCHEMA, r["partitions_done"]),
     ]

@@ -229,25 +229,37 @@ def test_lang_id_posterior_ambiguity_gate(spark):
     assert got[110]["gap"] > got[110]["gate"] > got[100]["gap"]
 
 
-def test_posterior_kernel_equals_relational(spark):
-    """The r7 Arrow fast path must reproduce the relational NB posterior
-    bit-for-bit — same rows, same integer log-likelihoods, same gate —
-    on the real fixture (the winnow_fingerprints_np convention: one
-    oracle certifies both forms)."""
-    from sbb_ocr_postcorrection_spark.operators import langprofile as _lp
+def test_posterior_scores_null_augmented_docs_like_oracle(spark, tmp_path):
+    """A held-out document whose lang has no phrase ('xx') or is NULL
+    augments to a NULL text. The oracle scores it as one unmatched
+    trigram (ll = w0) with correct = 0; the kernel must emit that same
+    row instead of dropping the document."""
+    import duckdb
 
-    a = sorted(
-        map(
-            tuple,
-            _lp.lang_id_posterior(spark, "/root/testdata/sf0.001").collect(),
-        )
+    import __spark_entry__ as entrymod
+    from sbb_ocr_postcorrection_spark.operators.langprofile import (
+        lang_id_posterior,
     )
-    b = sorted(
-        map(
-            tuple,
-            _lp.lang_id_posterior_relational(
-                spark, "/root/testdata/sf0.001"
-            ).collect(),
-        )
+    from tests.test_queries_oracle import canon
+
+    assert 5 % LID_FOLD == 0 and 10 % LID_FOLD == 0  # both held out
+    path = str(tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (SELECT * REPLACE (CASE doc_id WHEN 5 THEN 'xx'
+                    WHEN 10 THEN NULL ELSE lang END AS lang)
+                  FROM '{SF}/documents.parquet') TO '{path}' (FORMAT parquet)"""
     )
-    assert a == b and len(a) > 0
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    res = con.execute(entrymod.oracle_sql()["lang_id_posterior"])
+    ocols = [c[0] for c in res.description]
+    orows = res.fetchall()
+
+    df = lang_id_posterior(spark, SF, docs=spark.read.parquet(path))
+    rows = [tuple(r) for r in df.collect()]
+    assert sorted(df.columns) == sorted(ocols)
+    assert len(rows) == len(orows)
+    assert canon(rows, df.columns) == canon(orows, ocols)
+    got = {r[0]: dict(zip(df.columns, r)) for r in rows}
+    assert got[5]["true_lang"] == "xx" and got[5]["correct"] == 0
+    assert got[10]["true_lang"] is None and got[10]["correct"] == 0

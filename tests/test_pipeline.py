@@ -1,10 +1,11 @@
-"""End-to-end job tests: partition layout, resume-from-manifest, salted agg."""
+"""End-to-end job tests: partition layout, resume-from-snapshot, salted agg."""
 
 import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 
+from sbb_ocr_postcorrection_spark import snapshots
 from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
 from sbb_ocr_postcorrection_spark.kernels_spark import extract_pages
 from sbb_ocr_postcorrection_spark.pipeline import (
@@ -45,8 +46,8 @@ def test_job_runs_and_resumes(spark, tmp_path, pages_parquet):
 
 
 def test_partial_resume(spark, tmp_path, pages_parquet):
-    """Simulate a killed job: pre-mark half the partitions done, verify only
-    the rest get processed."""
+    """Simulate a killed job: pre-mark half the partitions done with a
+    committed snapshot, verify only the rest get processed."""
     out = str(tmp_path / "out2")
     pages = spark.read.parquet(pages_parquet)
     parts = (
@@ -54,11 +55,14 @@ def test_partial_resume(spark, tmp_path, pages_parquet):
     )
     half = parts[: len(parts) // 2]
     pre = spark.createDataFrame(
-        [(p["dt"], p["bkt"], 0, 0, 0, 0, 0, 0) for p in half],
-        "dt date, bkt int, n_docs long, chars_in long, chars_out long, "
-        "n_flagged long, n_spans long, completed_at_epoch long",
+        [(p["dt"], p["bkt"]) for p in half], "dt date, bkt int"
     )
-    pre.write.mode("overwrite").parquet(f"{out}/_manifest")
+    snapshots.commit_snapshot(
+        out,
+        snapshots.begin_commit(out),
+        [(p["dt"].isoformat(), p["bkt"]) for p in half],
+        op="append",
+    )
 
     r = run_extraction_job(spark, pages, out)
     assert r["partitions_skipped"] == len(half)
@@ -167,3 +171,29 @@ def test_resume_after_kill_inside_first_manifest_append(spark, tmp_path, pages_p
     assert load_manifest(spark, out).count() == 0
     r = run_extraction_job(spark, spark.read.parquet(pages_parquet), out)
     assert r["docs"] == 150 and r["partitions_skipped"] == 0
+
+
+def test_resume_after_kill_before_first_snapshot_commit(
+    spark, tmp_path, pages_parquet, monkeypatch
+):
+    """A run that dies after its manifest append but before snapshot 1
+    commits leaves a manifest naming every partition. The done-set comes
+    from the snapshot log alone, so the rerun extracts every page, commits
+    snapshot 1, and job_metrics counts each doc once."""
+    out = str(tmp_path / "out")
+    pages = spark.read.parquet(pages_parquet)
+
+    def die(*_a, **_k):
+        raise RuntimeError("killed before the snapshot commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(snapshots, "commit_snapshot", die)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extraction_job(spark, pages, out)
+    assert load_manifest(spark, out).count() > 0
+    assert snapshots.list_snapshots(out) == []
+
+    r = run_extraction_job(spark, pages, out)
+    assert r["docs"] == 150 and r["partitions_skipped"] == 0
+    assert len(snapshots.list_snapshots(out)) == 1
+    assert job_metrics(spark, out).collect()[0]["docs"] == 150

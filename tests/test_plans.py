@@ -299,15 +299,15 @@ def test_r5_late_ops_plan_shapes(spark):
 
 
 def test_winnow_np_kernel_zero_shuffle(spark):
-    """The r6 winnow fast path: selection happens INSIDE the Arrow
-    kernel, so the fingerprint relation needs no aggregation at all —
-    the plan is MapInPandas over the input spread, with no
-    HashAggregate and no more than the single repartition Exchange."""
+    """Winnow selection happens INSIDE the Arrow kernel, so the
+    fingerprint relation needs no aggregation at all — the plan is
+    MapInPandas over the input spread, with no HashAggregate and no
+    more than the single repartition Exchange."""
     from sbb_ocr_postcorrection_spark.operators.winnow import (
-        winnow_fingerprints_np,
+        winnow_fingerprints,
     )
 
-    plan = plan_of(winnow_fingerprints_np(spark, SF_DIR))
+    plan = plan_of(winnow_fingerprints(spark, SF_DIR))
     assert "MapInPandas" in plan
     assert "HashAggregate" not in plan
     assert plan.count("Exchange") <= 2  # the input-spread repartition
@@ -384,7 +384,6 @@ def test_r6_late_ops_plan_shapes(spark):
     )
     from sbb_ocr_postcorrection_spark.operators.langprofile import (
         lang_id_posterior,
-        lang_id_posterior_relational,
     )
     from sbb_ocr_postcorrection_spark.operators.similarity import (
         triplet_mining,
@@ -396,10 +395,6 @@ def test_r6_late_ops_plan_shapes(spark):
     assert "MapInPandas" in lp
     for bad in ("HashAggregate", "Window", "SortMergeJoin", "CartesianProduct"):
         assert bad not in lp, f"{bad} leaked into the posterior scoring:\n{lp}"
-    # the SQL-shaped twin keeps the broadcast-model contract
-    lpr = plan_of(lang_id_posterior_relational(spark, SF_DIR))
-    assert "BroadcastHashJoin" in lpr, "trigram model must broadcast"
-    assert "CartesianProduct" not in lpr
 
     ac = plan_of(anagram_candidates(spark, SF_DIR))
     assert "CartesianProduct" not in ac

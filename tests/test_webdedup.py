@@ -386,23 +386,21 @@ def test_null_inputs_never_drop_rows(spark):
     b = T.bpe_token_stats(spark, SF_DIR, docs=vdocs).collect()[0]
     assert b["n_ws_tokens"] == 0 and b["n_bpe_pieces"] == 0
     assert b["pieces_per_word"] == 0.0
-    # fingerprints: JVM fold and Arrow kernel must agree on the empty-doc
-    # value for NULL text (rolling 7, md5('') canon) — the review caught
-    # the JVM fold null-propagating to NULL while the kernel returned 7
+    # fingerprints: NULL text takes the empty-doc value (rolling 7,
+    # md5('') canon) — the review caught the JVM fold null-propagating
+    # to NULL
     import hashlib as _hl
+    import unittest.mock as _mock
 
     null_doc = spark.createDataFrame([(1, None)], "doc_id long, text string")
     with_null = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     ).unionByName(null_doc)
-    for fn in (T.fingerprints, T.fingerprints_np):
-        import unittest.mock as _mock
-
-        with _mock.patch.object(T, "load", lambda *_a, **_k: with_null):
-            row = {r["doc_id"]: r for r in fn(spark, SF_DIR).collect()}[1]
-        assert row["rolling_fp"] == 7
-        assert row["fingerprint"] == _hl.md5(b"").hexdigest()
-        assert row["n_distinct_tokens"] == 0
+    with _mock.patch.object(T, "load", lambda *_a, **_k: with_null):
+        row = {r["doc_id"]: r for r in T.fingerprints(spark, SF_DIR).collect()}[1]
+    assert row["rolling_fp"] == 7
+    assert row["fingerprint"] == _hl.md5(b"").hexdigest()
+    assert row["n_distinct_tokens"] == 0
 
     # host gate: null url groups under the sentinel pseudo-host
     docs = spark.createDataFrame(

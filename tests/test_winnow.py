@@ -18,7 +18,6 @@ from sbb_ocr_postcorrection_spark.operators.winnow import (
     WIN_MIN_SHARED,
     WIN_W,
     winnow_fingerprints,
-    winnow_fingerprints_np,
     winnow_matches,
 )
 
@@ -66,18 +65,13 @@ def test_winnow_fingerprints_match_reference(spark):
         for r in winnow_fingerprints(spark, SF).collect()
     }
     assert got == want
-    # the Arrow-kernel fast path is an exact twin of the relational form
-    got_np = {
-        (r["doc_id"], r["fp_hash"], r["pos"])
-        for r in winnow_fingerprints_np(spark, SF).collect()
-    }
-    assert got_np == want
 
 
 def test_winnow_np_twin_non_ascii(spark):
     """The kernel's character-vs-byte branch: multi-byte text (accents,
     combining marks, CJK) must slice by CHARACTERS exactly like Spark's
-    substr(), so the np form equals the relational form row-for-row."""
+    substr() and the DuckDB oracle, so the kernel equals the pure-Python
+    reference row-for-row."""
     body = (
         "die digitalisierung früher drucke erzeugt zeichenfehler über "
         "länge und straße hinweg — 学术论文的去重检测需要位置鲁棒的指纹 "
@@ -91,16 +85,15 @@ def test_winnow_np_twin_non_ascii(spark):
         (5, "short"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    rel = {
-        (r["doc_id"], r["fp_hash"], r["pos"])
-        for r in winnow_fingerprints(spark, SF, docs=docs).collect()
+    want = {
+        (doc_id, h, pos) for doc_id, text in rows for h, pos in _ref_fps(text)
     }
     knl = {
         (r["doc_id"], r["fp_hash"], r["pos"])
-        for r in winnow_fingerprints_np(spark, SF, docs=docs).collect()
+        for r in winnow_fingerprints(spark, SF, docs=docs).collect()
     }
-    assert knl == rel
-    assert rel  # non-vacuous: the long docs produce fingerprints
+    assert knl == want
+    assert want  # non-vacuous: the long docs produce fingerprints
 
 
 def test_winnow_matches_reference_and_guarantee(spark):
