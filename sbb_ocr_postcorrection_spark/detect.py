@@ -66,9 +66,9 @@ def is_noisy_token(token: str) -> bool:
 def flag_spans_counted(text: str) -> tuple[list[tuple[int, int, bool]], int]:
     """Tokenize by whitespace, flag noisy tokens; offsets into `text`.
     Returns ``(spans, n_flagged)`` — the flagged count is accumulated here
-    where the flag is already a local, so callers (correct_document's
-    unflagged-block fast path, the host-metrics rollup) never re-scan the
-    span list just to count.
+    where the flag is already a local, so callers (run_document's
+    counters, the host-metrics rollup) never re-scan the span list just
+    to count.
 
     str.split + an advancing C-level find recovers each token's offset
     without allocating a Match per token (~18% faster than the regex scan

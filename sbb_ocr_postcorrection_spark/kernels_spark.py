@@ -19,8 +19,8 @@ Scale notes:
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pipeline.py does; it
   bounds ``mapInArrow`` batches too) and the kernel drops the column;
 * no pandas on the hop: ``url``, ``warc_ts`` and ``lang`` pass through as
-  the input Arrow columns, and ``spans`` is built as one list array over
-  three flat child arrays instead of per-row Python tuples;
+  the input Arrow columns, and ``spans`` is one list array whose struct
+  values are built from all of the batch's span tuples in one call;
 * the kernel is a per-document pure function: no cross-row state, no
   shuffle, safe under task retries and speculative execution. The writer
   keeps that property: every attempt writes under its own directory, and
@@ -94,18 +94,11 @@ def _host_of(url: str | None) -> str | None:
 
 
 def _spans_array(offsets: list[int], flat: list[tuple[int, int, bool]]) -> pa.Array:
-    """One list<struct> array from the batch's spans laid end to end."""
-    starts, ends, flags = zip(*flat) if flat else ((), (), ())
-    values = pa.StructArray.from_arrays(
-        [
-            pa.array(starts, pa.int32()),
-            pa.array(ends, pa.int32()),
-            pa.array(flags, pa.bool_()),
-        ],
-        fields=list(_SPAN_TYPE),
-    )
+    """One list<struct> array from the batch's spans laid end to end: the
+    struct values come from the span tuples in one ``pa.array`` call."""
     return pa.ListArray.from_arrays(
-        pa.array(offsets, pa.int32()), values, type=_SPANS_TYPE
+        pa.array(offsets, pa.int32()), pa.array(flat, _SPAN_TYPE),
+        type=_SPANS_TYPE,
     )
 
 

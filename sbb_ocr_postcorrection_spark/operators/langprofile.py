@@ -255,7 +255,9 @@ def _nb_model(spark: SparkSession, sf_dir: str, docs=None):
         .agg(F.count(F.lit(1)).cast("long").alias("n")),
     )
     nl = nlg.groupBy("lang").agg(F.sum("n").cast("long").alias("n_l"))
-    v = nlg.select("g").distinct().agg(
+    # V counts distinct non-NULL trigrams, as the oracle's
+    # count(DISTINCT g): a NULL-text training doc's trigram is NULL
+    v = nlg.where(F.col("g").isNotNull()).select("g").distinct().agg(
         F.count(F.lit(1)).cast("long").alias("v")
     )
     den = with_ilog2(
@@ -316,14 +318,20 @@ def lang_id_posterior(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     one int64 vector-matrix product in NumPy — scoring shuffles NOTHING.
     Every document is scored, as in the oracle: a NULL augmented text
     (a lang outside LID_PHRASES, or NULL lang) is one unmatched trigram,
-    so its LL is w0, and a NULL true_lang is never `correct`."""
+    so its LL is w0, and a NULL true_lang is never `correct`. A training
+    doc with NULL lang trains a NULL class, as in the oracle: it ranks
+    after the named classes on LL ties, and predicting it is never
+    `correct`."""
     from ..operators.selection import DSIR_S
 
     import numpy as np
     import pandas as pd
 
     d, model, w0, gatec = _nb_model(spark, sf_dir, docs)
-    w0_rows = sorted(w0.collect(), key=lambda r: r["cand"])
+    # the NULL class last, as in the oracle's `ORDER BY ll DESC, cand`
+    w0_rows = sorted(
+        w0.collect(), key=lambda r: (r["cand"] is None, r["cand"] or "")
+    )
     langs = [r["cand"] for r in w0_rows]
     if len(langs) < 2:
         # degenerate: no runner-up exists, so the oracle's inner
@@ -400,9 +408,10 @@ def lang_id_posterior(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
                     "gap": gap,
                     "gate": np.full(len(gap), gate_, dtype=np.int64),
                     "prob_pass": (gap > gate_).astype(np.int32),
-                    # a NULL true_lang is never correct (oracle CASE)
+                    # NULL = NULL is never correct (oracle CASE)
                     "correct": np.array(
-                        [p == t for p, t in zip(out_pred, out_true)],
+                        [p is not None and p == t
+                         for p, t in zip(out_pred, out_true)],
                         dtype=np.int32,
                     ),
                 }

@@ -281,14 +281,19 @@ def _run_claimed(
     # repartition on the layout key before the kernel: parallelizes the
     # CPU-heavy stage regardless of input split count and co-locates each
     # output partition's rows with its writer task (one file per (dt,bkt)).
-    # Not more tasks than cores: every Python task pays ≈0.27 CPU-s of
+    # One task per core, not more: every Python task pays ≈0.27 CPU-s of
     # fixed setup (measured on a 4-core VM), mostly pyspark's
     # setup_spark_files calling importlib.invalidate_caches(), which on
-    # Python 3.11 re-reads pyspark.zip once per cached zipimporter
-    n_tasks = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
+    # Python 3.11 re-reads pyspark.zip once per cached zipimporter. When
+    # spark.sql.shuffle.partitions is a multiple k·n of the n cores (as
+    # build_session's default of 8 is on 4 cores), more tasks only regroup
+    # the same keys: partitions i, i+n, …, i+(k−1)n of pmod(h, k·n) hold
+    # exactly the rows of partition i of pmod(h, n). On 10k pages and 4
+    # cores, the 8 tasks of pmod 8 paired this way carried the doc counts
+    # of the 4 tasks of pmod 4 (2269/2201/2589/2941), at twice the setups.
+    # Core counts that do not divide it (3, 5, 6, 7 under the default)
+    # lose the dynamic balancing of the extra tasks; not measured
+    n_tasks = spark.sparkContext.defaultParallelism
     out_path = os.path.join(output_dir, "extractions")
     # the intent is held, so any staging root left here is a dead writer's
     for stale in glob.glob(os.path.join(out_path, "_staging-*")):

@@ -240,8 +240,9 @@ def bloom_gate_stream(
 
 def extract_dedup_stream(pages_stream: DataFrame, ttl_minutes: int | None = None) -> DataFrame:
     """The full streaming ingest pipeline in ONE query: fused extraction
-    kernel (mapInPandas on the stream) → stateful online dedup keyed on the
-    EXTRACTED text digest. This is the shape a continuous crawl actually
+    kernel (``kernels_spark.extract_stage`` via ``mapInArrow`` on the
+    stream) → stateful online dedup keyed on the EXTRACTED text digest.
+    This is the shape a continuous crawl actually
     wants — boilerplate variations of the same article hash identically
     only after extraction, so dedup must run downstream of the kernel.
     Chaining a stateless Arrow kernel into a stateful operator is plain

@@ -17,6 +17,11 @@ from sbb_ocr_postcorrection_spark.kernel import run_document
 
 GOLDEN = "tests/golden/pages_expected.parquet"
 MAKERS = {"plain": make_page, "plain0": make_page, "rich": make_rich_page, "rich0": make_rich_page}
+# sha256 over every golden page's ``run_document(...).spans``, one
+# ``start,end,flagged;`` record per span and a newline per page, in the
+# parquet's row order: the parquet pins text and counters but no span
+# offsets (17,356 spans, 1,612 of them flagged)
+SPANS_SHA256 = "8503d1cc65a254bd92efb482922c3828b51d2fb1f80b63ec2d2dba23d149de72"
 
 
 def test_kernel_matches_golden():
@@ -34,3 +39,13 @@ def test_kernel_matches_golden():
                 r.chars_in, r.chars_out) == (
             g["n_blocks"], g["n_content_blocks"], g["n_spans"], g["n_flagged"],
             g["chars_in"], g["chars_out"])
+
+
+def test_kernel_spans_match_golden():
+    h = hashlib.sha256()
+    for g in pq.read_table(GOLDEN).to_pylist():
+        p = MAKERS[g["tag"]](g["seed"], g["i"], g["noise_rate"])
+        for start, end, flagged in run_document(p.html).spans:
+            h.update(f"{start},{end},{int(flagged)};".encode())
+        h.update(b"\n")
+    assert h.hexdigest() == SPANS_SHA256, "kernel span offsets drifted"

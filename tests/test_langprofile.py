@@ -263,3 +263,39 @@ def test_posterior_scores_null_augmented_docs_like_oracle(spark, tmp_path):
     got = {r[0]: dict(zip(df.columns, r)) for r in rows}
     assert got[5]["true_lang"] == "xx" and got[5]["correct"] == 0
     assert got[10]["true_lang"] is None and got[10]["correct"] == 0
+
+
+def test_posterior_null_lang_training_doc_like_oracle(spark, tmp_path):
+    """A training-fold document with NULL lang augments to a NULL text.
+    The oracle trains it as a class of its own (lang NULL, one NULL
+    trigram) and orders that class after every named one (NULLS LAST)
+    when it breaks LL ties; a NULL prediction is never `correct`. The
+    kernel must score every document the same way instead of failing on
+    the NULL class name."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from sbb_ocr_postcorrection_spark.operators.langprofile import (
+        lang_id_posterior,
+    )
+    from tests.test_queries_oracle import canon
+
+    assert 6 % LID_FOLD != 0 and 7 % LID_FOLD != 0  # both train
+    path = str(tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (SELECT * REPLACE (CASE doc_id WHEN 6 THEN NULL
+                    WHEN 7 THEN 'xx' ELSE lang END AS lang)
+                  FROM '{SF}/documents.parquet') TO '{path}' (FORMAT parquet)"""
+    )
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    res = con.execute(entrymod.oracle_sql()["lang_id_posterior"])
+    ocols = [c[0] for c in res.description]
+    orows = res.fetchall()
+    assert len(orows) == 500
+
+    df = lang_id_posterior(spark, SF, docs=spark.read.parquet(path))
+    rows = [tuple(r) for r in df.collect()]
+    assert sorted(df.columns) == sorted(ocols)
+    assert len(rows) == len(orows)
+    assert canon(rows, df.columns) == canon(orows, ocols)
