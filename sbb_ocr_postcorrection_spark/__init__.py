@@ -24,7 +24,9 @@ Layout:
   datagen        deterministic synthetic pages generator
   kernels_spark  the fused stage 1+2 kernel as a mapInArrow stage, and the
                  job's writer stage around it
-  pipeline       end-to-end job: partition layout, salting, resume manifest
+  pipeline       end-to-end job: partition layout, salting, snapshot resume
+  snapshots      snapshot log (visible partitions + their sums), rollback,
+                 writer fence
   operators/     relational operator library (SURVEY.md §2 mappings)
   queries        the driver-facing queries()/oracle_sql() registry
 """

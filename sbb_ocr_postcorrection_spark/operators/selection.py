@@ -119,17 +119,22 @@ def _bigram_buckets(d: DataFrame) -> DataFrame:
     )
 
 
-def _weights_from(spark, bg: DataFrame) -> DataFrame:
-    """Bucket weight dim from a bigram-bucket stream: one hash
-    aggregation to DSIR_BUCKETS rows, then integer Mitchell logs.
+def _bucket_counts(bg: DataFrame) -> DataFrame:
+    """Per-bucket target (ct) and raw (cr) occurrence counts of a
+    bigram-bucket stream: one hash aggregation to ≤ DSIR_BUCKETS rows."""
+    return bg.groupBy("bucket").agg(
+        F.sum(F.col("is_target").cast("long")).alias("ct"),
+        F.sum((~F.col("is_target")).cast("long")).alias("cr"),
+    )
+
+
+def _weights_from_counts(spark, cnt: DataFrame) -> DataFrame:
+    """Bucket weight dim (bucket, ct, cr, w) from per-bucket counts:
+    buckets without a count get 0, then integer Mitchell logs.
 
     w_b = ilog2(ct_b+1) − ilog2(cr_b+1) + ilog2(Nr+B) − ilog2(Nt+B)
     — the fixed-point form of log(λ̂t_b / λ̂r_b) with add-one smoothing
     over target (ct) and raw (cr) occurrence counts."""
-    cnt = bg.groupBy("bucket").agg(
-        F.sum(F.col("is_target").cast("long")).alias("ct"),
-        F.sum((~F.col("is_target")).cast("long")).alias("cr"),
-    )
     full = spark.range(DSIR_BUCKETS).select(F.col("id").cast("long").alias("bucket"))
     cnt = full.join(cnt, "bucket", "left").select(
         "bucket",
@@ -163,7 +168,7 @@ def dsir_weights(spark, sf_dir, docs=None) -> DataFrame:
 
     d = _base_docs(spark, sf_dir, docs)
     bg = persist_slot("dsir_bigrams", _bigram_buckets(d))
-    return _weights_from(spark, bg)
+    return _weights_from_counts(spark, _bucket_counts(bg))
 
 
 def dsir_score(spark, sf_dir, docs=None) -> DataFrame:
@@ -177,7 +182,7 @@ def dsir_score(spark, sf_dir, docs=None) -> DataFrame:
 
     d = _base_docs(spark, sf_dir, docs)
     bg = persist_slot("dsir_bigrams", _bigram_buckets(d))
-    w = _weights_from(spark, bg).select("bucket", "w")
+    w = _weights_from_counts(spark, _bucket_counts(bg)).select("bucket", "w")
     per_b = bg.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
     sc = (
         per_b.join(F.broadcast(w), "bucket")
@@ -536,43 +541,13 @@ def dsir_weights_incremental(spark, sf_dir, docs=None) -> DataFrame:
     hist_bg = _bigram_buckets(d.where(F.col("doc_id") % 2 == 0))
     delta_bg = _bigram_buckets(d.where(F.col("doc_id") % 2 != 0))
 
-    def counts(bg):
-        return bg.groupBy("bucket").agg(
-            F.sum(F.col("is_target").cast("long")).alias("ct"),
-            F.sum((~F.col("is_target")).cast("long")).alias("cr"),
-        )
-
     merged = (
-        counts(hist_bg)
-        .unionByName(counts(delta_bg))
+        _bucket_counts(hist_bg)
+        .unionByName(_bucket_counts(delta_bg))
         .groupBy("bucket")
         .agg(F.sum("ct").alias("ct"), F.sum("cr").alias("cr"))
     )
-    full = spark.range(DSIR_BUCKETS).select(
-        F.col("id").cast("long").alias("bucket")
-    )
-    cnt = full.join(merged, "bucket", "left").select(
-        "bucket",
-        F.coalesce("ct", F.lit(0)).cast("long").alias("ct"),
-        F.coalesce("cr", F.lit(0)).cast("long").alias("cr"),
-    )
-    tot = cnt.agg(
-        (F.sum("ct") + DSIR_BUCKETS).cast("long").alias("nt1"),
-        (F.sum("cr") + DSIR_BUCKETS).cast("long").alias("nr1"),
-    )
-    tot = with_ilog2(with_ilog2(tot, "nt1", "lnt"), "nr1", "lnr")
-    w = cnt.withColumn("ct1", F.col("ct") + 1).withColumn(
-        "cr1", F.col("cr") + 1
-    )
-    w = with_ilog2(with_ilog2(w, "ct1", "lct"), "cr1", "lcr")
-    return w.crossJoin(F.broadcast(tot.select("lnt", "lnr"))).select(
-        "bucket",
-        "ct",
-        "cr",
-        (F.col("lct") - F.col("lcr") + F.col("lnr") - F.col("lnt"))
-        .cast("long")
-        .alias("w"),
-    )
+    return _weights_from_counts(spark, merged)
 
 
 CUR_SHARDS = 8          # shards per phase

@@ -3,14 +3,16 @@ checkpoints, per-partition lineage + metrics.
 
 Iceberg note: the sandbox image has no Iceberg jars, so the Iceberg-layout
 contract (days(warc_ts) × bucket(url) partitioning, idempotent
-overwrite-by-partition, manifest-based resume) is implemented on plain
-parquet plus an explicit manifest table, with Iceberg's writer/commit
-split: the kernel task is the writer (``kernels_spark.write_stage`` writes
-its (dt, bkt) groups into a per-attempt staging directory and returns one
-row per file with its manifest sums), and the driver commits — per
-written partition it deletes the old directory and moves in the returned
-files, then builds the manifest from the returned rows without re-reading
-the output.
+overwrite-by-partition, snapshot-based resume) is implemented on plain
+parquet plus the snapshot log of snapshots.py, with Iceberg's
+writer/commit split: the kernel task is the writer
+(``kernels_spark.write_stage`` writes its (dt, bkt) groups into a
+per-attempt staging directory and returns one row per file with its
+sums), and the driver commits — per written partition it deletes the old
+directory and moves in the returned files, then commits one snapshot
+whose entry for each visible partition carries that partition's sums, so
+the table's visible set and its statistics are one record, written once
+and never re-read from the output.
 
 Filesystem contract: the output root is a POSIX path that the driver and
 every worker can reach (a local disk in local mode, a shared mount on a
@@ -20,11 +22,11 @@ cluster). The commit renames files within it, and snapshots.py's
 Resume contract (north_rule): a killed job restarts, removes from the
 pending partition list every partition the current snapshot of the
 append-only log (snapshots.py) names, and processes only the remainder. A
-partition is done only once the snapshot naming it committed: manifest
-rows of a run that died before its snapshot commit do not count, so a
-kill before the first commit re-extracts everything. Partition writes are
-idempotent overwrites, never blind appends (contrast the reference's
-append=True default, preprocessing/database.py:14-15).
+partition is done only once the snapshot naming it committed: files a run
+moved in before dying ahead of its snapshot commit are neither visible
+nor done, so a kill before the first commit re-extracts everything.
+Partition writes are idempotent overwrites, never blind appends (contrast
+the reference's append=True default, preprocessing/database.py:14-15).
 """
 
 from __future__ import annotations
@@ -44,12 +46,8 @@ from .kernels_spark import WRITTEN_SCHEMA, write_stage
 N_URL_BUCKETS = 16
 N_SALTS = 8  # host-aggregation salting fan-out
 
-MANIFEST_SCHEMA = (
-    "dt date, bkt int, n_docs long, chars_in long, chars_out long, "
-    "n_flagged long, n_spans long, completed_at_epoch long, "
-    "snapshot_id long"
-)
-_MANIFEST_SUMS = ("n_docs", "chars_in", "chars_out", "n_flagged", "n_spans")
+# per-partition sums a snapshot entry carries after its (dt_iso, bkt)
+_PARTITION_SUMS = ("n_docs", "chars_in", "chars_out", "n_flagged", "n_spans")
 
 
 def build_session(
@@ -148,10 +146,6 @@ def salted_host_agg(
     )
 
 
-def _manifest_path(output_dir: str) -> str:
-    return os.path.join(output_dir, "_manifest")
-
-
 def _arrow_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A small driver-side frame (``rows`` of tuples in ``ddl`` column
     order) built by way of a ``pyarrow.Table``: it plans as a
@@ -166,43 +160,6 @@ def _arrow_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
-
-
-def load_manifest(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Completed-partition manifest (dt, bkt, metrics...). Empty if absent.
-
-    Only a MISSING path, or a directory holding no committed file (a first
-    manifest append killed before its commit leaves only ``_temporary``),
-    means "no completed partition". Any other read failure (corrupt
-    footer, permissions, transient FS error) re-raises: swallowing it would
-    make a resume=True run silently reprocess every partition and APPEND
-    duplicate (dt, bkt) rows to job_metrics (ADVICE r1 #2)."""
-    from pyspark.errors import AnalysisException
-
-    path = _manifest_path(output_dir)
-    try:
-        m = spark.read.parquet(path)
-    except AnalysisException as exc:
-        msg = str(exc)
-        empty = ("PATH_NOT_FOUND", "Path does not exist", "UNABLE_TO_INFER_SCHEMA")
-        if not any(k in msg for k in empty):
-            raise
-        return _arrow_frame(spark, [], MANIFEST_SCHEMA)
-    # a partition re-extracted after a rollback (or a kill between the
-    # manifest append and the snapshot commit) appends a second row for
-    # the same (dt, bkt): keep only the LATEST attempt per partition —
-    # highest snapshot_id, then completed_at_epoch (the kernel is
-    # deterministic, so same-id ties carry identical metric values)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("dt", "bkt").orderBy(
-        F.desc("snapshot_id"), F.desc("completed_at_epoch")
-    )
-    return (
-        m.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def run_extraction_job(
@@ -220,7 +177,7 @@ def run_extraction_job(
     (snapshots.py): the done-set is the CURRENT snapshot's partition set,
     and empty before the first commit (so a rollback makes the next run
     re-extract what it hid, and a run killed before its commit is
-    redone, whatever manifest rows it appended); the commit intent is
+    redone, whatever files it moved in); the commit intent is
     claimed BEFORE any data is written, so a second writer racing on the
     same table loses cleanly with ConcurrentWriteError. reclaim_stale
     force-reclaims an intent left by a writer that died on ANOTHER host
@@ -238,9 +195,8 @@ def run_extraction_job(
     # pending partitions = all partitions − done-set (driver-side set math;
     # the partition list is tiny even at 10^12 docs: days × buckets)
     all_rows = pages.select("dt", "bkt").distinct().collect()
-    done_set = snapshots.snapshot_partition_set(
-        snapshots.current_snapshot(output_dir)
-    )
+    snap = snapshots.current_snapshot(output_dir)
+    done_set = snapshots.snapshot_partition_set(snap)
     pending_rows = [
         r
         for r in all_rows
@@ -258,7 +214,7 @@ def run_extraction_job(
     try:
         return _run_claimed(
             spark, pages, output_dir, resume, ticket, pending_rows,
-            n_skipped, done_set, t0,
+            n_skipped, snap, t0,
         )
     except Exception:
         snapshots.abort_commit(output_dir, ticket)
@@ -267,7 +223,7 @@ def run_extraction_job(
 
 def _run_claimed(
     spark, pages, output_dir, resume, ticket, pending_rows, n_skipped,
-    done_set, t0,
+    snap, t0,
 ) -> dict:
     """The claimed section of run_extraction_job: everything between
     intent and snapshot commit (any failure here releases the intent)."""
@@ -320,35 +276,21 @@ def _run_claimed(
             os.replace(r["path"], os.path.join(part_dir, os.path.basename(r["path"])))
     shutil.rmtree(staging, ignore_errors=True)
 
-    # per-partition lineage + metrics (A10), appended to the manifest
-    # BEFORE the snapshot commit — a partition is "done" only once its
-    # data landed AND the snapshot naming it committed (idempotent
-    # restart: a kill between manifest and snapshot re-extracts, and
-    # load_manifest keeps only the latest attempt per partition). The
-    # rows are the writer's per-file sums: the output is never re-read.
-    completed_at = int(time.time())
-    metric_rows = [
-        (
-            dt, bkt, *(sum(r[c] for r in rows) for c in _MANIFEST_SUMS),
-            completed_at, ticket["next_id"],
-        )
+    # per-partition lineage + metrics (A10): each written partition's
+    # snapshot entry carries the writer's per-file sums, so the commit
+    # that makes the partition visible records its statistics too, and
+    # the output is never re-read. A resume keeps every entry of the
+    # current snapshot whole; resume=False replaces the visible set
+    carried = snap["partitions"] if resume and snap else []
+    entries = carried + [
+        [dt.isoformat(), bkt, *(sum(r[c] for r in rows) for c in _PARTITION_SUMS)]
         for (dt, bkt), rows in by_part.items()
     ]
-    manifest_df = _arrow_frame(spark, metric_rows, MANIFEST_SCHEMA)
-    # resume=False reprocesses everything: supersede the manifest
-    # instead of appending duplicate (dt, bkt) rows
-    manifest_mode = "append" if resume else "overwrite"
-    manifest_df.write.mode(manifest_mode).parquet(
-        _manifest_path(output_dir)
-    )
-
     n_docs = sum(r["n_docs"] for r in written)
-    pending_iso = {(r["dt"].isoformat(), r["bkt"]) for r in pending_rows}
-    visible = sorted(done_set | pending_iso) if resume else sorted(pending_iso)
     snapshots.commit_snapshot(
         output_dir,
         ticket,
-        visible,
+        entries,
         op="append" if resume else "overwrite",
         extra={"n_docs": int(n_docs)},
     )
@@ -358,83 +300,6 @@ def _run_claimed(
         "partitions_skipped": int(n_skipped),
         "seconds": time.time() - t0,
         "snapshot_id": ticket["next_id"],
-    }
-
-
-def _list_parquet_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(path, bytes) of every *.parquet under `path`, via the Hadoop
-    FileSystem API — local glob would silently see an empty sink on
-    hdfs:// / s3a:// deployments (ADVICE r2 #4; same reason
-    operators/bucketing.write_bucketed uses this API)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    out: list[tuple[str, int]] = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        if st.getPath().getName().endswith(".parquet"):
-            out.append((st.getPath().toString(), int(st.getLen())))
-    return out
-
-
-def compact_extractions(
-    spark: SparkSession, output_dir: str, target_mb: int = 256
-) -> dict:
-    """Small-file compaction for the partitioned extraction sink.
-
-    Incremental resumed runs and fine-grained task parallelism leave each
-    (dt, bkt) partition with many small parquet files — the classic
-    scale killer for downstream scans (one task per file, metadata-bound
-    planning at 10^12 docs). Compaction rewrites each partition in one
-    pass: hash-repartition ON THE PARTITION COLUMNS so each (dt, bkt)
-    lands in one task, with `maxRecordsPerFile` (derived from the measured
-    bytes/row) splitting any partition that exceeds target_mb — hash
-    repartitioning alone can never split an oversized key. Already-compact
-    sinks short-circuit without rewriting a byte.
-
-    Durability note: dynamic partition overwrite is idempotent at the
-    partition level, but its commit (delete old dir, move staged files) is
-    not atomic on a plain filesystem — a crash inside the commit window
-    can lose that partition while the manifest still lists it as done. Run
-    compaction in a maintenance window or on a snapshot; the Iceberg-native
-    form (`rewrite_data_files`) commits atomically and is the production
-    swap-in.
-
-    Returns {files_before, files_after, partitions, skipped}."""
-    out_path = os.path.join(output_dir, "extractions")
-    files_before = _list_parquet_files(spark, out_path)
-    sizes = [s for _, s in files_before]
-    bytes_total = sum(sizes)
-    df = spark.read.parquet(out_path)
-    n_parts = df.select("dt", "bkt").distinct().count()
-    target_bytes = target_mb * 1024 * 1024
-    if len(files_before) <= n_parts and all(s <= 1.5 * target_bytes for s in sizes):
-        return {
-            "files_before": len(files_before),
-            "files_after": len(files_before),
-            "partitions": int(n_parts),
-            "skipped": True,
-        }
-    n_rows = df.count()
-    avg_row = max(bytes_total / max(n_rows, 1), 1.0)
-    max_records = max(int(target_bytes / avg_row), 1)
-    (
-        df.repartition(max(n_parts, 1), "dt", "bkt")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", max_records)
-        .partitionBy("dt", "bkt")
-        .parquet(out_path)
-    )
-    files_after = _list_parquet_files(spark, out_path)
-    return {
-        "files_before": len(files_before),
-        "files_after": len(files_after),
-        "partitions": int(n_parts),
-        "skipped": False,
     }
 
 
@@ -503,12 +368,22 @@ def export_training_corpus(
 
 
 def job_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Aggregate job metrics from the manifest: chars in/out, detector hit
-    rate (A10 analog of the reference's corpus-level stats)."""
-    m = load_manifest(spark, output_dir)
-    return m.agg(
+    """Aggregate job metrics over the table's visible partitions, from the
+    sums their current snapshot entries carry: chars in/out, detector hit
+    rate (A10 analog of the reference's corpus-level stats). The hit rate
+    is NULL when no visible doc has a span; every sum is NULL when no
+    partition is visible (no snapshot yet, or an empty one)."""
+    from . import snapshots
+
+    snap = snapshots.current_snapshot(output_dir)
+    sums = _arrow_frame(
+        spark,
+        [p[2:] for p in snap["partitions"]] if snap else [],
+        ", ".join(f"{c} long" for c in _PARTITION_SUMS),
+    )
+    return sums.agg(
         F.sum("n_docs").alias("docs"),
         F.sum("chars_in").alias("chars_in"),
         F.sum("chars_out").alias("chars_out"),
-        (F.sum("n_flagged") / F.sum("n_spans")).alias("detector_hit_rate"),
+        F.try_divide(F.sum("n_flagged"), F.sum("n_spans")).alias("detector_hit_rate"),
     )

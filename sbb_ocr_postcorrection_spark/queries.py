@@ -253,7 +253,7 @@ def _ahash_ctes() -> str:
 
 def _dsir_weight_ctes() -> str:
     """Shared CTE chain documents → bigram buckets → smoothed counts →
-    Mitchell-log weights (mirrors operators.selection._weights_from)."""
+    Mitchell-log weights (mirrors operators.selection._weights_from_counts)."""
     from .operators.selection import DSIR_BUCKETS, DSIR_TARGET_LANG
 
     b = DSIR_BUCKETS

@@ -8,14 +8,19 @@ does:
 
 - Every successful `run_extraction_job` commits ONE snapshot: an
   immutable JSON file `_snapshots/v{N}.json` recording the table's full
-  visible partition set, its parent snapshot, and the operation. The log
-  is append-only — history is never rewritten.
+  visible partition set, its parent snapshot, and the operation. Each
+  partition's entry also carries that partition's sums (docs, chars
+  in/out, flagged and total spans; pipeline.job_metrics reads them), so
+  the commit that makes data visible records its statistics too, as an
+  Iceberg snapshot does. The log is append-only — history is never
+  rewritten.
 - `rollback_to_snapshot` commits a NEW snapshot whose partition set is
   the target's (Iceberg-style rollback: a forward commit, not history
-  surgery). Readers going through `read_extractions` see only the
-  current snapshot's partitions; the next job run re-extracts everything
-  the rollback hid (the resume set is derived from the CURRENT snapshot,
-  not from files on disk).
+  surgery); it copies the target's entries whole, sums included. Readers
+  going through `read_extractions` see only the current snapshot's
+  partitions, and none before the first commit; the next job run
+  re-extracts everything the rollback hid (the resume set is derived from
+  the CURRENT snapshot, not from files on disk).
 - The writer fence is optimistic concurrency at commit granularity: a
   writer claims the table by atomically creating `_snapshots/_intent.json`
   (POSIX O_EXCL) BEFORE writing any data; a second writer racing on the
@@ -189,7 +194,9 @@ def commit_snapshot(
     was somehow committed by someone else, unlike the silent os.replace
     overwrite; ADVICE r6), then release the intent.
     `partitions` is the table's FULL visible partition set after this
-    commit, as (dt_iso, bkt)."""
+    commit, one entry per partition: (dt_iso, bkt) followed by whatever
+    the writer records for it (the job appends its per-partition sums),
+    stored as given."""
     if not _intent_matches(output_dir, ticket):
         raise ConcurrentWriteError(
             f"commit intent for table {output_dir} is no longer held by "
@@ -281,19 +288,17 @@ def rollback_to_snapshot(
 
 def read_extractions(spark, output_dir: str):
     """Snapshot-consistent read of the extraction sink: only partitions
-    visible in the CURRENT snapshot. Falls back to a plain read for
-    pre-snapshot outputs (no _snapshots log). The partition filter is a
-    broadcast semi join on the tiny (dt, bkt) grid — it prunes at the
-    scan via dynamic partition pruning, never a full-table filter."""
+    visible in the CURRENT snapshot, and none before the first commit
+    (files a killed run moved in are not yet part of the table). The
+    partition filter is a broadcast semi join on the tiny (dt, bkt) grid
+    — it prunes at the scan via dynamic partition pruning, never a
+    full-table filter."""
     from pyspark.sql import functions as F
 
     from .pipeline import _arrow_frame
 
     df = spark.read.parquet(os.path.join(output_dir, "extractions"))
-    snap = current_snapshot(output_dir)
-    if snap is None:
-        return df
-    parts = [(p[0], int(p[1])) for p in snap["partitions"]]
+    parts = sorted(snapshot_partition_set(current_snapshot(output_dir)))
     if not parts:
         return df.where(F.lit(False))
     vis = _arrow_frame(spark, parts, "dt string, bkt int").select(

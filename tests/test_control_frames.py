@@ -1,5 +1,5 @@
-"""The job's control-path frames (pending partitions, the empty and the
-written manifest, the snapshot's visible partitions) are driver rows built
+"""The job's control-path frames (pending partitions, the snapshot's
+visible partitions, job_metrics' partition sums) are driver rows built
 through a ``pyarrow.Table``: each plans as a LocalTableScan and never as a
 Python RDD scan, whose every evaluation starts Python worker tasks."""
 
@@ -11,9 +11,10 @@ from pyspark.sql.types import StructType
 
 from sbb_ocr_postcorrection_spark import pipeline, snapshots
 from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
-from sbb_ocr_postcorrection_spark.pipeline import MANIFEST_SCHEMA, run_extraction_job
+from sbb_ocr_postcorrection_spark.pipeline import job_metrics, run_extraction_job
 
 PENDING_SCHEMA = "dt date, bkt int"
+SUMS_SCHEMA = "n_docs long, chars_in long, chars_out long, n_flagged long, n_spans long"
 
 
 def plan_of(df) -> str:
@@ -32,13 +33,13 @@ def test_helper_frames_are_local_table_scans(spark):
     assert_local(pending)
     assert [tuple(r) for r in pending.collect()] == [(d, 3), (d, 7)]
 
-    manifest_row = (d, 3, 10, 2000, 900, 4, 80, 1_700_000_000, 1)
-    manifest = pipeline._arrow_frame(spark, [manifest_row], MANIFEST_SCHEMA)
-    assert_local(manifest)
-    assert manifest.schema == StructType.fromDDL(MANIFEST_SCHEMA)
-    assert [tuple(r) for r in manifest.collect()] == [manifest_row]
+    sums_row = (10, 2000, 900, 4, 80)
+    sums = pipeline._arrow_frame(spark, [sums_row], SUMS_SCHEMA)
+    assert_local(sums)
+    assert sums.schema == StructType.fromDDL(SUMS_SCHEMA)
+    assert [tuple(r) for r in sums.collect()] == [sums_row]
 
-    empty = pipeline._arrow_frame(spark, [], MANIFEST_SCHEMA)
+    empty = pipeline._arrow_frame(spark, [], SUMS_SCHEMA)
     assert_local(empty)
     assert empty.count() == 0
 
@@ -59,11 +60,10 @@ def test_job_control_frames_are_local(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pipeline, "_arrow_frame", recording)
     r = run_extraction_job(spark, spark.read.parquet(src), out)
 
-    # fresh table, no snapshot log: the pending list and the manifest
-    # rows (the done-set comes from the snapshot log, so no manifest read)
+    # fresh table, no snapshot log: only the pending list (the sums go
+    # into the snapshot commit, which builds no frame)
     assert [(ddl, n) for ddl, n, _ in built] == [
         (PENDING_SCHEMA, r["partitions_done"]),
-        (MANIFEST_SCHEMA, r["partitions_done"]),
     ]
     for _, _, df in built:
         assert_local(df)
@@ -76,10 +76,17 @@ def test_job_control_frames_are_local(spark, tmp_path, monkeypatch):
     assert "ExistingRDD" not in plan_of(visible)
     assert visible.count() == r["docs"]
 
-    # the manifest rows still equal a re-read groupBy(dt, bkt) of the output
+    # job_metrics aggregates the snapshot's sums through the helper too
+    built.clear()
+    job_metrics(spark, out).collect()
+    assert [(ddl, n) for ddl, n, _ in built] == [(SUMS_SCHEMA, r["partitions_done"])]
+    assert_local(built[0][2])
+
+    # the snapshot entries still equal a re-read groupBy(dt, bkt) of the output
     cols = ["dt", "bkt", "n_docs", "chars_in", "chars_out", "n_flagged", "n_spans"]
-    manifest = {
-        tuple(row) for row in spark.read.parquet(f"{out}/_manifest").select(*cols).collect()
+    entries = {
+        (datetime.date.fromisoformat(p[0]), *p[1:])
+        for p in snapshots.current_snapshot(out)["partitions"]
     }
     reread = {
         tuple(row)
@@ -95,6 +102,6 @@ def test_job_control_frames_are_local(spark, tmp_path, monkeypatch):
         .select(*cols)
         .collect()
     }
-    assert manifest == reread
-    assert len(manifest) == r["partitions_done"]
-    assert sum(row[2] for row in manifest) == r["docs"] == 120
+    assert entries == reread
+    assert len(entries) == r["partitions_done"]
+    assert sum(row[2] for row in entries) == r["docs"] == 120

@@ -2,7 +2,7 @@
 verify the output is complete, deduplicated and byte-stable — the
 north-rule resumability contract, exercised for real (not simulated)."""
 
-import json
+import glob
 import os
 import signal
 import subprocess
@@ -18,7 +18,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_PAGES = 1200
 
 
-def _run_job(out_dir: str, input_path: str, kill_after: float | None = None) -> int:
+def _run_job(out_dir: str, input_path: str, kill_mid_write: bool = False) -> int:
     cmd = [
         sys.executable,
         os.path.join(REPO, "scripts", "run_job.py"),
@@ -29,10 +29,16 @@ def _run_job(out_dir: str, input_path: str, kill_after: float | None = None) -> 
     proc = subprocess.Popen(
         cmd, cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL
     )
-    if kill_after is None:
+    if not kill_mid_write:
         proc.communicate(timeout=300)
         return proc.returncode
-    time.sleep(kill_after)
+    # kill once the writer tasks have staged output: the job holds its
+    # commit intent and has written data, but has not committed. A fixed
+    # delay cannot promise that: the whole job takes 17-20 s on 4 cores
+    deadline = time.time() + 120
+    staged = os.path.join(out_dir, "extractions", "_staging-*")
+    while not glob.glob(staged) and proc.poll() is None and time.time() < deadline:
+        time.sleep(0.05)
     proc.send_signal(signal.SIGKILL)
     proc.wait(timeout=60)
     return proc.returncode
@@ -44,10 +50,10 @@ def test_kill_and_resume(tmp_path, spark):
     pq.write_table(pages_to_arrow(generate_pages(N_PAGES, seed=7)), input_path)
     out = str(tmp_path / "out")
 
-    # first run: killed mid-flight (timing-independent: whether the kill
-    # lands before, during or after partition commits, the invariants below
-    # must hold after the resume)
-    rc = _run_job(out, input_path, kill_after=18.0)
+    # first run: killed mid-write (whether a kill lands before, during or
+    # after partition commits, the invariants below must hold after the
+    # resume)
+    rc = _run_job(out, input_path, kill_mid_write=True)
     assert rc != 0  # SIGKILL
 
     # resume run to completion
@@ -60,12 +66,19 @@ def test_kill_and_resume(tmp_path, spark):
     assert result.count() == N_PAGES
     assert result.select("url").distinct().count() == N_PAGES
 
-    # manifest covers every partition exactly once
-    manifest = spark.read.parquet(f"{out}/_manifest")
-    parts = manifest.select("dt", "bkt").collect()
-    assert len(parts) == len({(r["dt"], r["bkt"]) for r in parts})
-    n_docs_manifest = sum(r["n_docs"] for r in manifest.select("n_docs").collect())
-    assert n_docs_manifest == N_PAGES
+    # the current snapshot's entries cover every partition exactly once,
+    # and their doc sums count every page once; no _manifest table exists
+    from sbb_ocr_postcorrection_spark import snapshots
+
+    entries = snapshots.current_snapshot(out)["partitions"]
+    parts = {(p[0], p[1]) for p in entries}
+    assert len(parts) == len(entries)
+    assert parts == {
+        (r["dt"].isoformat(), r["bkt"])
+        for r in result.select("dt", "bkt").distinct().collect()
+    }
+    assert sum(p[2] for p in entries) == N_PAGES
+    assert not os.path.exists(f"{out}/_manifest")
 
     # byte-stability: a fresh from-scratch run produces identical text
     out2 = str(tmp_path / "out_fresh")
@@ -80,7 +93,6 @@ def test_kill_and_resume(tmp_path, spark):
     # otherwise the resume would have FAILED with ConcurrentWriteError),
     # the latest snapshot covers every partition exactly once, and
     # rollback + re-extract reproduces the same bytes
-    from sbb_ocr_postcorrection_spark import snapshots
     from sbb_ocr_postcorrection_spark.snapshots import (
         list_snapshots,
         read_extractions,
@@ -90,9 +102,7 @@ def test_kill_and_resume(tmp_path, spark):
     assert not os.path.exists(snapshots._intent_path(out))
     snaps = list_snapshots(out)
     assert snaps, "completing runs must commit snapshots"
-    assert snapshots.snapshot_partition_set(snaps[-1]) == {
-        (r["dt"].isoformat(), r["bkt"]) for r in parts
-    }
+    assert snapshots.snapshot_partition_set(snaps[-1]) == parts
     assert read_extractions(spark, out).count() == N_PAGES
     if len(snaps) >= 2 and snaps[0]["n_partitions"] < snaps[-1]["n_partitions"]:
         # the kill landed after the first commit: roll back to it, verify

@@ -10,7 +10,6 @@ from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
 from sbb_ocr_postcorrection_spark.kernels_spark import extract_pages
 from sbb_ocr_postcorrection_spark.pipeline import (
     job_metrics,
-    load_manifest,
     run_extraction_job,
     salted_host_agg,
     with_partition_cols,
@@ -108,10 +107,6 @@ def test_salted_host_agg_matches_plain(spark, pages_parquet):
     }
 
 
-def test_manifest_empty_when_absent(spark, tmp_path):
-    assert load_manifest(spark, str(tmp_path / "nope")).count() == 0
-
-
 def test_export_training_corpus(spark, tmp_path):
     """End-product export: kept docs land in sharded JSONL, the manifest
     accounts for every input doc, and no dropped doc leaks through."""
@@ -159,27 +154,14 @@ def test_null_url_does_not_kill_the_job(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["host"] is None
 
 
-def test_resume_after_kill_inside_first_manifest_append(spark, tmp_path, pages_parquet):
-    """A run killed while Spark committed the table's first manifest append
-    leaves ``_manifest`` holding only ``_temporary``: that records no
-    completed partition, so the next run extracts everything instead of
-    failing on schema inference."""
-    import os
-
-    out = str(tmp_path / "out")
-    os.makedirs(f"{out}/_manifest/_temporary/0/_temporary")
-    assert load_manifest(spark, out).count() == 0
-    r = run_extraction_job(spark, spark.read.parquet(pages_parquet), out)
-    assert r["docs"] == 150 and r["partitions_skipped"] == 0
-
-
 def test_resume_after_kill_before_first_snapshot_commit(
     spark, tmp_path, pages_parquet, monkeypatch
 ):
-    """A run that dies after its manifest append but before snapshot 1
-    commits leaves a manifest naming every partition. The done-set comes
-    from the snapshot log alone, so the rerun extracts every page, commits
-    snapshot 1, and job_metrics counts each doc once."""
+    """A run that dies after moving its files in but before snapshot 1
+    commits leaves every partition's files on disk, yet none of them is
+    visible. The done-set comes from the snapshot log alone, so the rerun
+    extracts every page, commits snapshot 1, and job_metrics counts each
+    doc once."""
     out = str(tmp_path / "out")
     pages = spark.read.parquet(pages_parquet)
 
@@ -190,10 +172,73 @@ def test_resume_after_kill_before_first_snapshot_commit(
         m.setattr(snapshots, "commit_snapshot", die)
         with pytest.raises(RuntimeError, match="killed"):
             run_extraction_job(spark, pages, out)
-    assert load_manifest(spark, out).count() > 0
+    assert spark.read.parquet(f"{out}/extractions").count() == 150
     assert snapshots.list_snapshots(out) == []
+    assert snapshots.read_extractions(spark, out).count() == 0
 
     r = run_extraction_job(spark, pages, out)
     assert r["docs"] == 150 and r["partitions_skipped"] == 0
     assert len(snapshots.list_snapshots(out)) == 1
     assert job_metrics(spark, out).collect()[0]["docs"] == 150
+
+
+def test_job_metrics_describe_the_visible_table(
+    spark, tmp_path, pages_parquet, monkeypatch
+):
+    """job_metrics comes from the current snapshot's entries, so after a
+    fresh run, a resume, a resume=False rerun, a rollback and a run killed
+    before its first commit it equals the aggregate of exactly the rows
+    read_extractions shows."""
+    pages = spark.read.parquet(pages_parquet)
+
+    def check(out):
+        got = tuple(job_metrics(spark, out).first())
+        visible = snapshots.read_extractions(spark, out).agg(
+            F.sum(F.lit(1)),
+            F.sum("chars_in"),
+            F.sum("chars_out"),
+            F.try_divide(F.sum("n_flagged"), F.sum("n_spans")),
+        )
+        assert got == tuple(visible.first())
+        return got[0]
+
+    def die(*_a, **_k):
+        raise RuntimeError("killed before the snapshot commit")
+
+    killed = str(tmp_path / "killed")
+    with monkeypatch.context() as m:
+        m.setattr(snapshots, "commit_snapshot", die)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extraction_job(spark, pages, killed)
+    assert check(killed) is None  # no visible rows
+
+    out = str(tmp_path / "out")
+    half = with_partition_cols(pages).where("bkt < 8").drop("dt", "bkt")
+    n_half = half.count()
+    assert 0 < n_half < 150
+    run_extraction_job(spark, half, out)
+    assert check(out) == n_half
+    run_extraction_job(spark, pages, out)  # resume: carries snapshot 1's entries
+    assert check(out) == 150
+    run_extraction_job(spark, half, out, resume=False)  # replaces the visible set
+    assert check(out) == n_half
+    snapshots.rollback_to_snapshot(out, 2)  # copies snapshot 2's entries
+    assert check(out) == 150
+
+
+def test_job_metrics_without_spans_has_null_hit_rate(spark, tmp_path):
+    """All-NULL html extracts to docs without spans: the detector hit rate
+    is NULL, not a division by zero."""
+    import pyarrow as pa
+
+    table = pages_to_arrow(generate_pages(10, seed=3))
+    i = table.schema.get_field_index("html")
+    table = table.set_column(i, "html", pa.nulls(10, table.schema.field(i).type))
+    src = str(tmp_path / "pages.parquet")
+    pq.write_table(table, src)
+
+    out = str(tmp_path / "out")
+    run_extraction_job(spark, spark.read.parquet(src), out)
+    m = job_metrics(spark, out).first()
+    assert m["docs"] == 10 and m["chars_out"] == 0
+    assert m["detector_hit_rate"] is None

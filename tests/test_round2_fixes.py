@@ -147,23 +147,6 @@ def test_feature_components_consistent_with_embeddings(spark):
         assert embs[r["doc_id"]][r["dim"]] == pytest.approx(float(expect), abs=1e-7)
 
 
-# --------------------------------------------------------------- manifest --
-
-def test_load_manifest_missing_is_empty_but_corrupt_raises(spark, tmp_path):
-    """ADVICE r1 #2: only PATH-not-found means fresh job; a corrupt manifest
-    must fail loudly, not silently reprocess-and-append."""
-    from sbb_ocr_postcorrection_spark.pipeline import load_manifest
-
-    empty = load_manifest(spark, str(tmp_path / "never_written"))
-    assert empty.count() == 0
-
-    man = tmp_path / "job" / "_manifest"
-    man.mkdir(parents=True)
-    (man / "part-00000.parquet").write_bytes(b"this is not parquet")
-    with pytest.raises(Exception):
-        load_manifest(spark, str(tmp_path / "job")).count()
-
-
 # --------------------------------------------------- degenerate documents --
 
 @pytest.fixture()
@@ -270,55 +253,6 @@ def test_mets_escapes_source_attribute():
         ("PHYS_000001", "GT", 5),
         ("PHYS_000001", "IMG", 6),
     ]
-
-
-# -------------------------------------------------------------- compaction --
-
-def test_compact_extractions_preserves_bytes(spark, tmp_path):
-    """Compaction must reduce file count without changing a single row
-    (byte-stable extracted text, same manifest)."""
-    import pyarrow.parquet as pq
-
-    from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
-    from sbb_ocr_postcorrection_spark.pipeline import (
-        compact_extractions,
-        run_extraction_job,
-    )
-
-    src = tmp_path / "pages.parquet"
-    pq.write_table(pages_to_arrow(generate_pages(120, seed=5)), str(src))
-    out = str(tmp_path / "job")
-    run_extraction_job(spark, spark.read.parquet(str(src)), out)
-
-    before = {
-        r["url"]: r["extracted_text"]
-        for r in spark.read.parquet(f"{out}/extractions").collect()
-    }
-    # fragment the sink: a keyless repartition spreads every (dt,bkt) over
-    # many tasks, producing several files per partition (what repeated
-    # resumed runs look like)
-    frag = spark.read.parquet(f"{out}/extractions").repartition(8)
-    (
-        frag.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("dt", "bkt")
-        .parquet(f"{out}/extractions")
-    )
-    stats = compact_extractions(spark, out)
-    after = {
-        r["url"]: r["extracted_text"]
-        for r in spark.read.parquet(f"{out}/extractions").collect()
-    }
-    assert after == before
-    assert not stats["skipped"]
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["files_after"] == stats["partitions"] > 0
-    # second call: already compact -> short-circuits without rewriting
-    again = compact_extractions(spark, out)
-    assert again["skipped"] and again["files_after"] == stats["files_after"]
-    # resume still sees everything done after compaction
-    summary = run_extraction_job(spark, spark.read.parquet(str(src)), out)
-    assert summary["docs"] == 0 and summary["partitions_skipped"] > 0
 
 
 def test_persist_slot_unpersists_previous(spark):
