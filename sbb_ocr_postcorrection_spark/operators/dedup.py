@@ -564,24 +564,41 @@ def minhash_signatures(spark, sf_dir) -> DataFrame:
     return minhash_signatures_arr(minhash_doc_arrays(spark, sf_dir))
 
 
-def _expand_sorted_pairs(groups: DataFrame) -> DataFrame:
-    """(… , ids: sorted id array) → (id1, id2) pair rows, expanded in-array
-    (no self-join) — the ONE definition of per-bucket pair generation used
-    by banded LSH, its salted form, and SimHash rotations."""
-    return groups.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (a, i) -> "
-                "transform(slice(ids, i + 2, size(ids)), b -> struct(a, b))))"
-            )
-        ).alias("p")
-    ).select(F.col("p.a").alias("id1"), F.col("p.b").alias("id2"))
+def _bucket_pairs(
+    keyed: DataFrame, keys: list[str], max_bucket_size: int | None = None
+) -> DataFrame:
+    """(*keys, id1, id2): every doc pair sharing a bucket, id1 < id2 — the
+    ONE way a bucket becomes pairs (banded LSH and both SimHash forms), in
+    the oracle's own shape: an equi self-join on ``keys`` with
+    a.doc_id < b.doc_id. A hot bucket's pairs stream out of the join
+    instead of being built in one array row, so no bucket's id list is
+    ever collected.
+
+    ``max_bucket_size`` drops buckets larger than the cap before the join;
+    the bucket size is a count over a window partitioned by ``keys``."""
+    if max_bucket_size is not None:
+        keyed = (
+            keyed.withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+            .where(F.col("_n") <= max_bucket_size)
+            .drop("_n")
+        )
+    a = keyed.alias("a")
+    b = keyed.alias("b")
+    cond = F.col("a.doc_id") < F.col("b.doc_id")
+    for k in keys:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    return a.join(b, cond).select(
+        *[F.col(f"a.{k}").alias(k) for k in keys],
+        F.col("a.doc_id").alias("id1"),
+        F.col("b.doc_id").alias("id2"),
+    )
 
 
 def _band_table(sig: DataFrame) -> DataFrame:
     """(doc_id, band, band_hash) from a signature table — the ONE place the
-    band key is defined (candidate generation and cap diagnostics must
-    never disagree on it). One pass: explode an array of (band, band_hash)
+    band key is defined: candidate generation (_bucket_pairs on
+    (band, band_hash)), the incremental band probe and the cap diagnostics
+    must never disagree on it. One pass: explode an array of (band, band_hash)
     structs rather than unioning 4 selects (a union re-evaluates the
     signature subtree per branch — the shingle explode and 16 min-aggs
     would run 4×)."""
@@ -612,28 +629,21 @@ def minhash_lsh_candidates_from(
 ) -> DataFrame:
     """Banded LSH over precomputed signatures: band key = hash of 4
     consecutive signature slots; docs sharing any band key become a
-    candidate pair. Equality join on the band key — this is what scales:
-    shuffle keys are (band_idx, band_hash), and a skewed band
-    (boilerplate-heavy corpora) can be salted like any hot key.
+    candidate pair (distinct across bands). Pairs come from
+    _bucket_pairs' equality self-join on (band, band_hash) — never a cross
+    join, and a boilerplate-hot bucket streams its pairs out of the join
+    rather than building them in one array row.
 
     ``max_bucket_size`` caps the per-bucket pair expansion (quadratic by
     definition of LSH): buckets larger than the cap are dropped from pair
     generation — a bucket that hot is boilerplate, not near-duplication.
     NOT silent: lsh_bucket_stats() reports how many buckets a given cap
     would truncate; run it before trusting a capped result."""
-    bt = _band_table(sig)
-    # candidate pairs per bucket WITHOUT a self-join: group to the bucket's
-    # sorted id list, expand pairs in-array. One shuffle on the band key
-    # (saltable if a boilerplate-heavy bucket goes hot), subtree evaluated
-    # once.
-    groups = (
-        bt.groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
+    return (
+        _bucket_pairs(_band_table(sig), ["band", "band_hash"], max_bucket_size)
+        .select("id1", "id2")
+        .distinct()
     )
-    if max_bucket_size is not None:
-        groups = groups.filter(F.size("ids") <= max_bucket_size)
-    return _expand_sorted_pairs(groups).distinct()
 
 
 def minhash_lsh_candidates(
@@ -642,76 +652,6 @@ def minhash_lsh_candidates(
     return minhash_lsh_candidates_from(
         minhash_signatures(spark, sf_dir), max_bucket_size=max_bucket_size
     )
-
-
-def minhash_lsh_candidates_salted(
-    spark, sf_dir, chunk_size: int = 64, max_bucket_size: int | None = None
-) -> DataFrame:
-    """Skew-safe banded LSH: IDENTICAL candidate pairs to
-    minhash_lsh_candidates (for the same ``max_bucket_size``), but a hot
-    bucket's quadratic pair expansion is spread across tasks instead of
-    landing on one.
-
-    The plain form collects each bucket to a single row and expands all
-    C(B,2) pairs there — one boilerplate-heavy bucket of 10^5 docs means
-    5·10^9 pairs in ONE task. Here each bucket's sorted id list is split
-    into chunks of ``chunk_size``: intra-chunk pairs expand per chunk row,
-    and inter-chunk pairs come from a self-join on the bucket key with
-    chunk_a < chunk_b. Crucially the joined chunk-pair rows are
-    REPARTITIONED on (bucket, chunk_a, chunk_b) BEFORE the explode — the
-    join's equality keys are only the bucket, so without that shuffle every
-    chunk-pair of the hot bucket would land back in one partition and the
-    explode would run in a single task anyway. After the repartition each
-    task expands ≤ chunk_size² pairs. per_chunk is slot-persisted: it feeds
-    intra + both self-join sides, and the pushed-down join filters defeat
-    ReuseExchange (the signature pipeline would run 3×)."""
-    bt = _band_table(minhash_signatures(spark, sf_dir))
-
-    # deterministic chunk assignment: rank within the bucket by doc_id;
-    # bucket size rides along so the cap matches the plain form exactly
-    w = Window.partitionBy("band", "band_hash").orderBy("doc_id")
-    chunked = bt.withColumn(
-        "chunk", ((F.row_number().over(w) - 1) / chunk_size).cast("int")
-    ).withColumn("bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "band_hash")))
-    if max_bucket_size is not None:
-        chunked = chunked.filter(F.col("bsz") <= max_bucket_size)
-    per_chunk = persist_slot(
-        "lsh_salted_chunks",
-        chunked.groupBy("band", "band_hash", "chunk").agg(
-            F.sort_array(F.collect_list("doc_id")).alias("ids")
-        ),
-    )
-    intra = _expand_sorted_pairs(per_chunk.filter(F.size("ids") > 1))
-    a = per_chunk.alias("a")
-    b = per_chunk.alias("b")
-    chunk_pairs = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col("a.chunk") < F.col("b.chunk")),
-    ).select(
-        F.col("a.band").alias("band"),
-        F.col("a.band_hash").alias("band_hash"),
-        F.col("a.chunk").alias("chunk_a"),
-        F.col("b.chunk").alias("chunk_b"),
-        F.col("a.ids").alias("ids_a"),
-        F.col("b.ids").alias("ids_b"),
-    )
-    inter = (
-        chunk_pairs.repartition("band", "band_hash", "chunk_a", "chunk_b")
-        .select(
-            F.explode(
-                # chunks are rank-ordered by doc_id, so every id in chunk_a
-                # is strictly below every id in chunk_b: (x, y) IS (id1, id2)
-                F.expr(
-                    "flatten(transform(ids_a, x -> transform(ids_b, y -> "
-                    "struct(x AS a, y AS b))))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.a").alias("id1"), F.col("p.b").alias("id2"))
-    )
-    return intra.unionByName(inter).distinct()
 
 
 def lsh_bucket_stats(spark, sf_dir, max_bucket_size: int = 1_000) -> DataFrame:
@@ -842,6 +782,10 @@ def deduplicate_corpus(
     documents table with `keep` ∈ {0,1} and the reason a doc was dropped.
     At 100 TB every stage is an equality-keyed shuffle (digest / band hash /
     candidate id / shingle) — never a cross join, never a global sort.
+
+    LSH candidates are the one band-bucket self-join (_bucket_pairs): the
+    ``max_bucket_size`` cap is a per-bucket count applied before the join,
+    so a bucket over the cap never pairs and none is collected whole.
 
     Caps are NOT silent: both defaults are far above anything a genuine
     near-dup cluster produces, and lsh_bucket_stats() /
@@ -982,20 +926,7 @@ def simhash_bucket_pairs(spark, sf_dir, prefix_bits: int = 16) -> DataFrame:
     keyed = fp.withColumn(
         "bucket", F.shiftrightunsigned("simhash", _SIMHASH_BITS - prefix_bits)
     )
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id1"),
-            F.col("b.doc_id").alias("id2"),
-            F.col("a.bucket").alias("bucket"),
-        )
-    )
+    return _bucket_pairs(keyed, ["bucket"]).select("id1", "id2", "bucket")
 
 
 def simhash_rotation_pairs(
@@ -1007,10 +938,10 @@ def simhash_rotation_pairs(
     it; rotating the fingerprint moves the window, and a true near-dup
     (small Hamming distance) collides in at least one rotation w.h.p.
 
-    One pass: the fingerprint subtree is evaluated once, rotations explode
-    from an array of structs (same trick as the MinHash bands); pairs come
-    from per-bucket sorted-id-list expansion — no self-join. Rotate-left by
-    r without shifts ever leaving 60 bits (ANSI-safe):
+    Rotations explode from an array of structs (same trick as the MinHash
+    bands); pairs come from _bucket_pairs' self-join on (rot, bucket),
+    distinct across rotations, so a hot bucket never collects its id list.
+    Rotate-left by r without shifts ever leaving 60 bits (ANSI-safe):
     rot = (h mod 2^(60-r))·2^r + (h div 2^(60-r))."""
     fp = simhash_fingerprints(spark, sf_dir)
     rot_structs = F.array(
@@ -1033,12 +964,7 @@ def simhash_rotation_pairs(
             F.col("rb.rotated"), _SIMHASH_BITS - prefix_bits
         ).alias("bucket"),
     )
-    groups = (
-        keyed.groupBy("rot", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    return _expand_sorted_pairs(groups).distinct()
+    return _bucket_pairs(keyed, ["rot", "bucket"]).select("id1", "id2").distinct()
 
 
 def decontaminate(

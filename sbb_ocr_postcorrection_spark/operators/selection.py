@@ -528,9 +528,7 @@ def dsir_weights_incremental(spark, sf_dir, docs=None) -> DataFrame:
     Split is deterministic (doc_id % 2 = history, else delta) and the
     merged counts are EXACTLY the full-corpus counts, so this query
     shares dsir_weights' oracle verbatim — the driver itself certifies
-    that incremental retraining ≡ full retraining (the
-    host_tiers_scaled / dedup_minhash_lsh_salted equivalence
-    convention).
+    that incremental retraining ≡ full retraining.
 
     Scale shape: at 100 TB the history side is a stored 1024-row
     parquet, not a recount; here it is recomputed from the history

@@ -397,34 +397,16 @@ def crawl_cube(spark, sf_dir, docs=None) -> DataFrame:
     )
 
 
-def host_tiers(
-    spark, sf_dir, n_tiers: int = 4, docs=None, scale_out: bool = False
-) -> DataFrame:
+def host_tiers(spark, sf_dir, n_tiers: int = 4, docs=None) -> DataFrame:
     """Host quality tiers: per-host rollup → NTILE(n_tiers) ranking —
     the crawl-budget allocator's view (tier 1 hosts get recrawled first,
     bottom tier gets demoted). Pinned total order (total_chars desc,
     host asc) so tier assignment is deterministic and engine-exact.
 
-    Two physical strategies behind one result (VERDICT r4 next-step #3):
-
-    * ``scale_out=False`` — plain global NTILE window. Fine while the
-      host dimension is genuinely dimension-sized, and it is the literal
-      SQL the oracle runs; but Spark executes a no-partitionBy window as
-      ONE task, which at Common-Crawl scale (~10^8 hosts) is a real stall.
-    * ``scale_out=True`` — distributed equi-result path: range-bucket the
-      hosts by approxQuantile(total_chars) boundaries (bucket assignment
-      is monotone in the sort order, so ties never straddle a rank
-      boundary incorrectly), count per bucket (≤ parallelism rows to the
-      driver), turn the counts into broadcast rank offsets, and compute
-      the global rank as offset + row_number over a window PARTITIONED BY
-      bucket — every stage shuffles hash/range-wise, nothing
-      single-partition (plan-asserted). The tier then falls out of the
-      rank with NTILE's exact ceil-division arithmetic, integer-only.
-      Heavy total_chars ties can unbalance a bucket (they collapse into
-      one), but never change the result.
-
-    Both paths share the same oracle SQL — the driver hash-certifies
-    their equivalence (the dedup_minhash_lsh_salted convention)."""
+    One global NTILE window, the literal SQL the oracle runs (it also
+    serves the ``host_tiers_scaled`` name). Spark runs a window without
+    partitionBy in one task, but its row buffer spills, so that task's
+    memory stays bounded; only its time grows with the host dimension."""
     d = (
         docs
         if docs is not None
@@ -442,79 +424,12 @@ def host_tiers(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
-    if scale_out:
-        return tiers_from_rollup_scaled(spark, per_host, n_tiers)
     from pyspark.sql import Window
 
     w = Window.orderBy(F.desc("total_chars"), F.asc("host"))
     return per_host.select(
         "host", "n_docs", "total_chars",
         F.ntile(n_tiers).over(w).cast("int").alias("tier"),
-    )
-
-
-def host_tiers_scaled(spark, sf_dir, n_tiers: int = 4, docs=None) -> DataFrame:
-    """Registry surface for the scale-out path (same oracle as host_tiers)."""
-    return host_tiers(spark, sf_dir, n_tiers, docs=docs, scale_out=True)
-
-
-def tiers_from_rollup_scaled(spark, per_host: DataFrame, n_tiers: int) -> DataFrame:
-    """NTILE(n_tiers) over (total_chars desc, host asc) WITHOUT a global
-    window: quantile range-buckets → per-bucket counts → broadcast rank
-    offsets → bucket-partitioned row_number → integer ceil-division tier.
-    Input: any (host, n_docs, total_chars) rollup; exposed separately so
-    tests can drive it with a 10^4-host dimension directly."""
-    from .relational import persist_slot
-
-    ph = persist_slot("host_tiers_rollup", per_host)
-    p = max(spark.sparkContext.defaultParallelism, 2)
-    # approximate quantile boundaries: precision affects only bucket
-    # balance, never the final ranks/tiers
-    bounds = ph.stat.approxQuantile(
-        "total_chars", [i / p for i in range(1, p)], 0.01
-    )
-    bs = sorted(set(bounds), reverse=True)  # descending, like the sort
-    # bucket = #boundaries strictly greater than total_chars: monotone
-    # non-decreasing along (total_chars desc), ties share a bucket
-    bucket = F.aggregate(
-        F.array(*[F.lit(b) for b in bs]),
-        F.lit(0),
-        lambda acc, b: acc + F.when(F.col("total_chars") < b, 1).otherwise(0),
-    )
-    b = ph.withColumn("bkt", bucket)
-    counts = sorted(
-        b.groupBy("bkt").agg(F.count(F.lit(1)).alias("c")).collect(),
-        key=lambda r: r["bkt"],
-    )  # ≤ p+1 rows cross the driver — bounded by parallelism, not hosts
-    n = sum(r["c"] for r in counts)
-    if n == 0:
-        return spark.createDataFrame(
-            [], "host string, n_docs long, total_chars long, tier int"
-        )
-    offs, acc = [], 0
-    for r in counts:
-        offs.extend([F.lit(r["bkt"]), F.lit(acc)])
-        acc += r["c"]
-    off = F.element_at(F.create_map(*offs), F.col("bkt"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("bkt").orderBy(F.desc("total_chars"), F.asc("host"))
-    rank = (off + F.row_number().over(w)).alias("rank")
-    # NTILE's exact sizing: the first n%t tiles hold n//t+1 rows, the rest
-    # n//t — recover the tile from the global rank with integer math only
-    big, small = n % n_tiers, n // n_tiers
-    cut = big * (small + 1)
-    tier = (
-        F.when(F.col("rank") <= cut, (F.col("rank") - 1) / (small + 1))
-        .otherwise(big + (F.col("rank") - cut - 1) / F.greatest(F.lit(small), F.lit(1)))
-        .cast("int")
-        + 1
-    )
-    return (
-        b.select("host", "n_docs", "total_chars", F.col("bkt"), rank)
-        .select(
-            "host", "n_docs", "total_chars", tier.cast("int").alias("tier")
-        )
     )
 
 

@@ -371,15 +371,18 @@ def job_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
     """Aggregate job metrics over the table's visible partitions, from the
     sums their current snapshot entries carry: chars in/out, detector hit
     rate (A10 analog of the reference's corpus-level stats). The hit rate
-    is NULL when no visible doc has a span; every sum is NULL when no
-    partition is visible (no snapshot yet, or an empty one)."""
+    is NULL when no visible doc has a span. Every sum is NULL when no
+    partition is visible (no snapshot yet, or an empty one), and also when
+    any visible entry carries no sums (a bare ``(dt, bkt)`` entry, which a
+    resume carries forward): the table's sums are then unknown."""
     from . import snapshots
 
     snap = snapshots.current_snapshot(output_dir)
+    rows = [p[2:] for p in snap["partitions"]] if snap else []
+    if any(len(r) != len(_PARTITION_SUMS) for r in rows):
+        rows = []
     sums = _arrow_frame(
-        spark,
-        [p[2:] for p in snap["partitions"]] if snap else [],
-        ", ".join(f"{c} long" for c in _PARTITION_SUMS),
+        spark, rows, ", ".join(f"{c} long" for c in _PARTITION_SUMS)
     )
     return sums.agg(
         F.sum("n_docs").alias("docs"),

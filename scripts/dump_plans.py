@@ -23,11 +23,9 @@ SHOW = [
     ("rollup_stats",
      "expand + two-phase HashAggregate for the grouping sets"),
     ("dedup_minhash_lsh",
-     "signatures are in-array per-doc minima (no explode->groupBy exchange); one shuffle on the band key; pair expansion in-array (no self-join)"),
+     "signatures are in-array per-doc minima (no explode->groupBy exchange); pairs from ONE equality self-join on (band, band_hash) with a.doc_id < b.doc_id (the oracle's shape; no id list collected per bucket); no cross join"),
     ("dedup_corpus_keep",
      "verification Jaccard computed on LSH candidates only — candidates BROADCAST into per-pair array_intersect over the persisted doc-array relation (r7: no corpus-wide exploded-shingle join); exact losers from ONE digest aggregation (no join-back); every join equality-keyed (hash/broadcast); no CartesianProduct, no BroadcastNestedLoop, no rangepartitioning (global sort), no GlobalLimit"),
-    ("dedup_minhash_lsh_salted",
-     "hot-bucket pair expansion distributed: per-bucket window rank -> chunk, intra-chunk in-array expansion + inter-chunk equality self-join on the bucket key; no cross join"),
     ("extract_host_metrics",
      "two exchange phases: (host, _salt) partial then host final — the skew-salting contract"),
     ("decontaminate",

@@ -345,37 +345,6 @@ def test_host_tiers_deterministic_ranking(spark):
         [ordered[0]["host"], ordered[1]["host"]]
 
 
-def test_host_tiers_scaled_equals_ntile_many_hosts(spark):
-    """Differential: the distributed rank path reproduces the global NTILE
-    window exactly on a 10^4-host dimension with heavy total_chars ties
-    (every tie bucket collapses; tier boundaries cut straight through tie
-    runs — the hard case for any bucketed ranking)."""
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    from sbb_ocr_postcorrection_spark.operators.urls import tiers_from_rollup_scaled
-
-    n = 10_007
-    per_host = spark.range(n).select(
-        F.format_string("h%05d.example.org", F.col("id")).alias("host"),
-        (F.col("id") % 13 + 1).cast("long").alias("n_docs"),
-        # heavy ties: only 97 distinct totals across 10k hosts
-        ((F.col("id") * 37) % 97 * 1000).cast("long").alias("total_chars"),
-    )
-    got = {
-        r["host"]: r["tier"]
-        for r in tiers_from_rollup_scaled(spark, per_host, 4).collect()
-    }
-    w = Window.orderBy(F.desc("total_chars"), F.asc("host"))
-    want = {
-        r["host"]: r["tier"]
-        for r in per_host.select(
-            "host", F.ntile(4).over(w).cast("int").alias("tier")
-        ).collect()
-    }
-    assert got == want and len(got) == n
-
-
 def test_lm_bigram_score_matches_reference(spark):
     """Bigram surprise == a pure-Python replay: integer inverse
     conditional probability, max/mean rules, 0/1-token docs pass."""

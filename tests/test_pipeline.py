@@ -242,3 +242,21 @@ def test_job_metrics_without_spans_has_null_hit_rate(spark, tmp_path):
     m = job_metrics(spark, out).first()
     assert m["docs"] == 10 and m["chars_out"] == 0
     assert m["detector_hit_rate"] is None
+
+
+def test_job_metrics_unknown_when_an_entry_has_no_sums(
+    spark, tmp_path, pages_parquet
+):
+    """A visible snapshot entry without sums (a bare (dt, bkt) pair, which
+    a resume carries forward) makes the table's sums unknown: every
+    metric is NULL, as when nothing is visible, and nothing raises."""
+    out = str(tmp_path / "out")
+    snapshots.commit_snapshot(
+        out, snapshots.begin_commit(out), [("2024-01-01", 0)], op="append"
+    )
+    assert tuple(job_metrics(spark, out).first()) == (None,) * 4
+
+    run_extraction_job(spark, spark.read.parquet(pages_parquet), out)
+    entries = snapshots.current_snapshot(out)["partitions"]
+    assert ["2024-01-01", 0] in entries and len(entries) > 1
+    assert tuple(job_metrics(spark, out).first()) == (None,) * 4

@@ -217,21 +217,6 @@ def test_crawl_cube_single_pass(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_host_tiers_scaled_no_global_window(spark):
-    """The scale-out tier path must never funnel the host dimension
-    through one task: rank = bucket-partitioned row_number + broadcast
-    offsets, so no SinglePartition exchange anywhere (the NTILE form keeps
-    one by design and stays the oracle projection for dimension-sized
-    inputs — VERDICT r4 next-step #3)."""
-    from sbb_ocr_postcorrection_spark.operators.urls import host_tiers, host_tiers_scaled
-
-    plan = plan_of(host_tiers_scaled(spark, SF_DIR))
-    assert "SinglePartition" not in plan
-    assert "hashpartitioning(bkt" in plan
-    # and the dimension-sized form keeps the literal NTILE window
-    assert "ntile" in plan_of(host_tiers(spark, SF_DIR)).lower()
-
-
 def test_r5_ops_plan_shapes(spark):
     """Round-5 additions keep their scale contracts: no cartesian
     products anywhere, the probe side of passage_retrieval broadcasts,

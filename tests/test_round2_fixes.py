@@ -274,27 +274,10 @@ def test_persist_slot_unpersists_previous(spark):
     del _PERSIST_SLOTS["t_slot"]
 
 
-def test_salted_lsh_equals_unsalted(spark):
-    """The skew-salted pair expansion must produce exactly the unsalted
-    candidate set — salting changes task distribution, never semantics.
-    chunk_size=2 forces heavy inter-chunk joining even at toy scale."""
-    from sbb_ocr_postcorrection_spark.operators.dedup import (
-        minhash_lsh_candidates,
-        minhash_lsh_candidates_salted,
-    )
-
-    plain = {(r["id1"], r["id2"]) for r in minhash_lsh_candidates(spark, SF_SMALL).collect()}
-    salted = {
-        (r["id1"], r["id2"])
-        for r in minhash_lsh_candidates_salted(spark, SF_SMALL, chunk_size=2).collect()
-    }
-    assert salted == plain and plain
-
-
-def test_salted_lsh_on_hot_bucket(spark, tmp_path):
-    """Skew stress: 30 identical docs share EVERY band bucket (the
-    boilerplate-heavy case salting exists for). The salted expansion must
-    produce exactly the plain form's C(30,2)+... candidate set."""
+def _hot_bucket_docs(spark, d):
+    """30 identical docs (they share EVERY band and SimHash bucket: the
+    boilerplate-heavy skew case) plus 5 unique ones, written as the
+    documents table under ``d``; returns the C(30,2) hot pairs."""
     base = ("the quick brown fox jumps over the lazy dog near the old "
             "river bank while birds sing in tall green trees")
     texts = [base] * 30 + [
@@ -310,46 +293,42 @@ def test_salted_lsh_on_hot_bucket(spark, tmp_path):
             "n_chars": [len(t) for t in texts],
         }
     )
-    d = str(tmp_path)
     spark.createDataFrame(pdf).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+    return {(i, j) for i in range(30) for j in range(i + 1, 30)}
 
-    from sbb_ocr_postcorrection_spark.operators.dedup import (
-        minhash_lsh_candidates,
-        minhash_lsh_candidates_salted,
-    )
 
-    plain = {(r["id1"], r["id2"]) for r in minhash_lsh_candidates(spark, d).collect()}
-    salted = {
-        (r["id1"], r["id2"])
-        for r in minhash_lsh_candidates_salted(spark, d, chunk_size=4).collect()
-    }
-    assert salted == plain
-    # all 30 identical docs pair with each other: C(30,2) pairs present
-    hot = {(i, j) for i in range(30) for j in range(i + 1, 30)}
+def test_lsh_on_hot_bucket(spark, tmp_path):
+    """Skew stress for the band-bucket self-join: all C(30,2) pairs of the
+    hot bucket are candidates, a cap of 29 drops every bucket holding the
+    30 identical docs, and a cap of 30 keeps everything (boundary: <=)."""
+    from sbb_ocr_postcorrection_spark.operators.dedup import minhash_lsh_candidates
+
+    d = str(tmp_path)
+    hot = _hot_bucket_docs(spark, d)
+
+    def pairs(**kw):
+        return {
+            (r["id1"], r["id2"])
+            for r in minhash_lsh_candidates(spark, d, **kw).collect()
+        }
+
+    plain = pairs()
     assert hot <= plain
+    assert not (hot & pairs(max_bucket_size=29))  # the hot cluster is gone
+    assert pairs(max_bucket_size=30) == plain
 
-    # the bucket cap must prune identically on both paths: capping at 29
-    # drops every bucket holding the 30 identical docs on BOTH forms
-    plain_cap = {
-        (r["id1"], r["id2"])
-        for r in minhash_lsh_candidates(spark, d, max_bucket_size=29).collect()
-    }
-    salted_cap = {
-        (r["id1"], r["id2"])
-        for r in minhash_lsh_candidates_salted(
-            spark, d, chunk_size=4, max_bucket_size=29
-        ).collect()
-    }
-    assert salted_cap == plain_cap
-    assert not (hot & salted_cap)  # the hot cluster is gone
-    # an above-cluster cap keeps everything (boundary: <= not <)
-    salted_cap30 = {
-        (r["id1"], r["id2"])
-        for r in minhash_lsh_candidates_salted(
-            spark, d, chunk_size=4, max_bucket_size=30
-        ).collect()
-    }
-    assert salted_cap30 == plain
+
+def test_simhash_rotations_on_hot_bucket(spark, tmp_path):
+    """The same 30 identical docs share every rotation's SimHash bucket:
+    each C(30,2) pair appears once (distinct across rotations)."""
+    from sbb_ocr_postcorrection_spark.operators.dedup import simhash_rotation_pairs
+
+    d = str(tmp_path)
+    hot = _hot_bucket_docs(spark, d)
+    rows = [(r["id1"], r["id2"]) for r in simhash_rotation_pairs(spark, d).collect()]
+    assert len(rows) == len(set(rows))
+    assert hot <= set(rows)
+    assert all(i < j for i, j in rows)
 
 
 def test_quantization_error_bound(spark):
