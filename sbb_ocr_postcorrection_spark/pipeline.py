@@ -81,6 +81,8 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.executorEnv.PYTHONPATH", py_path)
+        # pyspark's daemon behind a zip-directory cache guard (_daemon.py)
+        .config("spark.python.daemon.module", f"{__package__}._daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -183,6 +185,16 @@ def run_extraction_job(
     force-reclaims an intent left by a writer that died on ANOTHER host
     (a same-host dead pid is reclaimed automatically).
 
+    The input's distinct (dt, bkt) are listed (one Spark job) only when
+    there is a done-set to subtract, i.e. on a resume over a non-empty
+    snapshot; the pending list is then broadcast into a semi join, and a
+    run with nothing pending returns before claiming. Otherwise the whole
+    input is pending and goes straight to the writer, and partitions_done
+    counts the partitions the writer returned. Empty input then still
+    claims the intent, briefly: the writer returns no rows, and the run
+    releases the intent, drops its staging directory and returns zeros
+    without committing a snapshot.
+
     Returns a summary dict (docs processed, partitions done/skipped, secs).
     """
     from . import snapshots
@@ -192,29 +204,32 @@ def run_extraction_job(
         pages = pages.filter(F.col("lang") == lang_filter)  # P5 analog
     pages = with_partition_cols(pages)
 
-    # pending partitions = all partitions − done-set (driver-side set math;
-    # the partition list is tiny even at 10^12 docs: days × buckets)
-    all_rows = pages.select("dt", "bkt").distinct().collect()
     snap = snapshots.current_snapshot(output_dir)
-    done_set = snapshots.snapshot_partition_set(snap)
-    pending_rows = [
-        r
-        for r in all_rows
-        if not resume or (r["dt"].isoformat(), r["bkt"]) not in done_set
-    ]
-    n_skipped = len(all_rows) - len(pending_rows)
-    if not pending_rows:
-        return {
-            "docs": 0, "partitions_done": 0, "partitions_skipped": n_skipped,
-            "seconds": time.time() - t0,
-        }
+    done_set = snapshots.snapshot_partition_set(snap) if resume else set()
+    n_skipped = 0
+    if done_set:
+        # pending partitions = all partitions − done-set (driver-side set
+        # math; the partition list is tiny even at 10^12 docs: days ×
+        # buckets), then only the pending ones are processed: the (small)
+        # pending list is broadcast into a semi join
+        all_rows = pages.select("dt", "bkt").distinct().collect()
+        pending_rows = [
+            r for r in all_rows if (r["dt"].isoformat(), r["bkt"]) not in done_set
+        ]
+        n_skipped = len(all_rows) - len(pending_rows)
+        if not pending_rows:
+            return {
+                "docs": 0, "partitions_done": 0, "partitions_skipped": n_skipped,
+                "seconds": time.time() - t0,
+            }
+        pending = _arrow_frame(spark, pending_rows, "dt date, bkt int")
+        pages = pages.join(F.broadcast(pending), ["dt", "bkt"], "left_semi")
     # claim the table BEFORE writing a byte — the losing writer of a
     # same-table race aborts here with nothing to clean up
     ticket = snapshots.begin_commit(output_dir, reclaim_stale=reclaim_stale)
     try:
         return _run_claimed(
-            spark, pages, output_dir, resume, ticket, pending_rows,
-            n_skipped, snap, t0,
+            spark, pages, output_dir, resume, ticket, n_skipped, snap, t0
         )
     except Exception:
         snapshots.abort_commit(output_dir, ticket)
@@ -222,33 +237,28 @@ def run_extraction_job(
 
 
 def _run_claimed(
-    spark, pages, output_dir, resume, ticket, pending_rows, n_skipped,
-    snap, t0,
+    spark, pages, output_dir, resume, ticket, n_skipped, snap, t0
 ) -> dict:
     """The claimed section of run_extraction_job: everything between
     intent and snapshot commit (any failure here releases the intent)."""
     from . import snapshots
 
-    pending = _arrow_frame(spark, pending_rows, "dt date, bkt int")
-
-    # process only pending partitions; broadcast the (small) pending list
-    # and carry dt/bkt through the kernel into the writer's file paths
-    pages_pending = pages.join(F.broadcast(pending), ["dt", "bkt"], "left_semi")
     # repartition on the layout key before the kernel: parallelizes the
     # CPU-heavy stage regardless of input split count and co-locates each
     # output partition's rows with its writer task (one file per (dt,bkt)).
-    # One task per core, not more: every Python task pays ≈0.27 CPU-s of
-    # fixed setup (measured on a 4-core VM), mostly pyspark's
-    # setup_spark_files calling importlib.invalidate_caches(), which on
-    # Python 3.11 re-reads pyspark.zip once per cached zipimporter. When
-    # spark.sql.shuffle.partitions is a multiple k·n of the n cores (as
-    # build_session's default of 8 is on 4 cores), more tasks only regroup
-    # the same keys: partitions i, i+n, …, i+(k−1)n of pmod(h, k·n) hold
-    # exactly the rows of partition i of pmod(h, n). On 10k pages and 4
-    # cores, the 8 tasks of pmod 8 paired this way carried the doc counts
-    # of the 4 tasks of pmod 4 (2269/2201/2589/2941), at twice the setups.
-    # Core counts that do not divide it (3, 5, 6, 7 under the default)
-    # lose the dynamic balancing of the extra tasks; not measured
+    # One task per core, not more: every Python task pays a fixed setup,
+    # ≈0.04 CPU-s measured on a 4-core VM (a noop mapInArrow over 64
+    # partitions; ≈0.2 CPU-s before _daemon.py stopped each task's
+    # importlib.invalidate_caches() from re-reading pyspark.zip), and more
+    # tasks buy no balance here. When spark.sql.shuffle.partitions is a
+    # multiple k·n of the n cores (as build_session's default of 8 is on 4
+    # cores), more tasks only regroup the same keys: partitions i, i+n, …,
+    # i+(k−1)n of pmod(h, k·n) hold exactly the rows of partition i of
+    # pmod(h, n). On 10k pages and 4 cores, the 8 tasks of pmod 8 paired
+    # this way carried the doc counts of the 4 tasks of pmod 4
+    # (2269/2201/2589/2941), at twice the setups. Core counts that do not
+    # divide it (3, 5, 6, 7 under the default) lose the dynamic balancing
+    # of the extra tasks; not measured
     n_tasks = spark.sparkContext.defaultParallelism
     out_path = os.path.join(output_dir, "extractions")
     # the intent is held, so any staging root left here is a dead writer's
@@ -256,11 +266,18 @@ def _run_claimed(
         shutil.rmtree(stale)
     staging = os.path.join(out_path, f"_staging-{ticket['nonce']}")
     written = (
-        pages_pending.repartition(n_tasks, "dt", "bkt")
+        pages.repartition(n_tasks, "dt", "bkt")
         .select("url", "warc_ts", "html", "lang", "dt", "bkt")
         .mapInArrow(write_stage(staging), WRITTEN_SCHEMA)
         .collect()
     )
+    if not written:  # empty input: nothing to make visible
+        shutil.rmtree(staging, ignore_errors=True)
+        snapshots.abort_commit(output_dir, ticket)
+        return {
+            "docs": 0, "partitions_done": 0, "partitions_skipped": int(n_skipped),
+            "seconds": time.time() - t0,
+        }
 
     # commit: per written partition, delete what an earlier run left and
     # move in only the files whose rows came back, so files of failed or
@@ -296,7 +313,7 @@ def _run_claimed(
     )
     return {
         "docs": int(n_docs),
-        "partitions_done": len(pending_rows),
+        "partitions_done": len(by_part),
         "partitions_skipped": int(n_skipped),
         "seconds": time.time() - t0,
         "snapshot_id": ticket["next_id"],

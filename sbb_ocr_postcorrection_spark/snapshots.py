@@ -64,27 +64,38 @@ def _snap_path(output_dir: str, snapshot_id: int) -> str:
     return os.path.join(_snap_dir(output_dir), f"v{snapshot_id:08d}.json")
 
 
-def list_snapshots(output_dir: str) -> list[dict]:
-    """All committed snapshots, ascending by id. Empty if no log yet."""
+def _snapshot_files(output_dir: str) -> list[str]:
+    """Paths of the committed v*.json files, ascending by id (the ids in
+    their names are zero-padded, so name order is id order)."""
     d = _snap_dir(output_dir)
     if not os.path.isdir(d):
         return []
-    out = []
-    for name in sorted(os.listdir(d)):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(d, name)) as fh:
-                out.append(json.load(fh))
-    return out
+    return [
+        os.path.join(d, name)
+        for name in sorted(os.listdir(d))
+        if name.startswith("v") and name.endswith(".json")
+    ]
+
+
+def _load(path: str) -> dict:
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def list_snapshots(output_dir: str) -> list[dict]:
+    """All committed snapshots, ascending by id. Empty if no log yet."""
+    return [_load(p) for p in _snapshot_files(output_dir)]
 
 
 def current_snapshot(output_dir: str) -> dict | None:
-    snaps = list_snapshots(output_dir)
-    return snaps[-1] if snaps else None
+    """The newest committed snapshot, or None; parses that one file only,
+    so a run's cost does not grow with the history."""
+    files = _snapshot_files(output_dir)
+    return _load(files[-1]) if files else None
 
 
 def get_snapshot(output_dir: str, snapshot_id: int) -> dict:
-    with open(_snap_path(output_dir, snapshot_id)) as fh:
-        return json.load(fh)
+    return _load(_snap_path(output_dir, snapshot_id))
 
 
 def _pid_dead_on_this_host(intent: dict) -> bool:
@@ -139,8 +150,8 @@ def begin_commit(output_dir: str, reclaim_stale: bool = False) -> dict:
             pass  # a racing reclaimer got there first
         fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     # the claim is ours from here: the id we read now cannot be raced
-    snaps = list_snapshots(output_dir)
-    next_id = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
+    current = current_snapshot(output_dir)
+    next_id = (current["snapshot_id"] + 1) if current else 1
     ticket = {
         "next_id": next_id,
         "pid": os.getpid(),
@@ -203,8 +214,8 @@ def commit_snapshot(
             f"this writer (stolen or released) — refusing to commit "
             f"snapshot v{ticket.get('next_id')}"
         )
-    snaps = list_snapshots(output_dir)
-    parent = snaps[-1]["snapshot_id"] if snaps else None
+    current = current_snapshot(output_dir)
+    parent = current["snapshot_id"] if current else None
     snap = {
         "snapshot_id": ticket["next_id"],
         "parent_id": parent,
@@ -232,7 +243,9 @@ def _create_exclusive(path: str, body: str, nonce: str) -> None:
     """Create `path` holding `body`; FileExistsError if it already exists.
 
     tmp + os.link is atomic AND exclusive: readers never see a partial
-    file. Filesystems without hardlinks (object-store FUSE mounts, some
+    file. The tmp file is fsynced before the link, so a power loss cannot
+    leave a linked but empty v{N}.json that every later read fails to
+    parse. Filesystems without hardlinks (object-store FUSE mounts, some
     NFS/SMB configs) fail the link with another OSError; there the file
     is created with O_EXCL, written, flushed and fsynced before the
     commit returns — still exclusive, though not atomic to a reader that
@@ -240,6 +253,8 @@ def _create_exclusive(path: str, body: str, nonce: str) -> None:
     tmp = f"{path}.tmp.{nonce}"
     with open(tmp, "w") as fh:
         fh.write(body)
+        fh.flush()
+        os.fsync(fh.fileno())
     try:
         os.link(tmp, path)
         return

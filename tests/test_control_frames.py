@@ -60,13 +60,9 @@ def test_job_control_frames_are_local(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pipeline, "_arrow_frame", recording)
     r = run_extraction_job(spark, spark.read.parquet(src), out)
 
-    # fresh table, no snapshot log: only the pending list (the sums go
-    # into the snapshot commit, which builds no frame)
-    assert [(ddl, n) for ddl, n, _ in built] == [
-        (PENDING_SCHEMA, r["partitions_done"]),
-    ]
-    for _, _, df in built:
-        assert_local(df)
+    # fresh table, no done-set: no listing and so no pending frame (the
+    # sums go into the snapshot commit, which builds no frame)
+    assert built == []
 
     # the snapshot-consistent read goes through the helper too
     built.clear()
@@ -105,3 +101,14 @@ def test_job_control_frames_are_local(spark, tmp_path, monkeypatch):
     assert entries == reread
     assert len(entries) == r["partitions_done"]
     assert sum(row[2] for row in entries) == r["docs"] == 120
+
+    # a resume over a partly committed table lists its partitions and
+    # builds exactly one pending frame: the partitions it then writes
+    kept = snapshots.current_snapshot(out)["partitions"][: len(entries) // 2]
+    snapshots.commit_snapshot(out, snapshots.begin_commit(out), kept, op="rollback")
+    built.clear()
+    r2 = run_extraction_job(spark, spark.read.parquet(src), out)
+    assert r2["partitions_skipped"] == len(kept)
+    assert r2["partitions_done"] == len(entries) - len(kept) > 0
+    assert [(ddl, n) for ddl, n, _ in built] == [(PENDING_SCHEMA, r2["partitions_done"])]
+    assert_local(built[0][2])

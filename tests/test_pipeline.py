@@ -1,5 +1,8 @@
 """End-to-end job tests: partition layout, resume-from-snapshot, salted agg."""
 
+import glob
+import os
+
 import pyarrow.parquet as pq
 import pytest
 
@@ -73,6 +76,56 @@ def test_partial_resume(spark, tmp_path, pages_parquet):
         .count()
     )
     assert r["docs"] == n_pending_docs
+
+
+def test_partition_listing_runs_only_with_a_done_set(
+    spark, tmp_path, pages_parquet, monkeypatch
+):
+    """A fresh table is written in one Spark job (the writer's collect);
+    only a resume with a done-set first lists the input's partitions."""
+    out = str(tmp_path / "out")
+    pages = spark.read.parquet(pages_parquet)
+    parts = with_partition_cols(pages).select("dt", "bkt").distinct().collect()
+    df_cls = type(pages)
+    calls = []
+    collect = df_cls.collect
+
+    def counting(self):
+        calls.append(self)
+        return collect(self)
+
+    monkeypatch.setattr(df_cls, "collect", counting)
+    r1 = run_extraction_job(spark, pages, out)
+    assert len(calls) == 1
+    assert r1["partitions_done"] == len(parts)
+    assert r1["partitions_skipped"] == 0
+
+    snap = snapshots.current_snapshot(out)
+    kept = snap["partitions"][: len(parts) // 2]
+    snapshots.commit_snapshot(out, snapshots.begin_commit(out), kept, op="rollback")
+    calls.clear()
+    r2 = run_extraction_job(spark, pages, out)
+    assert len(calls) == 2
+    assert r2["partitions_skipped"] == len(kept)
+    assert r2["partitions_done"] == len(parts) - len(kept)
+
+    # resume=False ignores the done-set, so it does not list either
+    calls.clear()
+    r3 = run_extraction_job(spark, pages, out, resume=False)
+    assert len(calls) == 1
+    assert (r3["docs"], r3["partitions_done"]) == (r1["docs"], len(parts))
+
+
+def test_empty_input_on_a_fresh_table(spark, tmp_path, pages_parquet):
+    """No rows: zeros back, no snapshot committed, the intent released and
+    no staging directory left behind."""
+    out = str(tmp_path / "out")
+    empty = spark.read.parquet(pages_parquet).where(F.lit(False))
+    r = run_extraction_job(spark, empty, out)
+    assert (r["docs"], r["partitions_done"], r["partitions_skipped"]) == (0, 0, 0)
+    assert snapshots.list_snapshots(out) == []
+    assert not os.path.exists(snapshots._intent_path(out))
+    assert glob.glob(os.path.join(out, "extractions", "_staging-*")) == []
 
 
 def test_lang_filter(spark, pages_parquet):

@@ -243,3 +243,54 @@ def test_commit_without_hardlinks(tmp_path, monkeypatch):
     assert not [
         n for n in os.listdir(snapshots._snap_dir(out)) if ".tmp." in n
     ]
+
+
+def test_snapshot_is_fsynced_before_it_is_linked(tmp_path, monkeypatch):
+    """The linked v{N}.json must be durable before it becomes visible: a
+    power loss after an unsynced link can expose an empty file that every
+    later list_snapshots fails to parse."""
+    events = []
+    fsync, link = os.fsync, os.link
+
+    def recording_fsync(fd):
+        events.append("fsync")
+        fsync(fd)
+
+    def recording_link(src, dst):
+        events.append(("link", os.path.basename(dst)))
+        link(src, dst)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    monkeypatch.setattr(os, "link", recording_link)
+    out = str(tmp_path / "out")
+    commit_snapshot(out, begin_commit(out), [("2024-01-01", 0)], op="append")
+    linked = events.index(("link", "v00000001.json"))
+    assert "fsync" in events[:linked]
+
+
+def test_current_snapshot_reads_only_the_newest(tmp_path, monkeypatch):
+    """A run reads one snapshot file, however long the history is."""
+    out = str(tmp_path / "out")
+    for i in range(20):
+        commit_snapshot(out, begin_commit(out), [("2024-01-01", i)], op="append")
+    loaded = []
+    load = json.load
+
+    def recording(fh):
+        if os.path.basename(fh.name).startswith("v"):
+            loaded.append(fh.name)
+        return load(fh)
+
+    monkeypatch.setattr(json, "load", recording)
+    newest = snapshots._snap_path(out, 20)
+    assert current_snapshot(out)["snapshot_id"] == 20
+    assert loaded == [newest]
+
+    loaded.clear()
+    ticket = begin_commit(out)
+    assert ticket["next_id"] == 21
+    assert commit_snapshot(out, ticket, [], op="append")["parent_id"] == 20
+    assert loaded == [newest, newest]
+
+    # history callers still see every snapshot
+    assert [s["snapshot_id"] for s in list_snapshots(out)] == list(range(1, 21)) + [21]
