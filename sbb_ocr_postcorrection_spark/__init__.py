@@ -16,18 +16,29 @@ string)``:
   everything cross-document as DataFrame/Catalyst relational ops.
 
 Layout:
-  textkit        pure string functions (NFC, split/levenshtein/ngrams)
+  textkit        pure string functions (NFC, levenshtein, grapheme
+                 clusters, CER)
+  wordlists      the dictionary and confusion pairs datagen, detect and
+                 correct share
   extract        HTML → scored text blocks (pure Python, deterministic)
   detect         char-ngram noisy-span detector (pure)
   correct        confusion+dictionary corrector (pure)
   kernel         per-document oracle: html bytes → extraction result
+  align          line-sequence alignment (the seq_align analog)
+  pdftext        minimal PDF text + layout parser and writer
   datagen        deterministic synthetic pages generator
   kernels_spark  the fused stage 1+2 kernel as a mapInArrow stage, and the
                  job's writer stage around it
   pipeline       end-to-end job: partition layout, salting, snapshot resume
   snapshots      snapshot log (visible partitions + their sums), rollback,
                  writer fence
+  _daemon        the Python worker daemon build_session configures
   operators/     relational operator library (SURVEY.md §2 mappings)
+  sources/       WARC scan and sink, robots.txt, sitemaps
+  functions/     shared column-expression builders and the wordpiece
+                 vocabulary
+  streaming/     extract_dedup_stream: the batch kernel on a stream, then
+                 stateful first-seen dedup
   queries        the driver-facing queries()/oracle_sql() registry
 """
 

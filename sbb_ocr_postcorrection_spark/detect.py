@@ -88,8 +88,3 @@ def flag_spans_counted(text: str) -> tuple[list[tuple[int, int, bool]], int]:
         nf += f
         append((start, pos, f))
     return res, nf
-
-
-def flag_spans(text: str) -> list[tuple[int, int, bool]]:
-    """Spans only (see flag_spans_counted)."""
-    return flag_spans_counted(text)[0]

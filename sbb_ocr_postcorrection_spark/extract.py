@@ -1,7 +1,9 @@
 """HTML → scored text blocks: the Detector-stage boilerplate strip.
 
-Pure Python (stdlib ``html.parser``), fully deterministic — runs identically
-in the single-node oracle and inside Arrow-batched Spark kernels.
+Pure Python (one regex tokenizer, ``parse_blocks``), fully deterministic —
+runs identically in the single-node oracle and inside Arrow-batched Spark
+kernels. Its semantic yardstick, a stdlib ``html.parser`` implementation
+(``parse_blocks_std``), lives in tests/oracles.py.
 
 Semantics (graft analog of the reference's page-region dataflow, SURVEY.md
 §2.1 S1/S2 and §2.5 W2):
@@ -20,8 +22,9 @@ Semantics (graft analog of the reference's page-region dataflow, SURVEY.md
 
 from __future__ import annotations
 
+import html as _htmllib
+import re as _re
 from dataclasses import dataclass, field
-from html.parser import HTMLParser
 
 from .textkit import nfc
 
@@ -32,8 +35,6 @@ _BLOCK_TAGS = frozenset(
      "h4", "h5", "h6", "blockquote", "pre", "br", "hr", "figure",
      "figcaption", "form")
 )
-# Subtrees whose text never counts.
-_IGNORE_TAGS = frozenset(("script", "style", "noscript", "template", "svg", "head", "title"))
 # Ancestors that mark a block as structural boilerplate.
 _BOILER_ANCESTORS = frozenset(("nav", "header", "footer", "aside", "form"))
 
@@ -59,89 +60,6 @@ class Block:
     def link_density(self) -> float:
         return self.link_chars / len(self.text) if self.text else 0.0
 
-
-class _BlockParser(HTMLParser):
-    """Incremental parser accumulating Block records in document order."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[Block] = []
-        self._parts: list[str] = []
-        self._link_chars = 0
-        self._tag_count = 0
-        self._ignore_depth = 0
-        self._anchor_depth = 0
-        self._boiler_depth = 0
-
-    def _flush(self) -> None:
-        text = " ".join(" ".join(self._parts).split())
-        if text:
-            self.blocks.append(
-                Block(
-                    index=len(self.blocks),
-                    text=text,
-                    link_chars=self._link_chars,
-                    tag_count=self._tag_count,
-                    in_boiler=self._boiler_depth > 0,
-                )
-            )
-        self._parts = []
-        self._link_chars = 0
-        self._tag_count = 0
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _IGNORE_TAGS:
-            self._ignore_depth += 1
-            return
-        if self._ignore_depth:
-            return
-        self._tag_count += 1
-        if tag in _BLOCK_TAGS:
-            self._flush()
-        if tag == "a":
-            self._anchor_depth += 1
-        if tag in _BOILER_ANCESTORS:
-            self._boiler_depth += 1
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in _IGNORE_TAGS:
-            self._ignore_depth = max(0, self._ignore_depth - 1)
-            return
-        if self._ignore_depth:
-            return
-        if tag in _BLOCK_TAGS:
-            self._flush()
-        if tag == "a":
-            self._anchor_depth = max(0, self._anchor_depth - 1)
-        if tag in _BOILER_ANCESTORS:
-            self._boiler_depth = max(0, self._boiler_depth - 1)
-
-    def handle_data(self, data: str) -> None:
-        if self._ignore_depth or not data:
-            return
-        self._parts.append(data)
-        if self._anchor_depth:
-            self._link_chars += len(" ".join(data.split()))
-
-    def close(self) -> None:  # flush trailing text
-        super().close()
-        self._flush()
-
-
-def parse_blocks_std(html: bytes | str) -> list[Block]:
-    """Stdlib html.parser implementation — the semantic yardstick; ~3×
-    slower than the tokenizer fast path below (tests assert equality on
-    generated corpora)."""
-    if isinstance(html, (bytes, bytearray)):
-        html = html.decode("utf-8", errors="replace")
-    parser = _BlockParser()
-    parser.feed(nfc(html))
-    parser.close()
-    return parser.blocks
-
-
-import html as _htmllib
-import re as _re
 
 # strip comments and no-text subtrees before tokenizing — as a LINEAR
 # manual scan, not one big `.*?`-alternation sub: the sub form re-scanned
@@ -245,10 +163,11 @@ _TAG_CLASS: dict[str, int] = {}
 
 
 def parse_blocks(html: bytes | str) -> list[Block]:
-    """Fast regex-tokenizer parse: identical Block semantics to
-    parse_blocks_std on sane markup INCLUDING quoted '>' inside attribute
-    values (tests pin equality); both the oracle and the Spark kernel share
-    THIS code, so byte-identity holds by construction.
+    """Fast regex-tokenizer parse: identical Block semantics to the
+    stdlib-parser oracle (tests/oracles.parse_blocks_std) on sane markup
+    INCLUDING quoted '>' inside attribute values (tests pin equality); both
+    the per-document oracle and the Spark kernel share THIS code, so
+    byte-identity holds by construction.
 
     Tokenizes with ONE ``_TAG_RE.split`` over the document — the result
     alternates [text, closing, tag, attrs, self_closing, text, ...] — so the

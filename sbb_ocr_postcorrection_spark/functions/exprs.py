@@ -40,8 +40,8 @@ def lang_cols(
     text_col, stops_de, stops_en, conf_threshold: float = 0.05, toks=None
 ) -> dict[str, Column]:
     """Stopword-hit language-ID columns (P5 analog) — ONE definition shared
-    by the batch operator (operators/textstats.lang_id, DuckDB
-    oracle-checked) and the streaming curation gate, so the two can never
+    by the oracle-checked operator (operators/textstats.lang_id) and
+    operators/urls.host_reputation_gate's per-doc bit, so the two can never
     drift — INCLUDING the lang_pass verdict and its threshold. Pass a
     precomputed ``toks`` column to share one tokenization across several
     builders (higher-order-function exprs are excluded from codegen
@@ -71,9 +71,9 @@ def lang_cols(
 
 
 def quality_cols(text_col, toks=None) -> dict[str, Column]:
-    """Quality-heuristic columns — shared between operators/textstats
-    .quality_score and the streaming curation gate (same sharing rationale
-    and ``toks`` parameter as lang_cols)."""
+    """Quality-heuristic columns — shared by operators/textstats
+    .quality_score and the quality classifier, which trains and scores
+    against its quality_keep label (same ``toks`` parameter as lang_cols)."""
     if toks is None:
         toks = tokens_expr(text_col)
     # null ≡ empty here too: length(NULL) would make alpha_ratio — and

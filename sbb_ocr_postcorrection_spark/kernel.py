@@ -131,17 +131,11 @@ def run_document(html: bytes | str) -> ExtractionResult:
     )
 
 
-def oracle_extract(html: bytes | str) -> str:
-    """Convenience: extracted text only (the byte-identity subject)."""
-    return run_document(html).extracted_text
-
-
 __all__ = [
     "BlockDetection",
     "ExtractionResult",
     "detect_document",
     "correct_document",
     "run_document",
-    "oracle_extract",
     "content_text",
 ]

@@ -254,8 +254,7 @@ def build_bloom_bitmap(history, m_bits: int = BLOOM_M_BITS,
     """m-bit boolean numpy bitmap of the history's content digests: every
     digest's k md5-keyed positions (bloom_positions, JVM-side) set. The
     collect is bounded by m (DISTINCT positions), never by |history| —
-    the whole point of the summary. Shared by the batch gate and the
-    streaming stream-static probe so the two cannot drift."""
+    the whole point of the summary."""
     import numpy as np
 
     hist_digest = (

@@ -45,8 +45,6 @@ LINK_FANOUT = 3        # outlinks contributed per document
 PR_SCALE = 10**12      # fixed-point unit for rank mass
 PR_ITERS = 6           # replayed iterations (oracle generates the same K)
 
-_HOST_FMT = "host{}.example.net"
-
 
 def _host_col(id_col):
     return F.concat(F.lit("host"), id_col.cast("string"), F.lit(".example.net"))

@@ -23,8 +23,6 @@ DECODE_SCHEMA = (
     "channels int, mean_luma double"
 )
 
-_REAL_CODECS = False  # no PIL/cv2/libav in this container
-
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int, float]:
     """Deterministic stand-in for an image decode.
@@ -78,7 +76,6 @@ def decode_metadata(spark, sf_dir) -> DataFrame:
 
 
 RESIZE_SCHEMA = "doc_id long, width int, height int, thumb_width int, thumb_height int, thumb_bytes int"
-FEATURE_SCHEMA = "doc_id long, embedding array<float>"
 _FEATURE_DIM = 16
 
 
@@ -110,21 +107,6 @@ def _byte_histogram(b: bytes):
     return np.bincount(arr % _FEATURE_DIM, minlength=_FEATURE_DIM).astype("int64")
 
 
-def feature_extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Feature-extraction plumbing: binary payload → fixed-dim float
-    embedding. Real impl: a vision tower over decoded pixels (model loaded
-    once per worker); stub: deterministic byte-histogram features, same
-    schema/batch shape, so downstream ANN operators compose unchanged."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload) if payload is not None else b""
-            hist = _byte_histogram(b)
-            vec = (hist / max(len(b), 1)).astype("float32")
-            rows.append({"doc_id": doc_id, "embedding": vec.tolist()})
-        yield pd.DataFrame(rows, columns=["doc_id", "embedding"])
-
-
 HIST_SCHEMA = "doc_id long, dim int, cnt long, n_bytes int"
 
 
@@ -134,7 +116,8 @@ def feature_histogram_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Data
     integer rows. Hashable scalar columns only (the r1 harness crashed
     canonicalizing array<float> — VERDICT r1 "What's wrong" #1) and exact
     integers, so the DuckDB oracle matches bit-for-bit. The embedding is
-    cnt / n_bytes per dim (pytest-asserted against feature_extract_batch)."""
+    cnt / n_bytes per dim (pytest-asserted against the array<float> form,
+    tests/oracles.feature_embeddings)."""
     for pdf in batches:
         rows = []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -154,16 +137,9 @@ def resize_metadata(spark, sf_dir) -> DataFrame:
     return payloads.mapInPandas(resize_batch, schema=RESIZE_SCHEMA)
 
 
-def feature_embeddings(spark, sf_dir) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    payloads = d.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    return payloads.mapInPandas(feature_extract_batch, schema=FEATURE_SCHEMA)
-
-
 def feature_components(spark, sf_dir) -> DataFrame:
     """Driver query for the feature stage: integer byte-histogram rows
-    (doc_id, dim, cnt, n_bytes). Same mapInPandas plumbing as
-    feature_embeddings; array form stays internal for ANN composition."""
+    (doc_id, dim, cnt, n_bytes), one mapInPandas over the payloads."""
     d = load(spark, sf_dir, "documents")
     payloads = d.select("doc_id", F.encode("text", "utf-8").alias("payload"))
     return payloads.mapInPandas(feature_histogram_batch, schema=HIST_SCHEMA)

@@ -7,8 +7,8 @@ EOS slot after each) and the stream is cut into fixed-size windows
 slice of one long document. This operator computes the layout — which
 window(s) each document lands in and per-window occupancy — from token
 COUNTS only (pure integer arithmetic, so the whole layout is
-DuckDB-oracle-checkable; materializing the token ids themselves is the
-kernel-side wordpiece encode of functions/wordpiece.py applied per slice).
+DuckDB-oracle-checkable; materializing the token ids themselves is a
+per-slice encode with the trained vocabulary).
 
 Scale design (100 TB): the naive layout needs a GLOBAL running offset per
 document — `sum(len) OVER (ORDER BY doc_id)` — which Spark executes as a

@@ -57,8 +57,6 @@ DSIR_K = 100           # resample size
 DSIR_TARGET_LANG = "en"  # the target domain: curated English text
 _U_BITS = 40           # uniform-draw width for the race
 
-MIX_ALPHA_DEN = 2      # alpha = 1/2: inclusion rate 1/isqrt(n_s)
-
 HEAPS_CHECKPOINTS = 16  # powers of two: 1, 2, 4, ... 2^15 docs
 
 

@@ -162,11 +162,6 @@ def host_trailing_anomaly(spark, sf_dir) -> DataFrame:
     n_docs · TRAIL > FACTOR · trail_sum, flagged only with FULL history
     (n_trail == TRAIL — a young feed never flags).
 
-    This is the certified batch TWIN of
-    streaming.ingest.trailing_anomaly_stream: same rule, same closure
-    semantics (the stream emits a window's verdict when a later window
-    arrives; the batch sees everything, so it scores every window).
-
     Scale shape: ONE corpus-sized rollup onto (host, window); the lag
     window then runs over the host×windows DIMENSION (never
     corpus-sized), partitioned by host — no SinglePartition. Fixture:

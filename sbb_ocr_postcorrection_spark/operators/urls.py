@@ -216,9 +216,9 @@ BLOCKED_PATH_RE = "/p/1[12]($|[/?#])"
 
 
 def _host_path_suffixes(url) -> tuple:
-    """The ONE (host, path, suffixes) extraction both blocklist forms
-    build on — a fix applied here reaches the batch join form AND the
-    streaming expression form by construction.
+    """The ONE (host, path, suffixes) extraction the URL blocklist gate
+    and the robots gates build on — a fix applied here reaches all of
+    them by construction.
 
     The POLICY host normalizes the spellings an adversary controls that
     the canonical (dedup) host deliberately keeps: userinfo is stripped
@@ -249,33 +249,6 @@ def _host_path_suffixes(url) -> tuple:
     return host, path, suffixes
 
 
-def blocklist_cols(url, hosts=None, path_re: str | None = None) -> dict:
-    """The blocklist verdict as PURE column expressions (no join, no
-    aggregation): host dot-suffixes as an array column, membership via
-    arrays_overlap against the literal blocklist, path rule via rlike.
-
-    This is the STREAMING-friendly form — stateless, so it gates a
-    micro-batch before the kernel with no watermark and no state store.
-    The literal-array membership is right for policy lists up to a few
-    thousand entries (they are plan constants); for 10^5-row blocklists
-    use url_blocklist_gate's broadcast-dimension equality join instead.
-    Both produce identical verdicts (asserted in tests) and share
-    _host_path_suffixes, so the normalization law cannot drift."""
-    hs = tuple(hosts) if hosts is not None else BLOCKED_HOSTS
-    pre = path_re if path_re is not None else BLOCKED_PATH_RE
-    host, path, suffixes = _host_path_suffixes(url)
-    blocked_host = F.arrays_overlap(
-        suffixes, F.array(*[F.lit(h) for h in hs])
-    ).cast("int")
-    blocked_path = path.rlike(pre).cast("int")
-    return {
-        "host": host,
-        "blocked_host": blocked_host,
-        "blocked_path": blocked_path,
-        "url_pass": ((blocked_host == 0) & (blocked_path == 0)).cast("int"),
-    }
-
-
 def url_blocklist_gate(
     spark, sf_dir, blocked_hosts=None, blocked_path_re: str | None = None,
     docs=None,
@@ -295,7 +268,7 @@ def url_blocklist_gate(
     the '<no-host>' sentinel with a definite verdict (blocked_host=0) —
     the every-doc-surfaces contract. Host/path/suffix extraction (incl.
     the userinfo/port/trailing-dot policy normalization) is the SHARED
-    _host_path_suffixes builder, the same law as the streaming form."""
+    _host_path_suffixes builder, the same law as the robots gates."""
     d = docs if docs is not None else load(spark, sf_dir, "documents")
     if "url" not in d.columns:
         d = d.select("doc_id", synth_url_expr(F.col("doc_id")).alias("url"))

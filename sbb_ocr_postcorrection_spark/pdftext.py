@@ -164,11 +164,6 @@ def reading_order(runs: list[TextRun]) -> list[TextRun]:
     return sorted(runs, key=lambda r: (r.page, -r.y, r.x))
 
 
-def extract_pdf_text(data: bytes) -> str:
-    """Reading-ordered plain text, one line per run."""
-    return "\n".join(r.text for r in reading_order(extract_runs(data)))
-
-
 # ---------------------------------------------------------------- writer --
 
 def make_pdf(pages: list[list[str]], compress: bool = True) -> bytes:

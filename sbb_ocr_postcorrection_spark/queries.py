@@ -1069,8 +1069,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ingest-volume trend with integer-exact spike detection over the
         # day dimension (trailing self-join, no global window)
         "ingest_trend": pinned(temporal.ingest_trend),
-        # per-host SELF-ADAPTIVE trailing baseline (the certified batch
-        # twin of streaming.trailing_anomaly_stream)
+        # per-host SELF-ADAPTIVE trailing baseline (a young feed never
+        # flags: full trailing history required)
         "host_trailing_anomaly": pinned(temporal.host_trailing_anomaly),
         # cross-doc lexical diversity (distinct-1/distinct-3 per source) —
         # template spam collapses here even when per-doc repetition passes

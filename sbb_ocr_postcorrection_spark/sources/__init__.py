@@ -1,3 +1,1 @@
 """Sources & sinks (SURVEY.md §2.1 S-mappings)."""
-
-from . import pages_io  # noqa: F401

@@ -98,8 +98,8 @@ def crawl_delay(
 
 def robots_verdicts(txts, paths, agent: str = "*") -> list[int]:
     """Per-row allowed bits with a parse cache keyed on the policy text —
-    THE verdict loop, shared by the batch gate's kernel and the streaming
-    gate's UDF so their None-handling and caching cannot drift."""
+    the robots gate's verdict loop; a NULL/NaN policy (host without a
+    robots.txt) allows."""
     cache: dict[str, list] = {}
     out: list[int] = []
     for txt, p in zip(txts, paths):

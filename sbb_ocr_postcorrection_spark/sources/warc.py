@@ -375,20 +375,23 @@ def warc_scan_quarantine(
     )
 
 
-def write_warc_archive(
+def write_warc_archive_indexed(
     pages, out_dir: str, n_files: int = 8, level: int = 6
 ):
-    """Distributed WARC sink: (url, warc_ts, html) → ``n_files``
-    `.warc.gz` member archives under ``out_dir`` + a manifest DataFrame
-    (file, n_records, n_bytes, urls_md5). Completes the WARC family's
-    sink side — the scan half (warc_gz_scan) reads these bytes back
-    record-for-record, which the roundtrip test pins.
+    """Distributed WARC sink with a CDX-style per-record index:
+    (url, warc_ts, html) → ``n_files`` `.warc.gz` member archives under
+    ``out_dir``, returning one row per record — (url, warc_date, file,
+    offset, length). The scan half (warc_gz_scan) reads these bytes back
+    record-for-record, which the roundtrip test pins. Each record is its
+    own gzip member, so (offset, length) brackets exactly one member and a
+    reader can inflate it without touching the rest of the file (the
+    takedown/re-audit access path robots_compliance implies).
 
     Determinism and idempotence (the extraction-sink discipline):
-    * records within a file are sorted by url and each record is its own
-      gzip member at a FIXED compression level with zeroed mtime
-      (gzip_member), so the same input produces byte-identical archives
-      on every run — safe to re-run over a partial failure;
+    * records within a file are sorted by url and each member is written
+      at a FIXED compression level with zeroed mtime (gzip_member), so the
+      same input produces byte-identical archives, and offsets, on every
+      run — safe to re-run over a partial failure;
     * each task writes to a temp path and os.replace()s it into place
       (atomic on POSIX), so a killed task never leaves a half-written
       archive with the final name;
@@ -397,76 +400,11 @@ def write_warc_archive(
 
     Scale shape: one hash shuffle on the file bucket (md5 of url — no
     hot-host skew since the key is the full url), then each archive is
-    built and written inside its own task via applyInPandas; nothing
-    returns to the driver but the manifest (n_files rows). On object
-    storage the os.replace seam is where the multipart-upload commit
-    goes."""
-    import hashlib
-    import os
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import md5_60
-
-    os.makedirs(out_dir, exist_ok=True)
-    iso = F.coalesce(
-        F.date_format("warc_ts", "yyyy-MM-dd'T'HH:mm:ss'Z'"),
-        F.lit("1970-01-01T00:00:00Z"),
-    )
-    src = pages.select(
-        "url",
-        iso.alias("warc_date"),
-        F.col("html"),
-        F.pmod(md5_60(F.col("url")), F.lit(n_files)).cast("int").alias("bkt"),
-    )
-
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("url", kind="mergesort")
-        blob = b"".join(
-            gzip_member(build_warc_record(u, d, bytes(p)), level)
-            for u, d, p in zip(pdf["url"], pdf["warc_date"], pdf["html"])
-        )
-        bkt = int(pdf["bkt"].iloc[0])
-        final = os.path.join(out_dir, f"part-{bkt:05d}.warc.gz")
-        tmp = final + f".tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, final)
-        return pd.DataFrame(
-            {
-                "file": [os.path.basename(final)],
-                "n_records": [len(pdf)],
-                "n_bytes": [len(blob)],
-                "urls_md5": [
-                    hashlib.md5("\n".join(pdf["url"]).encode()).hexdigest()
-                ],
-            }
-        )
-
-    return src.groupBy("bkt").applyInPandas(
-        _write,
-        "file string, n_records long, n_bytes long, urls_md5 string",
-    )
-
-
-def write_warc_archive_indexed(
-    pages, out_dir: str, n_files: int = 8, level: int = 6
-):
-    """write_warc_archive plus a CDX-style per-record index: returns one
-    row per record — (url, warc_date, file, offset, length) — while
-    writing the SAME byte-identical archives (each record is its own
-    gzip member, so (offset, length) brackets exactly one member and a
-    reader can inflate it without touching the rest of the file: the
-    takedown/re-audit access path robots_compliance implies). Offsets
-    are well-defined because the sink is deterministic: records sorted
-    by url, fixed compression level, zeroed gzip mtime.
-
-    Scale shape: identical to write_warc_archive (one hash shuffle on
-    the file bucket, archives built inside their writer tasks); the
-    index rides back as the task output relation — write it as a
-    parquet sidecar (write_warc_cdx) and point lookups become an index
-    equality probe + one ranged read."""
+    built and written inside its own task via applyInPandas; the index
+    rides back as the task output relation — write it as a parquet
+    sidecar (write_warc_cdx) and point lookups become an index equality
+    probe + one ranged read. On object storage the os.replace seam is
+    where the multipart-upload commit goes."""
     import os
 
     import pandas as pd

@@ -7,10 +7,6 @@ Spark kernels (byte-identity by construction).
 Reference parity notes (behavior re-derived, no code copied):
 * NFC normalization — reference normalizes before any comparison
   (helpers.py:321-343); Spark has no NFC builtin, so it lives here.
-* max-length line splitting on separator boundaries mirrors the semantics of
-  split_iter / split_into_groups / split_with_max_len
-  (preprocessing/cli_preproc.py:29-68) including the inline assert cases at
-  cli_preproc.py:72-85 (ported verbatim to tests/test_textkit.py).
 * Levenshtein is our own DP implementation — NOT Spark's builtin — because
   the reference uses dinglehopper's edit distance and we need one definition
   on both the oracle and Spark sides.
@@ -18,22 +14,12 @@ Reference parity notes (behavior re-derived, no code copied):
 
 from __future__ import annotations
 
-import re
 import unicodedata
-from collections.abc import Iterable, Iterator
 
 
 def nfc(s: str) -> str:
     """Unicode NFC normalization (F1)."""
     return unicodedata.normalize("NFC", s)
-
-
-_WS_RE = re.compile(r"\s+")
-
-
-def tokenize(s: str) -> list[str]:
-    """Whitespace tokenization (F2); drops empty tokens."""
-    return [t for t in _WS_RE.split(s) if t]
 
 
 def _levenshtein_np(a: str, b: str) -> int:
@@ -112,8 +98,6 @@ _CR, _LF, _CONTROL = 1, 2, 3
 _EXTEND, _ZWJ_CLS, _RI, _PREPEND, _SPACING = 4, 5, 6, 7, 8
 _HANG_L, _HANG_V, _HANG_T, _HANG_LV, _HANG_LVT = 9, 10, 11, 12, 13
 _XPICTO, _OTHER = 14, 0
-
-_ZWJ = "\u200d"
 
 # Grapheme_Cluster_Break=Prepend (GraphemeBreakProperty.txt): Arabic/
 # Syriac/Kaithi number signs, Malayalam/Masaram/Dogra/Zanabazar prefixed
@@ -282,97 +266,3 @@ def cer_clusters(ocr: str, gt: str) -> float:
         return float("inf")
     return d / n
 
-
-def split_iter(s: str, sep: str = " ") -> list[str]:
-    """Separator split, empty pieces dropped — same observable output as the
-    reference's regex-generator split_iter (cli_preproc.py:29-35) on
-    non-degenerate input; its inline assert case is ported verbatim in
-    tests/test_textkit.py."""
-    return [p for p in s.split(sep) if p]
-
-
-def split_into_groups(s: str, sep: str = " ", max_len: int = 40) -> list[list[str]]:
-    """Greedy grouping of a string's tokens such that each group re-joins to
-    at most max_len chars (cli_preproc.py:38-54 semantics): a token longer
-    than max_len raises ValueError; a group is flushed when appending the
-    next token would exceed max_len."""
-    groups: list[list[str]] = []
-    cur: list[str] = []
-    for t in split_iter(s, sep):
-        if len(t) > max_len:
-            raise ValueError(f"token longer than max_len={max_len}: {t!r}")
-        if len(sep.join(cur + [t])) > max_len:
-            groups.append(cur)
-            cur = [t]
-        else:
-            cur.append(t)
-    groups.append(cur)
-    return groups
-
-
-def split_with_max_len(s: str, sep: str = " ", max_len: int = 40) -> list[str]:
-    """Split a line at separator boundaries into chunks ≤ max_len
-    (cli_preproc.py:57-68 semantics). Inverse: ``reassemble``."""
-    return [sep.join(g) for g in split_into_groups(s, sep, max_len)]
-
-
-def reassemble(parts: Iterable[str], sep: str = " ") -> str:
-    """Inverse of split_with_max_len (cli_correct.py:34-59 analog)."""
-    return sep.join(parts)
-
-
-def sliding_windows(tokens: list[str], size: int = 4) -> Iterator[list[str]]:
-    """Token sliding windows, stride 1 (helpers.py:92-134 semantics): a
-    sequence shorter than `size` yields itself once; otherwise one window per
-    start position 0..len-size."""
-    if len(tokens) <= size:
-        if tokens:
-            yield tokens
-        return
-    for i in range(len(tokens) - size + 1):
-        yield tokens[i : i + size]
-
-
-def segment_runs(ids: list[int]) -> list[list[int]]:
-    """Gaps-and-islands segmentation of an int sequence: a gap of more than 1
-    starts a new run (helpers.py:137-223 semantics, W2)."""
-    runs: list[list[int]] = []
-    cur: list[int] = []
-    prev: int | None = None
-    for i in ids:
-        if prev is not None and i - prev != 1:
-            runs.append(cur)
-            cur = []
-        cur.append(i)
-        prev = i
-    if cur:
-        runs.append(cur)
-    return runs
-
-
-def _seq_labels(a: list, b: list, pad_to: int) -> list[int]:
-    """Shared label core: positional 1-correct/2-error over two sequences
-    space-padded to the longer length, then 0-padded to pad_to — ONE
-    definition for the code-point and grapheme-cluster views."""
-    n = max(len(a), len(b))
-    a = list(a) + [" "] * (n - len(a))
-    b = list(b) + [" "] * (n - len(b))
-    labels = [1 if x == y else 2 for x, y in zip(a, b)]
-    if pad_to > n:
-        labels += [0] * (pad_to - n)
-    return labels
-
-
-def char_labels(ocr: str, gt: str, pad_to: int = 0) -> list[int]:
-    """Per-char equality labels: 1 correct, 2 error, 0 pad
-    (cli_preproc.py:405-412 semantics, F8). Both strings space-padded to the
-    longer length before comparison (F7)."""
-    return _seq_labels(list(ocr), list(gt), pad_to)
-
-
-def char_labels_clusters(ocr: str, gt: str, pad_to: int = 0) -> list[int]:
-    """char_labels over grapheme clusters of the NFC forms — dinglehopper's
-    unit (one label per visible glyph, SURVEY §7.3): a combining-mark error
-    yields ONE error label on its base cluster, not a spurious extra
-    position that shifts every later label."""
-    return _seq_labels(grapheme_clusters(nfc(ocr)), grapheme_clusters(nfc(gt)), pad_to)

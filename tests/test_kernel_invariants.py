@@ -16,6 +16,8 @@ from sbb_ocr_postcorrection_spark.datagen import make_page, make_rich_page
 from sbb_ocr_postcorrection_spark.kernel import detect_document, run_document
 from sbb_ocr_postcorrection_spark.wordlists import DICTIONARY, NOISE_SUBS
 
+from oracles import parse_blocks_std
+
 _WORDS = sorted(DICTIONARY)
 # whitespace for str.split (which collapses block text), not just ASCII;
 # "&nbsp;" unescapes to U+00A0
@@ -125,7 +127,7 @@ def test_whitespace_only_blocks_match_std_parser():
         ]
         for html in cases:
             fast = _blocks(extract.parse_blocks, html)
-            assert fast == _blocks(extract.parse_blocks_std, html), repr(html)
+            assert fast == _blocks(parse_blocks_std, html), repr(html)
 
 
 @given(st.lists(
@@ -142,4 +144,4 @@ def test_whitespace_mixed_blocks_match_std_parser(units):
         f"<{tag}>{''.join(parts)}</{tag}>" for tag, parts in units
     ) + "</body></html>"
     fast = _blocks(extract.parse_blocks, html)
-    assert fast == _blocks(extract.parse_blocks_std, html), repr(html)
+    assert fast == _blocks(parse_blocks_std, html), repr(html)

@@ -3,7 +3,7 @@
 from hypothesis import given, settings, strategies as st
 
 from sbb_ocr_postcorrection_spark.correct import best_correction, correct_token
-from sbb_ocr_postcorrection_spark.detect import flag_spans
+from sbb_ocr_postcorrection_spark.detect import flag_spans_counted
 from sbb_ocr_postcorrection_spark.wordlists import DICTIONARY, NOISE_SUBS
 
 SF = "/root/testdata/sf0.01"
@@ -105,7 +105,7 @@ def test_corrector_inverts_single_noise(word, sub_idx):
 @given(st.text(alphabet="abcdefghij klmnop.,\t\n", max_size=60))
 @settings(max_examples=200, deadline=None)
 def test_flag_spans_cover_all_tokens(text):
-    spans = flag_spans(text)
+    spans = flag_spans_counted(text)[0]
     # spans are disjoint, ordered, and cover exactly the non-space runs
     rebuilt = [text[s[0]:s[1]] for s in spans]
     assert rebuilt == text.split()

@@ -2,9 +2,9 @@
 
 from sbb_ocr_postcorrection_spark.correct import best_correction, correct_token
 from sbb_ocr_postcorrection_spark.datagen import generate_pages, make_page
-from sbb_ocr_postcorrection_spark.detect import flag_spans, is_noisy_token
+from sbb_ocr_postcorrection_spark.detect import flag_spans_counted, is_noisy_token
 from sbb_ocr_postcorrection_spark.extract import extract_blocks, content_text
-from sbb_ocr_postcorrection_spark.kernel import oracle_extract, run_document
+from sbb_ocr_postcorrection_spark.kernel import run_document
 
 
 HTML = b"""<!DOCTYPE html><html><head><script>nav()</script></head><body>
@@ -54,7 +54,7 @@ def test_corrector_restores_confusions():
 
 
 def test_flag_spans_offsets():
-    spans = flag_spans("das wasscr ist")
+    spans = flag_spans_counted("das wasscr ist")[0]
     assert [(s[0], s[1]) for s in spans] == [(0, 3), (4, 10), (11, 14)]
     assert [bool(s[2]) for s in spans] == [False, True, False]
 
@@ -62,7 +62,7 @@ def test_flag_spans_offsets():
 def test_clean_page_extracts_byte_exact():
     for i in range(10):
         p = make_page(42, i, noise_rate=0.0)
-        assert oracle_extract(p.html) == p.text
+        assert run_document(p.html).extracted_text == p.text
 
 
 def test_noise_fully_corrected():
@@ -70,7 +70,7 @@ def test_noise_fully_corrected():
     for i in range(20):
         clean = make_page(11, i, noise_rate=0.0)
         noisy = make_page(11, i, noise_rate=0.12)
-        assert oracle_extract(noisy.html) == clean.text
+        assert run_document(noisy.html).extracted_text == clean.text
 
 
 def test_metrics_consistent():

@@ -3,18 +3,22 @@
 from hypothesis import given, settings, strategies as st
 
 from sbb_ocr_postcorrection_spark.pdftext import (
-    extract_pdf_text,
     extract_runs,
     make_pdf,
     reading_order,
 )
 
 
+def _pdf_text(data: bytes) -> str:
+    """Reading-ordered plain text, one line per run."""
+    return "\n".join(r.text for r in reading_order(extract_runs(data)))
+
+
 def test_roundtrip_compressed_and_raw():
     pages = [["Hello (world) \\ test", "zeile zwei"], ["page two"]]
     want = "Hello (world) \\ test\nzeile zwei\npage two"
-    assert extract_pdf_text(make_pdf(pages, compress=True)) == want
-    assert extract_pdf_text(make_pdf(pages, compress=False)) == want
+    assert _pdf_text(make_pdf(pages, compress=True)) == want
+    assert _pdf_text(make_pdf(pages, compress=False)) == want
 
 
 def test_reading_order_sort():
@@ -68,7 +72,7 @@ def test_unresolvable_indirect_length_falls_back():
                 .map(lambda s: " ".join(s.split()) or "x"), min_size=1, max_size=8))
 @settings(max_examples=60, deadline=None)
 def test_roundtrip_property(lines):
-    assert extract_pdf_text(make_pdf([lines])) == "\n".join(lines)
+    assert _pdf_text(make_pdf([lines])) == "\n".join(lines)
 
 
 def test_spark_pdf_layout_query(spark):

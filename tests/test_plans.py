@@ -109,36 +109,6 @@ def test_mets_dim_join_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    """Co-located bucketed join: both scans announce the bucket layout and
-    the merge join zips matching buckets — no shuffle anywhere in the plan
-    (the pay-once/join-many layout contract for recurring joins)."""
-    from sbb_ocr_postcorrection_spark.operators.bucketing import (
-        bucketed_documents_with_stats,
-    )
-
-    df = bucketed_documents_with_stats(spark, SF_DIR)
-    plan = plan_of(df)
-    assert "Exchange" not in plan
-    assert "SortMergeJoin" in plan
-    assert "Bucketed: true" in plan
-    assert "SelectedBucketsCount: 8 out of 8" in plan
-    # and the shuffle-free join returns exactly the plain join's rows
-    import pyspark.sql.functions as F
-
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    expected = sorted(
-        (r["doc_id"], r["lang"], r["source"],
-         len([t for t in r["text"].split(" ") if t]), len(r["text"]))
-        for r in d.collect()
-    )
-    got = sorted(
-        (r["doc_id"], r["lang"], r["source"], r["n_tokens_ws"], r["text_len"])
-        for r in df.collect()
-    )
-    assert got == expected
-
-
 def test_bloom_probe_batch_side_never_shuffles(spark):
     """bloom_gate's batch probe must be a narrow mapInPandas against the
     broadcast bitmap — no join and no hash exchange of the batch rows

@@ -10,6 +10,8 @@ from sbb_ocr_postcorrection_spark import extract
 from sbb_ocr_postcorrection_spark.operators import dedup
 from sbb_ocr_postcorrection_spark.operators.lines import _lenient_split
 
+from oracles import parse_blocks_std
+
 
 @pytest.fixture()
 def tiny_docs(spark, tmp_path):
@@ -73,7 +75,7 @@ def test_self_closing_boiler_tags_do_not_poison(spark):
     text = extract.content_text(blocks)
     assert "langer Absatz" in text
     # fast and std parser agree on the void-tag document
-    std = extract.classify_blocks(extract.parse_blocks_std(html))
+    std = extract.classify_blocks(parse_blocks_std(html))
     assert [(b.text, b.in_boiler) for b in blocks] == [
         (b.text, b.in_boiler) for b in std
     ]
@@ -145,7 +147,7 @@ def test_quoted_gt_in_attribute_matches_std_parser():
         '<p>after words here</p></body></html>'
     )
     fast = [(b.text, b.link_chars) for b in extract.parse_blocks(html)]
-    std = [(b.text, b.link_chars) for b in extract.parse_blocks_std(html)]
+    std = [(b.text, b.link_chars) for b in parse_blocks_std(html)]
     assert fast == std
     assert ("link text", 9) in fast
 
@@ -161,7 +163,7 @@ def test_stray_quote_in_unquoted_attribute_matches_std_parser():
     ]
     for html in cases:
         fast = [(b.text, b.link_chars) for b in extract.parse_blocks(html)]
-        std = [(b.text, b.link_chars) for b in extract.parse_blocks_std(html)]
+        std = [(b.text, b.link_chars) for b in parse_blocks_std(html)]
         assert fast == std, html
 
 
@@ -206,7 +208,7 @@ def test_parser_equivalence_property():
         ]
         std = [
             (b.text, b.link_chars, b.tag_count, b.in_boiler)
-            for b in extract.parse_blocks_std(html)
+            for b in parse_blocks_std(html)
         ]
         assert fast == std, html
 
@@ -223,7 +225,7 @@ def test_cdata_sections_match_std_parser():
         "<p>a <![CDATA[x]]> b <![CDATA[y > z]]> c</p>",
     ]
     for html in cases:
-        std = [b.text for b in extract.parse_blocks_std(html)]
+        std = [b.text for b in parse_blocks_std(html)]
         fast = [b.text for b in extract.parse_blocks(html)]
         assert fast == std, html
 
@@ -254,14 +256,14 @@ def test_possessive_tag_regex_keeps_quoted_gt_semantics():
     # committed quoted-value arms: same results as before on sane markup
     html = '<p>a <a href="q>x">t</a> b</p>'
     assert [b.text for b in extract.parse_blocks(html)] == ["a t b"]
-    assert [b.text for b in extract.parse_blocks_std(html)] == ["a t b"]
+    assert [b.text for b in parse_blocks_std(html)] == ["a t b"]
     # stray quote in an unquoted value still does not swallow text
     html2 = "<p>a <a href=x'y>t</a> b</p>"
     assert [b.text for b in extract.parse_blocks(html2)] == ["a t b"]
     # self-closing still detected through the '/' handling arms
     html3 = "<p>a<nav/>b</p>"
     fast = extract.parse_blocks(html3)
-    std = extract.parse_blocks_std(html3)
+    std = parse_blocks_std(html3)
     assert [(b.text, b.in_boiler) for b in fast] == [(b.text, b.in_boiler) for b in std]
 
 
@@ -275,7 +277,7 @@ def test_unclosed_notext_subtrees_match_std_parser():
         "<p>a</p><script>x</script><p>b</p>",  # closed: unaffected
     ]
     for html in cases:
-        std = [b.text for b in extract.parse_blocks_std(html)]
+        std = [b.text for b in parse_blocks_std(html)]
         fast = [b.text for b in extract.parse_blocks(html)]
         assert fast == std, html
 
@@ -306,7 +308,7 @@ def test_self_closed_notext_openers_do_not_swallow(spark):
         "<p>a</p><svg/>x</svg><p>b</p>",  # stray closer stays inert
     ]
     for html in cases:
-        std = [b.text for b in extract.parse_blocks_std(html)]
+        std = [b.text for b in parse_blocks_std(html)]
         fast = [b.text for b in extract.parse_blocks(html)]
         assert fast == std, (html, std, fast)
         assert "hello world" in " ".join(fast) or "b" in " ".join(fast)
@@ -365,80 +367,6 @@ def test_bpe_survives_u001f_in_corpus(spark, tmp_path):
     enc = {r["doc_id"]: r for r in bpe.bpe_encode(spark, d, 3).collect()}
     assert enc[1]["n_tokens"] == 0 and list(enc[1]["token_ids"]) == []
     assert enc[0]["n_tokens"] == tok[0]["n_bpe_tokens"]
-
-
-def test_decontaminate_stream_empty_eval_set(spark, tmp_path):
-    # round-5 advice (low): an EMPTY eval relation built F.lit([]) with
-    # type array<void> and array_intersect failed analysis — a legitimately
-    # empty eval suite must mark every page clean instead of crashing
-    import pyarrow.parquet as pq
-
-    from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
-    from sbb_ocr_postcorrection_spark.streaming.curate_stream import (
-        decontaminate_stream,
-    )
-
-    d = tmp_path / "in"
-    d.mkdir()
-    pq.write_table(pages_to_arrow(generate_pages(6, seed=7)), str(d / "a.parquet"))
-    stream = (
-        spark.readStream.schema(
-            "url string, warc_ts timestamp, html binary, text string, lang string"
-        )
-        .parquet(str(d))
-    )
-    empty_evals = spark.createDataFrame([], "shingle string")
-    seen = []
-    q = (
-        decontaminate_stream(stream, empty_evals)
-        .writeStream.outputMode("append")
-        .foreachBatch(lambda b, _e: seen.extend(b.collect()))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert len(seen) == 6
-    assert all(r["n_overlap"] == 0 and r["contaminated"] == 0 for r in seen)
-
-
-def test_decontaminate_stream_reserved_columns_raise(spark, tmp_path):
-    from sbb_ocr_postcorrection_spark.streaming.curate_stream import (
-        decontaminate_stream,
-    )
-
-    d = tmp_path / "in2"
-    d.mkdir()
-    spark.createDataFrame(
-        [("u", "t", 3)], "url string, text string, n_overlap int"
-    ).write.parquet(str(d / "a.parquet"))
-    stream = spark.readStream.schema(
-        "url string, text string, n_overlap int"
-    ).parquet(str(d))
-    evals = spark.createDataFrame([("a b c",)], "shingle string")
-    with pytest.raises(ValueError, match="reserves column"):
-        decontaminate_stream(stream, evals)
-
-
-def test_bloom_gate_stream_reserved_columns_raise(spark, tmp_path):
-    # round-5 advice (low): a caller's pre-existing content_hash column was
-    # silently clobbered (and, with drop=True, the clobbered value survived
-    # under the claim of a restored input schema) — now a loud refusal
-    from sbb_ocr_postcorrection_spark.streaming.dedup_stream import (
-        bloom_gate_stream,
-    )
-
-    d = tmp_path / "in3"
-    d.mkdir()
-    spark.createDataFrame(
-        [("u", 1, "t", "h")],
-        "url string, doc_id long, text string, content_hash string",
-    ).write.parquet(str(d / "a.parquet"))
-    stream = spark.readStream.schema(
-        "url string, doc_id long, text string, content_hash string"
-    ).parquet(str(d))
-    history = spark.createDataFrame([(99, "old text")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="reserves column"):
-        bloom_gate_stream(stream, history)
 
 
 def test_phrase_search_empty_corpus_raises(spark, tmp_path):

@@ -2,13 +2,13 @@
 against TOC navs, link-wrapped related rails and comment asides."""
 
 from sbb_ocr_postcorrection_spark.datagen import generate_pages, make_rich_page
-from sbb_ocr_postcorrection_spark.kernel import oracle_extract
+from sbb_ocr_postcorrection_spark.kernel import run_document
 
 
 def test_rich_clean_pages_extract_exact():
     for i in range(30):
         p = make_rich_page(9, i, noise_rate=0.0)
-        got = oracle_extract(p.html)
+        got = run_document(p.html).extracted_text
         assert got == p.text, (p.url, got[:120], p.text[:120])
 
 
@@ -16,12 +16,12 @@ def test_rich_noise_fully_corrected():
     for i in range(20):
         clean = make_rich_page(21, i, noise_rate=0.0)
         noisy = make_rich_page(21, i, noise_rate=0.12)
-        assert oracle_extract(noisy.html) == clean.text
+        assert run_document(noisy.html).extracted_text == clean.text
 
 
 def test_rich_boilerplate_excluded():
     p = make_rich_page(5, 3, noise_rate=0.0)
-    text = oracle_extract(p.html)
+    text = run_document(p.html).extracted_text
     assert "copyright" not in text
     # related-rail sentences are long but 100% link chars → excluded
     html = p.html.decode()
@@ -38,4 +38,4 @@ def test_rich_spark_identity(spark):
     df = spark.createDataFrame(pages_to_arrow(pages).to_pandas())
     got = {r["url"]: r["extracted_text"] for r in extract_pages(df).collect()}
     for p in pages:
-        assert got[p.url] == oracle_extract(p.html)
+        assert got[p.url] == run_document(p.html).extracted_text

@@ -134,10 +134,8 @@ def test_feature_components_consistent_with_embeddings(spark):
     projections are the same histogram."""
     import numpy as np
 
-    from sbb_ocr_postcorrection_spark.operators.multimodal import (
-        feature_components,
-        feature_embeddings,
-    )
+    from oracles import feature_embeddings
+    from sbb_ocr_postcorrection_spark.operators.multimodal import feature_components
 
     comp = feature_components(spark, SF_SMALL).collect()
     embs = {r["doc_id"]: r["embedding"] for r in feature_embeddings(spark, SF_SMALL).collect()}

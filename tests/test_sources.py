@@ -1,10 +1,10 @@
-"""Sources/sinks: schema-pinned scan, pruned scan, partitioned sink."""
+"""Sources/sinks: the partitioned extraction sink, WARC scan, robots and
+sitemap parsing, crawl scheduling."""
 
 import pyarrow.parquet as pq
 import pytest
 
 from sbb_ocr_postcorrection_spark.datagen import generate_pages, pages_to_arrow
-from sbb_ocr_postcorrection_spark.sources import pages_io
 
 
 @pytest.fixture(scope="module")
@@ -14,28 +14,13 @@ def pages_path(tmp_path_factory):
     return p
 
 
-def test_read_pages_schema(spark, pages_path):
-    df = pages_io.read_pages(spark, pages_path)
-    assert [f.name for f in df.schema.fields] == ["url", "warc_ts", "html", "text", "lang"]
-    assert df.count() == 60
-
-
-def test_pruned_scan_drops_html(spark, pages_path):
-    df = pages_io.read_pages_pruned(spark, pages_path, need_html=False, lang="de")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # html binary must not appear in the parquet ReadSchema
-    assert "html" not in plan.split("ReadSchema")[-1]
-    assert "EqualTo(lang,de)" in plan or "lang" in plan.split("PushedFilters")[-1]
-    assert set(df.columns) == {"url", "warc_ts", "lang", "text"}
-
-
 @pytest.fixture(scope="module")
 def extractions_path(spark, pages_path, tmp_path_factory):
     """The (dt, bkt)-partitioned extraction table the job writes."""
     from sbb_ocr_postcorrection_spark.pipeline import run_extraction_job
 
     out = str(tmp_path_factory.mktemp("job") / "out")
-    run_extraction_job(spark, pages_io.read_pages(spark, pages_path), out)
+    run_extraction_job(spark, spark.read.parquet(pages_path), out)
     return f"{out}/extractions"
 
 
@@ -51,32 +36,6 @@ def test_partition_pruning_on_layout_key(spark, extractions_path):
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(dt" in plan
     assert q.count() > 0
-
-
-def test_bucketed_join_has_no_exchange(spark, pages_path):
-    """Two tables bucketed on url join WITHOUT a shuffle on either side —
-    the co-located join strategy for extraction↔enrichment joins at scale."""
-    from sbb_ocr_postcorrection_spark.kernels_spark import extract_pages
-
-    pages = pages_io.read_pages(spark, pages_path)
-    extracted = extract_pages(pages).select("url", "chars_out", "n_flagged")
-    meta = pages.select("url", "lang")
-    pages_io.write_bucketed(extracted, "t_extr_b", n_buckets=4)
-    pages_io.write_bucketed(meta, "t_meta_b", n_buckets=4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the non-broadcast path: at real scale neither side fits in
-        # a broadcast, which is exactly when bucketing pays off
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_extr_b").join(spark.table("t_meta_b"), "url")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == pages.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_extr_b")
-        spark.sql("DROP TABLE IF EXISTS t_meta_b")
 
 
 def test_partitioned_sink_roundtrip(spark, extractions_path):

@@ -1,53 +1,9 @@
-"""Ports of the reference's only unit tests (inline asserts at
-preprocessing/cli_preproc.py:72-85) plus property tests (FIXTURES.md §5)."""
+"""Edit distance, CER and grapheme clusters: unit and property tests
+(FIXTURES.md §5)."""
 
-import pytest
 from hypothesis import given, strategies as st
 
 from sbb_ocr_postcorrection_spark import textkit as tk
-
-
-def test_split_iter_verbatim():
-    # cli_preproc.py:72
-    assert tk.split_iter("This is a test.", " ") == ["This", "is", "a", "test."]
-
-
-def test_split_into_groups_verbatim():
-    # cli_preproc.py:73-78
-    s = ("This is test with a longer text as we need to test splitting a "
-         "longer text. I hope it works!")
-    assert tk.split_into_groups(s, max_len=40) == [
-        ["This", "is", "test", "with", "a", "longer", "text", "as", "we"],
-        ["need", "to", "test", "splitting", "a", "longer", "text.", "I"],
-        ["hope", "it", "works!"],
-    ]
-
-
-def test_split_with_max_len_verbatim():
-    # cli_preproc.py:79-85
-    s = ("Lorem ipsum dolor sit amet, consectetur adipiscing elit, sed do "
-         "eiusmod tempor incididunt ut labore et dolore magna aliqua.")
-    assert tk.split_with_max_len(s, sep=" ", max_len=32) == [
-        "Lorem ipsum dolor sit amet,",
-        "consectetur adipiscing elit, sed",
-        "do eiusmod tempor incididunt ut",
-        "labore et dolore magna aliqua.",
-    ]
-
-
-def test_split_raises_on_overlong_token():
-    with pytest.raises(ValueError):
-        tk.split_with_max_len("x" * 50, max_len=40)
-
-
-@given(st.lists(st.text(alphabet="abcdef ghij", min_size=1, max_size=8)
-                .map(lambda t: t.replace(" ", "x")), min_size=1, max_size=30))
-def test_reassemble_inverse(words):
-    # property: reassemble(split(line)) == line (cli_correct.py:34-59 inverse)
-    line = " ".join(words)
-    parts = tk.split_with_max_len(line, max_len=40)
-    assert tk.reassemble(parts) == line
-    assert all(len(p) <= 40 for p in parts)
 
 
 def test_levenshtein_basic():
@@ -68,26 +24,6 @@ def test_levenshtein_symmetric_triangle(a, b):
 def test_cer():
     assert tk.cer("abcd", "abcf") == 0.25
     assert tk.cer("", "") == 0.0
-
-
-def test_sliding_windows():
-    # helpers.py:92-134 semantics: short seq yields itself once
-    assert list(tk.sliding_windows(["a", "b"], 4)) == [["a", "b"]]
-    assert list(tk.sliding_windows(list("abcde"), 4)) == [
-        ["a", "b", "c", "d"], ["b", "c", "d", "e"]]
-
-
-def test_segment_runs():
-    # helpers.py:137-223 gaps-and-islands
-    assert tk.segment_runs([1, 2, 3, 7, 8, 12]) == [[1, 2, 3], [7, 8], [12]]
-    assert tk.segment_runs([]) == []
-
-
-def test_char_labels():
-    # cli_preproc.py:405-412: 1 ok, 2 error, 0 pad
-    assert tk.char_labels("abc", "abd") == [1, 1, 2]
-    assert tk.char_labels("ab", "abcd") == [1, 1, 2, 2]
-    assert tk.char_labels("ab", "ab", pad_to=4) == [1, 1, 0, 0]
 
 
 def test_nfc_idempotent():
@@ -157,17 +93,6 @@ def test_grapheme_clusters_lossless():
         assert all(tk.grapheme_clusters(s))
 
     check()
-
-
-def test_char_labels_clusters():
-    # plain ASCII: identical to code-point labels
-    assert tk.char_labels_clusters("abc", "abd") == tk.char_labels("abc", "abd")
-    assert tk.char_labels_clusters("ab", "ab", pad_to=4) == [1, 1, 0, 0]
-    # a multi-mark cluster error is ONE error label, and later positions
-    # stay aligned (code-point labels would shift them all)
-    ocr, gt = "x̃̄yz", "xyz"
-    assert tk.char_labels_clusters(ocr, gt) == [2, 1, 1]
-    assert len(tk.char_labels(ocr, gt)) == 5  # code-point view, shifted
 
 
 def test_cer_clusters_kernel_query(spark):

@@ -8,7 +8,7 @@ import os
 
 from sbb_ocr_postcorrection_spark.sources.warc import (
     parse_warc_gz_records,
-    write_warc_archive,
+    write_warc_archive_indexed,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -35,8 +35,8 @@ def test_warc_write_roundtrips_through_scanner(spark, tmp_path):
         for r in pages.collect()
     }
     out = str(tmp_path / "warc_out")
-    manifest = write_warc_archive(pages, out).collect()
-    assert sum(m["n_records"] for m in manifest) == len(want)
+    index = write_warc_archive_indexed(pages, out).collect()
+    assert len(index) == len(want)
     recs = _read_all(out)
     got = {r["url"]: r["payload"] for r in recs}
     assert {u: p for u, p in got.items()} == {
@@ -51,8 +51,8 @@ def test_warc_write_roundtrips_through_scanner(spark, tmp_path):
 def test_warc_write_is_byte_deterministic(spark, tmp_path):
     pages = _pages(spark, n=60)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    write_warc_archive(pages, a).collect()
-    write_warc_archive(pages, b).collect()
+    write_warc_archive_indexed(pages, a).collect()
+    write_warc_archive_indexed(pages, b).collect()
     fa = {os.path.basename(p): p for p in glob.glob(os.path.join(a, "*"))}
     fb = {os.path.basename(p): p for p in glob.glob(os.path.join(b, "*"))}
     assert fa.keys() == fb.keys() and fa
@@ -69,9 +69,7 @@ def test_warc_write_null_ts_gets_sentinel(spark, tmp_path):
         "warc_ts", F.lit(None).cast("timestamp")
     )
     out = str(tmp_path / "nullts")
-    n = sum(
-        m["n_records"] for m in write_warc_archive(pages, out).collect()
-    )
+    n = len(write_warc_archive_indexed(pages, out).collect())
     recs = _read_all(out)
     assert n == len(recs) == 10, "null-ts rows must not be dropped"
     assert {r["warc_date"] for r in recs} == {"1970-01-01T00:00:00Z"}
@@ -141,22 +139,3 @@ def test_cdx_point_read_never_scans(spark, tmp_path):
     assert rec_after["url"] == rec_before["url"]
 
 
-def test_indexed_writer_is_byte_identical_to_plain(spark, tmp_path):
-    import hashlib
-    import os
-
-    from sbb_ocr_postcorrection_spark.sources.warc import (
-        write_warc_archive_indexed,
-    )
-
-    pages = _pages(spark, n=60)
-    a, b = str(tmp_path / "plain"), str(tmp_path / "indexed")
-    write_warc_archive(pages, a).collect()
-    write_warc_archive_indexed(pages, b).collect()
-    fa = {os.path.basename(p) for p in glob.glob(os.path.join(a, "*.warc.gz"))}
-    fb = {os.path.basename(p) for p in glob.glob(os.path.join(b, "*.warc.gz"))}
-    assert fa == fb and fa
-    for name in fa:
-        ha = hashlib.md5(open(os.path.join(a, name), "rb").read()).hexdigest()
-        hb = hashlib.md5(open(os.path.join(b, name), "rb").read()).hexdigest()
-        assert ha == hb

@@ -634,36 +634,10 @@ def test_url_blocklist_fixture_nonvacuous(spark):
         assert r["url_pass"] == int(not (r["blocked_host"] or r["blocked_path"]))
 
 
-def test_blocklist_expr_form_equals_join_form(spark):
-    """blocklist_cols (the stateless pure-expression form the stream gate
-    uses) and url_blocklist_gate (the broadcast-dim equality-join form)
-    must produce identical verdicts across the whole synth fixture — one
-    law, two physical shapes."""
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", U.synth_url_expr(F.col("doc_id")).alias("url")
-    )
-    c = U.blocklist_cols(F.col("url"))
-    expr_form = {
-        r["doc_id"]: (r["host"], r["blocked_host"], r["blocked_path"], r["url_pass"])
-        for r in d.select(
-            "doc_id", c["host"].alias("host"),
-            c["blocked_host"].alias("blocked_host"),
-            c["blocked_path"].alias("blocked_path"),
-            c["url_pass"].alias("url_pass"),
-        ).collect()
-    }
-    join_form = {
-        r["doc_id"]: (r["host"], r["blocked_host"], r["blocked_path"], r["url_pass"])
-        for r in U.url_blocklist_gate(spark, SF_DIR).collect()
-    }
-    assert expr_form == join_form
-
-
 def test_blocklist_normalizes_adversarial_host_spellings(spark):
     """Review finding (policy bypass): port, userinfo, and trailing-dot
     spellings of a blocked host must still match — the policy host strips
-    what an adversary controls. Both the expr form and the join form share
-    _host_path_suffixes, so one set of cases pins both."""
+    what an adversary controls (_host_path_suffixes)."""
     docs = spark.createDataFrame(
         [
             (0, "https://bad.test:8080/x"),
@@ -674,23 +648,13 @@ def test_blocklist_normalizes_adversarial_host_spellings(spark):
         ],
         "doc_id long, url string",
     )
-    for form in ("join", "expr"):
-        if form == "join":
-            got = {
-                r["doc_id"]: r["blocked_host"]
-                for r in U.url_blocklist_gate(
-                    spark, SF_DIR, blocked_hosts=["bad.test"], docs=docs
-                ).collect()
-            }
-        else:
-            c = U.blocklist_cols(F.col("url"), hosts=["bad.test"])
-            got = {
-                r["doc_id"]: r["b"]
-                for r in docs.select(
-                    "doc_id", c["blocked_host"].alias("b")
-                ).collect()
-            }
-        assert got == {0: 1, 1: 1, 2: 1, 3: 1, 4: 0}, form
+    got = {
+        r["doc_id"]: r["blocked_host"]
+        for r in U.url_blocklist_gate(
+            spark, SF_DIR, blocked_hosts=["bad.test"], docs=docs
+        ).collect()
+    }
+    assert got == {0: 1, 1: 1, 2: 1, 3: 1, 4: 0}
 
 
 def test_passage_dedup_degenerate_docs_survive(spark):
