@@ -29,7 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: synthesize pages from the
     documents table, run the detect→correct extraction kernels, return the
     per-url result (url, content digest, metrics)."""
-    return Q.extract_flagship(spark, "/root/testdata/sf0.001")
+    return Q.queries()["extract_pipeline"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -33,13 +33,15 @@ Layout:
   snapshots      snapshot log (visible partitions + their sums), rollback,
                  writer fence
   _daemon        the Python worker daemon build_session configures
-  operators/     relational operator library (SURVEY.md §2 mappings)
+  operators/     relational operator library (SURVEY.md §2 mappings);
+                 relational.docs_input is every operator's documents input
   sources/       WARC scan and sink, robots.txt, sitemaps
-  functions/     shared column-expression builders and the wordpiece
-                 vocabulary
+  functions/     shared column-expression builders (exprs.md5_60, the one
+                 keyed hash, among them) and the wordpiece vocabulary
   streaming/     extract_dedup_stream: the batch kernel on a stream, then
                  stateful first-seen dedup
   queries        the driver-facing queries()/oracle_sql() registry
+                 (queries._pin pins the session for every entry)
 """
 
 __version__ = "0.1.0"

@@ -22,6 +22,17 @@ def tokens_expr(col) -> Column:
     return F.filter(F.split(F.lower(c), " "), lambda x: x != "")
 
 
+def md5_60(col) -> Column:
+    """60-bit non-negative integer hash: first 15 hex chars of md5.
+
+    The repo's one keyed hash (dedup/LSH, sampling coins, feature
+    buckets) — chosen because DuckDB can reproduce it bit-for-bit
+    (xxhash64 has no DuckDB equivalent; queries._hex2int is the SQL
+    side), which turns every approximate-dedup query into a hash-checkable
+    oracle row. 15 hex chars = 60 bits < 2^63: no ANSI long overflow."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def cer_band_expr(col) -> Column:
     """The 7-band CER bucketing when-ladder (P8)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..align import align_page
 from ..extract import extract_blocks
+from ..functions.exprs import md5_60
 
 # the reference's canonical alignments schema (preprocessing/database.py:
 # 17-28), plus lang carried for the P5 filter
@@ -131,14 +132,12 @@ def stratified_split(alignments: DataFrame, train: int = 8, test: int = 1) -> Da
     and shuffle-free instead of the reference's seed-49 list shuffling.
     Returns per (bucket, split) counts for verification.
 
-    The split coin is the repo's md5-60 hash (operators/dedup.md5_60) of
+    The split coin is the repo's md5-60 hash (functions/exprs.md5_60) of
     'doc_id|line_id', NOT xxhash64: DuckDB reproduces md5 bit-for-bit, so
     the whole split table is a hash-checked driver row instead of a
     rows-only one (the r2-verdict invariant-projection ask, taken all the
     way to full-relation parity)."""
     from ..functions.exprs import cer_band_expr
-    from .dedup import md5_60
-
     bucket = cer_band_expr("cer").alias("cer_bucket")
     h = F.pmod(
         md5_60(F.concat_ws("|", F.col("doc_id"), F.col("line_id"))), F.lit(10)

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .relational import load
+from .relational import docs_input
 
 # (error_chars, true_chars): classic OCR confusions, error-side first
 ANAGRAM_CONFUSIONS = (
@@ -64,13 +64,7 @@ def _av(s: str) -> int:
 
 
 def _vocab(spark, sf_dir, docs) -> DataFrame:
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     aug = F.concat(
         F.lower(F.coalesce(F.col("text"), F.lit(""))),
         F.when(

@@ -45,7 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .relational import load, persist_slot
+from .relational import docs_input, load, persist_slot
 from .textstats import _BPE_PATTERN
 
 SEP = "\x1f"
@@ -75,13 +75,7 @@ def piece_freq(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """(piece, freq): the BPE training relation — one explode + one
     two-phase count over the corpus, the only corpus-sized job in
     training."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     piece = F.explode(
         F.regexp_extract_all(_clean_text(), F.lit(_BPE_PATTERN), 0)
     ).alias("piece")
@@ -228,13 +222,7 @@ def bpe_encode(
             .alias("vocab_id"),
         )
     )
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     pieces_arr = F.regexp_extract_all(_clean_text(), F.lit(_BPE_PATTERN), 0)
     ex = d.select("doc_id", F.posexplode(pieces_arr).alias("piece_pos", "piece"))
     w = wrapped_symbols(F.col("piece"))
@@ -279,13 +267,7 @@ def bpe_tokenize(
     explode_outer row keeps it at (0, 0) rather than dropping it."""
     if merges is None:
         merges = train_merges(spark, sf_dir, num_merges, docs=docs)
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     pieces_arr = F.regexp_extract_all(_clean_text(), F.lit(_BPE_PATTERN), 0)
     ex = d.select("doc_id", F.explode_outer(pieces_arr).alias("piece"))
     w = wrapped_symbols(F.col("piece"))
@@ -404,13 +386,7 @@ def bpe_munch_tokenize(
         lst.sort(key=lambda si: (-len(si[0]), si[0]))
     bc = spark.sparkContext.broadcast(by_first)
 
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     pieces_arr = F.regexp_extract_all(_clean_text(), F.lit(_BPE_PATTERN), 0)
     ex = d.select("doc_id", F.posexplode(pieces_arr).alias("piece_pos", "piece"))
 

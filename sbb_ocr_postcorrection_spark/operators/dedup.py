@@ -23,7 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .relational import load, persist_slot
+from ..functions.exprs import md5_60, tokens_expr as _tokens
+from .relational import docs_input, load, persist_slot
 
 # MinHash parameters: 16 permutations, 4 bands × 4 rows. The modulus is
 # Mersenne-31 so a*h+b stays far below 2^63 (Spark 4 runs ANSI mode: long
@@ -33,18 +34,6 @@ _BANDS = 4
 _ROWS_PER_BAND = 4
 _MERSENNE = (1 << 31) - 1
 _SIMHASH_BITS = 60
-
-
-def md5_60(col):
-    """60-bit non-negative integer hash: first 15 hex chars of md5.
-
-    The one keyed hash used across dedup/LSH — chosen because DuckDB can
-    reproduce it bit-for-bit (xxhash64 has no DuckDB equivalent), which
-    turns every approximate-dedup query into a hash-checkable oracle row."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-from ..functions.exprs import tokens_expr as _tokens  # noqa: E402
 
 
 def _shingles(tokens_col, n: int = 3):
@@ -147,10 +136,7 @@ def incremental_dedup(spark, sf_dir, history=None, batch=None) -> DataFrame:
     # cross-deduplicated; history nulls are dropped (nothing can match).
     batch = batch.select(
         "doc_id",
-        F.coalesce(
-            F.md5(F.col("text")),
-            F.concat(F.lit("null:"), F.col("doc_id").cast("string")),
-        ).alias("content_hash"),
+        content_digest(F.col("text"), F.col("doc_id")).alias("content_hash"),
     )
     hist_digests = (
         history.select(F.md5(F.col("text")).alias("content_hash"))
@@ -249,56 +235,6 @@ def bloom_positions(digest, j: int, m_bits: int):
     ).cast("int")
 
 
-def build_bloom_bitmap(history, m_bits: int = BLOOM_M_BITS,
-                       k_hashes: int = BLOOM_K_HASHES):
-    """m-bit boolean numpy bitmap of the history's content digests: every
-    digest's k md5-keyed positions (bloom_positions, JVM-side) set. The
-    collect is bounded by m (DISTINCT positions), never by |history| —
-    the whole point of the summary."""
-    import numpy as np
-
-    hist_digest = (
-        history.select(F.md5(F.col("text")).alias("h"))
-        .filter(F.col("h").isNotNull())
-        .distinct()
-    )
-    pos_rows = (
-        hist_digest.select(
-            F.explode(
-                F.array(
-                    *[bloom_positions(F.col("h"), j, m_bits) for j in range(k_hashes)]
-                )
-            ).alias("pos")
-        )
-        .distinct()
-        .collect()
-    )
-    bitmap = np.zeros(m_bits, dtype=bool)
-    if pos_rows:
-        bitmap[[r["pos"] for r in pos_rows]] = True
-    return bitmap
-
-
-def bloom_probe_cols(digest_col, m_bits: int = BLOOM_M_BITS,
-                     k_hashes: int = BLOOM_K_HASHES):
-    """The k bit-position plan columns for a probe-side digest."""
-    return [
-        bloom_positions(digest_col, j, m_bits).alias(f"_bp{j}")
-        for j in range(k_hashes)
-    ]
-
-
-def bloom_hits_np(bitmap, pos_series):
-    """Vectorized bitmap gather: AND of the bitmap at each position
-    column. One numpy op per hash function, no per-row Python."""
-    import numpy as np
-
-    hit = np.ones(len(pos_series[0]), dtype=bool)
-    for p in pos_series:
-        hit &= bitmap[p.to_numpy()]
-    return hit
-
-
 def content_digest(text_col, id_col):
     """Shared probe-key convention: md5(text), with the per-doc sentinel
     for NULL text (carries its own identity, not the shared NULL key)."""
@@ -342,13 +278,33 @@ def bloom_gate(
     iff all k positions appear in the history position set — semantically
     identical to the bitmap, so the driver gate certifies the kernel's
     false positives bit-for-bit, not just the true hits."""
+    import numpy as np
     import pandas as pd
 
     fixture = history is None and batch is None
     history, batch = _history_batch_or_synth(spark, sf_dir, history, batch)
-    bc = spark.sparkContext.broadcast(
-        build_bloom_bitmap(history, m_bits, k_hashes)
+    # the history's distinct digests → their k positions each; the collect
+    # is bounded by m (DISTINCT positions), never by |history|
+    hist_digest = (
+        history.select(F.md5(F.col("text")).alias("h"))
+        .filter(F.col("h").isNotNull())
+        .distinct()
     )
+    pos_rows = (
+        hist_digest.select(
+            F.explode(
+                F.array(
+                    *[bloom_positions(F.col("h"), j, m_bits) for j in range(k_hashes)]
+                )
+            ).alias("pos")
+        )
+        .distinct()
+        .collect()
+    )
+    bitmap = np.zeros(m_bits, dtype=bool)
+    if pos_rows:
+        bitmap[[r["pos"] for r in pos_rows]] = True
+    bc = spark.sparkContext.broadcast(bitmap)
 
     probe = batch.select(
         "doc_id",
@@ -357,7 +313,10 @@ def bloom_gate(
     probe = probe.select(
         "doc_id",
         "content_hash",
-        *bloom_probe_cols(F.col("content_hash"), m_bits, k_hashes),
+        *[
+            bloom_positions(F.col("content_hash"), j, m_bits).alias(f"_bp{j}")
+            for j in range(k_hashes)
+        ],
     )
     if fixture:
         # the toy parquet is one split and the remap join broadcasts, so
@@ -371,7 +330,10 @@ def bloom_gate(
         for pdf in batches:
             if not len(pdf):
                 continue
-            hit = bloom_hits_np(bm, [pdf[f"_bp{j}"] for j in range(k_hashes)])
+            # vectorized bitmap gather: one numpy op per hash function
+            hit = np.ones(len(pdf), dtype=bool)
+            for j in range(k_hashes):
+                hit &= bm[pdf[f"_bp{j}"].to_numpy()]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -403,9 +365,7 @@ def shingle_table(spark, sf_dir) -> DataFrame:
       tokenizer with it, into the scan below the round-robin repartition,
       so every document would be shingled twice, once on a single
       partition. Explode sh_arr only off a persisted relation."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     toks = d.select("doc_id", "lang", _tokens(F.col("text")).alias("toks"))
     return toks.select(
         "doc_id", "lang", F.explode(_shingles(F.col("toks"))).alias("shingle")
@@ -505,22 +465,19 @@ def jaccard_pairs(
     )
 
 
-def _shingle_arrays(spark, sf_dir, d=None) -> DataFrame:
+def _shingle_arrays(spark, sf_dir, docs=None) -> DataFrame:
     """(doc_id, lang, sh_arr): each document's distinct shingles as a
     per-doc ARRAY — exploding sh_arr reproduces shingle_table's rows
     exactly; keeping them doc-level lets consumers carry per-doc facts
     (set size, hashes) as row columns instead of re-aggregating."""
-    if d is None:
-        d = load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
+    d = docs_input(spark, sf_dir, docs)
     toks = d.select("doc_id", "lang", _tokens(F.col("text")).alias("toks"))
     return toks.select(
         "doc_id", "lang", _shingles(F.col("toks")).alias("sh_arr")
     )
 
 
-def minhash_doc_arrays(spark, sf_dir, d=None) -> DataFrame:
+def minhash_doc_arrays(spark, sf_dir, docs=None) -> DataFrame:
     """(doc_id, lang, sh_arr, hs): _shingle_arrays plus the
     Mersenne-reduced md5_60 hash array — the r7 zero-shuffle input of
     the MinHash family. The exploded shingle_table forces a corpus-sized
@@ -529,7 +486,7 @@ def minhash_doc_arrays(spark, sf_dir, d=None) -> DataFrame:
     definition) inside the scan stage. hs is materialized as its own
     projection so the 16 permutation minima reuse ONE md5 pass
     (CollapseProject keeps non-cheap expressions single-evaluated)."""
-    base = _shingle_arrays(spark, sf_dir, d=d)
+    base = _shingle_arrays(spark, sf_dir, docs=docs)
     return base.select(
         "doc_id",
         "lang",
@@ -897,9 +854,7 @@ def simhash_fingerprints(spark, sf_dir) -> DataFrame:
     map-side, so the shuffle moves 60 longs per doc, not the tokens). Bit i
     set iff its vote is positive; the fingerprint stays non-negative, so no
     sign gymnastics and DuckDB integer division reproduces every bucket."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     tok = d.select(
         "doc_id", F.explode(_tokens(F.col("text"))).alias("token")
     ).withColumn("h", md5_60("token"))
@@ -1076,13 +1031,11 @@ def containment_pairs(
     boilerplate shingles from the JOIN (C(df,2) hot-key blowup carries no
     containment signal) while per-doc sizes keep counting everything, so
     capped containment is a lower bound. No all-pairs, no windows."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     # explode off the persisted array relation (see shingle_table on why
     # never off a live projection)
     sh = persist_slot(
-        "containment_shingles", _shingle_arrays(spark, sf_dir, d=_quote_augmented(d))
+        "containment_shingles", _shingle_arrays(spark, sf_dir, docs=_quote_augmented(d))
     ).select("doc_id", "lang", F.explode("sh_arr").alias("shingle"))
     n_common, n1, n2 = F.col("n_common"), F.col("n_sh1"), F.col("n_sh2")
     scored = _shingle_overlap(sh, max_shingle_df).select(
@@ -1207,11 +1160,9 @@ def lsh_recall_eval(spark, sf_dir, max_shingle_df: int | None = 10_000) -> DataF
     (shingle-equality blocking, banded buckets — never all-pairs); the
     comparison is one (id1, id2) equality left join + a 4-row rollup."""
     d = _partial_variants(
-        load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
+        docs_input(spark, sf_dir)
     )
-    base = persist_slot("lsh_recall_base", minhash_doc_arrays(spark, sf_dir, d=d))
+    base = persist_slot("lsh_recall_base", minhash_doc_arrays(spark, sf_dir, docs=d))
     sh = base.select("doc_id", "lang", F.explode("sh_arr").alias("shingle"))
     truth = _shingle_overlap(sh, max_shingle_df).select(
         "id1",

@@ -25,8 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.exprs import tokens_expr as _tokens
-from .relational import load
+from ..functions.exprs import md5_60, tokens_expr as _tokens
+from .relational import docs_input
 
 INDEX_POSTING_CAP = 20
 SEARCH_TERMS = 2
@@ -35,13 +35,7 @@ SEARCH_K = 20
 
 def token_postings(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """(doc_id, token, tf): the postings relation both surfaces share."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     return (
         d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
         .groupBy("doc_id", "token")
@@ -132,13 +126,7 @@ def keyword_search_bm25(
     their postings; doc-length join is one equality shuffle on doc_id
     (doc-dimension-sized, NOT broadcast); corpus constants (N, TT) ride
     in as a broadcast 1-row cross join; top-k is TakeOrderedAndProject."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     tf = token_postings(spark, sf_dir, docs=d)
     stats = tf.groupBy("token").agg(
         F.sum("tf").alias("cf"), F.count(F.lit(1)).cast("long").alias("df")
@@ -244,13 +232,7 @@ def phrase_search(
     frequent bigram (count desc, bigram asc — one collect of one row,
     the BPE-loop discipline); real callers pass their benchmark
     string's tokens."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     toks = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
     if phrase is None:
         bigram_arr = F.when(
@@ -320,13 +302,7 @@ def collocations(
     vocabulary grows with the corpus — sort-merge + AQE handles it);
     top-k is TakeOrderedAndProject, never a global sort.
     """
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     toks = d.select(_tokens(F.col("text")).alias("t"))
     pairs = (
         toks.where(F.size("t") >= 2)
@@ -388,15 +364,7 @@ def cms_token_counts(spark, sf_dir, docs=None) -> DataFrame:
     whole point — with map-side combine absorbing the token stream; the
     probe lookup joins the DEPTH-row-per-token probe relation against
     the tiny counter relation (broadcast)."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
-    from .dedup import md5_60
-
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select(F.explode(_tokens(F.col("text"))).alias("token"))
     rows = tok.select(
         "token",
@@ -462,15 +430,7 @@ def hll_distinct_tokens(spark, sf_dir, docs=None) -> DataFrame:
     Scale shape: ONE (source, bucket) max-aggregation — 64 result rows
     per group however large the corpus, map-side combinable (max is the
     HLL merge, which is why HLL shards trivially across executors)."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
-    from .dedup import md5_60
-
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select("source", F.explode(_tokens(F.col("text"))).alias("token"))
     h = md5_60(F.col("token"))
     hb = tok.select("source", h.alias("h")).select(
@@ -536,17 +496,10 @@ def doc_keyterms(spark, sf_dir, k: int = KEYTERMS_K, docs=None) -> DataFrame:
     is a 1-row broadcast."""
     from pyspark.sql import Window
 
-    from .relational import load
     from .selection import with_ilog2
     from ..functions.exprs import tokens_expr
 
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select("doc_id", F.explode(tokens_expr(F.col("text"))).alias("token"))
     ct = tok.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).cast("long").alias("c")

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from .relational import load
+from .relational import docs_input
 
 LID_K = 40        # profile length (top-K trigrams per class / per doc)
 LID_PREFIX = 240  # chars of (augmented) text considered — langid truncation
@@ -133,19 +133,9 @@ def doc_profiles(d: DataFrame) -> DataFrame:
     )
 
 
-def _docs(spark: SparkSession, sf_dir: str, docs):
-    return (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
-
-
 def lang_id_train(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """Query surface: the learned class-profile table."""
-    return class_profiles(_docs(spark, sf_dir, docs))
+    return class_profiles(docs_input(spark, sf_dir, docs))
 
 
 def lang_id_learned(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
@@ -156,7 +146,7 @@ def lang_id_learned(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     c's profile else LID_K (the out-of-place max penalty). Ties broken by
     lang asc (pinned). The class profiles are dimension-sized → broadcast
     join; the per-(doc, lang) sum is one two-phase aggregation."""
-    d = _docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     profiles = class_profiles(d)
     held = d.where(F.col("doc_id") % LID_FOLD == 0)
     dp = doc_profiles(held)
@@ -242,7 +232,7 @@ def _nb_model(spark: SparkSession, sf_dir: str, docs=None):
 
     from .relational import persist_slot
 
-    d = _docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     train = d.where(F.col("doc_id") % LID_FOLD != 0)
     # persisted: the (langs × bounded-trigram-vocab) dimension feeds nl,
     # the vocab count, the per-class weights AND the scorer's three

@@ -20,7 +20,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from .relational import load, persist_slot
+from .relational import docs_input, load, persist_slot
 
 MAX_LEN = 40
 
@@ -66,9 +66,7 @@ def split_lines(spark, sf_dir) -> DataFrame:
     text_norm carries the kernel's own whitespace normalization so the
     roundtrip check compares against exactly what was split (Python
     str.split and Java \\s+ disagree on unicode whitespace)."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     parts = d.select("doc_id", "text").mapInPandas(
         _split_kernel, schema="doc_id long, text_norm string, parts array<string>"
     )
@@ -331,15 +329,7 @@ def passage_windows(spark, sf_dir, docs=None) -> DataFrame:
     Scale shape: one bounded explode (≤ n/STRIDE + 1 rows per doc) in a
     narrow stage — chunking shuffles nothing; downstream embedding jobs
     consume (doc_id, chunk_id) as the natural bucket key."""
-    from .relational import load as _load
-
-    d = (
-        docs
-        if docs is not None
-        else _load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     from ..functions.exprs import tokens_expr
 
     base = d.select(

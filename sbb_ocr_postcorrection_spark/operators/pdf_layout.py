@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..pdftext import extract_runs, make_pdf, reading_order
-from .relational import load
+from .relational import docs_input
 
 LAYOUT_SCHEMA = "url string, page int, pos int, x double, y double, line string"
 
@@ -37,9 +37,7 @@ def pdfs_from_documents(spark, sf_dir, words_per_line: int = 8):
     """Synthesize a (url, pdf) table from documents.text — deterministic
     line-wrapping, two pages per doc — inside an Arrow kernel (the pdf
     writer is Python)."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
 
     def kernel(batches):
         for pdf_batch in batches:

@@ -17,6 +17,20 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def docs_input(
+    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+) -> DataFrame:
+    """The per-document operator input: an injected (shared/cached)
+    relation when composing (operators/curation.py), else a fresh documents
+    scan spread round-robin over the cores — the toy parquet is one split,
+    which would otherwise run the whole operator as a single task."""
+    if docs is not None:
+        return docs
+    return load(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+
+
 _PERSIST_SLOTS: dict[str, DataFrame] = {}
 
 
@@ -238,9 +252,7 @@ def topk_vocab(spark, sf_dir) -> DataFrame:
     (wordpiece.py:23-51, encoding.py:140-145): explode tokens → two-phase
     hash count → TakeOrderedAndProject. Deterministic ties: (count desc,
     word asc)."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     words = F.explode(
         F.filter(F.split(F.lower(F.col("text")), " "), lambda x: x != "")
     ).alias("word")
@@ -257,9 +269,7 @@ def bigram_confusion_topk(spark, sf_dir) -> DataFrame:
     """A6: confusion-pair counting (run_dataset_statistics.py:116-135) —
     here word bigrams, most_common(50). The explode happens JVM-side via
     transform(sequence(...)) — no Python in the hot path."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda x: x != "")
     d = d.select(toks.alias("toks"))
     bigrams = F.transform(

@@ -45,7 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .textstats import _base_docs, _tokens
+from ..functions.exprs import md5_60, tokens_expr as _tokens
+from .relational import docs_input
 
 # hashed bigram feature dim (the paper uses 10k buckets at web scale;
 # 1024 keeps every bucket populated at the test SFs — a constant, not a
@@ -58,12 +59,6 @@ DSIR_TARGET_LANG = "en"  # the target domain: curated English text
 _U_BITS = 40           # uniform-draw width for the race
 
 HEAPS_CHECKPOINTS = 16  # powers of two: 1, 2, 4, ... 2^15 docs
-
-
-def _md5long(col):
-    """First 15 hex chars of md5 → 60-bit nonnegative int64 (the repo's
-    one hashing convention, mirrored by queries._hex2int)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def with_ilog2(df: DataFrame, x: str, out: str) -> DataFrame:
@@ -112,7 +107,7 @@ def _bigram_buckets(d: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             "is_target",
-            (_md5long(F.col("bg")) % DSIR_BUCKETS).alias("bucket"),
+            (md5_60(F.col("bg")) % DSIR_BUCKETS).alias("bucket"),
         )
     )
 
@@ -164,7 +159,7 @@ def dsir_weights(spark, sf_dir, docs=None) -> DataFrame:
     at 100 TB it is a single map-side-combinable pass over the corpus."""
     from .relational import persist_slot
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     bg = persist_slot("dsir_bigrams", _bigram_buckets(d))
     return _weights_from_counts(spark, _bucket_counts(bg))
 
@@ -178,7 +173,7 @@ def dsir_score(spark, sf_dir, docs=None) -> DataFrame:
     bucket counts shuffle once on doc_id."""
     from .relational import persist_slot
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     bg = persist_slot("dsir_bigrams", _bigram_buckets(d))
     w = _weights_from_counts(spark, _bucket_counts(bg)).select("bucket", "w")
     per_b = bg.groupBy("doc_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
@@ -219,7 +214,7 @@ def dsir_sample(spark, sf_dir, k: int = DSIR_K, docs=None) -> DataFrame:
     k rows, no global sort at any scale."""
     sc = dsir_score(spark, sf_dir, docs=docs).where(F.col("is_target") == 0)
     u = (
-        _md5long(F.concat(F.lit("dsir|"), F.col("doc_id").cast("string")))
+        md5_60(F.concat(F.lit("dsir|"), F.col("doc_id").cast("string")))
         % (1 << _U_BITS)
         + 1
     )
@@ -266,7 +261,7 @@ def ccnet_buckets(spark, sf_dir, docs=None) -> DataFrame:
     from pyspark.sql import Window
     from .textstats import lm_bigram_score
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     lm = lm_bigram_score(spark, sf_dir, docs=d).select("doc_id", "sum_r", "n_bigrams")
     scored = (
         d.select("doc_id", "lang")
@@ -320,7 +315,7 @@ def mix_temperature(spark, sf_dir, docs=None) -> DataFrame:
     corpus_sample md5 convention: keep iff md5(doc) % isqrt(n_s) == 0 —
     rate exactly 1/isqrt(n_s), expected kept per source ≈ n_s^alpha.
     The source dim (one row per source) broadcasts back; no windows."""
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     per_src = (
         d.groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("n_src"))
@@ -332,7 +327,7 @@ def mix_temperature(spark, sf_dir, docs=None) -> DataFrame:
             ),
         )
     )
-    coin = _md5long(F.concat(F.lit("mix|"), F.col("doc_id").cast("string")))
+    coin = md5_60(F.concat(F.lit("mix|"), F.col("doc_id").cast("string")))
     return (
         d.select("doc_id", "source")
         .join(F.broadcast(per_src), "source")
@@ -360,7 +355,7 @@ def vocab_growth(spark, sf_dir, docs=None) -> DataFrame:
     aggregation to the vocabulary dim); the 16 checkpoints are a
     broadcast literal dim fanned against the vocab dim and aggregated
     immediately — no per-checkpoint rescans of the corpus."""
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
     first = tok.groupBy("token").agg(F.min("doc_id").alias("first_doc"))
     per_doc = d.select(
@@ -428,7 +423,7 @@ def source_divergence(spark, sf_dir, docs=None) -> DataFrame:
     anything corpus-sized."""
     from .relational import persist_slot
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select(
         "source", F.explode(_tokens(F.col("text"))).alias("token")
     )
@@ -533,7 +528,7 @@ def dsir_weights_incremental(spark, sf_dir, docs=None) -> DataFrame:
     fold to keep the query self-contained — the merge path (union +
     one sum-aggregation over 2×DSIR_BUCKETS rows) is the part that
     matters and is identical either way."""
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     hist_bg = _bigram_buckets(d.where(F.col("doc_id") % 2 == 0))
     delta_bg = _bigram_buckets(d.where(F.col("doc_id") % 2 != 0))
 
@@ -589,8 +584,8 @@ def curriculum_plan(spark, sf_dir, docs=None) -> DataFrame:
             F.when(F.col("cumd") * CUR_DECILE >= F.col("n"), F.col("clf_score"))
         ).alias("t")
     )
-    coin = _md5long(F.concat(F.lit("cur|"), F.col("doc_id").cast("string")))
-    key_minor = _md5long(
+    coin = md5_60(F.concat(F.lit("cur|"), F.col("doc_id").cast("string")))
+    key_minor = md5_60(
         F.concat(F.lit("ck|"), F.col("doc_id").cast("string"))
     ) % (1 << CUR_KEY_BITS)
     return qc.crossJoin(F.broadcast(thr)).select(

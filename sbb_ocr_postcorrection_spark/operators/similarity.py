@@ -20,6 +20,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from ..functions.exprs import md5_60
 from .relational import load
 
 # deterministic pseudo-random hyperplanes: plane p, dim d → weight in {-1,+1}
@@ -148,9 +149,7 @@ def ivf_topk(
         e.select(
             "vec_id",
             "embedding",
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            .alias("_hkey"),
+            md5_60(F.col("vec_id").cast("string")).alias("_hkey"),
         )
         .orderBy("_hkey", "vec_id")  # vec_id breaks (never-seen) hkey ties
         .limit(4 * n_lists)
@@ -710,8 +709,6 @@ def passage_retrieval(spark, sf_dir, k: int = RAG_TOP_K) -> DataFrame:
     double division's 53-bit mantissa cannot carry a 60-bit hash)."""
     from ..functions.exprs import tokens_expr
     from ..operators.lines import passage_windows
-    from .dedup import md5_60
-
     assert RAG_DIM & (RAG_DIM - 1) == 0, "RAG_DIM must be a power of two"
     _dim_shift = RAG_DIM.bit_length() - 1
 

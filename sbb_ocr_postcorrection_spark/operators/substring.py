@@ -34,8 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions.exprs import tokens_expr as _tokens
-from .dedup import md5_60
+from ..functions.exprs import md5_60, tokens_expr as _tokens
 from .relational import load, persist_slot
 
 SUBSTR_L = 50      # minimum duplicate span length, in tokens

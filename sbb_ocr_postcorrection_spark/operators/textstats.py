@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .relational import load
+from .relational import docs_input, load
 from ..wordlists import ENGLISH_STOPWORDS, GERMAN_STOPWORDS
 
 # pin the stopword sets used by BOTH Spark and the SQL oracle
@@ -19,17 +19,7 @@ DE_STOPS = tuple(sorted(GERMAN_STOPWORDS))
 EN_STOPS = tuple(sorted(ENGLISH_STOPWORDS))
 
 
-from ..functions.exprs import cer_band_expr, tokens_expr as _tokens  # noqa: E402
-
-
-def _base_docs(spark, sf_dir, docs):
-    """The per-document stage input: an injected (shared/cached) relation
-    when composing (operators/curation.py), else a fresh parallelized scan."""
-    if docs is not None:
-        return docs
-    return load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+from ..functions.exprs import cer_band_expr, md5_60, tokens_expr as _tokens  # noqa: E402
 
 
 def lang_id(spark, sf_dir, conf_threshold: float = 0.05, docs=None) -> DataFrame:
@@ -43,7 +33,7 @@ def lang_id(spark, sf_dir, conf_threshold: float = 0.05, docs=None) -> DataFrame
     P5 filter bit a pipeline applies."""
     from ..functions.exprs import lang_cols
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     c = lang_cols(F.col("text"), DE_STOPS, EN_STOPS, conf_threshold)
     return d.select(
         "doc_id",
@@ -61,7 +51,7 @@ def quality_score(spark, sf_dir, docs=None) -> DataFrame:
     the keep/drop verdict a pretraining filter would apply."""
     from ..functions.exprs import quality_cols
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     c = quality_cols(F.col("text"))
     return d.select(
         "doc_id",
@@ -95,9 +85,7 @@ def length_percentiles(spark, sf_dir, docs=None) -> DataFrame:
 def token_stats(spark, sf_dir) -> DataFrame:
     """Per-source token accounting (the corpus-level stats the reference
     prints per scope, run_dataset_statistics.py:45-110)."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     n_toks = F.size(_tokens(F.col("text")))
     return (
         d.select("source", "lang", n_toks.alias("n_toks"))
@@ -121,7 +109,7 @@ def repetition_stats(spark, sf_dir, docs=None) -> DataFrame:
     Plan: explode bigrams → two-phase (doc_id, bigram) count → per-doc
     max/sum — equality-keyed shuffles with map-side partial aggregation,
     the same shape at any scale. keep = not repetition-dominated."""
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     toks = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
     base = toks.select(
         "doc_id",
@@ -173,13 +161,7 @@ def bpe_token_stats(spark, sf_dir, docs=None) -> DataFrame:
     GPT-2-style regex pieces per document, plus the pieces/words ratio a
     training-cost estimator needs. JVM-side regexp_extract_all; the DuckDB
     oracle runs the same pattern through RE2."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     # NULL text ≡ empty document (repo-wide convention): _tokens coalesces
     # internally, but regexp_extract_all(NULL) would null-propagate into
     # n_bpe_pieces and the ratio
@@ -205,9 +187,7 @@ def token_class_freq(spark, sf_dir) -> DataFrame:
     consults."""
     from pyspark.sql import Window as W
 
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     tok = d.select(F.explode(_tokens(F.col("text"))).alias("token"))
     # membership via isin → Catalyst InSet (hash-set lookup inside
     # whole-stage codegen), not array_contains over a literal array (an
@@ -240,9 +220,7 @@ def cer_bands_kernel(spark, sf_dir, prefix: int = 60) -> DataFrame:
 
     from ..textkit import cer, levenshtein
 
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     src = d.select(
         "doc_id",
         F.substring(F.lower("text"), 1, prefix).alias("gt"),
@@ -288,13 +266,7 @@ def cer_clusters_kernel(
 
     from ..textkit import cer_clusters, grapheme_clusters, levenshtein_clusters, nfc
 
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     p = F.substring(F.lower(F.coalesce(F.col("text"), F.lit(""))), 1, prefix)
     src = d.select(
         "doc_id",
@@ -329,9 +301,7 @@ def cer_clusters_kernel(
 def fingerprints(spark, sf_dir) -> DataFrame:
     """Document fingerprint: md5 over the sorted distinct token set — the
     canonical-form dedup key (order-insensitive, whitespace-insensitive)."""
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = docs_input(spark, sf_dir)
     canon = F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens(F.col("text")))))
     # rolling polynomial hash over the raw characters (Rabin-Karp style):
     # h = fold(chars, 7, (acc, c) -> (acc*31 + codepoint(c)) mod 2^31-1) —
@@ -475,7 +445,7 @@ def lm_unigram_score(spark, sf_dir, min_tf: int = 2, docs=None) -> DataFrame:
     side, and would otherwise re-run scan+split+explode per consumer."""
     from .relational import persist_slot
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     tok = persist_slot(
         "lm_unigram_tokens",
         d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token")),
@@ -538,7 +508,7 @@ def lm_bigram_score(spark, sf_dir, docs=None) -> DataFrame:
     stragglers, nothing broadcasts the vocabulary."""
     from .relational import persist_slot
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     toks = _tokens(F.col("text"))
     bg = persist_slot(
         "lm_bigram_stream",
@@ -622,13 +592,7 @@ def lang_id_trigram(spark, sf_dir, docs=None) -> DataFrame:
     codegen, zero joins, zero Python; scores are integer hit counts and
     the verdict is pure comparison (ties → 'unk'), so the whole detector
     is engine-exact."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     t = F.lower(F.coalesce(F.col("text"), F.lit("")))
 
     def hits(profile):
@@ -677,15 +641,7 @@ def quality_classifier(spark, sf_dir, dim: int = CLF_DIM, docs=None) -> DataFram
     Scale: explode-on-tokens → two-phase hash aggregation on doc_id —
     the token_stats shape; the weight lookup is arithmetic on the hash,
     zero joins."""
-    from .dedup import md5_60
-
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select("doc_id", F.explode_outer(_tokens(F.col("text"))).alias("token"))
     bucket = F.pmod(md5_60(F.col("token")), F.lit(dim))
     weight = F.when(
@@ -739,15 +695,7 @@ def train_perceptron(
     same driver-side loop discipline as BPE training."""
     from ..functions.exprs import quality_cols
 
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
-    from .dedup import md5_60
-
+    d = docs_input(spark, sf_dir, docs)
     labels = d.select(
         "doc_id",
         (quality_cols(F.col("text"))["quality_keep"] * 2 - 1).alias("y"),
@@ -814,8 +762,6 @@ def _score_under_weights(d: DataFrame, weights: dict[int, int], dim: int) -> Dat
     not-kept); label_keep is the bootstrap heuristic verdict."""
     from ..functions.exprs import quality_cols
 
-    from .dedup import md5_60
-
     wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
     tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
     scores = (
@@ -847,13 +793,7 @@ def quality_classifier_learned(
     aggregation away — and the driver hash-checks every per-doc score,
     so the learned model's entire inference surface is certified."""
     weights = train_perceptron(spark, sf_dir, dim, epochs, docs=docs)
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     return _score_under_weights(d, weights, dim)
 
 
@@ -877,13 +817,7 @@ def quality_classifier_eval(
     (queries._perceptron_eval_oracle)."""
     from .evaluation import confusion_metrics
 
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     train = d.filter(F.col("doc_id") % CLF_EVAL_FOLD != 0)
     held = d.filter(F.col("doc_id") % CLF_EVAL_FOLD == 0)
     weights = train_perceptron(spark, sf_dir, dim, epochs, docs=train)
@@ -935,8 +869,6 @@ def source_mix_sample(spark, sf_dir, weights: dict | None = None, docs=None) -> 
     ``weights`` maps source → positive int weight; the fixture default
     derives 1 + 3·(source_index mod 4) arithmetically so every SF
     exercises capped AND fractional rates."""
-    from .dedup import md5_60
-
     d = docs if docs is not None else load(spark, sf_dir, "documents")
     base = d.select(
         "doc_id", "source", F.size(_tokens(F.col("text"))).alias("n_tokens")
@@ -1014,8 +946,6 @@ def quality_weighted_sample(
     repartitioning — unlike rand()-based sampling, a resumed or re-run job
     selects the IDENTICAL subset. Pure column expressions; no shuffle
     beyond quality_score's own scan."""
-    from .dedup import md5_60
-
     q = quality_score(spark, sf_dir)
     rate = (
         F.when(F.col("quality_keep") == 1, hi_rate).otherwise(lo_rate).cast("int")
@@ -1043,13 +973,7 @@ def length_histogram(spark, sf_dir, docs=None) -> DataFrame:
     scores: float bin boundaries are where histogram counts silently
     drift between engines. One projection + one two-phase count; the
     report a corpus build prints next to length_percentiles."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     hi = HIST_BUCKET_WIDTH * HIST_BUCKETS
     bucket = (
         F.when(F.col("n_chars") < 0, F.lit(0))
@@ -1089,13 +1013,7 @@ def quality_classifier_pr_curve(
     derived pcts are the shared guarded divisions, so the whole sweep —
     including the training that produced the weights — replays in the
     oracle."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     train = d.filter(F.col("doc_id") % CLF_EVAL_FOLD != 0)
     held = d.filter(F.col("doc_id") % CLF_EVAL_FOLD == 0)
     weights = train_perceptron(spark, sf_dir, dim, epochs, docs=train)
@@ -1231,13 +1149,7 @@ def quality_gate_calibrated(
     Scale shape: the pick is a 1-row broadcast riding into the scoring
     relation via crossJoin (never a driver-side collect); scoring is the
     same broadcast-weight-map aggregation as quality_classifier_learned."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     train = d.filter(F.col("doc_id") % CLF_EVAL_FOLD != 0)
     held = d.filter(F.col("doc_id") % CLF_EVAL_FOLD == 0)
     weights = train_perceptron(spark, sf_dir, dim, epochs, docs=train)
@@ -1284,13 +1196,7 @@ def gopher_quality(spark, sf_dir, docs=None) -> DataFrame:
     Scale shape: one explode + two-phase count + doc-keyed window for
     the bigram mode; everything else is per-row array arithmetic inside
     whole-stage codegen. No global windows, no driver data."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     t = F.lower(F.coalesce(F.col("text"), F.lit("")))
     body = F.regexp_replace(t, "\\. ", ".\n")
     ft = F.concat(
@@ -1404,7 +1310,7 @@ def text_diversity(spark, sf_dir, docs=None) -> DataFrame:
     not reused."""
     from .dedup import _shingles  # noqa: F401  (contrast documented above)
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     toks = d.select(
         "source", _tokens(F.col("text")).alias("t")
     )
@@ -1472,7 +1378,7 @@ def mojibake_score(spark, sf_dir, docs=None) -> DataFrame:
     caf\u00e9/r\u00e8gle, every 13th a replacement-char run — identically in
     both engines, so precision AND recall of the signature are what the
     oracle certifies."""
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     aug = F.concat(
         F.coalesce(F.col("text"), F.lit("")),
         F.when(F.col("doc_id") % 11 == 0, F.lit(MOJI_FIX_A)).otherwise(F.lit("")),
@@ -1506,7 +1412,7 @@ def token_entropy(spark, sf_dir, docs=None) -> DataFrame:
     the base rejoin."""
     from .selection import with_ilog2
 
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("token"))
     ct = tok.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -1557,7 +1463,7 @@ def corpus_card(spark, sf_dir, docs=None) -> DataFrame:
     map-side combinable) crossJoined as 1-row broadcast dims — the
     whole card costs a handful of corpus passes and shuffles nothing
     wider than a vocabulary count."""
-    d = _base_docs(spark, sf_dir, docs)
+    d = docs_input(spark, sf_dir, docs)
     tok = d.select(F.explode(_tokens(F.col("text"))).alias("token"))
     base = d.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

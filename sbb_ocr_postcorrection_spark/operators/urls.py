@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .relational import load
+from .relational import docs_input, load
 
 
 def synth_host_expr(doc_id) -> Column:
@@ -343,13 +343,7 @@ def crawl_cube(spark, sf_dir, docs=None) -> DataFrame:
     straight from its manifests. NULL dimension values in the output are
     the rolled-up rows (inputs are never NULL here, so there is no
     ambiguity; gid is authoritative regardless)."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     base = d.select(
         F.concat(
             F.lit("site"), (F.col("doc_id") % 7).cast("string"),
@@ -380,13 +374,7 @@ def host_tiers(spark, sf_dir, n_tiers: int = 4, docs=None) -> DataFrame:
     serves the ``host_tiers_scaled`` name). Spark runs a window without
     partitionBy in one task, but its row buffer spills, so that task's
     memory stays bounded; only its time grows with the host dimension."""
-    d = (
-        docs
-        if docs is not None
-        else load(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-    )
+    d = docs_input(spark, sf_dir, docs)
     per_host = d.select(
         F.concat(
             F.lit("site"), (F.col("doc_id") % 7).cast("string"),

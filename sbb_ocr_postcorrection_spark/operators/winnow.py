@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .dedup import _quote_augmented
-from .relational import load
+from .relational import docs_input
 
 # Guarantee: any shared substring of length >= WIN_K + WIN_W - 1 = 27
 # chars yields an identical selected fingerprint in both documents.
@@ -96,15 +96,7 @@ def _doc_selected(t: str):
 
 
 def _winnow_base(spark, sf_dir, docs):
-    d = (
-        docs
-        if docs is not None
-        else _quote_augmented(
-            load(spark, sf_dir, "documents").repartition(
-                spark.sparkContext.defaultParallelism
-            )
-        )
-    )
+    d = docs if docs is not None else _quote_augmented(docs_input(spark, sf_dir))
     return d.select(
         "doc_id", F.lower(F.coalesce(F.col("text"), F.lit(""))).alias("t")
     )

@@ -12,6 +12,7 @@ so HALF_UP vs HALF_EVEN never diverges).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -20,14 +21,17 @@ from .operators import (
     anagram,
     bpe,
     components,
+    curation,
     dedup,
     index,
     evaluation,
     langprofile,
     linkgraph,
     lines,
+    mets,
     multimodal,
     packing,
+    pdf_layout,
     relational as R,
     selection,
     similarity,
@@ -38,16 +42,24 @@ from .operators import (
     webstruct,
     winnow,
 )
+from .sources import robots, sitemap, warc
 from .operators.textstats import DE_STOPS, EN_STOPS
 
 
-def _pin(spark: SparkSession) -> None:
-    """Pin session semantics the oracle comparison depends on and make sure
-    Python workers can import this package even when the caller built the
-    SparkSession before our PYTHONPATH export (addPyFile works at runtime
-    on a live session; env vars do not reach an already-running JVM)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    _ship_package(spark)
+def _pin(fn: Callable[[SparkSession, str], DataFrame]):
+    """Wrap a registry entry so it first pins the session semantics the
+    oracle comparison depends on and makes sure Python workers can import
+    this package even when the caller built the SparkSession before our
+    PYTHONPATH export (addPyFile works at runtime on a live session; env
+    vars do not reach an already-running JVM)."""
+
+    @functools.wraps(fn)
+    def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        _ship_package(spark)
+        return fn(spark, sf_dir)
+
+    return pinned
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -569,7 +581,6 @@ def extract_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused detect → correct kernel, then the per-url output with metrics + content digest."""
     from .kernels_spark import extract_pages
 
-    _pin(spark)
     pages = synth_pages_from_documents(spark, sf_dir)
     out = extract_pages(pages)
     return out.select(
@@ -592,7 +603,6 @@ def extract_host_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kernels_spark import extract_pages
     from .pipeline import salted_host_agg
 
-    _pin(spark)
     out = extract_pages(synth_pages_from_documents(spark, sf_dir))
     return salted_host_agg(
         out, ("chars_in", "sum"), ("chars_out", "sum"), ("url", "count")
@@ -605,99 +615,11 @@ def _corpus_stage(stage: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .operators.alignment import corpus_pipeline
 
-        _pin(spark)
         pages = synth_pages_from_documents(spark, sf_dir)
         return corpus_pipeline(pages, lang="en")[stage]
 
     run.__doc__ = f"corpus-build chain stage: {stage}"
     return run
-
-
-def _pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.pdf_layout import pdf_layout_query
-
-    return pdf_layout_query(spark, sf_dir)
-
-
-def _mets_link_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.mets import mets_link_table
-
-    return mets_link_table(spark, sf_dir)
-
-
-def _curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.curation import curate_corpus
-
-    return curate_corpus(spark, sf_dir)
-
-
-def _curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.curation import curation_report
-
-    return curation_report(spark, sf_dir)
-
-
-def _warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.warc import warc_scan
-
-    _pin(spark)
-    return warc_scan(spark, sf_dir)
-
-
-def _warc_gz_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.warc import warc_gz_scan
-
-    _pin(spark)
-    return warc_gz_scan(spark, sf_dir)
-
-
-def _warc_quarantine_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.warc import warc_scan_quarantine
-
-    _pin(spark)
-    return warc_scan_quarantine(spark, sf_dir)
-
-
-def _warc_cdx_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.warc import warc_cdx_lookup
-
-    _pin(spark)
-    return warc_cdx_lookup(spark, sf_dir)
-
-
-def _robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.robots import robots_gate
-
-    _pin(spark)
-    return robots_gate(spark, sf_dir)
-
-
-def _sitemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.sitemap import sitemap_scan
-
-    _pin(spark)
-    return sitemap_scan(spark, sf_dir)
-
-
-def _robots_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.robots import robots_compliance
-
-    _pin(spark)
-    return robots_compliance(spark, sf_dir)
-
-
-def _sitemap_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.sitemap import sitemap_coverage
-
-    _pin(spark)
-    return sitemap_coverage(spark, sf_dir)
-
-
-def _crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sources.robots import crawl_schedule
-
-    _pin(spark)
-    return crawl_schedule(spark, sf_dir)
 
 
 def _export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -706,11 +628,8 @@ def _export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounted for by its curation verdict, with the kept/exported count
     the manifest reports as n_exported. Certifies the END PRODUCT's
     accounting, not just the verdict (VERDICT r2 next-step #8)."""
-    from .operators.curation import curate_corpus
-
-    _pin(spark)
     return (
-        curate_corpus(spark, sf_dir)
+        curation.curate_corpus(spark, sf_dir)
         .groupBy("reason")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .select(
@@ -723,12 +642,8 @@ def _export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _wordpiece_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.wordpiece import build_vocab_df
-    from .operators.relational import load
 
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return build_vocab_df(d, "text", k=200)
+    return build_vocab_df(R.docs_input(spark, sf_dir), "text", k=200)
 
 
 # --------------------------------------------------------------------------
@@ -736,15 +651,7 @@ def _wordpiece_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    def pinned(fn):
-        def wrapped(spark, sf_dir):
-            _pin(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__doc__ = fn.__doc__
-        return wrapped
-
-    return {
+    registry = {
         # flagship kernels (rows-only)
         "extract_pipeline": extract_flagship,
         "extract_host_metrics": extract_host_metrics,
@@ -756,266 +663,259 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_stats": _corpus_stage("stats"),
         "corpus_split": _corpus_stage("split"),
         # filters / projections
-        "filter_project": pinned(R.filter_project),
-        "cer_bucket_hist": pinned(R.cer_bucket_hist),
-        "similarity_band": pinned(R.similarity_band),
+        "filter_project": R.filter_project,
+        "cer_bucket_hist": R.cer_bucket_hist,
+        "similarity_band": R.similarity_band,
         # joins
-        "equijoin_agg": pinned(R.equijoin_agg),
-        "broadcast_dim_join": pinned(R.broadcast_dim_join),
+        "equijoin_agg": R.equijoin_agg,
+        "broadcast_dim_join": R.broadcast_dim_join,
         # S3: real METS XML link-table extraction (ElementTree parse →
         # pivoted dimension → broadcast remap join)
-        "mets_link_table": pinned(_mets_link_table),
+        "mets_link_table": mets.mets_link_table,
         # WARC file framing roundtrip (S-row: the Common-Crawl archive
         # format) — multi-record blobs parsed by cursor walk
-        "warc_scan": _warc_scan,
+        "warc_scan": warc.warc_scan,
         # .warc.gz form: per-record gzip members (Common Crawl layout),
         # member-walk + inflate + same framing parse, same oracle
-        "warc_gz_scan": _warc_gz_scan,
+        "warc_gz_scan": warc.warc_gz_scan,
         # error-resilient mode: corrupt archives quarantine (one status
         # row for the re-fetch queue), clean archives parse normally
-        "warc_quarantine_scan": _warc_quarantine_scan,
+        "warc_quarantine_scan": warc.warc_scan_quarantine,
         # CDX-style random access: write indexed archives, probe every
         # 17th doc through (file, offset, length) ranged point reads —
         # the returned values are what the reads DECODED, so the oracle
         # certifies the index, the member framing, and the inflate
-        "warc_cdx_lookup": _warc_cdx_lookup,
+        "warc_cdx_lookup": warc.warc_cdx_lookup,
         # robots.txt crawl-policy gate (RFC 9309 matcher in the kernel;
         # the fixture rules have a closed-form verdict the oracle states)
-        "robots_gate": _robots_gate,
+        "robots_gate": robots.robots_gate,
         # archive re-audit against current policies (takedown compliance)
-        "robots_compliance": _robots_compliance,
+        "robots_compliance": robots.robots_compliance,
         # politeness scheduler: per-host fetch slots x robots Crawl-delay
-        "crawl_schedule": _crawl_schedule,
+        "crawl_schedule": robots.crawl_schedule,
         # sitemap discovery frontier (hosts-sized XML parse + loc join)
-        "sitemap_scan": _sitemap_scan,
+        "sitemap_scan": sitemap.sitemap_scan,
         # per-host discovery-completeness audit: advertised vs crawled url
         # space (frontier gaps + stale-sitemap orphans)
-        "sitemap_coverage": _sitemap_coverage,
-        "routing_semi": pinned(R.routing_semi),
-        "routing_anti": pinned(R.routing_anti),
-        "reassembly": pinned(R.reassembly),
+        "sitemap_coverage": sitemap.sitemap_coverage,
+        "routing_semi": R.routing_semi,
+        "routing_anti": R.routing_anti,
+        "reassembly": R.reassembly,
         # windows
-        "sliding_window": pinned(R.sliding_window),
-        "gaps_islands": pinned(R.gaps_islands),
-        "topk_per_group": pinned(R.topk_per_group),
+        "sliding_window": R.sliding_window,
+        "gaps_islands": R.gaps_islands,
+        "topk_per_group": R.topk_per_group,
         # aggregations
-        "rollup_stats": pinned(R.rollup_stats),
-        "topk_vocab": pinned(R.topk_vocab),
-        "bigram_confusion_topk": pinned(R.bigram_confusion_topk),
-        "mean_by_group": pinned(R.mean_by_group),
-        "minmax_by_group": pinned(R.minmax_by_group),
-        "hourly_rollup": pinned(R.hourly_rollup),
+        "rollup_stats": R.rollup_stats,
+        "topk_vocab": R.topk_vocab,
+        "bigram_confusion_topk": R.bigram_confusion_topk,
+        "mean_by_group": R.mean_by_group,
+        "minmax_by_group": R.minmax_by_group,
+        "hourly_rollup": R.hourly_rollup,
         # as-of join: latest prior click per user for each error event,
         # union+ordered-window formulation (one shuffle, no range join)
-        "asof_join": pinned(temporal.asof_join),
+        "asof_join": temporal.asof_join,
         # ordered-sequence funnel (view→click→purchase): chained per-step
         # min-aggs, no per-user ordered window over the full stream
-        "funnel_analysis": pinned(temporal.funnel_analysis),
+        "funnel_analysis": temporal.funnel_analysis,
         # first-activity cohorts × day +1/+3/+7 retention (shifted-day
         # equality joins against the cohort dim, no windows)
-        "cohort_retention": pinned(temporal.cohort_retention),
-        "detector_eval": pinned(evaluation.detector_eval),
+        "cohort_retention": temporal.cohort_retention,
+        "detector_eval": evaluation.detector_eval,
         # set ops / splits
-        "stratified_split": pinned(R.stratified_split),
-        "union_slices": pinned(R.union_slices),
+        "stratified_split": R.stratified_split,
+        "union_slices": R.union_slices,
         # dedup family — md5-keyed hashing, so every member (including the
         # banded-LSH candidate generation and the composite keep/drop flow)
         # is DuckDB-oracle-checked
-        "dedup_exact": pinned(dedup.exact_groups),
+        "dedup_exact": dedup.exact_groups,
         # normalization-aware exact dedup: canonical hash AFTER the
         # text_normalize folding catches typographic mirror variants
-        "dedup_normalized": pinned(dedup.normalized_exact_groups),
+        "dedup_normalized": dedup.normalized_exact_groups,
         # encoding-damage gate: UTF-8-as-Latin-1 signatures + U+FFFD
-        "mojibake_score": pinned(textstats.mojibake_score),
+        "mojibake_score": textstats.mojibake_score,
         # Shannon token entropy (Mitchell fixed-point): the info-theoretic
         # pair to quality_repetition (template spam low, salad high)
-        "token_entropy": pinned(textstats.token_entropy),
+        "token_entropy": textstats.token_entropy,
         # the one-row dataset card (sizes, composition, hygiene, quality)
-        "corpus_card": pinned(textstats.corpus_card),
+        "corpus_card": textstats.corpus_card,
         # per-doc integer TF-IDF key terms (extractive tagging export)
-        "doc_keyterms": pinned(index.doc_keyterms),
+        "doc_keyterms": index.doc_keyterms,
         # URL-level dedup (the stage BEFORE content hashing in a web
         # pipeline): canonicalize scheme/case/www/query/fragment/slash
         # noise, one hash-agg on the canonical key
-        "url_dedup": pinned(urls.url_dedup),
+        "url_dedup": urls.url_dedup,
         # one-pass CUBE over (host, crawl day): all four grouping levels
         # of the crawl-ops dashboard from a single Expand + aggregation
-        "crawl_cube": pinned(urls.crawl_cube),
+        "crawl_cube": urls.crawl_cube,
         # crawl-budget tiers: per-host rollup + NTILE over the host dim
-        "host_tiers": pinned(urls.host_tiers),
+        "host_tiers": urls.host_tiers,
         # a second name of host_tiers, sharing its oracle
-        "host_tiers_scaled": pinned(urls.host_tiers),
+        "host_tiers_scaled": urls.host_tiers,
         # integer-grid length histogram (float-free bin boundaries)
-        "length_histogram": pinned(textstats.length_histogram),
-        "url_blocklist": pinned(urls.url_blocklist_gate),
+        "length_histogram": textstats.length_histogram,
+        "url_blocklist": urls.url_blocklist_gate,
         # inter-document repeated-line removal (RefinedWeb/CCNet-style
         # boilerplate-line filter): tiny hot-line set → broadcast anti-join
-        "line_dedup": pinned(lines.line_dedup),
-        "passage_dedup": pinned(lines.passage_dedup),
-        "substring_dedup": pinned(substring.substring_dedup),
+        "line_dedup": lines.line_dedup,
+        "passage_dedup": lines.passage_dedup,
+        "substring_dedup": substring.substring_dedup,
         # host-level reputation gate: per-host lang-pass rate, integer
         # threshold, broadcast rejoin
-        "host_reputation_gate": pinned(urls.host_reputation_gate),
+        "host_reputation_gate": urls.host_reputation_gate,
         # cross-snapshot incremental dedup: history digest probe +
         # in-batch first-occurrence window on one shared hash key
-        "dedup_incremental": pinned(dedup.incremental_dedup),
-        "dedup_bloom": pinned(dedup.bloom_gate),
-        "snapshot_diff": pinned(dedup.snapshot_diff),
+        "dedup_incremental": dedup.incremental_dedup,
+        "dedup_bloom": dedup.bloom_gate,
+        "snapshot_diff": dedup.snapshot_diff,
         # training-sequence packing layout: two-level prefix sum (bucket
         # cumsum + broadcast bucket offsets), no global-sort window
-        "seq_pack": pinned(packing.sequence_pack),
+        "seq_pack": packing.sequence_pack,
         # per-output-shard provenance manifest (the trainer's data card:
         # dominant source, source diversity, language share per shard)
-        "shard_manifest": pinned(packing.shard_manifest),
-        "dedup_jaccard_pairs": pinned(dedup.jaccard_pairs),
-        "dedup_minhash_lsh": pinned(dedup.minhash_lsh_candidates),
+        "shard_manifest": packing.shard_manifest,
+        "dedup_jaccard_pairs": dedup.jaccard_pairs,
+        "dedup_minhash_lsh": dedup.minhash_lsh_candidates,
         # fuzzy cross-snapshot dedup: batch probes yesterday's band-hash
         # index, candidate-only Jaccard verify (incremental × LSH)
-        "dedup_minhash_incremental": pinned(dedup.minhash_incremental),
+        "dedup_minhash_incremental": dedup.minhash_incremental,
         # a second name of dedup_minhash_lsh, sharing its oracle
-        "dedup_minhash_lsh_salted": pinned(dedup.minhash_lsh_candidates),
-        "dedup_lsh_bucket_stats": pinned(dedup.lsh_bucket_stats),
+        "dedup_minhash_lsh_salted": dedup.minhash_lsh_candidates,
+        "dedup_lsh_bucket_stats": dedup.lsh_bucket_stats,
         # realized LSH recall curve vs exact-Jaccard ground truth
-        "lsh_recall_eval": pinned(dedup.lsh_recall_eval),
-        "dedup_embedding_cosine": pinned(dedup.embedding_cosine_pairs),
-        "dedup_corpus_keep": pinned(dedup.deduplicate_corpus),
+        "lsh_recall_eval": dedup.lsh_recall_eval,
+        "dedup_embedding_cosine": dedup.embedding_cosine_pairs,
+        "dedup_corpus_keep": dedup.deduplicate_corpus,
         # transitive duplicate clusters: large-star/small-star connected
         # components over exact + LSH-verified near-dup edges (oracle:
         # recursive-CTE min-id reachability)
-        "dedup_components": pinned(components.duplicate_components),
+        "dedup_components": components.duplicate_components,
         # the end-to-end curation verdict (lang + quality + repetition +
         # dedup composed) — oracle composes the stage SQLs as CTEs
-        "curation_pipeline": pinned(_curation),
+        "curation_pipeline": curation.curate_corpus,
         # per-(source, reason) acceptance report over the composite verdict
-        "curation_report": pinned(_curation_report),
+        "curation_report": curation.curation_report,
         "export_audit": _export_audit,
         # benchmark decontamination (broadcast eval-shingle semi join)
-        "decontaminate": pinned(dedup.decontaminate),
+        "decontaminate": dedup.decontaminate,
         # unigram-LM quality score (CCNet perplexity-filter analog,
         # integer aggregates for cross-engine exactness)
-        "lm_unigram_score": pinned(textstats.lm_unigram_score),
+        "lm_unigram_score": textstats.lm_unigram_score,
         # bigram-LM surprise (integer inverse conditional probability):
         # catches common-words-alien-sequences docs the unigram LM passes
-        "lm_bigram_score": pinned(textstats.lm_bigram_score),
+        "lm_bigram_score": textstats.lm_bigram_score,
         # quality-weighted deterministic downsampling (md5 coin)
-        "corpus_sample": pinned(textstats.quality_weighted_sample),
+        "corpus_sample": textstats.quality_weighted_sample,
         # PII detect + redact (JVM regexp over deterministically
         # PII-augmented text)
-        "pii_redact": pinned(textstats.pii_redact),
-        "corpus_mix": pinned(textstats.source_mix_sample),
-        "quality_classifier": pinned(textstats.quality_classifier),
+        "pii_redact": textstats.pii_redact,
+        "corpus_mix": textstats.source_mix_sample,
+        "quality_classifier": textstats.quality_classifier,
         # in-engine classifier TRAINING: batch perceptron (integer-exact,
         # so the learning loop itself is SQL-replay-certified) + scoring
         # under the learned weights
-        "quality_classifier_train": pinned(textstats.quality_classifier_train),
-        "quality_classifier_learned": pinned(
-            textstats.quality_classifier_learned
-        ),
+        "quality_classifier_train": textstats.quality_classifier_train,
+        "quality_classifier_learned": textstats.quality_classifier_learned,
         # held-out P/R/F1 of the learned filter: train on 4/5, score the
         # unseen fifth, aggregate the A9 confusion surface — fully replayed
-        "quality_classifier_eval": pinned(textstats.quality_classifier_eval),
+        "quality_classifier_eval": textstats.quality_classifier_eval,
         # held-out P/R/F1 at a constant integer threshold grid — the curve
         # behind the production keep-threshold choice
-        "quality_classifier_pr_curve": pinned(
-            textstats.quality_classifier_pr_curve
-        ),
+        "quality_classifier_pr_curve": textstats.quality_classifier_pr_curve,
         # calibrated keep-threshold selection: argmax over the sweep
         # (max-F1 and precision-floor picks, integer tie-breaks pinned)
-        "quality_threshold_pick": pinned(textstats.quality_threshold_pick),
+        "quality_threshold_pick": textstats.quality_threshold_pick,
         # ... and the picked max-F1 cutoff applied to EVERY document —
         # the calibrated replacement for the fixed score>0 gate
-        "quality_gate_calibrated": pinned(textstats.quality_gate_calibrated),
+        "quality_gate_calibrated": textstats.quality_gate_calibrated,
         # Gopher-rule quality signals (Rae et al. 2021 Appendix A):
         # word-shape + line-shape stats and the composite keep verdict
-        "gopher_quality": pinned(textstats.gopher_quality),
-        "lang_id_trigram": pinned(textstats.lang_id_trigram),
+        "gopher_quality": textstats.gopher_quality,
+        "lang_id_trigram": textstats.lang_id_trigram,
         # TRAINED language ID (Cavnar-Trenkle char-n-gram rank profiles,
         # learned from labeled data in-engine — closes the langid.py
         # parity gap with a trained detector instead of fixed heuristics):
         # profile table, held-out per-doc verdicts, confusion matrix
-        "lang_id_train": pinned(langprofile.lang_id_train),
-        "lang_id_learned": pinned(langprofile.lang_id_learned),
-        "lang_id_eval": pinned(langprofile.lang_id_eval),
+        "lang_id_train": langprofile.lang_id_train,
+        "lang_id_learned": langprofile.lang_id_learned,
+        "lang_id_eval": langprofile.lang_id_eval,
         # calibrated posterior gate (the reference's langid prob > 0.999,
         # union-bound form): integer Naive Bayes, Mitchell fixed-point logs
-        "lang_id_posterior": pinned(langprofile.lang_id_posterior),
-        "dedup_simhash": pinned(dedup.simhash_bucket_pairs),
-        "dedup_simhash_multiprobe": pinned(dedup.simhash_rotation_pairs),
+        "lang_id_posterior": langprofile.lang_id_posterior,
+        "dedup_simhash": dedup.simhash_bucket_pairs,
+        "dedup_simhash_multiprobe": dedup.simhash_rotation_pairs,
         # similarity search
-        "ann_brute_force": pinned(similarity.brute_force_topk),
-        "ann_lsh_bucketed": pinned(similarity.lsh_bucketed_topk),
-        "ann_lsh_multiprobe": pinned(similarity.lsh_multiprobe_topk),
-        "ann_ivf": pinned(similarity.ivf_topk),
-        "ann_ivf_pinned": pinned(similarity.ivf_topk_pinned),
+        "ann_brute_force": similarity.brute_force_topk,
+        "ann_lsh_bucketed": similarity.lsh_bucketed_topk,
+        "ann_lsh_multiprobe": similarity.lsh_multiprobe_topk,
+        "ann_ivf": similarity.ivf_topk,
+        "ann_ivf_pinned": similarity.ivf_topk_pinned,
         # kept name: one fingerprint implementation serves both
-        "fingerprints_np": pinned(textstats.fingerprints),
+        "fingerprints_np": textstats.fingerprints,
         # kept name: the bucket column of the one signature
         # implementation (the form ann_lsh_* consume), hash-certified
         # against the md5-parity plane formula
-        "lsh_signatures_np": lambda spark, sf_dir: (
-            _pin(spark)
-            or similarity.lsh_signatures(spark, sf_dir).select(
-                "vec_id", "label", "lsh_bucket"
-            )
-        ),
-        "embedding_norms": pinned(similarity.embedding_norms),
-        "embedding_quantize": pinned(similarity.quantize_embeddings),
+        "lsh_signatures_np": lambda spark, sf_dir: similarity.lsh_signatures(
+            spark, sf_dir
+        ).select("vec_id", "label", "lsh_bucket"),
+        "embedding_norms": similarity.embedding_norms,
+        "embedding_quantize": similarity.quantize_embeddings,
         # text analysis
-        "lang_id": pinned(textstats.lang_id),
-        "quality_score": pinned(textstats.quality_score),
-        "quality_repetition": pinned(textstats.repetition_stats),
-        "token_stats": pinned(textstats.token_stats),
+        "lang_id": textstats.lang_id,
+        "quality_score": textstats.quality_score,
+        "quality_repetition": textstats.repetition_stats,
+        "token_stats": textstats.token_stats,
         # exact per-source length quantiles (interpolation bit-identical
         # to DuckDB quantile_cont; approx_percentile is the 100-TB path)
-        "length_percentiles": pinned(textstats.length_percentiles),
+        "length_percentiles": textstats.length_percentiles,
         # unicode punctuation folding (translate map shared with the
         # oracle; deterministic fancy-char augmentation)
-        "text_normalize": pinned(textstats.text_normalize),
-        "bpe_token_stats": pinned(textstats.bpe_token_stats),
+        "text_normalize": textstats.text_normalize,
+        "bpe_token_stats": textstats.bpe_token_stats,
         # learned BPE: distributed merge training (selection certified by
         # a full replay oracle) + token counts under the learned merges
-        "bpe_train": pinned(bpe.bpe_train),
-        "bpe_tokenize": pinned(bpe.bpe_tokenize),
+        "bpe_train": bpe.bpe_train,
+        "bpe_tokenize": bpe.bpe_tokenize,
         # per-language tokenizer fertility under the learned merges
-        "bpe_fertility": pinned(bpe.bpe_fertility),
+        "bpe_fertility": bpe.bpe_fertility,
         # deployment-shape tokenizer: greedy longest-match over the
         # shipped vocab alone (the WordPiece runtime form)
-        "bpe_munch_tokenize": pinned(bpe.bpe_munch_tokenize),
+        "bpe_munch_tokenize": bpe.bpe_munch_tokenize,
         # merge-order vs greedy segmentation audit (token-budget drift)
-        "tokenizer_divergence": pinned(bpe.tokenizer_divergence),
-        "bpe_vocab": pinned(bpe.bpe_vocab),
+        "tokenizer_divergence": bpe.tokenizer_divergence,
+        "bpe_vocab": bpe.bpe_vocab,
         # tokenizer inference: text → learned-vocab id arrays (the input
         # seq_pack actually wants)
-        "bpe_encode": pinned(bpe.bpe_encode),
+        "bpe_encode": bpe.bpe_encode,
         # M14: one-hot tensorization of learned token ids (bounded batch)
-        "onehot_tensorize": pinned(bpe.onehot_tensorize),
+        "onehot_tensorize": bpe.onehot_tensorize,
         # corpus search surface: postings statistics + conjunctive
         # multi-term query (contamination audits / takedown lookups)
-        "inverted_index": pinned(index.inverted_index),
-        "keyword_search": pinned(index.keyword_search),
-        "keyword_search_bm25": pinned(index.keyword_search_bm25),
+        "inverted_index": index.inverted_index,
+        "keyword_search": index.keyword_search,
+        "keyword_search_bm25": index.keyword_search_bm25,
         # per-doc distinctive terms: integer-only TF-IDF stand-in
-        "rare_terms": pinned(index.rare_terms),
+        "rare_terms": index.rare_terms,
         # exact-adjacency phrase lookup via positional intersection
-        "phrase_search": pinned(index.phrase_search),
-        "token_class_freq": pinned(textstats.token_class_freq),
-        "cer_bands_kernel": pinned(textstats.cer_bands_kernel),
+        "phrase_search": index.phrase_search,
+        "token_class_freq": textstats.token_class_freq,
+        "cer_bands_kernel": textstats.cer_bands_kernel,
         # grapheme-cluster CER (dinglehopper's distance unit, SURVEY §7.3):
         # combining marks injected in-plan, cluster DP in the kernel, and
         # a cluster→ASCII remap makes DuckDB levenshtein the exact oracle
-        "cer_clusters": pinned(textstats.cer_clusters_kernel),
-        "fingerprints": pinned(textstats.fingerprints),
+        "cer_clusters": textstats.cer_clusters_kernel,
+        "fingerprints": textstats.fingerprints,
         # wordpiece vocabulary build (A1/F3 surface) — distributed 1..3-gram
         # piece counting, top-200
-        "wordpiece_vocab_topk": pinned(_wordpiece_vocab_topk),
+        "wordpiece_vocab_topk": _wordpiece_vocab_topk,
         # line split → posexplode → relational reassembly (F10/J7 pair;
         # greedy split is kernel-side, but the roundtrip invariant is
         # SQL-stateable, so the driver projection is oracle-checked)
-        "line_split_roundtrip": pinned(lines.split_roundtrip_flags),
+        "line_split_roundtrip": lines.split_roundtrip_flags,
         # PDF/layout parse (north_rule): real FlateDecode+text-matrix parser;
         # n_lines/n_pages/roundtrip_ok are pure functions of documents.text,
         # so the whole parse→reassemble path is oracle-checked
-        "pdf_layout_parse": pinned(_pdf_layout),
+        "pdf_layout_parse": pdf_layout.pdf_layout_query,
         # multimodal plumbing: the codec stub is deterministic byte math, so
         # decode/resize/features all have exact DuckDB oracles over
         # hex(encode(text))
@@ -1023,124 +923,125 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (JVM regexp, scan-side), host-level adjacency rollup, and
         # integer fixed-point PageRank whose K-iteration loop replays
         # bit-for-bit in the oracle (the bpe_train convention)
-        "page_outlinks": pinned(linkgraph.page_outlinks),
-        "link_graph": pinned(linkgraph.link_graph),
-        "host_pagerank": pinned(linkgraph.host_pagerank),
+        "page_outlinks": linkgraph.page_outlinks,
+        "link_graph": linkgraph.link_graph,
+        "host_pagerank": linkgraph.host_pagerank,
         # HITS hubs/authorities: the role-separating companion to
         # PageRank (unnormalized integer power iteration, exact)
-        "host_hits": pinned(linkgraph.host_hits),
+        "host_hits": linkgraph.host_hits,
         # seeded personalized variant: teleport + dangling mass flow only
         # to the trusted seed set (link-spam demotion / crawl priority)
-        "host_trustrank": pinned(linkgraph.host_trustrank),
+        "host_trustrank": linkgraph.host_trustrank,
         # spam mass (VLDB'06): share of a host's PageRank not backed by
         # trust — the demotion decision surface fed by the two rank loops
-        "host_spam_mass": pinned(linkgraph.host_spam_mass),
+        "host_spam_mass": linkgraph.host_spam_mass,
         # structural degree/reciprocity profile (link-farm features)
-        "link_degree_stats": pinned(linkgraph.link_degree_stats),
+        "link_degree_stats": linkgraph.link_degree_stats,
         # deterministic label-propagation communities (topical clusters)
-        "host_communities": pinned(linkgraph.host_communities),
+        "host_communities": linkgraph.host_communities,
         # cluster-granularity demotion table: communities x spam mass
-        "community_profiles": pinned(linkgraph.community_profiles),
+        "community_profiles": linkgraph.community_profiles,
         # anchor-text aggregation per target host (the off-page web-IR
         # signal), tag-skeleton template clustering, cross-host mirror
         # rollup, PMI collocations, canonical keeper per dup component,
         # per-host language mix (r5 web-curation additions)
-        "anchor_text_index": pinned(linkgraph.anchor_text_index),
+        "anchor_text_index": linkgraph.anchor_text_index,
         # asymmetric containment: quote/aggregator pages whose shingles sit
         # inside a larger doc (high containment, LOW Jaccard — the modality
         # the symmetric dedup family misses)
-        "containment_pairs": pinned(dedup.containment_pairs),
+        "containment_pairs": dedup.containment_pairs,
         # per-section churn rollup of snapshot_diff -> adaptive recrawl tiers
-        "crawl_change_rate": pinned(dedup.crawl_change_rate),
-        "template_fingerprint": pinned(webstruct.template_fingerprint),
-        "mirror_detection": pinned(webstruct.mirror_detection),
+        "crawl_change_rate": dedup.crawl_change_rate,
+        "template_fingerprint": webstruct.template_fingerprint,
+        "mirror_detection": webstruct.mirror_detection,
         # provenance overlap: which source pairs share distinct content
-        "source_overlap_matrix": pinned(webstruct.source_overlap_matrix),
+        "source_overlap_matrix": webstruct.source_overlap_matrix,
         # stable per-template audit sample (extraction QA workflow)
-        "template_sample": pinned(webstruct.template_sample),
+        "template_sample": webstruct.template_sample,
         # REAL kernel metrics rolled up per template skeleton
-        "template_extract_metrics": pinned(webstruct.template_extract_metrics),
-        "collocations": pinned(index.collocations),
-        "component_canonical": pinned(components.component_canonical),
-        "host_language_profile": pinned(urls.host_language_profile),
+        "template_extract_metrics": webstruct.template_extract_metrics,
+        "collocations": index.collocations,
+        "component_canonical": components.component_canonical,
+        "host_language_profile": urls.host_language_profile,
         # C4/RefinedWeb anti-domination rule: deterministic uniform cap on
         # any single host's contribution, every doc gets an auditable verdict
-        "host_cap_sample": pinned(urls.host_cap_sample),
+        "host_cap_sample": urls.host_cap_sample,
         # ingest-volume trend with integer-exact spike detection over the
         # day dimension (trailing self-join, no global window)
-        "ingest_trend": pinned(temporal.ingest_trend),
+        "ingest_trend": temporal.ingest_trend,
         # per-host SELF-ADAPTIVE trailing baseline (a young feed never
         # flags: full trailing history required)
-        "host_trailing_anomaly": pinned(temporal.host_trailing_anomaly),
+        "host_trailing_anomaly": temporal.host_trailing_anomaly,
         # cross-doc lexical diversity (distinct-1/distinct-3 per source) —
         # template spam collapses here even when per-doc repetition passes
-        "text_diversity": pinned(textstats.text_diversity),
+        "text_diversity": textstats.text_diversity,
         # SemDeDup: embedding-cluster dedup (paraphrase/re-encode twins no
         # lexical method sees), pinned-centroid clustering + in-cell prune
-        "semantic_dedup": pinned(similarity.semantic_dedup),
+        "semantic_dedup": similarity.semantic_dedup,
         # winnowing (SIGMOD'03 / MOSS): position-robust fingerprint
         # selection + cross-doc plagiarism/contamination match pairs
         # (selection computed per-doc in an Arrow kernel, zero shuffle;
         # the _np name is kept and serves the same implementation)
-        "winnow_fingerprints": pinned(winnow.winnow_fingerprints),
-        "winnow_fingerprints_np": pinned(winnow.winnow_fingerprints),
-        "winnow_matches": pinned(winnow.winnow_matches),
+        "winnow_fingerprints": winnow.winnow_fingerprints,
+        "winnow_fingerprints_np": winnow.winnow_fingerprints,
+        "winnow_matches": winnow.winnow_matches,
         # RAG-export chunking: overlapping fixed-size token windows
-        "passage_windows": pinned(lines.passage_windows),
+        "passage_windows": lines.passage_windows,
         # end-to-end RAG retrieval: chunk -> feature-hash embed -> sparse
         # relational dot product -> cosine top-k per probe
-        "passage_retrieval": pinned(similarity.passage_retrieval),
+        "passage_retrieval": similarity.passage_retrieval,
         # Count-Min sketch with hash-checked estimates vs exact counts
-        "cms_token_counts": pinned(index.cms_token_counts),
+        "cms_token_counts": index.cms_token_counts,
         # HyperLogLog with integer-exact register state and harmonic sum
-        "hll_distinct_tokens": pinned(index.hll_distinct_tokens),
-        "multimodal_decode": pinned(multimodal.decode_metadata),
-        "multimodal_resize": pinned(multimodal.resize_metadata),
-        "multimodal_features": pinned(multimodal.feature_components),
-        "frame_sample": pinned(multimodal.frame_sample_plan),
+        "hll_distinct_tokens": index.hll_distinct_tokens,
+        "multimodal_decode": multimodal.decode_metadata,
+        "multimodal_resize": multimodal.resize_metadata,
+        "multimodal_features": multimodal.feature_components,
+        "frame_sample": multimodal.frame_sample_plan,
         # perceptual average-hash fingerprints over the binary payload
         # path (aHash; luma sampling is the deterministic fake decode)
-        "image_ahash": pinned(multimodal.image_ahash),
+        "image_ahash": multimodal.image_ahash,
         # banded bucket join + Hamming verify — the image near-dup
         # pipeline, witness twins injected every 37th doc
-        "image_ahash_dedup": pinned(multimodal.image_ahash_dedup),
+        "image_ahash_dedup": multimodal.image_ahash_dedup,
         # realized recall of the 4×15 banding vs pigeonhole-complete
         # 10×6 ground truth, per Hamming value (the honesty instrument)
-        "ahash_recall_eval": pinned(multimodal.ahash_recall_eval),
+        "ahash_recall_eval": multimodal.ahash_recall_eval,
         # DSIR (Xie et al. 2023): hashed-bigram importance model between
         # the target domain and the raw pool — training is ONE aggregation
         # to a DSIR_BUCKETS-row dim (Mitchell fixed-point logs, int-exact)
-        "dsir_weights": pinned(selection.dsir_weights),
+        "dsir_weights": selection.dsir_weights,
         # incremental retrain: history counts + delta counts merged by
         # one sum — must equal full retraining (same oracle certifies)
-        "dsir_weights_incremental": pinned(selection.dsir_weights_incremental),
+        "dsir_weights_incremental": selection.dsir_weights_incremental,
         # per-doc fixed-point log importance score (weight dim broadcast)
-        "dsir_score": pinned(selection.dsir_score),
+        "dsir_score": selection.dsir_score,
         # deterministic Gumbel-race top-k resample of the raw pool
-        "dsir_sample": pinned(selection.dsir_sample),
+        "dsir_sample": selection.dsir_sample,
         # CCNet head/middle/tail per-language LM-score terciles (integer
         # order statistics over the (lang, score)-histogram dim)
-        "ccnet_buckets": pinned(selection.ccnet_buckets),
+        "ccnet_buckets": selection.ccnet_buckets,
         # two-phase (pretrain/anneal) schedule: top-decile quality slice
         # + deterministic shards + exporter-sortable curriculum key
-        "curriculum_plan": pinned(selection.curriculum_plan),
+        "curriculum_plan": selection.curriculum_plan,
         # temperature-scaled source mixing (alpha = 1/2 multinomial):
         # per-doc inclusion rate 1/isqrt(n_src), md5-coin deterministic
-        "mix_temperature": pinned(selection.mix_temperature),
+        "mix_temperature": selection.mix_temperature,
         # Heaps-law vocabulary growth at power-of-two doc checkpoints
-        "vocab_growth": pinned(selection.vocab_growth),
+        "vocab_growth": selection.vocab_growth,
         # pairwise source KL divergence (Mitchell fixed-point logs) —
         # the outlier/redundant-feed diagnostic behind mix weighting
-        "source_divergence": pinned(selection.source_divergence),
+        "source_divergence": selection.source_divergence,
         # contrastive triplet mining (hard negatives for metric
         # learning): one window pass picks positive + hard negative
-        "triplet_mining": pinned(similarity.triplet_mining),
+        "triplet_mining": similarity.triplet_mining,
         # TICCL anagram-hash OCR-variant lookup (Reynaert 2010; closes
         # the reference's Makefile.anagram experiment in-engine)
-        "anagram_candidates": pinned(anagram.anagram_candidates),
+        "anagram_candidates": anagram.anagram_candidates,
         # best correction per error word (frequency-directed, pinned ties)
-        "anagram_corrections": pinned(anagram.anagram_corrections),
+        "anagram_corrections": anagram.anagram_corrections,
     }
+    return {name: _pin(fn) for name, fn in registry.items()}
 
 
 def _bpe_stages_sql(num_merges: int) -> str:
@@ -4343,7 +4244,7 @@ def oracle_sql() -> dict[str, str]:
     # the END-TO-END flow is hash-checked, not just its parts (DuckDB
     # supports nested WITH inside a CTE body)
     # quality-weighted sampling reuses the quality_score oracle as a CTE;
-    # the md5-derived coin mirrors operators.dedup.md5_60 exactly
+    # the md5-derived coin mirrors functions.exprs.md5_60 exactly
     # the host gate reuses the lang_id oracle as its per-doc stage; the
     # threshold constant interpolates from the operator module so one
     # definition drives both engines

@@ -96,23 +96,6 @@ def crawl_delay(
     return max(d if d is not None else default, 1)
 
 
-def robots_verdicts(txts, paths, agent: str = "*") -> list[int]:
-    """Per-row allowed bits with a parse cache keyed on the policy text —
-    the robots gate's verdict loop; a NULL/NaN policy (host without a
-    robots.txt) allows."""
-    cache: dict[str, list] = {}
-    out: list[int] = []
-    for txt, p in zip(txts, paths):
-        if txt is None or (isinstance(txt, float)):  # None / pandas NaN
-            out.append(1)  # no robots.txt → allowed (RFC 404 default)
-            continue
-        rules = cache.get(txt)
-        if rules is None:
-            rules = cache[txt] = parse_robots(txt, agent)
-        out.append(1 if robots_allowed(rules, p) else 0)
-    return out
-
-
 def _glob_match(pattern: str, s: str) -> bool:
     """Full match of an RFC 9309 pattern body against s: '*' = any run,
     everything else literal. ITERATIVE two-pointer star-backtracking glob
@@ -214,7 +197,16 @@ def robots_gate(spark, sf_dir, robots=None, docs=None, agent: str = "*"):
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            verdicts = robots_verdicts(pdf["robots_txt"], pdf["path"], agent)
+            cache: dict[str, list] = {}
+            verdicts: list[int] = []
+            for txt, p in zip(pdf["robots_txt"], pdf["path"]):
+                if txt is None or isinstance(txt, float):  # None / pandas NaN
+                    verdicts.append(1)  # no robots.txt → allowed (RFC 404 default)
+                    continue
+                rules = cache.get(txt)
+                if rules is None:
+                    rules = cache[txt] = parse_robots(txt, agent)
+                verdicts.append(1 if robots_allowed(rules, p) else 0)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

@@ -410,7 +410,7 @@ def write_warc_archive_indexed(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import md5_60
+    from ..functions.exprs import md5_60
 
     os.makedirs(out_dir, exist_ok=True)
     iso = F.coalesce(

@@ -7,7 +7,9 @@ definition), ``__spark_entry__.py``, ``bench.py``, ``scripts/`` and
 package function or class whose name appears in its body as a Name, an
 Attribute, an import alias or an identifier-valued string constant.
 Names, not bindings: a reference to ``foo`` reaches every ``foo``, so
-the walk over-approximates and never flags a live definition.
+the walk over-approximates and never flags a live definition. The one
+binding it does resolve is an import of a package module: ``from . import
+dedup_stream`` names the module, not the function ``dedup_stream`` in it.
 
 A definition the walk does not reach is called only from ``tests/`` (or
 from nowhere): delete it, or move it into ``tests/`` if it is a
@@ -34,18 +36,46 @@ ALLOWLIST = {
 }
 
 
-def _names(node: ast.AST) -> set[str]:
+# dotted names of the package's modules and subpackages
+MODULES = {
+    ".".join(p.relative_to(REPO).with_suffix("").parts).removesuffix(".__init__")
+    for p in PKG.rglob("*.py")
+}
+
+
+def _import_base(x: ast.ImportFrom, package: str) -> str:
+    """The dotted module a ``from ... import`` reads, relative ones resolved
+    against ``package``."""
+    if not x.level:
+        return x.module
+    parts = package.split(".")[: len(package.split(".")) - x.level + 1]
+    return ".".join(parts + ([x.module] if x.module else []))
+
+
+def _names(node: ast.AST, package: str = "") -> set[str]:
+    """Names ``node`` references. An import of a package module names the
+    module, so it references none of the module's definitions."""
     out = set()
     for x in ast.walk(node):
         if isinstance(x, ast.Name):
             out.add(x.id)
         elif isinstance(x, ast.Attribute):
             out.add(x.attr)
-        elif isinstance(x, ast.alias):
-            out.update(x.name.split("."))
+        elif isinstance(x, ast.Import):
+            for a in x.names:
+                if a.name not in MODULES:
+                    out.update(a.name.split("."))
+        elif isinstance(x, ast.ImportFrom):
+            base = _import_base(x, package)
+            out.update(a.name for a in x.names if f"{base}.{a.name}" not in MODULES)
         elif isinstance(x, ast.Constant) and isinstance(x.value, str) and x.value.isidentifier():
             out.add(x.value)
     return out
+
+
+def _package_of(mod: str) -> str:
+    """The dotted package of a module path relative to the package."""
+    return ".".join((PKG.name, *Path(mod).parent.parts))
 
 
 def _package():
@@ -57,7 +87,7 @@ def _package():
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs[(mod, st.name)] = st
             else:
-                roots |= _names(st)
+                roots |= _names(st, _package_of(mod))
     return defs, roots
 
 
@@ -81,7 +111,8 @@ def _reached(defs, root_names: set[str], extra=()) -> set:
         key = todo.pop()
         if key not in seen:
             seen.add(key)
-            todo += [k for n in _names(defs[key]) for k in by_name.get(n, [])]
+            names = _names(defs[key], _package_of(key[0]))
+            todo += [k for n in names for k in by_name.get(n, [])]
     return seen
 
 
@@ -105,3 +136,15 @@ def test_every_package_definition_is_reached():
         f"only from tests/; not allowlisted ({len(bad)}):\n"
         + "\n".join(f"  {m}:{defs[(m, n)].lineno} {n}" for m, n in sorted(bad))
     )
+
+
+def test_module_import_is_not_a_reference_to_a_same_named_function():
+    """``streaming/__init__.py`` imports the MODULE ``dedup_stream``; the
+    function ``dedup_stream.dedup_stream`` is reached only through the
+    allowlisted extract_dedup_stream, so dropping that entry flags it."""
+    defs, roots = _package()
+    roots |= _outside_roots()
+    fn = ("streaming/dedup_stream.py", "dedup_stream")
+    allow = set(ALLOWLIST) - {("streaming/dedup_stream.py", "extract_dedup_stream")}
+    assert fn in _reached(defs, roots, extra=ALLOWLIST)
+    assert fn not in _reached(defs, roots, extra=allow)

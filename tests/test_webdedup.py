@@ -362,7 +362,7 @@ def test_null_inputs_never_drop_rows(spark):
     vanish, cross-deduplicate, or emit NULL keep-bits that fall through
     when-chains (real crawl data has both)."""
     from sbb_ocr_postcorrection_spark.operators import (
-        dedup as D, packing as P, textstats as T,
+        dedup as D, packing as P, relational as R, textstats as T,
     )
 
     # verdict operators: null text ≡ empty doc, keep-bits are 0/1 never
@@ -396,7 +396,8 @@ def test_null_inputs_never_drop_rows(spark):
     with_null = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     ).unionByName(null_doc)
-    with _mock.patch.object(T, "load", lambda *_a, **_k: with_null):
+    # fingerprints reads its documents through relational.docs_input
+    with _mock.patch.object(R, "load", lambda *_a, **_k: with_null):
         row = {r["doc_id"]: r for r in T.fingerprints(spark, SF_DIR).collect()}[1]
     assert row["rolling_fp"] == 7
     assert row["fingerprint"] == _hl.md5(b"").hexdigest()
