@@ -47,19 +47,15 @@ def cer_band_expr(col) -> Column:
     )
 
 
-def lang_cols(
-    text_col, stops_de, stops_en, conf_threshold: float = 0.05, toks=None
-) -> dict[str, Column]:
+LANG_CONF_THRESHOLD = 0.05  # lang_pass: confident non-tie at this share
+
+
+def lang_cols(text_col, stops_de, stops_en) -> dict[str, Column]:
     """Stopword-hit language-ID columns (P5 analog) — ONE definition shared
     by the oracle-checked operator (operators/textstats.lang_id) and
     operators/urls.host_reputation_gate's per-doc bit, so the two can never
-    drift — INCLUDING the lang_pass verdict and its threshold. Pass a
-    precomputed ``toks`` column to share one tokenization across several
-    builders (higher-order-function exprs are excluded from codegen
-    subexpression elimination, so unshared builders re-split the text per
-    derived column)."""
-    if toks is None:
-        toks = tokens_expr(text_col)
+    drift — INCLUDING the lang_pass verdict and its threshold."""
+    toks = tokens_expr(text_col)
     de_arr = F.array(*[F.lit(w) for w in stops_de])
     en_arr = F.array(*[F.lit(w) for w in stops_en])
     de_hits = F.size(F.filter(toks, lambda t: F.array_contains(de_arr, t)))
@@ -77,16 +73,15 @@ def lang_cols(
         "en_hits": en_hits,
         "lang_guess": guess,
         "lang_conf": conf,
-        "lang_pass": ((guess != "unk") & (conf >= conf_threshold)).cast("int"),
+        "lang_pass": ((guess != "unk") & (conf >= LANG_CONF_THRESHOLD)).cast("int"),
     }
 
 
-def quality_cols(text_col, toks=None) -> dict[str, Column]:
+def quality_cols(text_col) -> dict[str, Column]:
     """Quality-heuristic columns — shared by operators/textstats
     .quality_score and the quality classifier, which trains and scores
-    against its quality_keep label (same ``toks`` parameter as lang_cols)."""
-    if toks is None:
-        toks = tokens_expr(text_col)
+    against its quality_keep label."""
+    toks = tokens_expr(text_col)
     # null ≡ empty here too: length(NULL) would make alpha_ratio — and
     # with it quality_keep — NULL instead of a definite fail verdict
     text_col = F.coalesce(text_col, F.lit(""))

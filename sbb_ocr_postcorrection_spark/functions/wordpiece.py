@@ -11,10 +11,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+WORDPIECE_K = 200  # vocabulary size (the DuckDB oracle interpolates it)
 
-def build_vocab_df(df: DataFrame, text_col: str, k: int = 1000) -> DataFrame:
+
+def build_vocab_df(df: DataFrame, text_col: str) -> DataFrame:
     """Distributed vocab: explode tokens → explode 1..3-gram pieces →
-    two-phase count → top-k (count desc, piece asc). All JVM-side."""
+    two-phase count → top-WORDPIECE_K (count desc, piece asc). All JVM-side."""
     toks = F.explode(
         F.filter(F.split(F.lower(F.col(text_col)), " "), lambda x: x != "")
     ).alias("token")
@@ -36,6 +38,6 @@ def build_vocab_df(df: DataFrame, text_col: str, k: int = 1000) -> DataFrame:
         .groupBy("piece")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("piece"))
-        .limit(k)
+        .limit(WORDPIECE_K)
     )
 

@@ -27,6 +27,13 @@ from ..align import align_page
 from ..extract import extract_blocks
 from ..functions.exprs import md5_60
 
+CORPUS_LANG = "en"  # the corpus chain's language filter
+WINDOW_CONTEXT = 4  # tokens per sliding window
+# stratified split over md5 buckets 0-9: SPLIT_TRAIN train, SPLIT_TEST test,
+# the rest val
+SPLIT_TRAIN = 8
+SPLIT_TEST = 1
+
 # the reference's canonical alignments schema (preprocessing/database.py:
 # 17-28), plus lang carried for the P5 filter
 ALIGNMENTS_SCHEMA = (
@@ -80,7 +87,7 @@ def build_alignments(pages: DataFrame) -> DataFrame:
     )
 
 
-def sliding_window_restructure(alignments: DataFrame, context: int = 4) -> DataFrame:
+def sliding_window_restructure(alignments: DataFrame) -> DataFrame:
     """apply-sliding-window (helpers.py:63-134): per similar line, emit the
     4-token windows of ocr/gt token streams as pseudo-lines, stride 1;
     shorter lines emit once — all JVM-side (transform over sequence)."""
@@ -94,14 +101,14 @@ def sliding_window_restructure(alignments: DataFrame, context: int = 4) -> DataF
     # max(len(ocr), len(gt))) — counting GT only would silently drop OCR
     # tail tokens from the training pseudo-lines
     n_windows = F.greatest(
-        F.greatest(F.size("to"), F.size("tg")) - (context - 1), F.lit(1)
+        F.greatest(F.size("to"), F.size("tg")) - (WINDOW_CONTEXT - 1), F.lit(1)
     )
     windows = F.transform(
         F.sequence(F.lit(1), n_windows),
         lambda i: F.struct(
             (i - 1).alias("pos"),
-            F.concat_ws(" ", F.slice("to", i, context)).alias("ocr_win"),
-            F.concat_ws(" ", F.slice("tg", i, context)).alias("gt_win"),
+            F.concat_ws(" ", F.slice("to", i, WINDOW_CONTEXT)).alias("ocr_win"),
+            F.concat_ws(" ", F.slice("tg", i, WINDOW_CONTEXT)).alias("gt_win"),
         ),
     )
     return (
@@ -126,7 +133,7 @@ def alignment_stats(alignments: DataFrame) -> DataFrame:
     )
 
 
-def stratified_split(alignments: DataFrame, train: int = 8, test: int = 1) -> DataFrame:
+def stratified_split(alignments: DataFrame) -> DataFrame:
     """split-dataset (cli_preproc.py:714-888): CER-bucket-stratified
     deterministic split via arithmetic hash of (doc_id, line_id) — seeded
     and shuffle-free instead of the reference's seed-49 list shuffling.
@@ -143,8 +150,8 @@ def stratified_split(alignments: DataFrame, train: int = 8, test: int = 1) -> Da
         md5_60(F.concat_ws("|", F.col("doc_id"), F.col("line_id"))), F.lit(10)
     )
     split = (
-        F.when(h < train, "train")
-        .when(h < train + test, "test")
+        F.when(h < SPLIT_TRAIN, "train")
+        .when(h < SPLIT_TRAIN + SPLIT_TEST, "test")
         .otherwise("val")
         .alias("split")
     )
@@ -155,14 +162,14 @@ def stratified_split(alignments: DataFrame, train: int = 8, test: int = 1) -> Da
     )
 
 
-def corpus_pipeline(pages: DataFrame, lang: str = "de") -> dict[str, DataFrame]:
+def corpus_pipeline(pages: DataFrame) -> dict[str, DataFrame]:
     """The full §3.1 chain, lazily composed; returns each stage's frame.
 
     The language filter (P5) runs BEFORE the alignment kernel — Catalyst
     cannot push a filter below mapInPandas, and lang passes through the
     kernel unchanged, so pre-filtering is row-equivalent and skips the
     O(lines²·len²) NW cost for every other language."""
-    alignments = build_alignments(pages.filter(F.col("lang") == lang))
+    alignments = build_alignments(pages.filter(F.col("lang") == CORPUS_LANG))
     return {
         "alignments": alignments,
         "windows": sliding_window_restructure(alignments),

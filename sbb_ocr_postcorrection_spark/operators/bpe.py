@@ -27,7 +27,7 @@ as the vocab counters (A1/A2 shape — explode → two-phase count → top-1):
 * each round: adjacent pairs via one array transform → two-phase
   count → top-1 with the pinned tie-break (max count, then
   lexicographic (l, r)) → collect ONE row → one more replace on the
-  cached word table. num_merges driver-side rounds of a |vocab|-sized
+  cached word table. DEFAULT_MERGES driver-side rounds of a |vocab|-sized
   job — the standard Spark BPE-training shape (at 100 TB the word table
   is rebuilt once per corpus and checkpointed every ~32 merges to cap
   lineage);
@@ -52,7 +52,7 @@ SEP = "\x1f"
 DEFAULT_MERGES = 8
 
 
-def _clean_text(col=None):
+def _clean_text():
     """Corpus text with the internal wrap separator U+001F stripped.
 
     Control chars are routine in real web-crawl text; an unstripped ␟
@@ -61,8 +61,7 @@ def _clean_text(col=None):
     extraction — Spark AND the generated DuckDB oracle CTEs
     (queries._bpe_stages_sql) — goes through this one strip so the
     engines cannot diverge on it."""
-    c = col if col is not None else F.col("text")
-    return F.replace(F.coalesce(c, F.lit("")), F.lit(SEP), F.lit(""))
+    return F.replace(F.coalesce(F.col("text"), F.lit("")), F.lit(SEP), F.lit(""))
 
 
 def wrapped_symbols(col):
@@ -107,7 +106,7 @@ def merge_replace(w, a: str, b: str):
     )
 
 
-def _train(spark, sf_dir, num_merges: int, docs):
+def _train(spark, sf_dir, docs):
     """Shared training loop: (merges, final word table). The base
     word-freq relation lives in a persist slot (one cached copy per
     session, replaced on re-invocation — the persist_slot contract), so
@@ -116,7 +115,7 @@ def _train(spark, sf_dir, num_merges: int, docs):
 
     Raises if the corpus exhausts its pairs early — the oracle replays a
     FIXED number of stages, so a short table would silently diverge
-    (fixture corpora are far richer than any sane num_merges)."""
+    (fixture corpora hold far more pairs than DEFAULT_MERGES needs)."""
     wf = persist_slot(
         "bpe_wordfreq",
         piece_freq(spark, sf_dir, docs=docs).select(
@@ -126,7 +125,7 @@ def _train(spark, sf_dir, num_merges: int, docs):
     wf.count()  # materialize once; every round re-reads the cached table
     cur = wf
     merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
+    for _ in range(DEFAULT_MERGES):
         top = (
             cur.select(F.explode(_adjacent_pairs(F.col("w"))).alias("p"), "freq")
             .groupBy("p.l", "p.r")
@@ -138,7 +137,7 @@ def _train(spark, sf_dir, num_merges: int, docs):
         if not top:
             raise ValueError(
                 f"corpus exhausted after {len(merges)} merges "
-                f"(asked for {num_merges})"
+                f"(asked for {DEFAULT_MERGES})"
             )
         a, b = top[0]["l"], top[0]["r"]
         merges.append((a, b))
@@ -147,26 +146,24 @@ def _train(spark, sf_dir, num_merges: int, docs):
 
 
 def train_merges(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> list[tuple[str, str]]:
-    """Learn ``num_merges`` BPE merges; returns [(l, r), …] in rank order."""
-    return _train(spark, sf_dir, num_merges, docs)[0]
+    """Learn DEFAULT_MERGES BPE merges; returns [(l, r), …] in rank order."""
+    return _train(spark, sf_dir, docs)[0]
 
 
 def bpe_vocab(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """The symbol vocabulary AFTER the learned merges: (vocab_id, symbol,
     freq) — the id table a tokenizer ships. freq = corpus occurrences of
     the symbol under the final segmentation; ids assign by (freq desc,
     symbol asc). The global id window runs over vocab-sized input only
-    (≈ alphabet + num_merges symbols — dimension-sized at any corpus
+    (≈ alphabet + DEFAULT_MERGES symbols — dimension-sized at any corpus
     scale; the corpus-sized work is the one word-freq build)."""
     from pyspark.sql import Window
 
-    _, wf_final = _train(spark, sf_dir, num_merges, docs)
+    _, wf_final = _train(spark, sf_dir, docs)
     agg = (
         wf_final.select(F.explode(_symbols(F.col("w"))).alias("symbol"), "freq")
         .groupBy("symbol")
@@ -179,11 +176,10 @@ def bpe_vocab(
 
 
 def bpe_train(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """Query surface: the learned merge table (merge_rank, lhs, rhs)."""
-    merges = train_merges(spark, sf_dir, num_merges, docs=docs)
+    merges = train_merges(spark, sf_dir, docs=docs)
     return spark.createDataFrame(
         [(k, a, b) for k, (a, b) in enumerate(merges)],
         "merge_rank int, lhs string, rhs string",
@@ -191,8 +187,7 @@ def bpe_train(
 
 
 def bpe_encode(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """Full tokenizer INFERENCE under the learned model: (doc_id,
     n_tokens, token_ids) — each document segmented into the learned
@@ -201,13 +196,13 @@ def bpe_encode(
     seq_pack: train → vocab → encode, end-to-end in-engine.
 
     Plan: pieces keep their position (posexplode), the merge chain is
-    the same num_merges JVM replaces as bpe_tokenize, symbols keep
+    the same DEFAULT_MERGES JVM replaces as bpe_tokenize, symbols keep
     their in-piece position (posexplode again), the id lookup is a
     broadcast join against the DIMENSION-sized vocab (alphabet +
-    num_merges symbols), and each document reassembles with ONE ordered
+    DEFAULT_MERGES symbols), and each document reassembles with ONE ordered
     collect over (piece_pos, sym_pos) — one shuffle on doc_id. Every id
     in every array is hash-checked by the replay oracle."""
-    merges, wf_final = _train(spark, sf_dir, num_merges, docs)
+    merges, wf_final = _train(spark, sf_dir, docs)
     from pyspark.sql import Window
 
     vocab = (
@@ -256,17 +251,15 @@ def bpe_encode(
 
 
 def bpe_tokenize(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None, merges: list[tuple[str, str]] | None = None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """(doc_id, n_pieces, n_bpe_tokens): per-document token counts under
     the LEARNED merges — the counts seq_pack/corpus_mix budgets should
-    use. Merges collected once (a ``num_merges``-literal plan table);
-    the apply is explode → num_merges chained JVM replaces → one
+    use. Merges collected once (a DEFAULT_MERGES-literal plan table);
+    the apply is explode → DEFAULT_MERGES chained JVM replaces → one
     count/sum agg: one shuffle, no Python. NULL text ≡ empty doc → the
     explode_outer row keeps it at (0, 0) rather than dropping it."""
-    if merges is None:
-        merges = train_merges(spark, sf_dir, num_merges, docs=docs)
+    merges = train_merges(spark, sf_dir, docs=docs)
     d = docs_input(spark, sf_dir, docs)
     pieces_arr = F.regexp_extract_all(_clean_text(), F.lit(_BPE_PATTERN), 0)
     ex = d.select("doc_id", F.explode_outer(pieces_arr).alias("piece"))
@@ -287,8 +280,7 @@ def bpe_tokenize(
 
 
 def bpe_fertility(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """Per-language tokenizer fertility: BPE tokens per word piece under
     the learned merges — THE metric a tokenizer is judged by across
@@ -299,7 +291,7 @@ def bpe_fertility(
     One bpe_tokenize pass (explode → K chained replaces → per-doc agg)
     joined to the lang dimension, then a language rollup — exact integer
     sums with one guarded IEEE division at the end."""
-    bt = bpe_tokenize(spark, sf_dir, num_merges=num_merges, docs=docs)
+    bt = bpe_tokenize(spark, sf_dir, docs=docs)
     d = (
         docs
         if docs is not None
@@ -331,8 +323,7 @@ MUNCH_STAGES = 12  # oracle replay depth; fixture max piece length is 8
 
 
 def bpe_munch_tokenize(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """DEPLOYMENT-shape tokenizer inference: greedy longest-match
     (maximal munch — the WordPiece/SentencePiece runtime form) against
@@ -348,7 +339,7 @@ def bpe_munch_tokenize(
     Unknown characters (impossible when inference runs over the training
     corpus, but total anyway) emit the single char with vocab_id −1.
 
-    Plan shape: the vocab is DIMENSION-sized (alphabet + num_merges) and
+    Plan shape: the vocab is DIMENSION-sized (alphabet + DEFAULT_MERGES) and
     rides into an Arrow kernel as a first-char-indexed, length-sorted
     python structure — the trie-walk is per-piece CPU work, exactly what
     mapInPandas batches are for; everything else is the bpe_encode
@@ -361,7 +352,7 @@ def bpe_munch_tokenize(
 
     import pandas as pd
 
-    merges, wf_final = _train(spark, sf_dir, num_merges, docs)
+    merges, wf_final = _train(spark, sf_dir, docs)
     from pyspark.sql import Window
 
     vocab_rows = (
@@ -376,7 +367,7 @@ def bpe_munch_tokenize(
             .alias("vocab_id"),
         )
         .collect()
-    )  # dimension-sized: alphabet + num_merges symbols
+    )  # dimension-sized: alphabet + DEFAULT_MERGES symbols
     by_first: dict[str, list[tuple[str, int]]] = {}
     for r in vocab_rows:
         by_first.setdefault(r["symbol"][0], []).append(
@@ -477,8 +468,7 @@ def bpe_munch_tokenize(
 
 
 def tokenizer_divergence(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """Per-document divergence between the two inference forms:
     merge-order replay (bpe_encode — training-faithful) vs maximal munch
@@ -491,8 +481,8 @@ def tokenizer_divergence(
     Both id sequences are ordered per-doc arrays (the bpe_encode collect
     pattern); equality is exact array comparison. One doc_id join; both
     inputs share the training pass shape."""
-    enc = bpe_encode(spark, sf_dir, num_merges=num_merges, docs=docs)
-    m = bpe_munch_tokenize(spark, sf_dir, num_merges=num_merges, docs=docs)
+    enc = bpe_encode(spark, sf_dir, docs=docs)
+    m = bpe_munch_tokenize(spark, sf_dir, docs=docs)
     mids = m.groupBy("doc_id").agg(
         F.transform(
             F.array_sort(
@@ -519,8 +509,7 @@ ONEHOT_POS = 8    # first positions per doc (the ref's bounded target len)
 
 
 def onehot_tensorize(
-    spark: SparkSession, sf_dir: str, num_merges: int = DEFAULT_MERGES,
-    docs=None,
+    spark: SparkSession, sf_dir: str, docs=None
 ) -> DataFrame:
     """M14 — one-hot tensorization of token-id sequences (the reference
     feeds `nn.functional.one_hot(target_tensor, num_classes=input_size)`
@@ -541,7 +530,7 @@ def onehot_tensorize(
     # enc feeds BOTH the positional explode and the vocab-size dim; the
     # encode subtree contains the whole training replay — run it once
     enc = persist_slot(
-        "onehot_enc", bpe_encode(spark, sf_dir, num_merges=num_merges, docs=docs)
+        "onehot_enc", bpe_encode(spark, sf_dir, docs=docs)
     )
     ex = (
         enc.where(F.col("doc_id") % ONEHOT_MOD == 0)

@@ -89,17 +89,20 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return repoint.unionByName(own).distinct()
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
+MAX_ROUNDS = 25  # connected_components' convergence cap
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """(src, dst) undirected edge list → (node, component) assignments,
     component = min node id reachable. Nodes with no edges do not appear
     (callers join back to their entity table for singletons).
 
-    Raises instead of silently truncating if max_rounds is hit — 25 rounds
+    Raises instead of silently truncating if MAX_ROUNDS is hit — 25 rounds
     covers graphs of ~2^25 nodes diameter-wise (convergence is
     O(log n) rounds), so hitting the cap means something is wrong."""
     cur = edges.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
     prev_sig = _checksum(cur)
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         cur = _small_star(_large_star(cur)).localCheckpoint()
         sig = _checksum(cur)
         if sig == prev_sig:
@@ -107,7 +110,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
         prev_sig = sig
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {MAX_ROUNDS} rounds"
         )
     # converged: every edge points node → component min (a star graph);
     # roots appear only on the dst side, so add their self-assignment
@@ -120,19 +123,13 @@ def connected_components(edges: DataFrame, max_rounds: int = 25) -> DataFrame:
     )
 
 
-def duplicate_components(
-    spark,
-    sf_dir,
-    jaccard_threshold: float = 0.8,
-    max_shingle_df: int | None = 10_000,
-    max_bucket_size: int | None = 1_000,
-) -> DataFrame:
+def duplicate_components(spark, sf_dir) -> DataFrame:
     """Cluster-level dedup verdict: every document labeled with its
     duplicate-component id and the component size.
 
     Edges = exact-duplicate pairs (doc → digest-group keeper) ∪
     near_dup_pairs over the persisted doc-array relation — the SAME
-    function and defaults deduplicate_corpus runs, so the two operators
+    function and constants deduplicate_corpus runs, so the two operators
     agree on what counts as a duplicate by construction. Singleton
     documents get their own id as component. A pipeline keeps min(doc_id)
     per component — exactly one survivor per transitive duplicate
@@ -145,9 +142,9 @@ def duplicate_components(
         .select(F.col("doc_id").alias("src"), F.col("keeper_id").alias("dst"))
     )
     base = persist_slot("dup_components_base", minhash_doc_arrays(spark, sf_dir))
-    near_edges = near_dup_pairs(
-        base, jaccard_threshold, max_shingle_df, max_bucket_size
-    ).select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+    near_edges = near_dup_pairs(base).select(
+        F.col("id1").alias("src"), F.col("id2").alias("dst")
+    )
     comp = connected_components(exact_edges.unionByName(near_edges))
     labeled = d.select("doc_id").join(
         comp, d["doc_id"] == comp["node"], "left"

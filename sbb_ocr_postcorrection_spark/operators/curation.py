@@ -33,7 +33,7 @@ from .textstats import lang_id, lm_unigram_score, quality_score, repetition_stat
 from .urls import host_reputation_gate, synth_host_expr
 
 
-def curate_corpus(spark, sf_dir, jaccard_threshold: float = 0.8) -> DataFrame:
+def curate_corpus(spark, sf_dir) -> DataFrame:
     """(doc_id, lang, source, keep, reason) — the end-to-end curation
     verdict. Reason precedence: exact_dup / near_dup (from the dedup
     composite) > contaminated > lang_filtered > bad_host > low_quality >
@@ -58,9 +58,7 @@ def curate_corpus(spark, sf_dir, jaccard_threshold: float = 0.8) -> DataFrame:
     sh = mh_base.select(
         "doc_id", "lang", F.explode("sh_arr").alias("shingle")
     )
-    dd = deduplicate_corpus(
-        spark, sf_dir, jaccard_threshold=jaccard_threshold, base=mh_base
-    ).select(
+    dd = deduplicate_corpus(spark, sf_dir, base=mh_base).select(
         "doc_id",
         "lang",
         "source",
@@ -120,13 +118,13 @@ def curate_corpus(spark, sf_dir, jaccard_threshold: float = 0.8) -> DataFrame:
     )
 
 
-def curation_report(spark, sf_dir, jaccard_threshold: float = 0.8) -> DataFrame:
+def curation_report(spark, sf_dir) -> DataFrame:
     """Per-(source, reason) rollup of the curation verdict with the share
     of the source it represents — the acceptance report a corpus build
     prints per slice. The window runs over the ALREADY-AGGREGATED
     (source × reason) relation (≤ sources × 9 reasons rows), so its
     shuffle is trivial; the heavy lifting is the verdict itself."""
-    v = curate_corpus(spark, sf_dir, jaccard_threshold=jaccard_threshold)
+    v = curate_corpus(spark, sf_dir)
     agg = v.groupBy("source", "reason").agg(F.count(F.lit(1)).alias("n_docs"))
     tot = Window.partitionBy("source")
     return agg.select(

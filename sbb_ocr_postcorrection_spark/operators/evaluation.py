@@ -28,21 +28,18 @@ def _prf_exprs(prec_name: str = "prec", rec_name: str = "rec", f1_name: str = "f
     ]
 
 
-def confusion_metrics(
-    df: DataFrame, pred_col, truth_col, group_cols: tuple[str, ...] = ()
-) -> DataFrame:
+def confusion_metrics(df: DataFrame, pred_col, truth_col) -> DataFrame:
     """Confusion cells + P/R/F1/accuracy per group in a single two-phase
     aggregation. pred/truth are boolean columns (or expressions)."""
     p = pred_col.cast("int")
     t = truth_col.cast("int")
-    base = df.groupBy(*group_cols).agg(
+    base = df.groupBy().agg(
         F.sum(p * t).alias("tp"),
         F.sum(p * (1 - t)).alias("fp"),
         F.sum((1 - p) * t).alias("fn"),
         F.sum((1 - p) * (1 - t)).alias("tn"),
     )
     return base.select(
-        *group_cols,
         "tp",
         "fp",
         "fn",
@@ -63,7 +60,6 @@ def detector_eval(spark, sf_dir) -> DataFrame:
         e,
         pred_col=(F.col("value") > 15),
         truth_col=(F.col("event_type") == "purchase"),
-        group_cols=(),
     )
 
 

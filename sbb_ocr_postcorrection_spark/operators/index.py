@@ -59,25 +59,22 @@ def inverted_index(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     )
 
 
-def keyword_search(
-    spark: SparkSession, sf_dir: str, docs=None,
-    n_terms: int = SEARCH_TERMS, k: int = SEARCH_K,
-) -> DataFrame:
+def keyword_search(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """Conjunctive (AND) multi-term query: (rank, doc_id, score).
 
-    The driver fixture derives its probe terms IN-PLAN — the n_terms
+    The driver fixture derives its probe terms IN-PLAN — the SEARCH_TERMS
     globally most frequent tokens (cf desc, token asc tie-break) — so
     the whole query is self-contained and SQL-replayable; a real caller
     passes its own term dimension the same way. A document matches when
     it carries ALL probed terms (count(distinct matched terms) ==
-    n_terms inside the one scoring aggregation); score = total tf of
-    the probed terms, integer; top-k by (score desc, doc_id asc)."""
+    SEARCH_TERMS inside the one scoring aggregation); score = total tf of
+    the probed terms, integer; top-SEARCH_K by (score desc, doc_id asc)."""
     tf = token_postings(spark, sf_dir, docs=docs)
     terms = (
         tf.groupBy("token")
         .agg(F.sum("tf").alias("cf"))
         .orderBy(F.desc("cf"), F.asc("token"))
-        .limit(n_terms)
+        .limit(SEARCH_TERMS)
         .select("token")
     )
     hits = (
@@ -87,9 +84,9 @@ def keyword_search(
             F.count(F.lit(1)).alias("n_matched"),
             F.sum("tf").alias("score"),
         )
-        .filter(F.col("n_matched") == n_terms)
+        .filter(F.col("n_matched") == SEARCH_TERMS)
     )
-    topk = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    topk = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(SEARCH_K)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return topk.select(
         F.row_number().over(w).cast("int").alias("rank"),
@@ -98,10 +95,7 @@ def keyword_search(
     )
 
 
-def keyword_search_bm25(
-    spark: SparkSession, sf_dir: str, docs=None,
-    n_terms: int = SEARCH_TERMS, k: int = SEARCH_K,
-) -> DataFrame:
+def keyword_search_bm25(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """BM25-weighted ranked retrieval over the postings (VERDICT r4
     next-step #4): (rank, doc_id, score) — keyword_search's integer-tf
     ranking upgraded with document-length saturation and rarity
@@ -125,7 +119,7 @@ def keyword_search_bm25(
     Scale shape: probe terms broadcast; the postings scan touches only
     their postings; doc-length join is one equality shuffle on doc_id
     (doc-dimension-sized, NOT broadcast); corpus constants (N, TT) ride
-    in as a broadcast 1-row cross join; top-k is TakeOrderedAndProject."""
+    in as a broadcast 1-row cross join; top-SEARCH_K is TakeOrderedAndProject."""
     d = docs_input(spark, sf_dir, docs)
     tf = token_postings(spark, sf_dir, docs=d)
     stats = tf.groupBy("token").agg(
@@ -133,7 +127,7 @@ def keyword_search_bm25(
     )
     terms = (
         stats.orderBy(F.desc("cf"), F.asc("token"))
-        .limit(n_terms)
+        .limit(SEARCH_TERMS)
         .select("token", "df")
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
@@ -165,9 +159,9 @@ def keyword_search_bm25(
                 4,
             ).alias("score"),
         )
-        .filter(F.col("n_matched") == n_terms)
+        .filter(F.col("n_matched") == SEARCH_TERMS)
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(SEARCH_K)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return topk.select(
         F.row_number().over(w).cast("int").alias("rank"), "doc_id", "score"
@@ -177,11 +171,9 @@ def keyword_search_bm25(
 RARE_TERMS_K = 3
 
 
-def rare_terms(
-    spark: SparkSession, sf_dir: str, docs=None, k: int = RARE_TERMS_K,
-) -> DataFrame:
+def rare_terms(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """Per-document distinctive terms: (doc_id, rnk, token, tf, df) — the
-    k terms ranked by (df asc, tf desc, token asc). This is the
+    RARE_TERMS_K terms ranked by (df asc, tf desc, token asc). This is the
     keyword-extraction / routing-signal op (what is this page ABOUT)
     done integer-only: classic TF-IDF's log-idf is a float whose libm
     rounding differs across engines, but its RANKING inside a document
@@ -204,15 +196,12 @@ def rare_terms(
     )
     return (
         j.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= RARE_TERMS_K)
         .select("doc_id", "rnk", "token", "tf", "df")
     )
 
 
-def phrase_search(
-    spark: SparkSession, sf_dir: str, docs=None,
-    phrase: list[str] | None = None,
-) -> DataFrame:
+def phrase_search(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
     """Exact phrase lookup via positional postings: (doc_id, n_matches,
     first_pos) for every document containing the phrase with exact
     token adjacency — the contamination-audit query an inverted index
@@ -228,36 +217,30 @@ def phrase_search(
     equality join + two aggregations on doc-keyed groups; no arrays
     cross task boundaries.
 
-    The driver fixture self-derives the phrase as the corpus' most
-    frequent bigram (count desc, bigram asc — one collect of one row,
-    the BPE-loop discipline); real callers pass their benchmark
-    string's tokens."""
+    The phrase is the corpus' most frequent bigram (count desc, bigram
+    asc — one collect of one row, the BPE-loop discipline)."""
     d = docs_input(spark, sf_dir, docs)
     toks = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    if phrase is None:
-        bigram_arr = F.when(
-            F.size("toks") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - 1),
-                lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, 2)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        top = (
-            toks.select(F.explode(bigram_arr).alias("bigram"))
-            .groupBy("bigram")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .orderBy(F.desc("c"), F.asc("bigram"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            # BPE-exhaustion-guard convention: a corpus where no document
-            # has >= 2 tokens gives an empty collect, not an IndexError
-            raise ValueError(
-                "corpus has no bigrams to derive a phrase from; "
-                "pass phrase= explicitly"
-            )
-        phrase = top[0]["bigram"].split(" ")
+    bigram_arr = F.when(
+        F.size("toks") >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size("toks") - 1),
+            lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, 2)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    top = (
+        toks.select(F.explode(bigram_arr).alias("bigram"))
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.desc("c"), F.asc("bigram"))
+        .limit(1)
+        .collect()
+    )
+    if not top:
+        # BPE-exhaustion-guard convention: a corpus where no document
+        # has >= 2 tokens gives an empty collect, not an IndexError
+        raise ValueError("corpus has no bigrams to derive a phrase from")
+    phrase = top[0]["bigram"].split(" ")
     ph = spark.createDataFrame(
         [(t, i) for i, t in enumerate(phrase)], "token string, off int"
     )
@@ -280,10 +263,8 @@ COLL_MIN = 5         # min bigram count (the standard sparse-pair gate)
 COLL_K = 100         # reported collocations
 
 
-def collocations(
-    spark: SparkSession, sf_dir: str, docs=None, k: int = COLL_K
-) -> DataFrame:
-    """Top-k collocations: adjacent token pairs ranked by integer
+def collocations(spark: SparkSession, sf_dir: str, docs=None) -> DataFrame:
+    """Top-COLL_K collocations: adjacent token pairs ranked by integer
     pointwise-mutual-information lift — the corpus-statistics surface a
     tokenizer-vocabulary or phrase-mining pass starts from (and BPE's
     merge criterion, raw pair count, is its count-only cousin).
@@ -300,7 +281,7 @@ def collocations(
     self-join of positions); two two-phase counts (pairs, unigrams); the
     unigram join keys are token-dimension-sized but NOT broadcast (open
     vocabulary grows with the corpus — sort-merge + AQE handles it);
-    top-k is TakeOrderedAndProject, never a global sort.
+    top-COLL_K is TakeOrderedAndProject, never a global sort.
     """
     d = docs_input(spark, sf_dir, docs)
     toks = d.select(_tokens(F.col("text")).alias("t"))
@@ -336,7 +317,7 @@ def collocations(
     )
     return scored.orderBy(
         F.desc("lift_fp"), F.asc("w1"), F.asc("w2")
-    ).limit(k)
+    ).limit(COLL_K)
 
 
 CMS_DEPTH = 4       # hash rows
@@ -483,11 +464,11 @@ def hll_distinct_tokens(spark, sf_dir, docs=None) -> DataFrame:
 KEYTERMS_K = 3
 
 
-def doc_keyterms(spark, sf_dir, k: int = KEYTERMS_K, docs=None) -> DataFrame:
+def doc_keyterms(spark, sf_dir, docs=None) -> DataFrame:
     """Per-document key terms by integer TF-IDF — extractive tagging for
     retrieval/routing exports: score(d, t) = c_dt · (ilog2(N_docs) −
     ilog2(df_t)), exact int64 under the Mitchell fixed-point log2
-    (operators/selection discipline; idf ≥ 0 since df ≤ N). Top-k per
+    (operators/selection discipline; idf ≥ 0 since df ≤ N). Top-KEYTERMS_K per
     doc via a doc-keyed window (scales with the corpus), pinned ties.
 
     Scale shape: df is one aggregation to the vocabulary dim; the
@@ -530,7 +511,7 @@ def doc_keyterms(spark, sf_dir, k: int = KEYTERMS_K, docs=None) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= KEYTERMS_K)
         .select(
             "doc_id",
             F.col("rank").cast("int").alias("rank"),

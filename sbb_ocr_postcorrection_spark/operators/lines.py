@@ -153,16 +153,13 @@ def _reassemble_arr(base, covered):
     )
 
 
-def line_dedup(
-    spark, sf_dir, n_line_toks: int = LINE_TOKS, hot_df: int = HOT_LINE_DF,
-    docs=None,
-) -> DataFrame:
+def line_dedup(spark, sf_dir, docs=None) -> DataFrame:
     """Inter-document repeated-line removal (the RefinedWeb/CCNet-style
-    boilerplate-line filter): a line occurring in ≥ hot_df distinct
+    boilerplate-line filter): a line occurring in ≥ HOT_LINE_DF distinct
     documents is dropped from EVERY document, and each document is
     reassembled from its surviving lines in order.
 
-    Lines are consecutive ``n_line_toks``-token chunks of the lowercased
+    Lines are consecutive ``LINE_TOKS``-token chunks of the lowercased
     token stream — deterministic and SQL-expressible on both engines (the
     same convention pdf_layout uses), standing in for newline-split lines
     the synthetic corpus doesn't have.
@@ -171,7 +168,7 @@ def line_dedup(
     once (persisted — it feeds the hot-line aggregation and the final
     reassembly; Spark reuses exchanges, not arbitrary lineage). The
     hot-line set is a two-phase aggregation over the exploded view whose
-    RESULT is tiny by construction (lines repeated across ≥ hot_df docs —
+    RESULT is tiny by construction (lines repeated across ≥ HOT_LINE_DF docs —
     boilerplate vocabulary, not corpus-sized), so marking is a broadcast
     join producing the covered (doc_id, pos) set, which scales with the
     number of CONTAMINATED documents; reassembly is per-row array math
@@ -182,12 +179,12 @@ def line_dedup(
     of vanishing (ADVICE r1 #3).
     """
     d = docs if docs is not None else load(spark, sf_dir, "documents")
-    base = persist_slot("line_dedup_base", _doc_lines(d, n_line_toks))
+    base = persist_slot("line_dedup_base", _doc_lines(d, LINE_TOKS))
     rows = base.select("doc_id", F.posexplode("lns").alias("pos", "line"))
     hot = (
         rows.groupBy("line")
         .agg(F.countDistinct("doc_id").alias("line_df"))
-        .filter(F.col("line_df") >= hot_df)
+        .filter(F.col("line_df") >= HOT_LINE_DF)
         .select("line")
     )
     covered = (
@@ -206,17 +203,14 @@ HOT_PASSAGE_DF = 5
 PASSAGE_BOILER = "this website uses cookies please accept"
 
 
-def passage_dedup(
-    spark, sf_dir, p_lines: int = PASSAGE_LINES, hot_df: int = HOT_PASSAGE_DF,
-    n_line_toks: int = LINE_TOKS, docs=None,
-) -> DataFrame:
+def passage_dedup(spark, sf_dir, docs=None) -> DataFrame:
     """Inter-document repeated-PASSAGE removal: the span-coverage form of
     boilerplate filtering. line_dedup drops lines that individually repeat
     across documents; real boilerplate (cookie banners, nav footers,
     license headers) spans SEVERAL consecutive lines whose pieces may be
     too generic (high-df noise) or too rare (below line df) on their own.
-    Here every sliding window of ``p_lines`` consecutive lines is a
-    passage; a passage repeated in ≥ hot_df distinct documents marks ALL
+    Here every sliding window of ``PASSAGE_LINES`` consecutive lines is a
+    passage; a passage repeated in ≥ HOT_PASSAGE_DF distinct documents marks ALL
     the line positions it covers in every document carrying it, and
     covered lines are dropped before reassembly — the RefinedWeb
     "remove duplicated spans" semantic, position-aware (only the lines
@@ -235,10 +229,10 @@ def passage_dedup(
     (doc_id, pos). No join ever shuffles on anything but doc_id.
 
     Degenerate-window rules (review-pinned): documents SHORTER than
-    p_lines emit no passages at all — whole-document duplication is
-    exact-dedup's job, and a truncated window would let ≥hot_df identical
+    PASSAGE_LINES emit no passages at all — whole-document duplication is
+    exact-dedup's job, and a truncated window would let ≥HOT_PASSAGE_DF identical
     one-line docs blank each other out entirely; and the empty-string
-    passage can never go hot — ≥hot_df empty docs must each keep their
+    passage can never go hot — ≥HOT_PASSAGE_DF empty docs must each keep their
     '' sentinel line (the empty-doc-kept contract line_dedup pins).
 
     The driver fixture (docs=None) prepends PASSAGE_BOILER to every even
@@ -258,8 +252,8 @@ def passage_dedup(
         )
     else:
         d = docs
-    base = persist_slot("passage_dedup_base", _doc_lines(d, n_line_toks))
-    # NO truncated windows: a doc shorter than p_lines contributes no
+    base = persist_slot("passage_dedup_base", _doc_lines(d, LINE_TOKS))
+    # NO truncated windows: a doc shorter than PASSAGE_LINES contributes no
     # passages (guarded — Spark's sequence(1, 0) counts DOWN, it is not
     # empty). Such docs can then never be covered and keep everything.
     # r7: the line arrays are already per-doc, so the old explode →
@@ -267,10 +261,10 @@ def passage_dedup(
     # relation are gone; passages explode straight off the cached arrays
     # for both consumers.
     windows = F.when(
-        F.size("lns") >= p_lines,
+        F.size("lns") >= PASSAGE_LINES,
         F.transform(
-            F.sequence(F.lit(1), F.size("lns") - (p_lines - 1)),
-            lambda i: F.concat_ws(" ", F.slice("lns", i, p_lines)),
+            F.sequence(F.lit(1), F.size("lns") - (PASSAGE_LINES - 1)),
+            lambda i: F.concat_ws(" ", F.slice("lns", i, PASSAGE_LINES)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     passages = base.select(
@@ -282,7 +276,7 @@ def passage_dedup(
         # the all-empty-lines passage never goes hot: empty docs keep
         # their sentinel line
         .filter(
-            (F.col("passage_df") >= hot_df)
+            (F.col("passage_df") >= HOT_PASSAGE_DF)
             & (F.trim(F.col("passage")) != "")
         )
         .select("passage")
@@ -292,7 +286,7 @@ def passage_dedup(
         .select(
             "doc_id",
             F.explode(
-                F.sequence(F.col("wpos"), F.col("wpos") + (p_lines - 1))
+                F.sequence(F.col("wpos"), F.col("wpos") + (PASSAGE_LINES - 1))
             ).alias("pos"),
         )
         .groupBy("doc_id")

@@ -182,9 +182,7 @@ def _rank_loop(
 HITS_ITERS = 3  # unnormalized int64 growth ≤ (maxdeg²)^K = 10^12 « 2^63
 
 
-def host_hits(
-    spark: SparkSession, sf_dir: str, iters: int = HITS_ITERS
-) -> DataFrame:
+def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over the distinct host
     graph — the query-independent link-analysis companion to PageRank:
     a node is a good AUTHORITY if good hubs point at it and a good HUB
@@ -215,7 +213,7 @@ def host_hits(
     scores = nodes.select(
         "id", F.lit(1).cast("long").alias("a"), F.lit(1).cast("long").alias("h")
     )
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         # authorities from hubs: a(i) = Σ_{j→i} h(j)
         a_new = (
             edges.join(scores, edges.src_id == scores.id)
@@ -249,23 +247,19 @@ def host_hits(
     )
 
 
-def host_pagerank(
-    spark: SparkSession, sf_dir: str, iters: int = PR_ITERS
-) -> DataFrame:
+def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer fixed-point PageRank over the distinct host graph.
 
     Classic unweighted PageRank (distinct edges — multi-links collapse,
     the simple-graph convention) with uniform dangling redistribution.
     """
-    return _rank_loop(spark, sf_dir, iters, seed_mod=None)
+    return _rank_loop(spark, sf_dir, PR_ITERS, seed_mod=None)
 
 
 TRUST_SEED_MOD = 10  # trusted seed set: host ids divisible by 10
 
 
-def host_trustrank(
-    spark: SparkSession, sf_dir: str, iters: int = PR_ITERS
-) -> DataFrame:
+def host_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TrustRank (Gyöngyi et al. 2004): personalized PageRank whose
     teleport vector is restricted to a trusted seed set, the standard
     link-spam demotion / crawl-prioritization companion to PageRank.
@@ -273,7 +267,7 @@ def host_trustrank(
     because no teleport mass lands outside the seeds. Seed set here is
     the deterministic {id % 10 == 0}; a curated allowlist swaps in as a
     dimension relation without touching the loop."""
-    return _rank_loop(spark, sf_dir, iters, seed_mod=TRUST_SEED_MOD)
+    return _rank_loop(spark, sf_dir, PR_ITERS, seed_mod=TRUST_SEED_MOD)
 
 
 def page_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,9 +366,7 @@ SPAM_SCALE = 10**6        # fixed-point unit for spam-mass share
 SPAM_THRESHOLD_FP = 900_000  # flag hosts whose rank is ≥ 90 % untrusted
 
 
-def host_spam_mass(
-    spark: SparkSession, sf_dir: str, iters: int = PR_ITERS
-) -> DataFrame:
+def host_spam_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spam-mass estimation (Gyöngyi, Berkhin, Garcia-Molina, Pedersen,
     VLDB 2006): the fraction of a host's PageRank NOT backed by trust —
     spam_mass = (PR − TR) / PR with both ranks from the shared integer
@@ -393,10 +385,10 @@ def host_spam_mass(
     Scale shape: two rank loops over the shared edge relation plus ONE
     host-dimension equality join; PR > 0 for every node by construction
     (uniform teleport), so no division guard is needed."""
-    pr = host_pagerank(spark, sf_dir, iters=iters).select(
+    pr = host_pagerank(spark, sf_dir).select(
         "host", F.col("rank_fp").alias("pagerank_fp")
     )
-    tr = host_trustrank(spark, sf_dir, iters=iters).select(
+    tr = host_trustrank(spark, sf_dir).select(
         "host", F.col("rank_fp").alias("trustrank_fp")
     )
     sm = F.expr(
@@ -454,9 +446,7 @@ def link_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 LPA_ITERS = 4  # synchronous label-propagation rounds (oracle replays K)
 
 
-def host_communities(
-    spark: SparkSession, sf_dir: str, iters: int = LPA_ITERS
-) -> DataFrame:
+def host_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection on the host graph: synchronous label
     propagation (Raghavan, Albert, Kumara 2007) — every node adopts the
     most frequent label among its undirected neighbors each round, ties
@@ -490,7 +480,7 @@ def host_communities(
     labels = adj.select("v").distinct().select(
         "v", F.col("v").cast("long").alias("lab")
     )
-    for _ in range(iters):
+    for _ in range(LPA_ITERS):
         votes = (
             adj.join(
                 labels.select(F.col("v").alias("u"), "lab"), "u"
@@ -516,9 +506,7 @@ def host_communities(
     )
 
 
-def community_profiles(
-    spark: SparkSession, sf_dir: str, iters: int = PR_ITERS
-) -> DataFrame:
+def community_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community-level curation rollup: join the LPA communities onto the
     spam-mass relation and aggregate — (community_id, n_hosts,
     pagerank_fp, trustrank_fp, spam_mass_fp, n_spam_hosts). The decision
@@ -531,7 +519,7 @@ def community_profiles(
     division, and a spam-candidate count. One host-equality join of two
     host-dimension relations + one community rollup."""
     comm = host_communities(spark, sf_dir)
-    sm = host_spam_mass(spark, sf_dir, iters=iters)
+    sm = host_spam_mass(spark, sf_dir)
     j = comm.join(sm, "host")
     agg = j.groupBy("community_id").agg(
         F.count(F.lit(1)).alias("n_hosts"),

@@ -77,9 +77,10 @@ def decode_metadata(spark, sf_dir) -> DataFrame:
 
 RESIZE_SCHEMA = "doc_id long, width int, height int, thumb_width int, thumb_height int, thumb_bytes int"
 _FEATURE_DIM = 16
+THUMB_MAX_SIDE = 64  # thumbnail bound of resize_batch
 
 
-def resize_batch(batches: Iterator[pd.DataFrame], max_side: int = 64) -> Iterator[pd.DataFrame]:
+def resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Resize plumbing: aspect-preserving thumbnail geometry. Real impl:
     PIL Image.thumbnail; the geometry math (the part a planner sees) is
     real, the pixel work is the stubbed codec."""
@@ -88,7 +89,7 @@ def resize_batch(batches: Iterator[pd.DataFrame], max_side: int = 64) -> Iterato
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
             b = bytes(payload) if payload is not None else b""
             w, h, c, _ = _fake_decode(b)
-            scale = min(1.0, max_side / max(w, h)) if w and h else 0.0
+            scale = min(1.0, THUMB_MAX_SIDE / max(w, h)) if w and h else 0.0
             tw, th = int(w * scale), int(h * scale)
             rows.append({"doc_id": doc_id, "width": w, "height": h,
                          "thumb_width": tw, "thumb_height": th,
@@ -145,12 +146,15 @@ def feature_components(spark, sf_dir) -> DataFrame:
     return payloads.mapInPandas(feature_histogram_batch, schema=HIST_SCHEMA)
 
 
-def frame_sample_plan(spark, sf_dir, every_n: int = 10) -> DataFrame:
+FRAME_EVERY = 10  # frame_sample keeps doc_id % FRAME_EVERY == 0
+
+
+def frame_sample_plan(spark, sf_dir) -> DataFrame:
     """Frame-sampling plumbing: deterministic 1-in-N sample keyed on doc_id
     (the video-frame analog: sample before decode, prune early)."""
     d = load(spark, sf_dir, "documents")
     return (
-        d.filter(F.pmod(F.col("doc_id"), F.lit(every_n)) == 0)
+        d.filter(F.pmod(F.col("doc_id"), F.lit(FRAME_EVERY)) == 0)
         .select("doc_id", F.length("text").alias("payload_len"))
     )
 

@@ -3,7 +3,7 @@ training context windows.
 
 The last step of a training-data pipeline: documents are concatenated (an
 EOS slot after each) and the stream is cut into fixed-size windows
-(seq_len tokens). A window usually spans several short documents or a
+(SEQ_LEN tokens). A window usually spans several short documents or a
 slice of one long document. This operator computes the layout — which
 window(s) each document lands in and per-window occupancy — from token
 COUNTS only (pure integer arithmetic, so the whole layout is
@@ -18,12 +18,12 @@ range; per-bucket totals (a tiny two-phase aggregation) get their own
 running offsets; each document's offset = its bucket's offset + a
 within-bucket cumsum, where the window is partitioned BY BUCKET — every
 partition-level window is parallel and bounded by the bucket size. The
-bucket-offset relation has |corpus|/bucket_docs rows and is itself
+bucket-offset relation has |corpus|/BUCKET_DOCS rows and is itself
 prefix-summed the SAME way (buckets → super-buckets): the only
-single-partition window in the whole plan runs over |corpus|/bucket_docs²
-super rows — a trillion docs at bucket_docs=10^4 is 10^8 buckets but only
+single-partition window in the whole plan runs over |corpus|/BUCKET_DOCS²
+super rows — a trillion docs at BUCKET_DOCS=10^4 is 10^8 buckets but only
 10^4 super rows through one task (the toy default of 64 keeps the
-test-scale plan multi-bucket; tests pass smaller bucket_docs to exercise
+test-scale plan multi-bucket; tests patch a smaller BUCKET_DOCS to exercise
 the multi-super path too). The within-bucket window and the final per-window
 aggregation shuffle on different keys (bucket, then window_id) — two
 exchanges plus the small bucket rollup, no global sort anywhere. All
@@ -37,15 +37,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .relational import load, persist_slot
 
-# defaults — the DuckDB oracle interpolates THESE constants
+# layout constants — the DuckDB oracle interpolates THESE constants
 SEQ_LEN = 128
 BUCKET_DOCS = 64
 
 
-def _pack_spans(
-    spark, sf_dir, seq_len: int = SEQ_LEN, bucket_docs: int = BUCKET_DOCS,
-    docs=None,
-) -> DataFrame:
+def _pack_spans(spark, sf_dir, docs=None) -> DataFrame:
     """The packing layout's doc↔window span relation: (doc_id, window_id,
     slots_here) — shared by sequence_pack (per-window rollup) and
     shard_manifest (per-shard provenance rollup). Two-level prefix sum,
@@ -58,7 +55,7 @@ def _pack_spans(
     # single-threaded) — hashing on bkt (r7) instead of round-robin means
     # the bucket rollup's groupBy(bkt) and the within-bucket window both
     # reuse the cached partitioning: two corpus exchanges gone; bkt =
-    # doc_id DIV bucket_docs is uniform by construction, so no skew.
+    # doc_id DIV BUCKET_DOCS is uniform by construction, so no skew.
     # persist: counts feeds BOTH the bucket rollup and the placement — the
     # corpus-wide tokenize is the dominant cost and must run once.
     # +1: the EOS slot after every document
@@ -66,7 +63,7 @@ def _pack_spans(
         "seq_pack_counts",
         d.select(
             "doc_id",
-            F.expr(f"doc_id DIV {int(bucket_docs)}").alias("bkt"),
+            F.expr(f"doc_id DIV {BUCKET_DOCS}").alias("bkt"),
             "text",
         )
         .repartition(spark.sparkContext.defaultParallelism, "bkt")
@@ -87,10 +84,10 @@ def _pack_spans(
     # "recurse if one level is not enough", delivered): buckets group into
     # super-buckets, the within-super cumsum is partitioned (parallel), and
     # the only single-partition window left runs over the SUPER rollup —
-    # |corpus| / bucket_docs² rows (10^12 docs at bucket_docs=10^4 → 10^4
+    # |corpus| / BUCKET_DOCS² rows (10^12 docs at BUCKET_DOCS=10^4 → 10^4
     # super rows through one task, instead of 10^8 buckets).
     bkt_totals = counts.groupBy("bkt").agg(F.sum("n_slots").alias("bkt_slots"))
-    sb = F.expr(f"bkt DIV {int(bucket_docs)}")
+    sb = F.expr(f"bkt DIV {BUCKET_DOCS}")
     super_w = Window.orderBy("sbkt").rowsBetween(Window.unboundedPreceding, -1)
     super_offsets = (
         bkt_totals.groupBy(sb.alias("sbkt"))
@@ -119,9 +116,9 @@ def _pack_spans(
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    # no forced broadcast hint: at sane bucket_docs the offsets relation
+    # no forced broadcast hint: at sane BUCKET_DOCS the offsets relation
     # is tiny and the planner broadcasts it on stats; a forced hint would
-    # OOM if a caller mis-sizes bucket_docs on a huge corpus
+    # OOM if a caller mis-sizes BUCKET_DOCS on a huge corpus
     placed = (
         counts.withColumn(
             "in_bkt_off", F.coalesce(F.sum("n_slots").over(doc_w), F.lit(0))
@@ -135,8 +132,8 @@ def _pack_spans(
     )
     # each doc spans windows floor(off/W) .. floor((off+n_slots-1)/W);
     # slots of doc in window w = overlap of [off, off+n) with [wW, (w+1)W)
-    w0 = F.expr(f"off DIV {int(seq_len)}")
-    w1 = F.expr(f"(off + n_slots - 1) DIV {int(seq_len)}")
+    w0 = F.expr(f"off DIV {SEQ_LEN}")
+    w1 = F.expr(f"(off + n_slots - 1) DIV {SEQ_LEN}")
     spans = placed.select(
         "doc_id",
         "off",
@@ -148,24 +145,21 @@ def _pack_spans(
         (
             F.least(
                 F.col("off") + F.col("n_slots"),
-                (F.col("window_id") + 1) * seq_len,
+                (F.col("window_id") + 1) * SEQ_LEN,
             )
-            - F.greatest(F.col("off"), F.col("window_id") * seq_len)
+            - F.greatest(F.col("off"), F.col("window_id") * SEQ_LEN)
         ).alias("slots_here"),
     )
     return spans
 
 
-def sequence_pack(
-    spark, sf_dir, seq_len: int = SEQ_LEN, bucket_docs: int = BUCKET_DOCS,
-    docs=None,
-) -> DataFrame:
+def sequence_pack(spark, sf_dir, docs=None) -> DataFrame:
     """Per context window: (window_id, n_tokens, n_docs, first_doc,
-    last_doc). n_tokens == seq_len for every window except the last
+    last_doc). n_tokens == SEQ_LEN for every window except the last
     (n_tokens counts occupied slots: document tokens + one EOS slot per
     document, truncated at the stream end).
     """
-    spans = _pack_spans(spark, sf_dir, seq_len, bucket_docs, docs=docs)
+    spans = _pack_spans(spark, sf_dir, docs=docs)
     return spans.groupBy("window_id").agg(
         F.sum("slots_here").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_docs"),
@@ -177,10 +171,7 @@ def sequence_pack(
 SHARD_WINDOWS = 8  # context windows per output shard
 
 
-def shard_manifest(
-    spark, sf_dir, seq_len: int = SEQ_LEN, shard_windows: int = SHARD_WINDOWS,
-    docs=None,
-) -> DataFrame:
+def shard_manifest(spark, sf_dir, docs=None) -> DataFrame:
     """Per-output-shard provenance manifest — the data card a trainer
     reads before consuming a shard: how many tokens/docs, how many
     distinct sources feed it, which source dominates (by occupied
@@ -197,8 +188,8 @@ def shard_manifest(
     dominant-source pick is a window over that dimension, not the
     corpus."""
     d = docs if docs is not None else load(spark, sf_dir, "documents")
-    spans = _pack_spans(spark, sf_dir, seq_len, docs=docs).withColumn(
-        "shard_id", F.expr(f"window_id DIV {int(shard_windows)}")
+    spans = _pack_spans(spark, sf_dir, docs=docs).withColumn(
+        "shard_id", F.expr(f"window_id DIV {SHARD_WINDOWS}")
     )
     attrs = d.select("doc_id", "source", "lang")
     sp = spans.join(attrs, "doc_id")

@@ -33,10 +33,14 @@ def parse_pdf_layout(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows, columns=["url", "page", "pos", "x", "y", "line"])
 
 
-def pdfs_from_documents(spark, sf_dir, words_per_line: int = 8):
+PDF_WORDS_PER_LINE = 8  # line wrap of the synthesized PDFs
+
+
+def pdfs_from_documents(spark, sf_dir):
     """Synthesize a (url, pdf) table from documents.text — deterministic
     line-wrapping, two pages per doc — inside an Arrow kernel (the pdf
     writer is Python)."""
+    words_per_line = PDF_WORDS_PER_LINE  # read on the driver, shipped in the kernel
     d = docs_input(spark, sf_dir)
 
     def kernel(batches):

@@ -1,8 +1,10 @@
 """Core relational operators (SURVEY.md §2.2-2.7 mappings).
 
-Each function takes (spark, sf_dir) and returns a DataFrame; the matching
-DuckDB oracle SQL lives in queries.py. Every computed column is aliased so
-Spark and oracle column names agree (driver hash contract).
+Each operator takes (spark, sf_dir) and returns a DataFrame; the matching
+DuckDB oracle SQL lives in queries.py. The helpers above the operators
+(load, spread_scan, docs_input, persist_slot, cents) are the input and
+caching plumbing the whole operator layer shares. Every computed column
+is aliased so Spark and oracle column names agree (driver hash contract).
 
 Scale notes are inline per operator: which side broadcasts, where the
 shuffle lands, why the plan survives 100× data.
@@ -17,18 +19,24 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def spread_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh scan of table ``name`` spread round-robin over the cores —
+    the toy parquet is one split, which would otherwise run the whole
+    operator as a single task."""
+    return load(spark, sf_dir, name).repartition(
+        spark.sparkContext.defaultParallelism
+    )
+
+
 def docs_input(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> DataFrame:
     """The per-document operator input: an injected (shared/cached)
-    relation when composing (operators/curation.py), else a fresh documents
-    scan spread round-robin over the cores — the toy parquet is one split,
-    which would otherwise run the whole operator as a single task."""
+    relation when composing (operators/curation.py), else the spread
+    documents scan."""
     if docs is not None:
         return docs
-    return load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    return spread_scan(spark, sf_dir, "documents")
 
 
 _PERSIST_SLOTS: dict[str, DataFrame] = {}

@@ -201,17 +201,17 @@ def dsir_score(spark, sf_dir, docs=None) -> DataFrame:
     )
 
 
-def dsir_sample(spark, sf_dir, k: int = DSIR_K, docs=None) -> DataFrame:
-    """DSIR step 3 — Gumbel-race top-k resample of the RAW pool.
+def dsir_sample(spark, sf_dir, docs=None) -> DataFrame:
+    """DSIR step 3 — Gumbel-race top-DSIR_K resample of the RAW pool.
 
     The paper samples ∝ exp(score/τ) without replacement; the
     deterministic analog is the exponential race (Efraimidis–Spirakis):
     draw u_d uniform from md5(doc_id), E_d = −log2(u_d) is exponential,
     and the winners minimize log2(E_d) − score_d/τ. In fixed point:
     race_key = TAU·ilog2(E_d) − score_d (MULTIPLYING by the temperature
-    so no division ever sees a negative score). Top-k is
-    orderBy(...).limit(k) → TakeOrderedAndProject: each partition keeps
-    k rows, no global sort at any scale."""
+    so no division ever sees a negative score). Top-DSIR_K is
+    orderBy(...).limit(DSIR_K) → TakeOrderedAndProject: each partition keeps
+    DSIR_K rows, no global sort at any scale."""
     sc = dsir_score(spark, sf_dir, docs=docs).where(F.col("is_target") == 0)
     u = (
         md5_60(F.concat(F.lit("dsir|"), F.col("doc_id").cast("string")))
@@ -234,7 +234,7 @@ def dsir_sample(spark, sf_dir, k: int = DSIR_K, docs=None) -> DataFrame:
         )
         .select("doc_id", "lang", "n_grams", "score", "race_key")
         .orderBy(F.col("race_key").asc(), F.col("doc_id").asc())
-        .limit(k)
+        .limit(DSIR_K)
     )
 
 

@@ -21,10 +21,20 @@ import hashlib
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from ..functions.exprs import md5_60
-from .relational import load
+from .relational import spread_scan
 
 # deterministic pseudo-random hyperplanes: plane p, dim d → weight in {-1,+1}
-_N_PLANES = 8
+N_PLANES = 8
+
+# ANN geometry shared by the search operators; the DuckDB oracles
+# interpolate these constants. Probes are vec_id < ANN_PROBES.
+ANN_PROBES = 5
+ANN_K = 5            # brute-force and IVF top-k per probe
+LSH_K = 3            # LSH-bucketed top-k per probe
+IVF_LISTS = 8        # coarse-quantizer cells (trained, pinned, SemDeDup)
+IVF_PROBE_LISTS = 4  # cells scored per probe
+LLOYD_ITERS = 1      # k-means refinement passes of the trained IVF
+TRIPLET_PROBES = 16  # triplet_mining probes: vec_id < TRIPLET_PROBES
 
 
 def _plane_weight(p: int, d: int) -> float:
@@ -53,9 +63,7 @@ def _as_double(col):
 def embedding_norms(spark, sf_dir) -> DataFrame:
     """Per-label stats over vector L2 norms — the A5/A8-style agg lifted to
     the embedding column."""
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "embeddings")
     v = e.select("label", _as_double(F.col("embedding")).alias("v"))
     norm = F.sqrt(_dot(F.col("v"), F.col("v")))
     return (
@@ -69,8 +77,8 @@ def embedding_norms(spark, sf_dir) -> DataFrame:
     )
 
 
-def brute_force_topk(spark, sf_dir, n_probes: int = 5, k: int = 5) -> DataFrame:
-    """Exact cosine top-k: probes = vec_id < n_probes, corpus = the rest.
+def brute_force_topk(spark, sf_dir) -> DataFrame:
+    """Exact cosine top-ANN_K: probes = vec_id < ANN_PROBES, corpus = the rest.
     Probe set is broadcast (tiny); the scan over the corpus is a single
     narrow stage; top-k per probe via row_number. Ordering key is the
     ROUNDED similarity + vec_id so results are stable under fp jitter.
@@ -78,16 +86,14 @@ def brute_force_topk(spark, sf_dir, n_probes: int = 5, k: int = 5) -> DataFrame:
     Norms are precomputed once per row (NOT per pair — higher-order array
     exprs are interpreted, so a per-pair norm recompute cost ~3× measured);
     the scan is repartitioned because the toy parquet is a single split."""
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "embeddings")
     v = _as_double(F.col("embedding"))
-    probes = e.filter(F.col("vec_id") < n_probes).select(
+    probes = e.filter(F.col("vec_id") < ANN_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         v.alias("pv"),
         F.sqrt(_dot(v, v)).alias("pnorm"),
     )
-    corpus = e.filter(F.col("vec_id") >= n_probes).select(
+    corpus = e.filter(F.col("vec_id") >= ANN_PROBES).select(
         F.col("vec_id").alias("cand_id"),
         v.alias("cv"),
         F.sqrt(_dot(v, v)).alias("cnorm"),
@@ -99,31 +105,24 @@ def brute_force_topk(spark, sf_dir, n_probes: int = 5, k: int = 5) -> DataFrame:
     w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("probe_id", "rank", "cand_id", "cosine")
     )
 
 
-def ivf_topk(
-    spark,
-    sf_dir,
-    n_probes: int = 5,
-    k: int = 5,
-    n_lists: int = 8,
-    probe_lists: int = 4,
-    lloyd_iters: int = 1,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: coarse-quantize the corpus into n_lists
-    cells, score probes only against their probe_lists nearest cells.
+def ivf_topk(spark, sf_dir) -> DataFrame:
+    """IVF (inverted-file) ANN: coarse-quantize the corpus into IVF_LISTS
+    cells, score probes only against their IVF_PROBE_LISTS nearest cells.
 
     Centroid training is real spherical k-means, Spark-distributed: seed
     with greedy farthest-point selection over a hash-sampled pool, then
-    ``lloyd_iters`` refinement passes — each pass assigns cells in the
+    LLOYD_ITERS refinement passes — each pass assigns cells in the
     Arrow kernel and recomputes centroids as the normalized per-cell mean
     via posexplode → groupBy(cell, dim) avg (an equality-keyed two-phase
-    agg whose result is n_lists × dim rows, tiny to collect). At scale the
+    agg whose result is IVF_LISTS × dim rows, tiny to collect). At scale the
     cell id becomes the partition/bucket key: the corpus is written
-    clustered by cell, and a probe touches probe_lists/n_lists of the data.
+    clustered by cell, and a probe touches IVF_PROBE_LISTS/IVF_LISTS of the
+    data.
 
     EVERY floating decision — Lloyd means, seed-selection argmin,
     assignment argmax, probe-cell ranking — is made on values rounded to
@@ -137,13 +136,12 @@ def ivf_topk(
     import numpy as np
     import pandas as pd
 
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    n_probes = ANN_PROBES  # read on the driver, shipped in the score closure
+    e = spread_scan(spark, sf_dir, "embeddings")
     # deterministic centroid seeding, ONE pass and no e.count() full scan
     # (VERDICT r1 "What's wrong" #5): TakeOrdered on an md5 key pulls a
-    # pseudo-random pool of 4×n_lists vectors, then greedy farthest-point
-    # selection (k-means++-style, driver-side over ≤4×n_lists rows) picks
+    # pseudo-random pool of 4×IVF_LISTS vectors, then greedy farthest-point
+    # selection (k-means++-style, driver-side over ≤4×IVF_LISTS rows) picks
     # well-spread centroids — better cell balance than a raw sample
     pool_rows = (
         e.select(
@@ -152,7 +150,7 @@ def ivf_topk(
             md5_60(F.col("vec_id").cast("string")).alias("_hkey"),
         )
         .orderBy("_hkey", "vec_id")  # vec_id breaks (never-seen) hkey ties
-        .limit(4 * n_lists)
+        .limit(4 * IVF_LISTS)
         .select("embedding")
         .collect()
     )
@@ -166,7 +164,7 @@ def ivf_topk(
     # rows of (max cosine to the chosen set), sims rounded to 9 decimals
     # and ties to the lowest pool index — replayed verbatim by the oracle
     chosen = [0]
-    while len(chosen) < min(n_lists, len(pool)):
+    while len(chosen) < min(IVF_LISTS, len(pool)):
         sims = np.round(pool @ pool[chosen].T, 9)  # (pool, chosen)
         maxsim = sims.max(axis=1)
         maxsim[chosen] = np.inf  # never re-pick a chosen row
@@ -203,9 +201,9 @@ def ivf_topk(
     # over (cell, dim) keys; the collect is n_cells × dim scalars) →
     # renormalize. Empty cells keep their previous centroid. All state
     # arrays are sized len(Cn): seeding can legitimately return fewer than
-    # n_lists centroids (tiny or duplicate-heavy corpora).
+    # IVF_LISTS centroids (tiny or duplicate-heavy corpora).
     n_cells = len(Cn)
-    for _ in range(max(lloyd_iters, 0)):
+    for _ in range(LLOYD_ITERS):
         pass_df = eb.mapInPandas(
             make_assign(Cn), schema="vec_id long, embedding array<float>, cell int"
         )
@@ -243,11 +241,11 @@ def ivf_topk(
         )
     P = np.array(list(probes_pd["embedding"]), dtype=np.float64)
     Pn = P / np.linalg.norm(P, axis=1, keepdims=True)
-    # probe_lists nearest cells per probe: rounded sims + STABLE sort so
+    # IVF_PROBE_LISTS nearest cells per probe: rounded sims + STABLE sort so
     # ties go to the smallest cell id (default quicksort is tie-unstable,
     # which would make the probed-cell set run-dependent)
     cell_rank = np.argsort(-np.round(Pn @ Cn.T, 9), axis=1, kind="stable")[
-        :, :probe_lists
+        :, :IVF_PROBE_LISTS
     ]
     probe_cells = [
         (int(pid), [int(c) for c in cells])
@@ -290,7 +288,7 @@ def ivf_topk(
     w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("probe_id", "rank", "cand_id", "cosine")
     )
 
@@ -316,10 +314,7 @@ def ivf_pinned_centroids(n_lists: int, dim: int) -> list[list[float]]:
     return [[_ivf_weight(c, d) for d in range(dim)] for c in range(n_lists)]
 
 
-def ivf_topk_pinned(
-    spark, sf_dir, n_probes: int = 5, k: int = 5, n_lists: int = 8,
-    probe_lists: int = 4,
-) -> DataFrame:
+def ivf_topk_pinned(spark, sf_dir) -> DataFrame:
     """IVF ANN with PINNED centroids (VERDICT r2 next-step #2): the trained
     ivf_topk's assignment (argmax over collected k-means centroids) is not
     SQL-expressible, so this variant fixes the coarse quantizer to
@@ -331,20 +326,18 @@ def ivf_topk_pinned(
 
     The SCALE SHAPE is identical to the trained form: one narrow pass
     assigns each vector to its cell (at 10^12 vectors the cell id becomes
-    the storage bucket key), probes fan out to their probe_lists best
+    the storage bucket key), probes fan out to their IVF_PROBE_LISTS best
     cells, and scoring is an equality join on `cell` — never a cross join.
     Lloyd-trained centroids (ivf_topk) remain the recall path; this one is
     the correctness-gate path."""
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "embeddings")
     first = e.select(F.size("embedding").alias("d")).first()
     if first is None:
         return spark.createDataFrame(
             [], "probe_id long, rank int, cand_id long, cosine double"
         )
     dim = first["d"]
-    C = ivf_pinned_centroids(n_lists, dim)
+    C = ivf_pinned_centroids(IVF_LISTS, dim)
     v = _as_double(F.col("embedding"))
     # per-cell dots as one array<struct<dot,cell>> column (plan literals)
     cd = F.array(
@@ -353,7 +346,7 @@ def ivf_topk_pinned(
                 _dot(F.col("v"), F.array(*[F.lit(w) for w in C[c]])).alias("dot"),
                 F.lit(c).alias("cell"),
             )
-            for c in range(n_lists)
+            for c in range(IVF_LISTS)
         ]
     )
     sig = e.select("vec_id", v.alias("v")).select(
@@ -368,14 +361,14 @@ def ivf_topk_pinned(
             lambda s: F.struct((-s["dot"]).alias("nd"), s["cell"].alias("cell")),
         )
     )["cell"]
-    corpus = sig.filter(F.col("vec_id") >= n_probes).select(
+    corpus = sig.filter(F.col("vec_id") >= ANN_PROBES).select(
         F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"),
         F.col("nm").alias("cn"), best.alias("cell"),
     )
-    # probes: top probe_lists cells each, same (dot desc, cell asc) order
+    # probes: top IVF_PROBE_LISTS cells each, same (dot desc, cell asc) order
     pw = W.partitionBy("probe_id").orderBy(F.desc("dot"), F.asc("cell"))
     probes = (
-        sig.filter(F.col("vec_id") < n_probes)
+        sig.filter(F.col("vec_id") < ANN_PROBES)
         .select(
             F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"),
             F.col("nm").alias("pn"), F.explode("cd").alias("s"),
@@ -385,7 +378,7 @@ def ivf_topk_pinned(
             F.col("s.dot").alias("dot"), F.col("s.cell").alias("cell"),
         )
         .withColumn("crank", F.row_number().over(pw))
-        .filter(F.col("crank") <= probe_lists)
+        .filter(F.col("crank") <= IVF_PROBE_LISTS)
         .select("probe_id", "pv", "pn", "cell")
     )
     sim = F.round(
@@ -395,7 +388,7 @@ def ivf_topk_pinned(
     w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("probe_id", "rank", "cand_id", "cosine")
     )
 
@@ -408,9 +401,7 @@ def quantize_embeddings(spark, sf_dir) -> DataFrame:
     q_i = trunc(x_i / scale · 127). Returns per-vector codes summary +
     the max absolute reconstruction error (the number a recall-budget
     calculation needs)."""
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "embeddings")
     v = _as_double(F.col("embedding"))
     base = e.select("vec_id", v.alias("v")).withColumn(
         "scale", F.array_max(F.transform(F.col("v"), lambda x: F.abs(x)))
@@ -456,9 +447,7 @@ def lsh_signatures(spark, sf_dir) -> DataFrame:
     """Random-hyperplane signature: bit p = sign of dot(v, plane_p), planes
     from _plane_weight (md5 parity) — plan-constant literals, reproducible
     on any executor with no broadcast weights, and in DuckDB SQL."""
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "embeddings")
     v = e.select("vec_id", "label", _as_double(F.col("embedding")).alias("v"))
     first = e.select(F.size("embedding").alias("d")).first()
     # dim inferred from data: a hardcoded mismatch would null-pad zip_with,
@@ -467,7 +456,7 @@ def lsh_signatures(spark, sf_dir) -> DataFrame:
     if dim == 0:
         return v.select("vec_id", "label", F.lit(0).cast("long").alias("lsh_bucket"), "v")
     sig = F.lit(0).cast("long")
-    for p in range(_N_PLANES):
+    for p in range(N_PLANES):
         w = F.array(*[F.lit(_plane_weight(p, d)) for d in range(dim)])
         proj = F.aggregate(
             F.zip_with(F.col("v"), w, lambda x, wgt: x * wgt),
@@ -478,20 +467,20 @@ def lsh_signatures(spark, sf_dir) -> DataFrame:
     return v.select("vec_id", "label", sig.alias("lsh_bucket"), "v")
 
 
-def lsh_bucketed_topk(spark, sf_dir, n_probes: int = 5, k: int = 3) -> DataFrame:
-    """ANN: candidates share the probe's LSH bucket; cosine + top-k within.
+def lsh_bucketed_topk(spark, sf_dir) -> DataFrame:
+    """ANN: candidates share the probe's LSH bucket; cosine + top-LSH_K within.
     The join is bucket-equality — at 100 TB this shuffles on (bucket), never
     compares across buckets, and skewed buckets can be salted."""
     sig = lsh_signatures(spark, sf_dir).withColumn(
         "norm", F.sqrt(_dot(F.col("v"), F.col("v")))
     )
-    probes = sig.filter(F.col("vec_id") < n_probes).select(
+    probes = sig.filter(F.col("vec_id") < ANN_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("lsh_bucket").alias("pb"),
         F.col("v").alias("pv"),
         F.col("norm").alias("pnorm"),
     )
-    corpus = sig.filter(F.col("vec_id") >= n_probes).select(
+    corpus = sig.filter(F.col("vec_id") >= ANN_PROBES).select(
         F.col("vec_id").alias("cand_id"),
         F.col("lsh_bucket").alias("cb"),
         F.col("v").alias("cv"),
@@ -506,17 +495,17 @@ def lsh_bucketed_topk(spark, sf_dir, n_probes: int = 5, k: int = 3) -> DataFrame
     w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= LSH_K)
         .select("probe_id", "rank", "cand_id", "cosine")
     )
 
 
-def lsh_multiprobe_topk(spark, sf_dir, n_probes: int = 5, k: int = 3) -> DataFrame:
+def lsh_multiprobe_topk(spark, sf_dir) -> DataFrame:
     """Multi-probe LSH ANN (VERDICT r1 next-step #8): each probe searches
-    its own bucket PLUS the _N_PLANES buckets at Hamming distance 1 (one
+    its own bucket PLUS the N_PLANES buckets at Hamming distance 1 (one
     sign bit flipped) — the standard recall fix for single-shot bucketing,
     whose candidates vanish when a near neighbor straddles one hyperplane.
-    Still an equality join: the probe side explodes to 1+_N_PLANES bucket
+    Still an equality join: the probe side explodes to 1+N_PLANES bucket
     keys (probes are tiny and broadcast); the corpus is scanned once. A
     candidate matches at most one probed bucket (it has one bucket), so no
     dedup pass is needed before ranking."""
@@ -527,11 +516,11 @@ def lsh_multiprobe_topk(spark, sf_dir, n_probes: int = 5, k: int = 3) -> DataFra
         F.col("lsh_bucket"),
         *[
             F.col("lsh_bucket").bitwiseXOR(F.lit(2 ** p).cast("long"))
-            for p in range(_N_PLANES)
+            for p in range(N_PLANES)
         ],
     )
     probes = (
-        sig.filter(F.col("vec_id") < n_probes)
+        sig.filter(F.col("vec_id") < ANN_PROBES)
         .select(
             F.col("vec_id").alias("probe_id"),
             F.explode(probe_buckets).alias("pb"),
@@ -539,7 +528,7 @@ def lsh_multiprobe_topk(spark, sf_dir, n_probes: int = 5, k: int = 3) -> DataFra
             F.col("norm").alias("pnorm"),
         )
     )
-    corpus = sig.filter(F.col("vec_id") >= n_probes).select(
+    corpus = sig.filter(F.col("vec_id") >= ANN_PROBES).select(
         F.col("vec_id").alias("cand_id"),
         F.col("lsh_bucket").alias("cb"),
         F.col("v").alias("cv"),
@@ -554,7 +543,7 @@ def lsh_multiprobe_topk(spark, sf_dir, n_probes: int = 5, k: int = 3) -> DataFra
     w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= LSH_K)
         .select("probe_id", "rank", "cand_id", "cosine")
     )
 
@@ -564,13 +553,11 @@ SEM_DUP_ID_BASE = 10**6   # injected duplicate vec_ids
 SEM_THRESHOLD = 0.99      # within-cluster cosine prune threshold
 
 
-def semantic_dedup(
-    spark, sf_dir, n_lists: int = 8, threshold: float = SEM_THRESHOLD
-) -> DataFrame:
+def semantic_dedup(spark, sf_dir) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): embedding-space deduplication —
     cluster the corpus with the coarse quantizer, then WITHIN each
     cluster drop every vector that has a higher-similarity twin with a
-    smaller id (cosine ≥ threshold ⇒ semantic duplicate; the survivor is
+    smaller id (cosine ≥ SEM_THRESHOLD ⇒ semantic duplicate; the survivor is
     the min id, pinned). Catches paraphrases and re-encodes that no
     lexical method (shingle/minhash/simhash) can see — the embedding-side
     completion of the dedup family.
@@ -583,23 +570,21 @@ def semantic_dedup(
     duplicate, identically in both engines.
 
     Scale shape: assignment is one narrow pass (cell = argmax over
-    n_lists plan-literal dots); pairing is an equality self-join ON THE
+    IVF_LISTS plan-literal dots); pairing is an equality self-join ON THE
     CELL KEY ONLY — the published algorithm's cost is exactly this
     within-cluster quadratic, bounded by cluster size (at 10^12 vectors
     the cell id is the storage bucket and oversized cells get split by
     re-clustering — the LSH hot-bucket cap discipline). Never a global
     cross join; verdicts via one grouped anti-probe, no windows over
     anything corpus-sized."""
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "embeddings")
     first = e.select(F.size("embedding").alias("d")).first()
     if first is None:
         return spark.createDataFrame(
             [], "vec_id long, cell int, n_dups long, keeper long, dropped int"
         )
     dim = first["d"]
-    C = ivf_pinned_centroids(n_lists, dim)
+    C = ivf_pinned_centroids(IVF_LISTS, dim)
     e2 = e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     dup = e2.where(F.col("vec_id") % SEM_DUP_MOD == 0).select(
         (F.col("vec_id") + SEM_DUP_ID_BASE).alias("vec_id"),
@@ -612,7 +597,7 @@ def semantic_dedup(
                 _dot(F.col("v"), F.array(*[F.lit(w) for w in C[c]])).alias("dot"),
                 F.lit(c).alias("cell"),
             )
-            for c in range(n_lists)
+            for c in range(IVF_LISTS)
         ]
     )
     best = F.array_min(
@@ -644,7 +629,7 @@ def semantic_dedup(
                 _dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 4
             ).alias("cosine"),
         )
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= SEM_THRESHOLD)
     )
     dups = pairs.groupBy("id2").agg(
         F.min("id1").alias("twin"), F.count(F.lit(1)).alias("n_dups")
@@ -667,14 +652,14 @@ RAG_PROBE_MOD = 97  # probe docs: doc_id % 97 == 0 (their first chunk)
 RAG_TOP_K = 5
 
 
-def passage_retrieval(spark, sf_dir, k: int = RAG_TOP_K) -> DataFrame:
+def passage_retrieval(spark, sf_dir) -> DataFrame:
     """End-to-end RAG retrieval, entirely in-plan: chunk the corpus
     (lines.passage_windows), embed every chunk AND every probe query with
     a deterministic ±1 feature-hash projection (the hashed-linear
     classifier's trick applied to retrieval), score probe × passage by
     SPARSE dot product — a bucket-equality join + one aggregation, the
     relational form of a vector product, no dense arrays shuffled — and
-    return cosine top-k passages per probe.
+    return cosine top-RAG_TOP_K passages per probe.
 
     Probes are the first chunk of every RAG_PROBE_MOD-th document,
     scored only against OTHER documents' passages (self-retrieval is
@@ -810,12 +795,12 @@ def passage_retrieval(spark, sf_dir, k: int = RAG_TOP_K) -> DataFrame:
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= RAG_TOP_K)
         .select("probe_id", "rank", "doc_id", "chunk_id", "cosine")
     )
 
 
-def triplet_mining(spark, sf_dir, n_probes: int = 16) -> DataFrame:
+def triplet_mining(spark, sf_dir) -> DataFrame:
     """Contrastive triplet mining over the embedding table: for each
     probe, the nearest SAME-label candidate (positive) and the nearest
     OTHER-label candidate (hard negative) by rounded cosine, plus the
@@ -828,20 +813,18 @@ def triplet_mining(spark, sf_dir, n_probes: int = 16) -> DataFrame:
     jitter cannot reorder); positives and negatives come from ONE pass —
     a single window over (probe_id, is_pos) picks both tops, then a
     conditional aggregation pivots to one row per probe. No persisted
-    ×n_probes relation, no second corpus scan."""
+    ×TRIPLET_PROBES relation, no second corpus scan."""
     from pyspark.sql import Window as W
 
-    e = load(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "embeddings")
     v = _as_double(F.col("embedding"))
-    probes = e.filter(F.col("vec_id") < n_probes).select(
+    probes = e.filter(F.col("vec_id") < TRIPLET_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("label").alias("probe_label"),
         v.alias("pv"),
         F.sqrt(_dot(v, v)).alias("pnorm"),
     )
-    corpus = e.filter(F.col("vec_id") >= n_probes).select(
+    corpus = e.filter(F.col("vec_id") >= TRIPLET_PROBES).select(
         F.col("vec_id").alias("cand_id"),
         F.col("label").alias("clabel"),
         v.alias("cv"),

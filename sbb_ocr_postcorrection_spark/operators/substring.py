@@ -12,7 +12,7 @@ its first |span|−L+1 tokens, so
 * anchor relation: md5-60bit of each L-token window per position — one
   in-array expansion + explode (corpus-token-sized, the algorithm's
   irreducible bulk; the 8-byte int key keeps the shuffle payload small);
-* hot anchors: two-phase countDistinct(doc_id) ≥ dup_df on the window
+* hot anchors: two-phase countDistinct(doc_id) ≥ SUBSTR_DUP_DF on the window
   hash — duplicated-content-vocabulary-sized output;
 * covered anchors: equality join back on the hash. NO broadcast hint:
   the covered set scales with contamination volume (the passage_dedup
@@ -47,15 +47,9 @@ SUBSTR_DUP_DF = 2  # distinct docs that must share a window to mark it
 SUBSTR_BOILER = " ".join(f"spantoken{i:02d}" for i in range(60))
 
 
-def substring_dedup(
-    spark,
-    sf_dir,
-    span_toks: int = SUBSTR_L,
-    dup_df: int = SUBSTR_DUP_DF,
-    docs=None,
-) -> DataFrame:
+def substring_dedup(spark, sf_dir, docs=None) -> DataFrame:
     """(doc_id, n_tokens, n_spans, n_dropped, text_deduped): cross-document
-    duplicate token spans of length ≥ span_toks removed from every document
+    duplicate token spans of length ≥ SUBSTR_L removed from every document
     carrying them (module docstring: anchors → hot → islands → removal)."""
     if docs is None:
         d = load(spark, sf_dir, "documents").select(
@@ -79,12 +73,12 @@ def substring_dedup(
     )
     # 1-based anchor start p → 60-bit hash of the L-token window at p
     anchors_arr = F.when(
-        F.size("toks") >= span_toks,
+        F.size("toks") >= SUBSTR_L,
         F.transform(
-            F.sequence(F.lit(1), F.size("toks") - (span_toks - 1)),
+            F.sequence(F.lit(1), F.size("toks") - (SUBSTR_L - 1)),
             lambda i: F.struct(
                 i.alias("p"),
-                md5_60(F.concat_ws(" ", F.slice("toks", i, span_toks))).alias(
+                md5_60(F.concat_ws(" ", F.slice("toks", i, SUBSTR_L))).alias(
                     "h"
                 ),
             ),
@@ -99,7 +93,7 @@ def substring_dedup(
     hot = (
         anch.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("adf"))
-        .filter(F.col("adf") >= dup_df)
+        .filter(F.col("adf") >= SUBSTR_DUP_DF)
         .select("h")
     )
     cov = anch.join(hot, "h").select("doc_id", "p")
@@ -109,7 +103,7 @@ def substring_dedup(
     prev_max = F.max("p").over(w.rowsBetween(Window.unboundedPreceding, -1))
     isl = cov.withColumn(
         "new_isl",
-        F.when(prev_max.isNull() | (F.col("p") > prev_max + span_toks), 1)
+        F.when(prev_max.isNull() | (F.col("p") > prev_max + SUBSTR_L), 1)
         .otherwise(0),
     ).withColumn(
         "isl", F.sum("new_isl").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -118,7 +112,7 @@ def substring_dedup(
         isl.groupBy("doc_id", "isl")
         .agg(
             F.min("p").cast("int").alias("s"),
-            (F.max("p") + span_toks - 1).cast("int").alias("e"),
+            (F.max("p") + SUBSTR_L - 1).cast("int").alias("e"),
         )
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("s", "e"))).alias("spans"))

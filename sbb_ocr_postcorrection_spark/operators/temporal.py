@@ -26,20 +26,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from .relational import load
+from .relational import load, spread_scan
+
+# asof_join: each probe event looks up the latest reference event
+ASOF_PROBE_TYPE = "error"
+ASOF_REF_TYPE = "click"
 
 
-def asof_join(
-    spark,
-    sf_dir,
-    probe_type: str = "error",
-    ref_type: str = "click",
-) -> DataFrame:
-    """For each `probe_type` event: the latest `ref_type` event by the same
-    user at or before it. Returns one row per probe event; reference
+def asof_join(spark, sf_dir) -> DataFrame:
+    """For each ASOF_PROBE_TYPE event: the latest ASOF_REF_TYPE event by
+    the same user at or before it. Returns one row per probe event; reference
     columns are null when no prior reference event exists."""
     e = load(spark, sf_dir, "events")
-    ref = e.filter(F.col("event_type") == ref_type).select(
+    ref = e.filter(F.col("event_type") == ASOF_REF_TYPE).select(
         "user_id",
         "ts",
         F.lit("c").alias("side"),
@@ -47,7 +46,7 @@ def asof_join(
         F.col("event_id").alias("r_id"),
         F.col("ts").alias("r_ts"),
     )
-    probe = e.filter(F.col("event_type") == probe_type).select(
+    probe = e.filter(F.col("event_type") == ASOF_PROBE_TYPE).select(
         "user_id",
         "ts",
         F.lit("p").alias("side"),
@@ -223,9 +222,7 @@ def funnel_analysis(spark, sf_dir) -> DataFrame:
     join, NO per-user ordered window over the full stream (an ordered
     window would sort every user's whole history; the min-chain reads
     each step's events once). Depth/conversion are integer verdicts."""
-    e = load(spark, sf_dir, "events").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "events")
     v, c, p = FUNNEL_STEPS
     # witness slices (the pii_redact convention): the dense synthetic
     # stream converts EVERY user, which would leave depth 0/1/2 verdicts
@@ -290,9 +287,7 @@ def cohort_retention(spark, sf_dir) -> DataFrame:
     retention offset is an equality join of the (user, day) activity
     dim against the cohort dim on the SHIFTED day — no windows, no
     per-user history scans. Percentages are round-6 integer ratios."""
-    e = load(spark, sf_dir, "events").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    e = spread_scan(spark, sf_dir, "events")
     act = e.select(
         "user_id", F.to_date("ts").alias("day")
     ).distinct()

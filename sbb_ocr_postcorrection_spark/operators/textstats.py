@@ -22,7 +22,7 @@ EN_STOPS = tuple(sorted(ENGLISH_STOPWORDS))
 from ..functions.exprs import cer_band_expr, md5_60, tokens_expr as _tokens  # noqa: E402
 
 
-def lang_id(spark, sf_dir, conf_threshold: float = 0.05, docs=None) -> DataFrame:
+def lang_id(spark, sf_dir, docs=None) -> DataFrame:
     """Heuristic language ID: count German vs English stopword hits; guess
     the majority, 'unk' on ties (langid-filter analog,
     cli_preproc.py:595-604 — here recomputed instead of trusted).
@@ -34,7 +34,7 @@ def lang_id(spark, sf_dir, conf_threshold: float = 0.05, docs=None) -> DataFrame
     from ..functions.exprs import lang_cols
 
     d = docs_input(spark, sf_dir, docs)
-    c = lang_cols(F.col("text"), DE_STOPS, EN_STOPS, conf_threshold)
+    c = lang_cols(F.col("text"), DE_STOPS, EN_STOPS)
     return d.select(
         "doc_id",
         "lang",
@@ -210,11 +210,16 @@ def token_class_freq(spark, sf_dir) -> DataFrame:
     )
 
 
-def cer_bands_kernel(spark, sf_dir, prefix: int = 60) -> DataFrame:
+# text prefixes the CER kernels compare (the DuckDB oracles interpolate them)
+CER_PREFIX = 60
+CER_CLUSTER_PREFIX = 40
+
+
+def cer_bands_kernel(spark, sf_dir) -> DataFrame:
     """F12/F13/P8 in one: per-document Levenshtein + CER via the textkit DP
     kernel (Arrow-batched — the reference's dinglehopper-distance path,
     sequence_similarity.py:61-66), then the 7-band CER bucketing. The
-    'ocr' side is a deterministic transform (reversed prefix) so DuckDB's
+    'ocr' side is a deterministic transform (reversed CER_PREFIX) so DuckDB's
     builtin levenshtein() can serve as the exact oracle for our DP."""
     import pandas as pd
 
@@ -223,8 +228,8 @@ def cer_bands_kernel(spark, sf_dir, prefix: int = 60) -> DataFrame:
     d = docs_input(spark, sf_dir)
     src = d.select(
         "doc_id",
-        F.substring(F.lower("text"), 1, prefix).alias("gt"),
-        F.reverse(F.substring(F.lower("text"), 1, prefix)).alias("ocr"),
+        F.substring(F.lower("text"), 1, CER_PREFIX).alias("gt"),
+        F.reverse(F.substring(F.lower("text"), 1, CER_PREFIX)).alias("ocr"),
     )
 
     def kernel(batches):
@@ -246,9 +251,7 @@ def cer_bands_kernel(spark, sf_dir, prefix: int = 60) -> DataFrame:
     )
 
 
-def cer_clusters_kernel(
-    spark, sf_dir, prefix: int = 40, docs=None
-) -> DataFrame:
+def cer_clusters_kernel(spark, sf_dir, docs=None) -> DataFrame:
     """Grapheme-cluster CER as a driver query (VERDICT r4 next-step #8,
     SURVEY §7.3): dinglehopper's unit of edit distance is the extended
     grapheme cluster (dinglehopper edit_distance.distance →
@@ -267,7 +270,9 @@ def cer_clusters_kernel(
     from ..textkit import cer_clusters, grapheme_clusters, levenshtein_clusters, nfc
 
     d = docs_input(spark, sf_dir, docs)
-    p = F.substring(F.lower(F.coalesce(F.col("text"), F.lit(""))), 1, prefix)
+    p = F.substring(
+        F.lower(F.coalesce(F.col("text"), F.lit(""))), 1, CER_CLUSTER_PREFIX
+    )
     src = d.select(
         "doc_id",
         F.regexp_replace(p, "e", "e\u0301").alias("gt"),
@@ -333,16 +338,20 @@ PII_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_PHONE_RE = r"\+[0-9]{1,2} [0-9]{3} [0-9]{4}"
 
 
-def pii_redact(
-    spark, sf_dir, email_mod: int = 7, phone_mod: int = 11, docs=None
-) -> DataFrame:
+# PII fixtures: an email on every PII_EMAIL_MOD-th doc, a phone on every
+# PII_PHONE_MOD-th (the DuckDB oracle interpolates both)
+PII_EMAIL_MOD = 7
+PII_PHONE_MOD = 11
+
+
+def pii_redact(spark, sf_dir, docs=None) -> DataFrame:
     """PII detection + redaction, fully JVM-side (regexp_count /
     regexp_replace — no Python in the hot path, trivially data-parallel at
     100 TB).
 
     The synthetic documents carry no PII, so the query first APPENDS
-    deterministic fixtures (an email for doc_id % email_mod == 0, a phone
-    for doc_id % phone_mod == 0) — identically in the Spark plan and the
+    deterministic fixtures (an email for doc_id % PII_EMAIL_MOD == 0, a phone
+    for doc_id % PII_PHONE_MOD == 0) — identically in the Spark plan and the
     DuckDB oracle — so the redaction is exercised on text that actually
     contains matches, including docs carrying both kinds. Emails are
     redacted before phones on both sides (a fixed order keeps overlapping
@@ -359,8 +368,8 @@ def pii_redact(
     # null-propagates through concat into an all-NULL verdict row
     aug = F.concat(
         F.coalesce(F.col("text"), F.lit("")),
-        F.when(F.col("doc_id") % email_mod == 0, email_fix).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % phone_mod == 0, phone_fix).otherwise(F.lit("")),
+        F.when(F.col("doc_id") % PII_EMAIL_MOD == 0, email_fix).otherwise(F.lit("")),
+        F.when(F.col("doc_id") % PII_PHONE_MOD == 0, phone_fix).otherwise(F.lit("")),
     )
     t = d.select("doc_id", aug.alias("t"))
     return t.select(
@@ -424,7 +433,10 @@ def text_normalize(spark, sf_dir, docs=None) -> DataFrame:
     )
 
 
-def lm_unigram_score(spark, sf_dir, min_tf: int = 2, docs=None) -> DataFrame:
+LM_MIN_TF = 2  # lm_keep: the rarest token occurs at least this often
+
+
+def lm_unigram_score(spark, sf_dir, docs=None) -> DataFrame:
     """Unigram-LM quality score — the deterministic analog of CCNet's
     KenLM perplexity filter (docs dominated by corpus-rare tokens score
     low and get dropped).
@@ -434,7 +446,7 @@ def lm_unigram_score(spark, sf_dir, min_tf: int = 2, docs=None) -> DataFrame:
     from INTEGER aggregates only: per-doc token count, summed corpus term
     frequency, and the rarest token's frequency; the single per-row
     division at the end is IEEE-exact on both Spark and DuckDB. `lm_keep`
-    drops docs whose rarest token appears < min_tf times corpus-wide.
+    drops docs whose rarest token appears < LM_MIN_TF times corpus-wide.
 
     Scale shape: the tf relation is one row per vocab term; the
     tok⋈tf join is an equality shuffle on the token. Hot tokens ("the")
@@ -463,7 +475,7 @@ def lm_unigram_score(spark, sf_dir, min_tf: int = 2, docs=None) -> DataFrame:
     base = d.select("doc_id")
     # a zero-token doc has NO rare tokens — the rarity filter passes it
     # (other gates judge emptiness); only a doc whose rarest PRESENT token
-    # is below min_tf fails
+    # is below LM_MIN_TF fails
     return base.join(per, "doc_id", "left").select(
         "doc_id",
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
@@ -472,7 +484,7 @@ def lm_unigram_score(spark, sf_dir, min_tf: int = 2, docs=None) -> DataFrame:
         F.round(
             F.coalesce(F.col("sum_tf") / F.col("n_tokens"), F.lit(0.0)), 4
         ).alias("mean_tf"),
-        (F.col("min_tf").isNull() | (F.col("min_tf") >= min_tf))
+        (F.col("min_tf").isNull() | (F.col("min_tf") >= LM_MIN_TF))
         .cast("int")
         .alias("lm_keep"),
     )
@@ -618,10 +630,10 @@ CLF_DIM = 64
 CLF_THRESHOLD = 0
 
 
-def quality_classifier(spark, sf_dir, dim: int = CLF_DIM, docs=None) -> DataFrame:
+def quality_classifier(spark, sf_dir, docs=None) -> DataFrame:
     """Feature-hashing linear quality classifier — the fasttext/DCLM-style
     model-based quality filter as a Spark-native scoring pass: tokens hash
-    into ``dim`` feature buckets (md5-keyed), each bucket carries a small
+    into ``CLF_DIM`` feature buckets (md5-keyed), each bucket carries a small
     integer weight, and a document's score is the sum of its tokens'
     bucket weights — one explode + one aggregation, no Python, no model
     server.
@@ -629,7 +641,7 @@ def quality_classifier(spark, sf_dir, dim: int = CLF_DIM, docs=None) -> DataFram
     The weights here are the md5-parity stand-in (w_b = md5_60('qw|'+b)
     mod 5 − 2 ∈ {−2..2}) so the whole scorer is engine-exact and the
     driver hash-checks the complete scoring path; a PRODUCTION deployment
-    swaps the weight expression for a learned table (broadcast dim join
+    swaps the weight expression for a learned table (broadcast CLF_DIM join
     or plan literals — same plan shape either way, which is exactly what
     this query certifies). Scores stay INTEGER end-to-end and the keep
     verdict is a plain integer threshold — no per-token normalization
@@ -643,7 +655,7 @@ def quality_classifier(spark, sf_dir, dim: int = CLF_DIM, docs=None) -> DataFram
     zero joins."""
     d = docs_input(spark, sf_dir, docs)
     tok = d.select("doc_id", F.explode_outer(_tokens(F.col("text"))).alias("token"))
-    bucket = F.pmod(md5_60(F.col("token")), F.lit(dim))
+    bucket = F.pmod(md5_60(F.col("token")), F.lit(CLF_DIM))
     weight = F.when(
         F.col("token").isNull(), F.lit(0)
     ).otherwise(
@@ -666,9 +678,7 @@ def quality_classifier(spark, sf_dir, dim: int = CLF_DIM, docs=None) -> DataFram
 CLF_EPOCHS = 3
 
 
-def train_perceptron(
-    spark, sf_dir, dim: int = CLF_DIM, epochs: int = CLF_EPOCHS, docs=None,
-) -> dict[int, int]:
+def train_perceptron(spark, sf_dir, docs=None) -> dict[int, int]:
     """LEARN the quality-classifier weights in-engine: distributed batch
     perceptron over the hashed token features — the training loop behind
     the fasttext/DCLM-style filter, not just its scoring pass (the
@@ -679,7 +689,7 @@ def train_perceptron(
     epoch, score every document under the current weights (one broadcast
     map lookup + one doc agg), mark mistakes (y·score ≤ 0 — sign(0)
     counts as wrong, standard), and apply the SUMMED update
-    Δ_b = Σ_mistakes y·x_b (one bucket agg, ≤ dim rows collected). No
+    Δ_b = Σ_mistakes y·x_b (one bucket agg, ≤ CLF_DIM rows collected). No
     learning rate, no floats, no iteration order — so the whole training
     loop replays bit-for-bit in SQL (the BPE-oracle pattern:
     queries._perceptron_stages_sql certifies weight LEARNING, not just
@@ -689,9 +699,9 @@ def train_perceptron(
 
     Scale shape: the feature relation (doc, bucket, cnt) is built once
     (explode + two-phase count) and persisted; each epoch is two
-    equality-keyed aggregations over it, weights ride as a dim-sized
+    equality-keyed aggregations over it, weights ride as a CLF_DIM-sized
     literal map (64 entries — plan literal, zero joins), and only the
-    ≤ dim delta rows ever reach the driver. epochs × 2 jobs total, the
+    ≤ CLF_DIM delta rows ever reach the driver. CLF_EPOCHS × 2 jobs total, the
     same driver-side loop discipline as BPE training."""
     from ..functions.exprs import quality_cols
 
@@ -704,7 +714,7 @@ def train_perceptron(
     feats = (
         tok.select(
             "doc_id",
-            F.pmod(md5_60(F.col("token")), F.lit(dim)).cast("int").alias("bucket"),
+            F.pmod(md5_60(F.col("token")), F.lit(CLF_DIM)).cast("int").alias("bucket"),
         )
         .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -712,8 +722,8 @@ def train_perceptron(
     )
     feats.count()
 
-    weights = {b: 0 for b in range(dim)}
-    for _ in range(epochs):
+    weights = {b: 0 for b in range(CLF_DIM)}
+    for _ in range(CLF_EPOCHS):
         wmap = F.create_map(
             *[F.lit(x) for kv in weights.items() for x in kv]
         )
@@ -743,21 +753,19 @@ def train_perceptron(
     return weights
 
 
-def quality_classifier_train(
-    spark, sf_dir, dim: int = CLF_DIM, epochs: int = CLF_EPOCHS, docs=None,
-) -> DataFrame:
+def quality_classifier_train(spark, sf_dir, docs=None) -> DataFrame:
     """Query surface: the learned weight table (bucket, weight) after
-    ``epochs`` batch-perceptron rounds — all dim rows, zeros included
+    ``CLF_EPOCHS`` batch-perceptron rounds — all CLF_DIM rows, zeros included
     (deterministic cardinality)."""
-    weights = train_perceptron(spark, sf_dir, dim, epochs, docs=docs)
+    weights = train_perceptron(spark, sf_dir, docs=docs)
     return spark.createDataFrame(
         sorted(weights.items()), "bucket int, weight long"
     )
 
 
-def _score_under_weights(d: DataFrame, weights: dict[int, int], dim: int) -> DataFrame:
+def _score_under_weights(d: DataFrame, weights: dict[int, int]) -> DataFrame:
     """Score documents under a learned weight table: (doc_id, clf_score,
-    pred_keep, label_keep). Weights ride as a dim-sized plan-literal map
+    pred_keep, label_keep). Weights ride as a CLF_DIM-sized plan-literal map
     (zero joins); pred_keep is score > 0 (the mistake rule treats 0 as
     not-kept); label_keep is the bootstrap heuristic verdict."""
     from ..functions.exprs import quality_cols
@@ -768,7 +776,7 @@ def _score_under_weights(d: DataFrame, weights: dict[int, int], dim: int) -> Dat
         tok.select(
             "doc_id",
             F.element_at(
-                wmap, F.pmod(md5_60(F.col("token")), F.lit(dim)).cast("int")
+                wmap, F.pmod(md5_60(F.col("token")), F.lit(CLF_DIM)).cast("int")
             ).alias("w"),
         )
         .groupBy("doc_id")
@@ -785,24 +793,20 @@ def _score_under_weights(d: DataFrame, weights: dict[int, int], dim: int) -> Dat
     )
 
 
-def quality_classifier_learned(
-    spark, sf_dir, dim: int = CLF_DIM, epochs: int = CLF_EPOCHS, docs=None,
-) -> DataFrame:
+def quality_classifier_learned(spark, sf_dir, docs=None) -> DataFrame:
     """Score every document under the LEARNED weights: (doc_id,
     clf_score, pred_keep, label_keep). Training accuracy is then one
     aggregation away — and the driver hash-checks every per-doc score,
     so the learned model's entire inference surface is certified."""
-    weights = train_perceptron(spark, sf_dir, dim, epochs, docs=docs)
+    weights = train_perceptron(spark, sf_dir, docs=docs)
     d = docs_input(spark, sf_dir, docs)
-    return _score_under_weights(d, weights, dim)
+    return _score_under_weights(d, weights)
 
 
 CLF_EVAL_FOLD = 5  # doc_id % FOLD == 0 is the held-out fifth
 
 
-def quality_classifier_eval(
-    spark, sf_dir, dim: int = CLF_DIM, epochs: int = CLF_EPOCHS, docs=None,
-) -> DataFrame:
+def quality_classifier_eval(spark, sf_dir, docs=None) -> DataFrame:
     """HELD-OUT P/R/F1 of the learned quality classifier (VERDICT r4
     next-step #6) — the reference's A9 confusion surface
     (mt/cli_correct.py:368-393) applied to the in-engine-trained filter:
@@ -820,8 +824,8 @@ def quality_classifier_eval(
     d = docs_input(spark, sf_dir, docs)
     train = d.filter(F.col("doc_id") % CLF_EVAL_FOLD != 0)
     held = d.filter(F.col("doc_id") % CLF_EVAL_FOLD == 0)
-    weights = train_perceptron(spark, sf_dir, dim, epochs, docs=train)
-    scored = _score_under_weights(held, weights, dim)
+    weights = train_perceptron(spark, sf_dir, docs=train)
+    scored = _score_under_weights(held, weights)
     return confusion_metrics(
         scored,
         pred_col=F.col("pred_keep") == 1,
@@ -840,7 +844,7 @@ MIX_BUDGET_DEN = 5
 MIX_COIN_MOD = 1_000_000
 
 
-def source_mix_sample(spark, sf_dir, weights: dict | None = None, docs=None) -> DataFrame:
+def source_mix_sample(spark, sf_dir, docs=None) -> DataFrame:
     """Source-mixing sampler: given relative per-source weights and a
     corpus-wide token budget, compute each source's sampling rate so the
     KEPT tokens land on the target mixture (the data-mixture step every
@@ -866,27 +870,15 @@ def source_mix_sample(spark, sf_dir, weights: dict | None = None, docs=None) -> 
     per-source accounting report; callers wanting the doc-level verdict
     use the same predicate on the joined relation.
 
-    ``weights`` maps source → positive int weight; the fixture default
-    derives 1 + 3·(source_index mod 4) arithmetically so every SF
-    exercises capped AND fractional rates."""
+    The per-source weight is 1 + 3·(source_index mod 4), derived
+    arithmetically so every SF exercises capped AND fractional rates."""
     d = docs if docs is not None else load(spark, sf_dir, "documents")
     base = d.select(
         "doc_id", "source", F.size(_tokens(F.col("text"))).alias("n_tokens")
     )
-    if weights is None:
-        w_expr = (
-            F.lit(1) + F.lit(3) * (F.substring("source", 4, 10).cast("int") % 4)
-        ).cast("long")
-    else:
-        # unlisted sources weight 0 → sampled out, but still REPORTED
-        # (their row surfaces with n_kept=0, never silently vanishes)
-        w_expr = F.coalesce(
-            *[
-                F.when(F.col("source") == s, F.lit(int(w)))
-                for s, w in sorted(weights.items())
-            ],
-            F.lit(0),
-        ).cast("long")
+    w_expr = (
+        F.lit(1) + F.lit(3) * (F.substring("source", 4, 10).cast("int") % 4)
+    ).cast("long")
     per_doc = base.select("doc_id", "source", "n_tokens", w_expr.alias("w"))
     per_source = per_doc.groupBy("source", "w").agg(
         F.sum("n_tokens").alias("t_s")
@@ -932,11 +924,14 @@ def source_mix_sample(spark, sf_dir, weights: dict | None = None, docs=None) -> 
     )
 
 
-def quality_weighted_sample(
-    spark, sf_dir, hi_rate: int = 100, lo_rate: int = 10
-) -> DataFrame:
+# corpus_sample keep rates, percent: high-quality / low-quality docs
+SAMPLE_HI_RATE = 100
+SAMPLE_LO_RATE = 10
+
+
+def quality_weighted_sample(spark, sf_dir) -> DataFrame:
     """Quality-weighted deterministic downsampling: high-quality docs are
-    kept at hi_rate %, low-quality at lo_rate % — the mixing step a
+    kept at SAMPLE_HI_RATE %, low-quality at SAMPLE_LO_RATE % — the mixing step a
     pretraining pipeline runs after filtering (upweight good slices
     without discarding the tail entirely).
 
@@ -948,7 +943,9 @@ def quality_weighted_sample(
     beyond quality_score's own scan."""
     q = quality_score(spark, sf_dir)
     rate = (
-        F.when(F.col("quality_keep") == 1, hi_rate).otherwise(lo_rate).cast("int")
+        F.when(F.col("quality_keep") == 1, SAMPLE_HI_RATE)
+        .otherwise(SAMPLE_LO_RATE)
+        .cast("int")
     )
     slot = F.pmod(md5_60(F.col("doc_id").cast("string")), F.lit(100))
     return q.select(
@@ -996,9 +993,7 @@ def length_histogram(spark, sf_dir, docs=None) -> DataFrame:
 PR_GRID = 20  # PR-curve resolution: thresholds on a fixed integer grid
 
 
-def quality_classifier_pr_curve(
-    spark, sf_dir, dim: int = CLF_DIM, epochs: int = CLF_EPOCHS, docs=None,
-) -> DataFrame:
+def quality_classifier_pr_curve(spark, sf_dir, docs=None) -> DataFrame:
     """Threshold sweep for the learned quality classifier: held-out
     precision/recall/F1 at PR_GRID+1 integer score cutoffs — the curve an
     operator reads before picking the production keep threshold (the
@@ -1016,15 +1011,15 @@ def quality_classifier_pr_curve(
     d = docs_input(spark, sf_dir, docs)
     train = d.filter(F.col("doc_id") % CLF_EVAL_FOLD != 0)
     held = d.filter(F.col("doc_id") % CLF_EVAL_FOLD == 0)
-    weights = train_perceptron(spark, sf_dir, dim, epochs, docs=train)
-    return _curve_under_weights(held, weights, dim)
+    weights = train_perceptron(spark, sf_dir, docs=train)
+    return _curve_under_weights(held, weights)
 
 
-def _curve_under_weights(held, weights: dict[int, int], dim: int) -> DataFrame:
+def _curve_under_weights(held, weights: dict[int, int]) -> DataFrame:
     """The PR-curve sweep body under already-learned weights — shared by
     quality_classifier_pr_curve and the threshold-pick/calibrated-gate
     operators so composing them never retrains the perceptron twice."""
-    scored = _score_under_weights(held, weights, dim)
+    scored = _score_under_weights(held, weights)
     per = scored.groupBy("clf_score").agg(
         F.sum("label_keep").cast("long").alias("n_pos"),
         (F.count(F.lit(1)) - F.sum("label_keep")).cast("long").alias("n_neg"),
@@ -1119,9 +1114,7 @@ def _pick_from_curve(curve: DataFrame) -> DataFrame:
     return best_f1.unionByName(best_floor)
 
 
-def quality_threshold_pick(
-    spark, sf_dir, dim: int = CLF_DIM, epochs: int = CLF_EPOCHS, docs=None,
-) -> DataFrame:
+def quality_threshold_pick(spark, sf_dir, docs=None) -> DataFrame:
     """Calibrated keep-threshold selection (VERDICT r5 next-step #6):
     close the loop from the PR-curve sweep to a production decision.
     Output: one row per pick rule — 'max_f1' (the F1-optimal cutoff) and
@@ -1132,13 +1125,11 @@ def quality_threshold_pick(
     is how an operator PICKS the point, with integer tie-breaks pinned
     so both engines agree bit-for-bit."""
     return _pick_from_curve(
-        quality_classifier_pr_curve(spark, sf_dir, dim, epochs, docs=docs)
+        quality_classifier_pr_curve(spark, sf_dir, docs=docs)
     )
 
 
-def quality_gate_calibrated(
-    spark, sf_dir, dim: int = CLF_DIM, epochs: int = CLF_EPOCHS, docs=None,
-) -> DataFrame:
+def quality_gate_calibrated(spark, sf_dir, docs=None) -> DataFrame:
     """Apply the PICKED max-F1 threshold to the whole corpus: train on
     the 4/5 fold, sweep the held-out fifth, argmax-pick the threshold,
     then score EVERY document under the same weights and keep those with
@@ -1152,13 +1143,13 @@ def quality_gate_calibrated(
     d = docs_input(spark, sf_dir, docs)
     train = d.filter(F.col("doc_id") % CLF_EVAL_FOLD != 0)
     held = d.filter(F.col("doc_id") % CLF_EVAL_FOLD == 0)
-    weights = train_perceptron(spark, sf_dir, dim, epochs, docs=train)
+    weights = train_perceptron(spark, sf_dir, docs=train)
     pick = (
-        _pick_from_curve(_curve_under_weights(held, weights, dim))
+        _pick_from_curve(_curve_under_weights(held, weights))
         .where(F.col("pick") == "max_f1")
         .select("thr")
     )
-    scored = _score_under_weights(d, weights, dim)
+    scored = _score_under_weights(d, weights)
     return scored.crossJoin(F.broadcast(pick)).select(
         "doc_id",
         "clf_score",

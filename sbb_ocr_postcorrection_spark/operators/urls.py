@@ -128,14 +128,11 @@ CANON_URL_SQL = (
 HOST_MIN_PASS_PCT = 65
 
 
-def host_reputation_gate(
-    spark, sf_dir, min_pass_pct: int = HOST_MIN_PASS_PCT, docs=None,
-    per_doc=None,
-) -> DataFrame:
+def host_reputation_gate(spark, sf_dir, docs=None, per_doc=None) -> DataFrame:
     """Host-level reputation gating (the RefinedWeb-style second pass over
     a per-document verdict): aggregate the document language-pass bit per
     host, then gate EVERY document of a host whose pass rate falls below
-    ``min_pass_pct`` percent — an off-language or junk host loses all its
+    ``HOST_MIN_PASS_PCT`` percent — an off-language or junk host loses all its
     pages, not one at a time. The per-doc bit is the lang_pass verdict
     from the SAME lang_cols builder the oracle-checked lang_id stage uses
     (on the synthetic corpus the quality bit is constant-1, so language
@@ -201,7 +198,7 @@ def host_reputation_gate(
         F.round(F.col("host_pass_cnt") / F.col("host_docs"), 6).alias(
             "host_pass_rate"
         ),
-        (F.col("host_pass_cnt") * 100 >= F.lit(min_pass_pct) * F.col("host_docs"))
+        (F.col("host_pass_cnt") * 100 >= F.lit(HOST_MIN_PASS_PCT) * F.col("host_docs"))
         .cast("int")
         .alias("host_pass"),
     )
@@ -249,10 +246,7 @@ def _host_path_suffixes(url) -> tuple:
     return host, path, suffixes
 
 
-def url_blocklist_gate(
-    spark, sf_dir, blocked_hosts=None, blocked_path_re: str | None = None,
-    docs=None,
-) -> DataFrame:
+def url_blocklist_gate(spark, sf_dir, docs=None) -> DataFrame:
     """URL-level policy gate: drop pages whose host falls under a blocked
     domain (suffix semantics — blocking example.com blocks every
     subdomain) or whose path matches a block pattern. In a web pipeline
@@ -272,22 +266,20 @@ def url_blocklist_gate(
     d = docs if docs is not None else load(spark, sf_dir, "documents")
     if "url" not in d.columns:
         d = d.select("doc_id", synth_url_expr(F.col("doc_id")).alias("url"))
-    hosts = tuple(blocked_hosts) if blocked_hosts is not None else BLOCKED_HOSTS
-    path_re = blocked_path_re if blocked_path_re is not None else BLOCKED_PATH_RE
     host, path, suffixes = _host_path_suffixes(F.col("url"))
     base = d.select(
         "doc_id", "url", host.alias("host"), path.alias("path"),
         F.explode(suffixes).alias("suffix"),
     )
     block_dim = spark.createDataFrame(
-        [(h,) for h in hosts], "suffix string"
+        [(h,) for h in BLOCKED_HOSTS], "suffix string"
     ).withColumn("is_blocked", F.lit(1))
     verdict = (
         base.join(F.broadcast(block_dim), "suffix", "left")
         .groupBy("doc_id", "url", "host", "path")
         .agg(F.max(F.coalesce(F.col("is_blocked"), F.lit(0))).alias("blocked_host"))
     )
-    blocked_path = F.col("path").rlike(path_re).cast("int")
+    blocked_path = F.col("path").rlike(BLOCKED_PATH_RE).cast("int")
     return verdict.select(
         "doc_id",
         "host",
@@ -364,8 +356,11 @@ def crawl_cube(spark, sf_dir, docs=None) -> DataFrame:
     )
 
 
-def host_tiers(spark, sf_dir, n_tiers: int = 4, docs=None) -> DataFrame:
-    """Host quality tiers: per-host rollup → NTILE(n_tiers) ranking —
+HOST_TIERS = 4  # NTILE buckets of host_tiers
+
+
+def host_tiers(spark, sf_dir, docs=None) -> DataFrame:
+    """Host quality tiers: per-host rollup → NTILE(HOST_TIERS) ranking —
     the crawl-budget allocator's view (tier 1 hosts get recrawled first,
     bottom tier gets demoted). Pinned total order (total_chars desc,
     host asc) so tier assignment is deterministic and engine-exact.
@@ -390,7 +385,7 @@ def host_tiers(spark, sf_dir, n_tiers: int = 4, docs=None) -> DataFrame:
     w = Window.orderBy(F.desc("total_chars"), F.asc("host"))
     return per_host.select(
         "host", "n_docs", "total_chars",
-        F.ntile(n_tiers).over(w).cast("int").alias("tier"),
+        F.ntile(HOST_TIERS).over(w).cast("int").alias("tier"),
     )
 
 
@@ -435,19 +430,19 @@ def host_language_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 HOST_CAP = 40  # max documents a single host may contribute
 
 
-def host_cap_sample(spark: SparkSession, sf_dir: str, cap: int = HOST_CAP) -> DataFrame:
+def host_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host contribution cap (the C4 / RefinedWeb anti-domination
-    rule): no host may contribute more than ``cap`` documents to the
+    rule): no host may contribute more than ``HOST_CAP`` documents to the
     corpus, and WHICH documents survive must be a deterministic uniform
-    sample — not "first cap by doc_id" (that biases toward a host's
+    sample — not "first HOST_CAP by doc_id" (that biases toward a host's
     oldest pages). Rank within host by the md5 coin (rerun-stable, the
-    corpus_sample discipline), keep rank ≤ cap; every document gets a
+    corpus_sample discipline), keep rank ≤ HOST_CAP; every document gets a
     verdict row (kept=0 rows carry their rank so the cut is auditable).
 
     Scale shape: ONE host-partitioned window (never global). A mega-host
     partition sorts only that host's (coin, doc_id) pairs — tens of MB
     for a 10^6-page host, fine for one task; for pathological hosts the
-    crawl_schedule two-phase layout applies, but a cap-sized cut needs
+    crawl_schedule two-phase layout applies, but a HOST_CAP-sized cut needs
     the full per-host order anyway."""
     d = load(spark, sf_dir, "documents")
     from pyspark.sql import Window
@@ -467,5 +462,5 @@ def host_cap_sample(spark: SparkSession, sf_dir: str, cap: int = HOST_CAP) -> Da
         "doc_id",
         "host",
         "rank_in_host",
-        (F.col("rank_in_host") <= cap).cast("int").alias("kept"),
+        (F.col("rank_in_host") <= HOST_CAP).cast("int").alias("kept"),
     )

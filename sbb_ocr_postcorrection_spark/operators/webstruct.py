@@ -187,9 +187,9 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEMPLATE_SAMPLE_K = 3  # audit pages drawn per template
 
 
-def template_sample(spark: SparkSession, sf_dir: str, k: int = TEMPLATE_SAMPLE_K) -> DataFrame:
+def template_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-template audit sample: (template_sig, rank, url, n_pages) —
-    up to ``k`` deterministic uniformly-drawn pages from every template
+    up to ``TEMPLATE_SAMPLE_K`` deterministic uniformly-drawn pages from every template
     cluster. The workflow behind template_fingerprint: extraction quality
     is audited PER TEMPLATE (one bad CMS skeleton breaks extraction for
     every page that shares it), so the auditor needs a small stable
@@ -223,7 +223,7 @@ def template_sample(spark: SparkSession, sf_dir: str, k: int = TEMPLATE_SAMPLE_K
     ranked = (
         sig.withColumn("coin", coin)
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TEMPLATE_SAMPLE_K)
     )
     return ranked.join(F.broadcast(sizes), "template_sig").select(
         "template_sig", "rank", "url", "n_pages"

@@ -201,14 +201,9 @@ def _winnow_doc_fps(spark, sf_dir, docs=None) -> DataFrame:
     return base.mapInPandas(kern, "doc_id long, fp_hash long, n_fp long")
 
 
-def winnow_matches(
-    spark,
-    sf_dir,
-    max_df: int = WIN_MAX_DF,
-    min_shared: int = WIN_MIN_SHARED,
-) -> DataFrame:
+def winnow_matches(spark, sf_dir) -> DataFrame:
     """Cross-document winnowing matches: (id1, id2, n_shared, n_fp1,
-    n_fp2, overlap) — pairs sharing ≥ min_shared selected fingerprints,
+    n_fp2, overlap) — pairs sharing ≥ WIN_MIN_SHARED selected fingerprints,
     overlap = shared / min(|fp1|, |fp2|) (the MOSS report score).
 
     Plan shape (r7 fast path): the kernel emits per-doc DISTINCT
@@ -229,7 +224,7 @@ def winnow_matches(
                 F.collect_list(F.struct("doc_id", "n_fp"))
             ).alias("ds")
         )
-        .where((F.size("ds") > 1) & (F.size("ds") <= max_df))
+        .where((F.size("ds") > 1) & (F.size("ds") <= WIN_MAX_DF))
     )
     pairs = groups.select(
         F.explode(
@@ -247,7 +242,7 @@ def winnow_matches(
     return (
         pairs.groupBy("id1", "id2", "n_fp1", "n_fp2")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= WIN_MIN_SHARED)
         .select(
             "id1",
             "id2",

@@ -43,6 +43,8 @@ from .operators import (
     winnow,
 )
 from .sources import robots, sitemap, warc
+from .functions.exprs import LANG_CONF_THRESHOLD
+from .functions.wordpiece import WORDPIECE_K
 from .operators.textstats import DE_STOPS, EN_STOPS
 
 
@@ -62,6 +64,37 @@ def _pin(fn: Callable[[SparkSession, str], DataFrame]):
     return pinned
 
 
+def _package_sources() -> tuple[str, list[str]]:
+    """(package dir, sorted paths of its .py files)."""
+    import os
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    return pkg_dir, sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(pkg_dir)
+        for f in files
+        if f.endswith(".py")
+    )
+
+
+def write_package_zip(zip_path: str) -> None:
+    """Write the package's .py files to ``zip_path`` under their
+    ``sbb_ocr_postcorrection_spark/…`` names, deflated — the archive
+    executors import the package from (``--py-files`` / addPyFile)."""
+    import os
+    import zipfile
+
+    pkg_dir, sources = _package_sources()
+    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for full in sources:
+            zf.write(
+                full,
+                os.path.join(
+                    "sbb_ocr_postcorrection_spark", os.path.relpath(full, pkg_dir)
+                ),
+            )
+
+
 def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_sbb_pkg_shipped", False):
@@ -69,19 +102,12 @@ def _ship_package(spark: SparkSession) -> None:
     import hashlib
     import os
     import tempfile
-    import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    sources = []
-    for root, _dirs, files in os.walk(pkg_dir):
-        for f in sorted(files):
-            if f.endswith(".py"):
-                sources.append(os.path.join(root, f))
     # content-addressed zip name: a stale cached zip would make executors
     # run OLD kernel code after a source edit, silently breaking the
     # oracle/byte-identity contract
     digest = hashlib.sha256()
-    for full in sorted(sources):
+    for full in _package_sources()[1]:
         with open(full, "rb") as fh:
             digest.update(full.encode())
             digest.update(fh.read())
@@ -91,12 +117,7 @@ def _ship_package(spark: SparkSession) -> None:
     )
     if not os.path.exists(zip_path):
         tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for full in sorted(sources):
-                rel = os.path.join(
-                    "sbb_ocr_postcorrection_spark", os.path.relpath(full, pkg_dir)
-                )
-                zf.write(full, rel)
+        write_package_zip(tmp)
         os.replace(tmp, zip_path)
     try:
         sc.addPyFile(zip_path)
@@ -331,20 +352,13 @@ def _byte_at(i: str) -> str:
     )
 
 
-# MinHash/LSH constants mirrored from operators.dedup (kept in lockstep by
-# tests/test_queries_oracle.py hash matches)
-_MERSENNE = (1 << 31) - 1
-_MINHASH_PERMS = [(2 * i + 1, 40503 * i + 7) for i in range(16)]
-_N_PLANES = 8
-
-
 def _minhash_sig_ctes(with_lang: bool = False) -> str:
     """Shared CTE chain documents → shingles → 60-bit hashes → 16-slot
     MinHash signatures → 4 banded hashes (mirrors operators.dedup)."""
     lang_col = ", lang" if with_lang else ""
     sig_cols = ", ".join(
-        f"CAST(min((h * {a} + {b}) % {_MERSENNE}) AS BIGINT) AS mh_{j}"
-        for j, (a, b) in enumerate(_MINHASH_PERMS)
+        f"CAST(min((h * {a} + {b}) % {dedup.MERSENNE}) AS BIGINT) AS mh_{j}"
+        for j, (a, b) in enumerate(dedup.MINHASH_PERMS)
     )
     band_selects = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, "
@@ -356,21 +370,44 @@ def _minhash_sig_ctes(with_lang: bool = False) -> str:
         toks AS (SELECT doc_id{lang_col}, {_TOKS_SQL} AS l FROM documents),
         sh AS (SELECT doc_id{lang_col}, unnest({_SHINGLES_SQL}) AS shingle FROM toks),
         mh AS (SELECT doc_id,
-                      CAST({_hex2int('md5(shingle)')} % {_MERSENNE} AS BIGINT) AS h
+                      CAST({_hex2int('md5(shingle)')} % {dedup.MERSENNE} AS BIGINT) AS h
                FROM sh),
         sig AS (SELECT doc_id, {sig_cols} FROM mh GROUP BY doc_id),
         bands AS ({band_selects})
     """
 
 
-def _ivf_cents_sql(n_lists: int = 8, dim: int = 64) -> str:
+# the SimHash bucket divisor: a fingerprint's top SIMHASH_PREFIX_BITS
+_SIMHASH_DIV = 2 ** (dedup.SIMHASH_BITS - dedup.SIMHASH_PREFIX_BITS)
+
+
+def _simhash_rotated_buckets() -> str:
+    """UNION ALL of (doc_id, rot, bucket) over fp, one branch per
+    dedup.SIMHASH_ROTATIONS entry (mirrors simhash_rotation_pairs)."""
+    branches = []
+    for r in dedup.SIMHASH_ROTATIONS:
+        if r == 0:
+            branches.append(f"""
+              SELECT doc_id, 0 AS rot,
+                     CAST(simhash // {_SIMHASH_DIV} AS BIGINT) AS bucket FROM fp""")
+        else:
+            lo = 2 ** (dedup.SIMHASH_BITS - r)
+            branches.append(f"""
+              SELECT doc_id, {r},
+                     CAST(((simhash % {lo}) * {2 ** r} + simhash // {lo})
+                          // {_SIMHASH_DIV} AS BIGINT) FROM fp""")
+    return """
+              UNION ALL""".join(branches)
+
+
+_EMB_DIM = 64  # the fixture embeddings' dimensionality at every SF
+
+
+def _ivf_cents_sql() -> str:
     """DuckDB VALUES relation of the pinned IVF centroids — interpolated
     from operators.similarity.ivf_pinned_centroids so one definition drives
-    both engines (dim 64 = the fixture embeddings' dimensionality at every
-    SF)."""
-    from .operators.similarity import ivf_pinned_centroids
-
-    rows = ivf_pinned_centroids(n_lists, dim)
+    both engines."""
+    rows = similarity.ivf_pinned_centroids(similarity.IVF_LISTS, _EMB_DIM)
     vals = ", ".join(
         f"({c}, CAST([{', '.join(repr(w) for w in row)}] AS DOUBLE[]))"
         for c, row in enumerate(rows)
@@ -378,18 +415,12 @@ def _ivf_cents_sql(n_lists: int = 8, dim: int = 64) -> str:
     return f"(VALUES {vals}) cents(cell, w)"
 
 
-def _ivf_trained_oracle(
-    n_probes: int = 5,
-    k: int = 5,
-    n_lists: int = 8,
-    probe_lists: int = 4,
-    lloyd_iters: int = 1,
-) -> str:
+def _ivf_trained_oracle() -> str:
     """Full SQL replay of operators.similarity.ivf_topk — the TRAINED IVF
     (closing VERDICT r4 next-step #2, the bpe_train /
     quality_classifier_train convention): hash-sampled pool → greedy
     farthest-point seeding (one MATERIALIZED CTE stage per pick) →
-    ``lloyd_iters`` Lloyd passes (rounded-9 argmax assignment, per-dim
+    LLOYD_ITERS Lloyd passes (rounded-9 argmax assignment, per-dim
     rounded-9 means, renormalize, empty/zero cells keep their previous
     centroid) → final assignment → probe-cell ranking → in-cell cosine
     top-k. Every decision both engines make runs on values rounded to 9
@@ -397,6 +428,7 @@ def _ivf_trained_oracle(
     id), so the BLAS-vs-sequential reduction-order gap cannot flip a pick;
     MATERIALIZED everywhere because the seed stages reference each other
     through scalar IN-subqueries (the _bpe_stages_sql inlining lesson)."""
+    n_probes, n_lists = similarity.ANN_PROBES, similarity.IVF_LISTS
     hk = _hex2int("md5(CAST(vec_id AS VARCHAR))")
     parts = [
         """e AS MATERIALIZED (
@@ -440,7 +472,7 @@ def _ivf_trained_oracle(
     # Lloyd refinement: rounded-9 argmax assignment (ties → smallest cell),
     # per-(cell, dim) mean rounded to 9, renormalized; cells with no
     # members (or a zero-norm mean) keep their previous centroid
-    for it in range(max(lloyd_iters, 0)):
+    for it in range(similarity.LLOYD_ITERS):
         parts.append(
             f"""asg{it} AS MATERIALIZED (
       SELECT vec_id, cell FROM (
@@ -465,7 +497,7 @@ def _ivf_trained_oracle(
                   ELSE c.w END AS w
       FROM cents{it} c LEFT JOIN mv{it} mv USING (cell))"""
         )
-    fin = max(lloyd_iters, 0)
+    fin = similarity.LLOYD_ITERS
     parts.append(
         f"""afin AS MATERIALIZED (
       SELECT vec_id, cell FROM (
@@ -481,7 +513,7 @@ def _ivf_trained_oracle(
                    ORDER BY round(list_inner_product(en.vn, c.w), 9) DESC,
                             c.cell) AS rn
         FROM en, cents{fin} c WHERE en.vec_id < {n_probes})
-      WHERE rn <= {probe_lists}),
+      WHERE rn <= {similarity.IVF_PROBE_LISTS}),
     scored AS MATERIALIZED (
       SELECT p.probe_id, a.vec_id AS cand_id,
              round(list_inner_product(pe.vn, ce.vn), 4) AS cosine
@@ -499,7 +531,7 @@ def _ivf_trained_oracle(
         "WITH "
         + ",\n    ".join(parts)
         + f"\n    SELECT probe_id, rank, cand_id, cosine FROM ranked"
-        f" WHERE rank <= {k}"
+        f" WHERE rank <= {similarity.ANN_K}"
     )
 
 
@@ -512,7 +544,7 @@ def _lsh_sig_cte() -> str:
         f"generate_series(0, len(v) - 1), "
         f"d -> CASE WHEN {_hex2int(f'md5(CAST({p * 10_000} + d AS VARCHAR))')} % 2 = 0 "
         f"THEN 1.0 ELSE -1.0 END)) > 0 THEN {2 ** p} ELSE 0 END"
-        for p in range(_N_PLANES)
+        for p in range(similarity.N_PLANES)
     )
     return f"""
         e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -616,7 +648,7 @@ def _corpus_stage(stage: str):
         from .operators.alignment import corpus_pipeline
 
         pages = synth_pages_from_documents(spark, sf_dir)
-        return corpus_pipeline(pages, lang="en")[stage]
+        return corpus_pipeline(pages)[stage]
 
     run.__doc__ = f"corpus-build chain stage: {stage}"
     return run
@@ -643,7 +675,7 @@ def _export_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _wordpiece_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.wordpiece import build_vocab_df
 
-    return build_vocab_df(R.docs_input(spark, sf_dir), "text", k=200)
+    return build_vocab_df(R.docs_input(spark, sf_dir), "text")
 
 
 # --------------------------------------------------------------------------
@@ -1044,7 +1076,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: _pin(fn) for name, fn in registry.items()}
 
 
-def _bpe_stages_sql(num_merges: int) -> str:
+def _bpe_stages_sql() -> str:
     """CTE chain replaying operators.bpe.train_merges in DuckDB: per
     stage, adjacent-pair counts over the word-freq table, top-1 with the
     pinned tie-break (scalar subquery), one anchored replace. Every
@@ -1053,7 +1085,7 @@ def _bpe_stages_sql(num_merges: int) -> str:
     chain into ~4^K scans of documents (measured: blows the 20k fd
     limit at K=8). Certifies
     merge SELECTION, not just the apply — the whole training loop is in
-    the oracle. Generated (not hand-written) so num_merges stays one
+    the oracle. Generated (not hand-written) so DEFAULT_MERGES stays one
     constant shared with the Spark side."""
     from .operators.textstats import _BPE_PATTERN
 
@@ -1072,7 +1104,7 @@ def _bpe_stages_sql(num_merges: int) -> str:
       FROM pieces GROUP BY 1
     )"""
     ]
-    for k in range(num_merges):
+    for k in range(bpe.DEFAULT_MERGES):
         parts.append(
             f"""pr{k} AS MATERIALIZED (
       SELECT s.syms[t.i] AS l, s.syms[t.i + 1] AS r, sum(s.freq) AS cnt
@@ -1095,18 +1127,18 @@ def _bpe_stages_sql(num_merges: int) -> str:
     return "WITH " + ",\n".join(parts)
 
 
-def _bpe_train_oracle(num_merges: int) -> str:
+def _bpe_train_oracle() -> str:
     union = "\nUNION ALL\n".join(
         f"SELECT {k} AS merge_rank, (SELECT l FROM p{k}) AS lhs, "
         f"(SELECT r FROM p{k}) AS rhs"
-        for k in range(num_merges)
+        for k in range(bpe.DEFAULT_MERGES)
     )
-    return _bpe_stages_sql(num_merges) + "\n" + union
+    return _bpe_stages_sql() + "\n" + union
 
 
-def _bpe_tokenize_oracle(num_merges: int) -> str:
+def _bpe_tokenize_oracle() -> str:
     chain = "w"
-    for k in range(num_merges):
+    for k in range(bpe.DEFAULT_MERGES):
         chain = (
             f"replace({chain}, chr(31) || (SELECT l FROM p{k}) || chr(31)"
             f" || chr(31) || (SELECT r FROM p{k}) || chr(31),"
@@ -1114,7 +1146,7 @@ def _bpe_tokenize_oracle(num_merges: int) -> str:
             f" || chr(31))"
         )
     return (
-        _bpe_stages_sql(num_merges)
+        _bpe_stages_sql()
         + f""",
     dw AS MATERIALIZED (
       SELECT doc_id,
@@ -1135,12 +1167,12 @@ def _bpe_tokenize_oracle(num_merges: int) -> str:
     )
 
 
-def _bpe_chain(num_merges: int) -> str:
+def _bpe_chain() -> str:
     """Nested replace expression applying the learned merges in rank
     order to a wrapped-word column ``w`` (shared by the tokenize and
     encode oracles)."""
     chain = "w"
-    for k in range(num_merges):
+    for k in range(bpe.DEFAULT_MERGES):
         chain = (
             f"replace({chain}, chr(31) || (SELECT l FROM p{k}) || chr(31)"
             f" || chr(31) || (SELECT r FROM p{k}) || chr(31),"
@@ -1150,11 +1182,11 @@ def _bpe_chain(num_merges: int) -> str:
     return chain
 
 
-def _bpe_encode_oracle(num_merges: int) -> str:
+def _bpe_encode_oracle() -> str:
     from .operators.textstats import _BPE_PATTERN
 
     return (
-        _bpe_stages_sql(num_merges)
+        _bpe_stages_sql()
         + f""",
     vocab AS MATERIALIZED (
       SELECT symbol,
@@ -1163,7 +1195,7 @@ def _bpe_encode_oracle(num_merges: int) -> str:
       FROM (SELECT s AS symbol, sum(freq) AS vfreq
             FROM (SELECT unnest(list_filter(string_split(w, chr(31)),
                                             x -> x <> '')) AS s, freq
-                  FROM wf{num_merges})
+                  FROM wf{bpe.DEFAULT_MERGES})
             GROUP BY 1)
     ),
     dp AS MATERIALIZED (
@@ -1180,7 +1212,7 @@ def _bpe_encode_oracle(num_merges: int) -> str:
     dsym AS MATERIALIZED (
       SELECT doc_id, piece_pos, j AS sym_pos, t.syms[j] AS symbol
       FROM (SELECT doc_id, piece_pos,
-                   list_filter(string_split({_bpe_chain(num_merges)},
+                   list_filter(string_split({_bpe_chain()},
                                             chr(31)), x -> x <> '') AS syms
             FROM dp) t,
            unnest(generate_series(1, len(t.syms))) AS u(j)
@@ -1197,17 +1229,17 @@ def _bpe_encode_oracle(num_merges: int) -> str:
     )
 
 
-def _bpe_munch_oracle(num_merges: int, stages: int) -> str:
+def _bpe_munch_oracle() -> str:
     """Maximal-munch inference replay: training CTEs + vocab (shared with
-    the encode oracle) + ``stages`` chained MATERIALIZED munch steps —
+    the encode oracle) + MUNCH_STAGES chained MATERIALIZED munch steps —
     each emits one symbol per active cursor via a correlated
     longest-prefix lookup (ORDER BY length DESC LIMIT 1), then advances
-    the cursor. ``stages`` must cover the longest piece (fixture max is
+    the cursor. MUNCH_STAGES must cover the longest piece (fixture max is
     8 chars; the test pins this bound at every SF)."""
     from .operators.textstats import _BPE_PATTERN
 
     parts = (
-        _bpe_stages_sql(num_merges)
+        _bpe_stages_sql()
         + f""",
     vocab AS MATERIALIZED (
       SELECT symbol,
@@ -1216,7 +1248,7 @@ def _bpe_munch_oracle(num_merges: int, stages: int) -> str:
       FROM (SELECT s AS symbol, sum(freq) AS vfreq
             FROM (SELECT unnest(list_filter(string_split(w, chr(31)),
                                             x -> x <> '')) AS s, freq
-                  FROM wf{num_merges})
+                  FROM wf{bpe.DEFAULT_MERGES})
             GROUP BY 1)
     ),
     mp AS MATERIALIZED (
@@ -1233,7 +1265,7 @@ def _bpe_munch_oracle(num_merges: int, stages: int) -> str:
       FROM mp WHERE length(piece) >= 1
     )"""
     )
-    for k in range(1, stages + 1):
+    for k in range(1, bpe.MUNCH_STAGES + 1):
         parts += f""",
     em{k} AS MATERIALIZED (
       SELECT s.doc_id, s.piece_pos, s.ord,
@@ -1252,7 +1284,7 @@ def _bpe_munch_oracle(num_merges: int, stages: int) -> str:
       WHERE s.pos + length(e.symbol) <= length(s.piece)
     )"""
     union = " UNION ALL ".join(
-        f"SELECT * FROM em{k}" for k in range(1, stages + 1)
+        f"SELECT * FROM em{k}" for k in range(1, bpe.MUNCH_STAGES + 1)
     )
     return (
         parts
@@ -1723,9 +1755,9 @@ def _components_ctes() -> str:
             shf AS (SELECT * FROM sh WHERE shingle NOT IN (
                       SELECT shingle FROM (
                         SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-                      WHERE df > 10000)),
+                      WHERE df > {dedup.MAX_SHINGLE_DF})),
             bok AS (SELECT band, band_hash FROM bands
-                    GROUP BY band, band_hash HAVING count(*) BETWEEN 2 AND 1000),
+                    GROUP BY band, band_hash HAVING count(*) BETWEEN 2 AND {dedup.MAX_BUCKET_SIZE}),
             cands AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
                       FROM bands a
                       JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
@@ -1742,7 +1774,7 @@ def _components_ctes() -> str:
                      JOIN sizes sb ON i.id2 = sb.doc_id
                      JOIN cands c ON c.id1 = i.id1 AND c.id2 = i.id2
                      WHERE round(i.n_common / (sa.n_sh + sb.n_sh - i.n_common), 6)
-                           >= 0.8),
+                           >= {dedup.NEAR_DUP_JACCARD}),
             ex AS (SELECT md5(text) AS chash, min(doc_id) AS keeper
                    FROM documents GROUP BY 1),
             exp AS (SELECT e.keeper AS id1, d.doc_id AS id2
@@ -2039,15 +2071,15 @@ def oracle_sql() -> dict[str, str]:
             LEFT JOIN s2 USING (user_id)
             LEFT JOIN s3 USING (user_id)
         """,
-        "asof_join": """
+        "asof_join": f"""
             WITH tagged AS (
               SELECT user_id, ts, 'c' AS side, event_id,
                      event_id AS r_id, ts AS r_ts
-              FROM events WHERE event_type = 'click'
+              FROM events WHERE event_type = {_sq(temporal.ASOF_REF_TYPE)}
               UNION ALL
               SELECT user_id, ts, 'p', event_id,
                      CAST(NULL AS BIGINT), CAST(NULL AS TIMESTAMP)
-              FROM events WHERE event_type = 'error'
+              FROM events WHERE event_type = {_sq(temporal.ASOF_PROBE_TYPE)}
             ),
             carried AS (
               SELECT user_id, ts, side, event_id,
@@ -2593,21 +2625,21 @@ def oracle_sql() -> dict[str, str]:
             FROM inter
             JOIN sizes sa ON id1 = sa.doc_id
             JOIN sizes sb ON id2 = sb.doc_id
-            WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) > 0
-            ORDER BY jaccard DESC, id1 ASC, id2 ASC LIMIT 100
+            WHERE round(n_common / (sa.n_sh + sb.n_sh - n_common), 6) > {dedup.JACCARD_MIN:g}
+            ORDER BY jaccard DESC, id1 ASC, id2 ASC LIMIT {dedup.JACCARD_TOPK}
         """,
-        "dedup_embedding_cosine": """
+        "dedup_embedding_cosine": f"""
             WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
             n AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nm FROM e)
             SELECT a.vec_id AS id1, b.vec_id AS id2,
                    round(list_inner_product(a.v, b.v) / (a.nm * b.nm), 4) AS cosine
             FROM n a JOIN n b ON a.vec_id < b.vec_id
-            ORDER BY cosine DESC, id1 ASC, id2 ASC LIMIT 100
+            ORDER BY cosine DESC, id1 ASC, id2 ASC LIMIT {dedup.COSINE_TOPK}
         """,
-        "ann_brute_force": """
+        "ann_brute_force": f"""
             WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            probes AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < 5),
-            corpus AS (SELECT vec_id AS cand_id, v AS cv FROM e WHERE vec_id >= 5),
+            probes AS (SELECT vec_id AS probe_id, v AS pv FROM e WHERE vec_id < {similarity.ANN_PROBES}),
+            corpus AS (SELECT vec_id AS cand_id, v AS cv FROM e WHERE vec_id >= {similarity.ANN_PROBES}),
             scored AS (
               SELECT probe_id, cand_id,
                      round(list_inner_product(pv, cv) /
@@ -2619,7 +2651,7 @@ def oracle_sql() -> dict[str, str]:
                      CAST(row_number() OVER (PARTITION BY probe_id
                           ORDER BY cosine DESC, cand_id) AS INTEGER) AS rank
               FROM scored)
-            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= 5
+            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= {similarity.ANN_K}
         """,
         "embedding_quantize": """
             WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -2671,7 +2703,7 @@ def oracle_sql() -> dict[str, str]:
                        AS lang_conf
               FROM h)
             SELECT doc_id, lang, de_hits, en_hits, lang_guess, lang_conf,
-                   CAST(CASE WHEN lang_guess <> 'unk' AND lang_conf >= 0.05
+                   CAST(CASE WHEN lang_guess <> 'unk' AND lang_conf >= {LANG_CONF_THRESHOLD}
                              THEN 1 ELSE 0 END AS INTEGER) AS lang_pass
             FROM g
         """,
@@ -2757,11 +2789,11 @@ def oracle_sql() -> dict[str, str]:
               FROM counts) t
             WHERE rnk <= 20
         """,
-        "cer_bands_kernel": """
+        "cer_bands_kernel": f"""
             WITH s AS (
               SELECT doc_id,
-                     substr(lower(text), 1, 60) AS gt,
-                     reverse(substr(lower(text), 1, 60)) AS ocr
+                     substr(lower(text), 1, {textstats.CER_PREFIX}) AS gt,
+                     reverse(substr(lower(text), 1, {textstats.CER_PREFIX})) AS ocr
               FROM documents
             ), m AS (
               SELECT doc_id,
@@ -2778,14 +2810,14 @@ def oracle_sql() -> dict[str, str]:
                         ELSE '>=0.10' END AS cer_band
             FROM m
         """,
-        "cer_clusters": """
+        "cer_clusters": f"""
             -- the Spark side injects U+0301 after every 'e' (gt) / 'a'
             -- (ocr) and measures CLUSTER-level distance; each base+mark
             -- pair is one cluster, so remapping it to an otherwise-absent
             -- ASCII letter makes byte-level levenshtein the exact
             -- cluster-level distance, and length() the cluster count
             WITH s AS (
-              SELECT doc_id, substr(lower(coalesce(text, '')), 1, 40) AS p
+              SELECT doc_id, substr(lower(coalesce(text, '')), 1, {textstats.CER_CLUSTER_PREFIX}) AS p
               FROM documents
             ), r AS (
               SELECT doc_id,
@@ -2825,11 +2857,11 @@ def oracle_sql() -> dict[str, str]:
               FROM tok)
             SELECT piece, count(*) AS cnt
             FROM pieces WHERE piece <> ''
-            GROUP BY piece ORDER BY cnt DESC, piece ASC LIMIT 200
+            GROUP BY piece ORDER BY cnt DESC, piece ASC LIMIT {WORDPIECE_K}
         """,
-        "frame_sample": """
+        "frame_sample": f"""
             SELECT doc_id, CAST(length(text) AS INTEGER) AS payload_len
-            FROM documents WHERE doc_id % 10 = 0
+            FROM documents WHERE doc_id % {multimodal.FRAME_EVERY} = 0
         """,
         "dedup_minhash_lsh": f"""
             WITH {_minhash_sig_ctes()}
@@ -2865,7 +2897,7 @@ def oracle_sql() -> dict[str, str]:
                     JOIN sizes sb ON sb.doc_id = i.hist_id)
             SELECT c.batch_id, c.hist_id, c.n_band_hits,
                    coalesce(j.jaccard, 0.0) AS jaccard,
-                   CAST(CASE WHEN coalesce(j.jaccard, 0.0) >= 0.8
+                   CAST(CASE WHEN coalesce(j.jaccard, 0.0) >= {dedup.NEAR_DUP_JACCARD}
                              THEN 1 ELSE 0 END AS INTEGER) AS is_dup
             FROM cand c LEFT JOIN jac j
               ON j.batch_id = c.batch_id AND j.hist_id = c.hist_id
@@ -2876,7 +2908,7 @@ def oracle_sql() -> dict[str, str]:
                     FROM bands GROUP BY 1, 2)
             SELECT band, count(*) AS n_buckets,
                    CAST(max(sz) AS BIGINT) AS max_bucket,
-                   CAST(sum(CASE WHEN sz > 1000 THEN 1 ELSE 0 END) AS BIGINT)
+                   CAST(sum(CASE WHEN sz > {dedup.MAX_BUCKET_SIZE} THEN 1 ELSE 0 END) AS BIGINT)
                      AS n_capped
             FROM bsz GROUP BY band
         """,
@@ -2884,12 +2916,12 @@ def oracle_sql() -> dict[str, str]:
             WITH tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS token FROM documents),
             h AS (SELECT doc_id, CAST({_hex2int('md5(token)')} AS BIGINT) AS h FROM tok),
             votes AS (SELECT doc_id,
-                      {', '.join(f"sum(CASE WHEN (h // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(60))}
+                      {', '.join(f"sum(CASE WHEN (h // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(dedup.SIMHASH_BITS))}
                       FROM h GROUP BY doc_id),
             fp AS (SELECT doc_id,
-                   CAST({' + '.join(f"CASE WHEN v{i} > 0 THEN {2 ** i} ELSE 0 END" for i in range(60))} AS BIGINT) AS simhash
+                   CAST({' + '.join(f"CASE WHEN v{i} > 0 THEN {2 ** i} ELSE 0 END" for i in range(dedup.SIMHASH_BITS))} AS BIGINT) AS simhash
                    FROM votes),
-            k AS (SELECT doc_id, CAST(simhash // {2 ** 44} AS BIGINT) AS bucket FROM fp)
+            k AS (SELECT doc_id, CAST(simhash // {_SIMHASH_DIV} AS BIGINT) AS bucket FROM fp)
             SELECT a.doc_id AS id1, b.doc_id AS id2, a.bucket AS bucket
             FROM k a JOIN k b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
         """,
@@ -2897,22 +2929,12 @@ def oracle_sql() -> dict[str, str]:
             WITH tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS token FROM documents),
             h AS (SELECT doc_id, CAST({_hex2int('md5(token)')} AS BIGINT) AS h FROM tok),
             votes AS (SELECT doc_id,
-                      {', '.join(f"sum(CASE WHEN (h // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(60))}
+                      {', '.join(f"sum(CASE WHEN (h // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(dedup.SIMHASH_BITS))}
                       FROM h GROUP BY doc_id),
             fp AS (SELECT doc_id,
-                   CAST({' + '.join(f"CASE WHEN v{i} > 0 THEN {2 ** i} ELSE 0 END" for i in range(60))} AS BIGINT) AS simhash
+                   CAST({' + '.join(f"CASE WHEN v{i} > 0 THEN {2 ** i} ELSE 0 END" for i in range(dedup.SIMHASH_BITS))} AS BIGINT) AS simhash
                    FROM votes),
-            k AS (
-              SELECT doc_id, 0 AS rot,
-                     CAST(simhash // {2 ** 44} AS BIGINT) AS bucket FROM fp
-              UNION ALL
-              SELECT doc_id, 20,
-                     CAST(((simhash % {2 ** 40}) * {2 ** 20} + simhash // {2 ** 40})
-                          // {2 ** 44} AS BIGINT) FROM fp
-              UNION ALL
-              SELECT doc_id, 40,
-                     CAST(((simhash % {2 ** 20}) * {2 ** 40} + simhash // {2 ** 20})
-                          // {2 ** 44} AS BIGINT) FROM fp
+            k AS ({_simhash_rotated_buckets()}
             )
             SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
             FROM k a JOIN k b
@@ -2924,9 +2946,9 @@ def oracle_sql() -> dict[str, str]:
             shf AS (SELECT * FROM sh WHERE shingle NOT IN (
                       SELECT shingle FROM (
                         SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-                      WHERE df > 10000)),
+                      WHERE df > {dedup.MAX_SHINGLE_DF})),
             bok AS (SELECT band, band_hash FROM bands
-                    GROUP BY band, band_hash HAVING count(*) BETWEEN 2 AND 1000),
+                    GROUP BY band, band_hash HAVING count(*) BETWEEN 2 AND {dedup.MAX_BUCKET_SIZE}),
             cands AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
                       FROM bands a
                       JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
@@ -2943,7 +2965,7 @@ def oracle_sql() -> dict[str, str]:
                      JOIN sizes sb ON i.id2 = sb.doc_id
                      JOIN cands c ON c.id1 = i.id1 AND c.id2 = i.id2
                      WHERE round(i.n_common / (sa.n_sh + sb.n_sh - i.n_common), 6)
-                           >= 0.8),
+                           >= {dedup.NEAR_DUP_JACCARD}),
             ex AS (SELECT md5(text) AS chash, min(doc_id) AS keeper
                    FROM documents GROUP BY 1),
             exl AS (SELECT d.doc_id, 'exact_dup' AS drop_reason
@@ -2972,7 +2994,7 @@ def oracle_sql() -> dict[str, str]:
                    coalesce(p.min_tf, 0) AS min_tf,
                    round(coalesce(CAST(p.sum_tf AS DOUBLE) / p.n_tokens, 0.0), 4)
                      AS mean_tf,
-                   CAST(CASE WHEN p.min_tf IS NULL OR p.min_tf >= 2
+                   CAST(CASE WHEN p.min_tf IS NULL OR p.min_tf >= {textstats.LM_MIN_TF}
                              THEN 1 ELSE 0 END AS INTEGER) AS lm_keep
             FROM documents d LEFT JOIN per p USING (doc_id)
         """,
@@ -3013,15 +3035,15 @@ def oracle_sql() -> dict[str, str]:
         "decontaminate": f"""
             WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS l FROM documents),
             sh AS (SELECT doc_id, unnest({_SHINGLES_SQL}) AS shingle FROM toks),
-            bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 41 = 0),
+            bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {dedup.BENCH_MOD} = 0),
             hits AS (SELECT doc_id, count(*) AS n_overlap
                      FROM sh JOIN bench USING (shingle)
-                     WHERE doc_id % 41 <> 0 GROUP BY doc_id)
+                     WHERE doc_id % {dedup.BENCH_MOD} <> 0 GROUP BY doc_id)
             SELECT d.doc_id,
-                   CASE WHEN d.doc_id % 41 = 0 THEN 'benchmark'
+                   CASE WHEN d.doc_id % {dedup.BENCH_MOD} = 0 THEN 'benchmark'
                         ELSE 'train' END AS role,
                    coalesce(h.n_overlap, 0) AS n_overlap,
-                   CAST(CASE WHEN d.doc_id % 41 <> 0
+                   CAST(CASE WHEN d.doc_id % {dedup.BENCH_MOD} <> 0
                               AND coalesce(h.n_overlap, 0) >= 1
                              THEN 1 ELSE 0 END AS INTEGER) AS contaminated
             FROM documents d LEFT JOIN hits h USING (doc_id)
@@ -3110,28 +3132,28 @@ def oracle_sql() -> dict[str, str]:
                                  THEN 1 ELSE 0 END) AS INTEGER) AS rate_capped
             FROM j GROUP BY 1, 2
         """,
-        "pii_redact": r"""
+        "pii_redact": f"""
             WITH aug AS (
               SELECT doc_id, coalesce(text, '') ||
-                CASE WHEN doc_id % 7 = 0
+                CASE WHEN doc_id % {textstats.PII_EMAIL_MOD} = 0
                      THEN ' contact user' || CAST(doc_id AS VARCHAR)
                           || '@example.com'
                      ELSE '' END ||
-                CASE WHEN doc_id % 11 = 0
+                CASE WHEN doc_id % {textstats.PII_PHONE_MOD} = 0
                      THEN ' call +1 555 '
                           || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
                      ELSE '' END AS t
               FROM documents)
             SELECT doc_id,
                    CAST(len(regexp_extract_all(t,
-                     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
+                     {_sq(textstats.PII_EMAIL_RE)}))
                      AS INTEGER) AS n_emails,
                    CAST(len(regexp_extract_all(t,
-                     '\+[0-9]{1,2} [0-9]{3} [0-9]{4}')) AS INTEGER) AS n_phones,
+                     {_sq(textstats.PII_PHONE_RE)})) AS INTEGER) AS n_phones,
                    regexp_replace(regexp_replace(t,
-                     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+                     {_sq(textstats.PII_EMAIL_RE)},
                      '<EMAIL>', 'g'),
-                     '\+[0-9]{1,2} [0-9]{3} [0-9]{4}', '<PHONE>', 'g')
+                     {_sq(textstats.PII_PHONE_RE)}, '<PHONE>', 'g')
                      AS redacted
             FROM aug
         """,
@@ -3160,9 +3182,9 @@ def oracle_sql() -> dict[str, str]:
         "ann_lsh_bucketed": f"""
             WITH {_lsh_sig_cte()},
             probes AS (SELECT vec_id AS probe_id, bucket AS pb, v AS pv, nm AS pn
-                       FROM sig WHERE vec_id < 5),
+                       FROM sig WHERE vec_id < {similarity.ANN_PROBES}),
             corpus AS (SELECT vec_id AS cand_id, bucket AS cb, v AS cv, nm AS cn
-                       FROM sig WHERE vec_id >= 5),
+                       FROM sig WHERE vec_id >= {similarity.ANN_PROBES}),
             scored AS (SELECT probe_id, cand_id,
                               round(list_inner_product(pv, cv) / (pn * cn), 4)
                                 AS cosine
@@ -3172,18 +3194,18 @@ def oracle_sql() -> dict[str, str]:
                                    ORDER BY cosine DESC, cand_id) AS INTEGER)
                                 AS rank
                        FROM scored)
-            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= 3
+            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= {similarity.LSH_K}
         """,
         "ann_lsh_multiprobe": f"""
             WITH {_lsh_sig_cte()},
             probes AS (SELECT vec_id AS probe_id,
                               unnest([bucket,
-                                      {', '.join(f'xor(bucket, {2 ** p})' for p in range(_N_PLANES))}])
+                                      {', '.join(f'xor(bucket, {2 ** p})' for p in range(similarity.N_PLANES))}])
                                 AS pb,
                               v AS pv, nm AS pn
-                       FROM sig WHERE vec_id < 5),
+                       FROM sig WHERE vec_id < {similarity.ANN_PROBES}),
             corpus AS (SELECT vec_id AS cand_id, bucket AS cb, v AS cv, nm AS cn
-                       FROM sig WHERE vec_id >= 5),
+                       FROM sig WHERE vec_id >= {similarity.ANN_PROBES}),
             scored AS (SELECT probe_id, cand_id,
                               round(list_inner_product(pv, cv) / (pn * cn), 4)
                                 AS cosine
@@ -3193,7 +3215,7 @@ def oracle_sql() -> dict[str, str]:
                                    ORDER BY cosine DESC, cand_id) AS INTEGER)
                                 AS rank
                        FROM scored)
-            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= 3
+            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= {similarity.LSH_K}
         """,
         # lsh_signatures' buckets must equal the md5-parity plane formula
         "lsh_signatures_np": f"""
@@ -3212,13 +3234,13 @@ def oracle_sql() -> dict[str, str]:
             corp AS (SELECT vec_id AS cand_id, v AS cv, nm AS cn, cell
                      FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
                                 ORDER BY dot DESC, cell) AS rn
-                           FROM d WHERE vec_id >= 5)
+                           FROM d WHERE vec_id >= {similarity.ANN_PROBES})
                      WHERE rn = 1),
             pr AS (SELECT vec_id AS probe_id, v AS pv, nm AS pn, cell
                    FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
                               ORDER BY dot DESC, cell) AS rn
-                         FROM d WHERE vec_id < 5)
-                   WHERE rn <= 4),
+                         FROM d WHERE vec_id < {similarity.ANN_PROBES})
+                   WHERE rn <= {similarity.IVF_PROBE_LISTS}),
             scored AS (SELECT probe_id, cand_id,
                               round(list_inner_product(pv, cv) / (pn * cn), 4)
                                 AS cosine
@@ -3228,7 +3250,7 @@ def oracle_sql() -> dict[str, str]:
                                    ORDER BY cosine DESC, cand_id) AS INTEGER)
                                 AS rank
                        FROM scored)
-            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= 5
+            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= {similarity.ANN_K}
         """,
         "line_split_roundtrip": """
             SELECT doc_id AS parent_id, CAST(1 AS INTEGER) AS roundtrip_ok
@@ -3237,9 +3259,9 @@ def oracle_sql() -> dict[str, str]:
         "pdf_layout_parse": f"""
             WITH t AS (SELECT doc_id, len({_TOKS_SQL}) AS n FROM documents)
             SELECT 'pdf://doc/' || doc_id AS url,
-                   CAST(CASE WHEN n = 0 THEN 0 ELSE ceil(n / 8.0) END AS BIGINT)
+                   CAST(CASE WHEN n = 0 THEN 0 ELSE ceil(n / {pdf_layout.PDF_WORDS_PER_LINE}.0) END AS BIGINT)
                      AS n_lines,
-                   CAST(CASE WHEN n = 0 THEN 0 WHEN n > 8 THEN 2 ELSE 1 END
+                   CAST(CASE WHEN n = 0 THEN 0 WHEN n > {pdf_layout.PDF_WORDS_PER_LINE} THEN 2 ELSE 1 END
                         AS INTEGER) AS n_pages,
                    CAST(1 AS INTEGER) AS roundtrip_ok
             FROM t
@@ -3277,7 +3299,7 @@ def oracle_sql() -> dict[str, str]:
                   FROM d),
             s AS (SELECT doc_id, w, h, c,
                          CASE WHEN w = 0 THEN 0.0
-                              ELSE least(1.0, 64.0 / greatest(w, h)) END AS scale
+                              ELSE least(1.0, {multimodal.THUMB_MAX_SIDE}.0 / greatest(w, h)) END AS scale
                   FROM g)
             SELECT doc_id,
                    CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -3480,14 +3502,14 @@ def oracle_sql() -> dict[str, str]:
         "ann_ivf": _ivf_trained_oracle(),
         # triplet mining: the ann_brute_force cosine conventions + one
         # (probe, is_pos) window + conditional-aggregation pivot
-        "triplet_mining": """
+        "triplet_mining": f"""
             WITH e AS (SELECT vec_id, label,
                               CAST(embedding AS DOUBLE[]) AS v
                        FROM embeddings),
             probes AS (SELECT vec_id AS probe_id, label AS probe_label,
-                              v AS pv FROM e WHERE vec_id < 16),
+                              v AS pv FROM e WHERE vec_id < {similarity.TRIPLET_PROBES}),
             corpus AS (SELECT vec_id AS cand_id, label AS clabel, v AS cv
-                       FROM e WHERE vec_id >= 16),
+                       FROM e WHERE vec_id >= {similarity.TRIPLET_PROBES}),
             scored AS (
               SELECT probe_id, probe_label, cand_id,
                      round(list_inner_product(pv, cv) /
@@ -3820,7 +3842,7 @@ def oracle_sql() -> dict[str, str]:
                    || {_sq("</p>" + _PAGE_TMPL.split("{paras}")[1])}
                    AS html
           FROM documents
-          WHERE doc_id % 17 = 0
+          WHERE doc_id % {warc.CDX_PROBE_MOD} = 0
         )
         SELECT url, warc_date, md5(html) AS payload_md5
         FROM h
@@ -3870,7 +3892,7 @@ def oracle_sql() -> dict[str, str]:
                CAST(min(anchor) AS INTEGER) AS first_pos
         FROM a WHERE k = 2 GROUP BY doc_id
     """
-    sql["host_tiers"] = """
+    sql["host_tiers"] = f"""
         WITH h AS (
           SELECT 'site' || CAST(doc_id % 7 AS VARCHAR) || '.example.com'
                    AS host,
@@ -3882,7 +3904,7 @@ def oracle_sql() -> dict[str, str]:
           FROM h GROUP BY host
         )
         SELECT host, n_docs, total_chars,
-               CAST(ntile(4) OVER (ORDER BY total_chars DESC, host)
+               CAST(ntile({urls.HOST_TIERS}) OVER (ORDER BY total_chars DESC, host)
                     AS INTEGER) AS tier
         FROM per_host
     """
@@ -3928,27 +3950,27 @@ def oracle_sql() -> dict[str, str]:
                    AS html
           FROM documents
         )
-        SELECT CAST(doc_id // 50 AS BIGINT) AS file_id, url, warc_date,
+        SELECT CAST(doc_id // {warc.RECORDS_PER_FILE} AS BIGINT) AS file_id, url, warc_date,
                CAST(octet_length(encode(html)) AS BIGINT) AS content_length,
                md5(html) AS payload_md5, 'ok' AS status
-        FROM h WHERE (doc_id // 50) % 7 <> 3
+        FROM h WHERE (doc_id // {warc.RECORDS_PER_FILE}) % {warc.QUARANTINE_EVERY} <> 3
         UNION ALL
-        SELECT DISTINCT CAST(doc_id // 50 AS BIGINT) AS file_id,
+        SELECT DISTINCT CAST(doc_id // {warc.RECORDS_PER_FILE} AS BIGINT) AS file_id,
                CAST(NULL AS VARCHAR) AS url,
                CAST(NULL AS VARCHAR) AS warc_date,
                CAST(NULL AS BIGINT) AS content_length,
                CAST(NULL AS VARCHAR) AS payload_md5,
                'quarantined' AS status
-        FROM documents WHERE (doc_id // 50) % 7 = 3
+        FROM documents WHERE (doc_id // {warc.RECORDS_PER_FILE}) % {warc.QUARANTINE_EVERY} = 3
     """
     # learned-BPE oracles replay the ENTIRE training loop (merge selection
     # + apply) as generated CTE stages — see _bpe_stages_sql
-    sql["bpe_train"] = _bpe_train_oracle(8)
-    sql["bpe_tokenize"] = _bpe_tokenize_oracle(8)
-    sql["bpe_munch_tokenize"] = _bpe_munch_oracle(8, bpe.MUNCH_STAGES)
+    sql["bpe_train"] = _bpe_train_oracle()
+    sql["bpe_tokenize"] = _bpe_tokenize_oracle()
+    sql["bpe_munch_tokenize"] = _bpe_munch_oracle()
     sql["tokenizer_divergence"] = f"""
-        WITH enc AS ({_bpe_encode_oracle(8)}),
-        mn AS ({_bpe_munch_oracle(8, bpe.MUNCH_STAGES)}),
+        WITH enc AS ({_bpe_encode_oracle()}),
+        mn AS ({_bpe_munch_oracle()}),
         mids AS (SELECT doc_id,
                         list(vocab_id ORDER BY piece_pos, sym_pos)
                           AS munch_ids
@@ -3961,7 +3983,7 @@ def oracle_sql() -> dict[str, str]:
         FROM enc e LEFT JOIN mids i USING (doc_id)
     """
     sql["bpe_fertility"] = f"""
-        WITH tok AS ({_bpe_tokenize_oracle(8)})
+        WITH tok AS ({_bpe_tokenize_oracle()})
         SELECT d.lang, count(*) AS n_docs,
                CAST(sum(t.n_pieces) AS BIGINT) AS n_pieces,
                CAST(sum(t.n_bpe_tokens) AS BIGINT) AS n_bpe_tokens,
@@ -3970,18 +3992,18 @@ def oracle_sql() -> dict[str, str]:
         FROM documents d JOIN tok t USING (doc_id) GROUP BY 1
     """
     sql["bpe_vocab"] = (
-        _bpe_stages_sql(8)
-        + """
+        _bpe_stages_sql()
+        + f"""
     SELECT CAST(row_number() OVER (ORDER BY freq DESC, symbol)
                 AS INTEGER) AS vocab_id,
            symbol, CAST(freq AS BIGINT) AS freq
     FROM (SELECT s AS symbol, sum(freq) AS freq
           FROM (SELECT unnest(list_filter(string_split(w, chr(31)),
                                           x -> x <> '')) AS s, freq
-                FROM wf8)
+                FROM wf{bpe.DEFAULT_MERGES})
           GROUP BY 1)"""
     )
-    sql["bpe_encode"] = _bpe_encode_oracle(8)
+    sql["bpe_encode"] = _bpe_encode_oracle()
     # M14 one-hot: compose the encode replay, explode positions, build
     # the indicator list against the in-plan vocab-size dim
     from .operators.bpe import ONEHOT_MOD, ONEHOT_POS
@@ -4269,15 +4291,16 @@ def oracle_sql() -> dict[str, str]:
                     THEN 1 ELSE 0 END AS INTEGER) AS host_pass
         FROM j JOIN st ON j.host = st.host
     """
+    sample_rate = f"{textstats.SAMPLE_HI_RATE} ELSE {textstats.SAMPLE_LO_RATE}"
     sql["corpus_sample"] = f"""
         WITH ql AS ({sql["quality_score"]})
         SELECT doc_id, quality_keep,
-               CAST(CASE WHEN quality_keep = 1 THEN 100 ELSE 10 END
+               CAST(CASE WHEN quality_keep = 1 THEN {sample_rate} END
                     AS INTEGER) AS rate_pct,
                CAST({_hex2int("md5(CAST(doc_id AS VARCHAR))")} % 100
                     AS BIGINT) AS slot,
                CAST(CASE WHEN {_hex2int("md5(CAST(doc_id AS VARCHAR))")} % 100
-                         < CASE WHEN quality_keep = 1 THEN 100 ELSE 10 END
+                         < CASE WHEN quality_keep = 1 THEN {sample_rate} END
                     THEN 1 ELSE 0 END AS INTEGER) AS sampled
         FROM ql
     """
@@ -5053,7 +5076,7 @@ def oracle_sql() -> dict[str, str]:
         shf AS (SELECT * FROM sh WHERE shingle NOT IN (
                   SELECT shingle FROM (
                     SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-                  WHERE df > 10000)),
+                  WHERE df > {dedup.MAX_SHINGLE_DF})),
         inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
                          count(*) AS n_common
                   FROM shf a JOIN shf b

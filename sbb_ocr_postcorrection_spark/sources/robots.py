@@ -83,17 +83,15 @@ def parse_robots(txt: str, agent: str = "*") -> list[tuple[bool, str]]:
     return _group_for(_parse_groups(txt), agent)["rules"]
 
 
-def crawl_delay(
-    txt: str, agent: str = "*", default: int = DEFAULT_CRAWL_DELAY_S
-) -> int:
+def crawl_delay(txt: str, agent: str = "*") -> int:
     """The agent's group's Crawl-delay in seconds — parsed with the SAME
     group-aware, case/whitespace-normalized line walk as the rules (a
     bare regex missed 'crawl-delay:10' spellings and read OTHER agents'
     delays — review-confirmed politeness violations). Absent/malformed →
-    ``default``; clamped to ≥1 so a 'Crawl-delay: 0' line can never
+    ``DEFAULT_CRAWL_DELAY_S``; clamped to ≥1 so a 'Crawl-delay: 0' line can never
     collapse a host's schedule into simultaneous fetches."""
     d = _group_for(_parse_groups(txt), agent)["delay"]
-    return max(d if d is not None else default, 1)
+    return max(d if d is not None else DEFAULT_CRAWL_DELAY_S, 1)
 
 
 def _glob_match(pattern: str, s: str) -> bool:

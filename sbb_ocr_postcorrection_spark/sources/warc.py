@@ -95,12 +95,15 @@ def parse_warc_records(blob: bytes) -> list[dict]:
     return out
 
 
-def gzip_member(data: bytes, level: int = 6) -> bytes:
+GZIP_LEVEL = 6  # the fixed compression level that keeps archives byte-identical
+
+
+def gzip_member(data: bytes) -> bytes:
     """One standalone gzip member (RFC 1952 container via zlib wbits
     16+15). Common Crawl `.warc.gz` files are a CONCATENATION of these —
     one member per WARC record — so a reader can seek to any record
     offset from the index and inflate just that member."""
-    co = zlib.compressobj(level, zlib.DEFLATED, 31)
+    co = zlib.compressobj(GZIP_LEVEL, zlib.DEFLATED, 31)
     return co.compress(data) + co.flush()
 
 
@@ -141,9 +144,12 @@ def parse_warc_gz_records(blob: bytes) -> list[dict]:
     return out
 
 
-def _synth_record_table(spark, sf_dir, records_per_file: int):
+RECORDS_PER_FILE = 50  # fixture archives: one per 50-doc_id range
+
+
+def _synth_record_table(spark, sf_dir):
     """(file_id, doc_id, rec) — one serialized WARC record per fixture
-    page, bucketed ``records_per_file`` per file. JVM-side template
+    page, bucketed RECORDS_PER_FILE per file. JVM-side template
     concat; shared by the plain and gzip scan fixtures."""
     from pyspark.sql import functions as F
 
@@ -172,7 +178,7 @@ def _synth_record_table(spark, sf_dir, records_per_file: int):
         F.expr("cast(split(url, '/')[4] as long)").alias("doc_id"),
         rec.alias("rec"),
     ).select(
-        F.expr(f"doc_id DIV {int(records_per_file)}").alias("file_id"),
+        F.expr(f"doc_id DIV {RECORDS_PER_FILE}").alias("file_id"),
         "doc_id",
         "rec",
     )
@@ -197,9 +203,9 @@ def _records_to_rows(records: list[dict]) -> list[dict]:
     ]
 
 
-def warc_scan(spark, sf_dir, records_per_file: int = 50):
+def warc_scan(spark, sf_dir):
     """S-row surface: synthesize WARC files from the pages fixture (one
-    multi-record blob per ``records_per_file`` doc_id range, records in
+    multi-record blob per ``RECORDS_PER_FILE`` doc_id range, records in
     doc_id order — deterministic, like every fixture), then parse them
     back with the Arrow kernel. Returns one row per record:
     (url, warc_date, content_length, payload_md5).
@@ -218,7 +224,7 @@ def warc_scan(spark, sf_dir, records_per_file: int = 50):
 
     from pyspark.sql import functions as F
 
-    per_rec = _synth_record_table(spark, sf_dir, records_per_file)
+    per_rec = _synth_record_table(spark, sf_dir)
     blobs = per_rec.groupBy("file_id").agg(
         F.aggregate(
             F.transform(
@@ -243,7 +249,7 @@ def warc_scan(spark, sf_dir, records_per_file: int = 50):
     return blobs.mapInPandas(kern, schema=_SCAN_SCHEMA)
 
 
-def warc_gz_scan(spark, sf_dir, records_per_file: int = 50):
+def warc_gz_scan(spark, sf_dir):
     """`.warc.gz` form of warc_scan: the actual Common Crawl layout — each
     record individually gzip-compressed, members concatenated per file.
 
@@ -269,7 +275,7 @@ def warc_gz_scan(spark, sf_dir, records_per_file: int = 50):
 
     from pyspark.sql import functions as F
 
-    per_rec = _synth_record_table(spark, sf_dir, records_per_file)
+    per_rec = _synth_record_table(spark, sf_dir)
     blobs = per_rec.groupBy("file_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("doc_id", "rec"))),
@@ -294,10 +300,7 @@ def warc_gz_scan(spark, sf_dir, records_per_file: int = 50):
 QUARANTINE_EVERY = 7  # fixture: file_id % 7 == 3 archives arrive corrupt
 
 
-def warc_scan_quarantine(
-    spark, sf_dir, records_per_file: int = 50,
-    corrupt_every: int = QUARANTINE_EVERY,
-):
+def warc_scan_quarantine(spark, sf_dir):
     """Error-RESILIENT archive scan: the production posture for a 100-TB
     crawl where some archives WILL be corrupt. The strict scans raise
     (right for a single manifest you control); a fleet-wide ingest must
@@ -310,7 +313,7 @@ def warc_scan_quarantine(
     normally, in the same single pass — per-file try/except around the
     SAME strict parser, so tolerant and strict modes cannot drift.
 
-    The fixture deterministically corrupts file_id % corrupt_every == 3
+    The fixture deterministically corrupts file_id % QUARANTINE_EVERY == 3
     archives (first byte flipped — framing breaks at offset 0), giving
     the oracle a closed form over BOTH branches: quarantined files
     contribute exactly one status row, clean files replay the warc_scan
@@ -322,7 +325,7 @@ def warc_scan_quarantine(
 
     from pyspark.sql import functions as F
 
-    per_rec = _synth_record_table(spark, sf_dir, records_per_file)
+    per_rec = _synth_record_table(spark, sf_dir)
     blobs = per_rec.groupBy("file_id").agg(
         F.aggregate(
             F.transform(
@@ -335,7 +338,7 @@ def warc_scan_quarantine(
     ).select(
         "file_id",
         "warc",
-        (F.col("file_id") % corrupt_every == 3).alias("corrupt"),
+        (F.col("file_id") % QUARANTINE_EVERY == 3).alias("corrupt"),
     )
 
     cols = ["file_id", "url", "warc_date", "content_length", "payload_md5",
@@ -375,11 +378,12 @@ def warc_scan_quarantine(
     )
 
 
-def write_warc_archive_indexed(
-    pages, out_dir: str, n_files: int = 8, level: int = 6
-):
+CDX_FILES = 8  # archive files the indexed sink writes
+
+
+def write_warc_archive_indexed(pages, out_dir: str):
     """Distributed WARC sink with a CDX-style per-record index:
-    (url, warc_ts, html) → ``n_files`` `.warc.gz` member archives under
+    (url, warc_ts, html) → ``CDX_FILES`` `.warc.gz` member archives under
     ``out_dir``, returning one row per record — (url, warc_date, file,
     offset, length). The scan half (warc_gz_scan) reads these bytes back
     record-for-record, which the roundtrip test pins. Each record is its
@@ -421,7 +425,7 @@ def write_warc_archive_indexed(
         "url",
         iso.alias("warc_date"),
         F.col("html"),
-        F.pmod(md5_60(F.col("url")), F.lit(n_files)).cast("int").alias("bkt"),
+        F.pmod(md5_60(F.col("url")), F.lit(CDX_FILES)).cast("int").alias("bkt"),
     )
 
     def _write(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -429,7 +433,7 @@ def write_warc_archive_indexed(
         members, offsets, lengths = [], [], []
         off = 0
         for u, d, p in zip(pdf["url"], pdf["warc_date"], pdf["html"]):
-            m = gzip_member(build_warc_record(u, d, bytes(p)), level)
+            m = gzip_member(build_warc_record(u, d, bytes(p)))
             members.append(m)
             offsets.append(off)
             lengths.append(len(m))
@@ -456,14 +460,14 @@ def write_warc_archive_indexed(
     )
 
 
-def write_warc_cdx(pages, out_dir: str, n_files: int = 8, level: int = 6):
+def write_warc_cdx(pages, out_dir: str):
     """Write archives + persist the CDX index as a parquet sidecar
     (``out_dir``/_cdx), then return the index DataFrame read back from
     it. One job writes both: the sidecar write IS the action that runs
     the archive-writing tasks."""
     import os
 
-    idx = write_warc_archive_indexed(pages, out_dir, n_files, level)
+    idx = write_warc_archive_indexed(pages, out_dir)
     cdx_path = os.path.join(out_dir, "_cdx")
     idx.write.mode("overwrite").parquet(cdx_path)
     return pages.sparkSession.read.parquet(cdx_path)
@@ -488,10 +492,13 @@ def warc_point_read(out_dir: str, file: str, offset: int, length: int) -> dict:
     return recs[0]
 
 
-def warc_cdx_lookup(spark, sf_dir, probe_mod: int = 17):
+CDX_PROBE_MOD = 17  # warc_cdx_lookup probes every 17th document
+
+
+def warc_cdx_lookup(spark, sf_dir):
     """Driver query certifying the index + point-read path end-to-end:
     write the synthesized pages as indexed archives, probe every
-    ``probe_mod``-th document THROUGH the index with ranged point reads,
+    ``CDX_PROBE_MOD``-th document THROUGH the index with ranged point reads,
     and return what the reads actually decoded — (url, warc_date,
     payload_md5) come from the inflated record bytes, not echoed input,
     so the oracle match proves offset/length/compression are all right.
@@ -513,7 +520,7 @@ def warc_cdx_lookup(spark, sf_dir, probe_mod: int = 17):
     pages = synth_pages_from_documents(spark, sf_dir)
     cdx = write_warc_cdx(pages, out_dir)
     probes = cdx.where(
-        F.expr("cast(split(url, '/')[4] as long)") % probe_mod == 0
+        F.expr("cast(split(url, '/')[4] as long)") % CDX_PROBE_MOD == 0
     )
 
     def kern(batches):

@@ -5,21 +5,17 @@ from __future__ import annotations
 
 import os
 import sys
-import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from sbb_ocr_postcorrection_spark.queries import write_package_zip  # noqa: E402
 
 
 def main() -> int:
     out = sys.argv[1] if len(sys.argv) > 1 else "dist/sbb_ocr_postcorrection_spark.zip"
     os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
-    pkg = os.path.join(REPO, "sbb_ocr_postcorrection_spark")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    zf.write(full, os.path.relpath(full, REPO))
+    write_package_zip(out)
     print(out)
     return 0
 

@@ -44,10 +44,11 @@ def pages_df(spark):
     )
 
 
-def test_corpus_pipeline_end_to_end(spark, pages_df):
-    from sbb_ocr_postcorrection_spark.operators.alignment import corpus_pipeline
+def test_corpus_pipeline_end_to_end(spark, pages_df, monkeypatch):
+    from sbb_ocr_postcorrection_spark.operators import alignment
 
-    stages = corpus_pipeline(pages_df, lang="de")
+    monkeypatch.setattr(alignment, "CORPUS_LANG", "de")
+    stages = alignment.corpus_pipeline(pages_df)
     alignments = stages["alignments"].collect()
     assert alignments
     # schema & invariant parity with the reference's asserts

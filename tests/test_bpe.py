@@ -4,6 +4,7 @@ token-count conservation, and the exhaustion guard."""
 
 import pytest
 
+from sbb_ocr_postcorrection_spark.operators import bpe
 from sbb_ocr_postcorrection_spark.operators.bpe import (
     SEP,
     bpe_tokenize,
@@ -80,7 +81,7 @@ def test_anchored_replace_equals_greedy_merge():
 # ------------------------------------------------------------ spark side
 
 
-def test_train_merges_matches_reference_trainer(spark):
+def test_train_merges_matches_reference_trainer(spark, monkeypatch):
     """Distributed training == the classic single-machine trainer on an
     injected corpus with real tie-breaks (low/lower/lowest plus digit
     runs and punctuation pieces)."""
@@ -91,7 +92,8 @@ def test_train_merges_matches_reference_trainer(spark):
         (4, None),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = train_merges(spark, SF, num_merges=6, docs=docs)
+    monkeypatch.setattr(bpe, "DEFAULT_MERGES", 6)
+    got = train_merges(spark, SF, docs=docs)
 
     import re
 
@@ -150,11 +152,11 @@ def test_bpe_tokenize_conservation(spark):
 
 
 def test_train_merges_exhaustion_raises(spark):
-    """A corpus with fewer learnable pairs than num_merges must raise —
+    """A corpus with fewer learnable pairs than DEFAULT_MERGES must raise —
     the fixed-stage oracle would silently diverge otherwise."""
     docs = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
     with pytest.raises(ValueError, match="exhausted"):
-        train_merges(spark, SF, num_merges=5, docs=docs)
+        train_merges(spark, SF, docs=docs)
 
 
 def test_bpe_encode_decode_roundtrip(spark):
@@ -191,7 +193,7 @@ def test_bpe_encode_decode_roundtrip(spark):
         assert decoded == pieces
 
 
-def test_bpe_fertility_consistent_with_tokenize(spark):
+def test_bpe_fertility_consistent_with_tokenize(spark, monkeypatch):
     """Fertility rollup == bpe_tokenize summed per language; fertility is
     >= 1 wherever any piece exists (a piece is >= 1 token) and monotone
     in the merge count: more merges can only lower (or keep) the total
@@ -235,9 +237,10 @@ def test_bpe_fertility_consistent_with_tokenize(spark):
     }
     assert got == want
     assert all(f >= 1.0 for _, _, _, f in got.values())
+    monkeypatch.setattr(bpe, "DEFAULT_MERGES", 2)
     few = {
         r["lang"]: r["n_bpe_tokens"]
-        for r in bpe_fertility(spark, sf, num_merges=2).collect()
+        for r in bpe_fertility(spark, sf).collect()
     }
     assert all(few[l] >= got[l][2] for l in got)
 

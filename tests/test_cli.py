@@ -4,12 +4,15 @@ cluster-submittable, with parquet/jsonl sinks."""
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+RUN_JOB = str(Path(__file__).resolve().parents[1] / "scripts" / "run_job.py")
 
 
 def test_run_job_query_mode(tmp_path):
     r = subprocess.run(
         [
-            sys.executable, "/root/repo/scripts/run_job.py",
+            sys.executable, RUN_JOB,
             "--query", "length_percentiles",
             "--sf-dir", "/root/testdata/sf0.001",
             "--output", str(tmp_path),
@@ -39,7 +42,7 @@ def test_run_job_query_mode(tmp_path):
 def test_run_job_query_mode_rejects_unknown():
     r = subprocess.run(
         [
-            sys.executable, "/root/repo/scripts/run_job.py",
+            sys.executable, RUN_JOB,
             "--query", "no_such_query", "--output", "/tmp/x",
         ],
         capture_output=True, text=True, timeout=60,

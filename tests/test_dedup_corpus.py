@@ -7,6 +7,7 @@ MinHash on this fixed input (LSH here is a pure function of the text)."""
 import pandas as pd
 import pytest
 
+from sbb_ocr_postcorrection_spark.operators import dedup as D
 from sbb_ocr_postcorrection_spark.operators.dedup import deduplicate_corpus
 
 BASE = ("the quick brown fox jumps over the lazy dog near the old river "
@@ -41,7 +42,7 @@ def crafted_docs(spark, tmp_path):
 
 
 def test_keep_rules(spark, crafted_docs):
-    rows = {r["doc_id"]: r for r in deduplicate_corpus(spark, crafted_docs, 0.8).collect()}
+    rows = {r["doc_id"]: r for r in deduplicate_corpus(spark, crafted_docs).collect()}
     assert rows[0]["keep"] == 1 and rows[0]["drop_reason"] == "kept"
     assert rows[1]["keep"] == 0 and rows[1]["drop_reason"] == "exact_dup"
     assert rows[4]["keep"] == 0 and rows[4]["drop_reason"] == "exact_dup"
@@ -54,9 +55,10 @@ def test_keep_rules(spark, crafted_docs):
     assert kept == [0, 3, 5]
 
 
-def test_threshold_spares_weaker_matches(spark, crafted_docs):
+def test_threshold_spares_weaker_matches(spark, crafted_docs, monkeypatch):
     # raising the bar above 0.875 keeps the near-dup
-    rows = {r["doc_id"]: r for r in deduplicate_corpus(spark, crafted_docs, 0.9).collect()}
+    monkeypatch.setattr(D, "NEAR_DUP_JACCARD", 0.9)
+    rows = {r["doc_id"]: r for r in deduplicate_corpus(spark, crafted_docs).collect()}
     assert rows[2]["keep"] == 1
     assert rows[1]["keep"] == 0  # exact dups unaffected by the threshold
 
@@ -105,11 +107,11 @@ def _union_find_components(edges, nodes):
     return out
 
 
-def test_connected_components_skewed_celebrity_graph(spark):
+def test_connected_components_skewed_celebrity_graph(spark, monkeypatch):
     """Skew stress (VERDICT r2 next-step #7): one celebrity node with a
     10^4-edge star plus several 256-node chains. Assertions pin the two
     scale properties the algorithm exists for: convergence stays O(log n)
-    rounds (max_rounds=15 would RAISE if the celebrity degraded it — a
+    rounds (MAX_ROUNDS=15 would RAISE if the celebrity degraded it — a
     chain of 256 alone needs ~8), and no stage materializes a neighbor
     list (no collect_list/collect_set in the plan — the window-min shape
     is what keeps a 10^7-degree node from becoming one giant array row).
@@ -131,9 +133,10 @@ def test_connected_components_skewed_celebrity_graph(spark):
     plan = lg._jdf.queryExecution().executedPlan().toString()
     assert "collect_list" not in plan and "collect_set" not in plan
 
+    monkeypatch.setattr(C, "MAX_ROUNDS", 15)
     res = {
         r["node"]: r["component"]
-        for r in C.connected_components(df, max_rounds=15).collect()
+        for r in C.connected_components(df).collect()
     }
     nodes = set(range(star_n + 1)) | set(chain_nodes)
     expected = _union_find_components(edges, nodes)
@@ -169,12 +172,12 @@ def test_duplicate_components_match_union_find(spark):
         (r["id1"], r["id2"])
         for r in candidate_jaccard(
             minhash_lsh_candidates_from(
-                minhash_signatures_arr(base), max_bucket_size=1_000
+                minhash_signatures_arr(base), max_bucket_size=D.MAX_BUCKET_SIZE
             ),
             base,
-            max_shingle_df=10_000,
+            max_shingle_df=D.MAX_SHINGLE_DF,
         )
-        .filter(F.col("jaccard") >= 0.8)
+        .filter(F.col("jaccard") >= D.NEAR_DUP_JACCARD)
         .collect()
     ]
     expected = _union_find_components(exact_edges + near_edges, doc_ids)

@@ -1,9 +1,10 @@
 """Each shared decision of the operator layer has one home.
 
-The documents input (the injected relation, else a fresh documents scan
-spread round-robin over the cores) lives in ``operators/relational.py`` as
-``docs_input``; the repo's one keyed hash (the first 15 hex chars of md5)
-lives in ``functions/exprs.py`` as ``md5_60``. A copy of either idiom in
+Scan-then-spread (a fresh scan of any table, spread round-robin over the
+cores) lives in ``operators/relational.py`` as ``spread_scan``, which
+``docs_input`` calls for the documents input; the repo's one keyed hash
+(the first 15 hex chars of md5) lives in ``functions/exprs.py`` as
+``md5_60``. A copy of either idiom in
 any other package module is a second implementation of the decision.
 """
 
@@ -14,7 +15,7 @@ PKG = Path(__file__).resolve().parent.parent / "sbb_ocr_postcorrection_spark"
 
 IDIOMS = {
     "operators/relational.py": re.compile(
-        r'load\(spark, sf_dir, "documents"\)\s*\.repartition\(\s*'
+        r'load\(spark, sf_dir, "\w+"\)\s*\.repartition\(\s*'
         r"spark\.sparkContext\.defaultParallelism\s*\)"
     ),
     "functions/exprs.py": re.compile(r"F\.conv\(\s*F\.substring\(\s*F\.md5\("),

@@ -10,7 +10,7 @@ SF = "/root/testdata/sf0.01"
 
 
 def test_ivf_recall_vs_brute_force(spark):
-    """IVF with probe_lists=4 of 8 cells must recall most of the exact
+    """IVF with IVF_PROBE_LISTS=4 of 8 cells must recall most of the exact
     top-5 (random-ish embeddings: the true neighbors concentrate in the
     probe's nearest cells only weakly, so demand ≥50% overall recall and
     exact agreement on rank-1 for most probes)."""
@@ -31,34 +31,37 @@ def test_ivf_recall_vs_brute_force(spark):
     assert hits / total >= 0.5, (hits, total)
 
 
-def test_ivf_pinned_is_subset_of_brute_force_and_equality_joined(spark):
+def test_ivf_pinned_is_subset_of_brute_force_and_equality_joined(spark, monkeypatch):
     """ivf_topk_pinned (fixed ±1 centroids, fully SQL-expressible): every
     returned (probe, cand, cosine) must agree with the exact brute-force
     scores (IVF only PRUNES candidates — it never invents or rescores), the
     probe side must genuinely prune (some probe misses at least one exact
-    top-5 neighbor at probe_lists=4 of 8, else the test is vacuous), and
+    top-ANN_K neighbor at IVF_PROBE_LISTS=4 of 8, else the test is vacuous), and
     the scoring join must be an equality hash join on the cell key — never
     a cartesian/BNL join."""
+    from sbb_ocr_postcorrection_spark.operators import similarity as S
     from sbb_ocr_postcorrection_spark.operators.similarity import (
         brute_force_topk,
         ivf_topk_pinned,
     )
 
-    exact = {
-        (r["probe_id"], r["cand_id"]): r["cosine"]
-        for r in brute_force_topk(spark, SF, k=1000).collect()
-    }
+    with monkeypatch.context() as m:  # every exact score, not just the top
+        m.setattr(S, "ANN_K", 1000)
+        exact = {
+            (r["probe_id"], r["cand_id"]): r["cosine"]
+            for r in brute_force_topk(spark, SF).collect()
+        }
     df = ivf_topk_pinned(spark, SF)
     rows = df.collect()
     assert rows, "pinned IVF returned nothing"
     for r in rows:
         assert exact[(r["probe_id"], r["cand_id"])] == r["cosine"]
-    top5 = {
+    topk = {
         (r["probe_id"], r["cand_id"])
-        for r in brute_force_topk(spark, SF, k=5).collect()
+        for r in brute_force_topk(spark, SF).collect()
     }
     got = {(r["probe_id"], r["cand_id"]) for r in rows}
-    assert got - top5 or top5 - got, "probe_lists=4/8 pruned nothing — vacuous"
+    assert got - topk or topk - got, "IVF_PROBE_LISTS=4/8 pruned nothing — vacuous"
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

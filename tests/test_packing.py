@@ -35,9 +35,11 @@ def test_sequence_pack_invariants(spark):
         assert cur["first_doc"] <= cur["last_doc"]
 
 
-def test_sequence_pack_crafted_layout(spark):
-    """Hand-computed layout: seq_len=8, docs of 3/9/2 tokens (+1 EOS each)
+def test_sequence_pack_crafted_layout(spark, monkeypatch):
+    """Hand-computed layout: SEQ_LEN=8, docs of 3/9/2 tokens (+1 EOS each)
     = slots 4+10+3, stream length 17 → windows of 8/8/1."""
+    monkeypatch.setattr(P, "SEQ_LEN", 8)
+    monkeypatch.setattr(P, "BUCKET_DOCS", 2)
     docs = spark.createDataFrame(
         [
             (0, "a b c"),                       # 4 slots: [0,4)
@@ -48,9 +50,7 @@ def test_sequence_pack_crafted_layout(spark):
     )
     rows = {
         r["window_id"]: r
-        for r in P.sequence_pack(
-            spark, SF_DIR, seq_len=8, bucket_docs=2, docs=docs
-        ).collect()
+        for r in P.sequence_pack(spark, SF_DIR, docs=docs).collect()
     }
     assert set(rows) == {0, 1, 2}
     # window 0: doc0 fully (4) + doc1 partially (4)
@@ -64,7 +64,7 @@ def test_sequence_pack_crafted_layout(spark):
     assert (rows[2]["first_doc"], rows[2]["last_doc"]) == (2, 2)
 
 
-def test_sequence_pack_randomized_cross_check(spark):
+def test_sequence_pack_randomized_cross_check(spark, monkeypatch):
     """120 docs with seeded-random token counts (including empties and
     window-sized and window-straddling lengths) against an independent
     pure-Python packer, at an odd seq_len/bucket size."""
@@ -77,11 +77,11 @@ def test_sequence_pack_randomized_cross_check(spark):
         texts.append((i, " ".join(f"w{j}" for j in range(n))))
     docs = spark.createDataFrame(texts, "doc_id long, text string")
     seq_len, bucket = 13, 7
+    monkeypatch.setattr(P, "SEQ_LEN", seq_len)
+    monkeypatch.setattr(P, "BUCKET_DOCS", bucket)
     got = {
         r["window_id"]: (r["n_tokens"], r["n_docs"], r["first_doc"], r["last_doc"])
-        for r in P.sequence_pack(
-            spark, SF_DIR, seq_len=seq_len, bucket_docs=bucket, docs=docs
-        ).collect()
+        for r in P.sequence_pack(spark, SF_DIR, docs=docs).collect()
     }
     # reference packer
     want: dict[int, list] = {}

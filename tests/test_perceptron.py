@@ -52,6 +52,8 @@ def _corpus():
 
 def test_train_perceptron_matches_reference(spark):
     from sbb_ocr_postcorrection_spark.operators.textstats import (
+        CLF_DIM,
+        CLF_EPOCHS,
         train_perceptron,
     )
 
@@ -59,8 +61,8 @@ def test_train_perceptron_matches_reference(spark):
     docs = spark.createDataFrame(
         [(i, t) for i, t, _ in rows], "doc_id long, text string"
     )
-    got = train_perceptron(spark, SF, dim=64, epochs=3, docs=docs)
-    want = _ref_train(rows, 64, 3)
+    got = train_perceptron(spark, SF, docs=docs)
+    want = _ref_train(rows, CLF_DIM, CLF_EPOCHS)
     assert got == want
     # training moved some weights (non-vacuous)
     assert any(v != 0 for v in got.values())

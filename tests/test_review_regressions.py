@@ -340,7 +340,7 @@ def _docs_dir(spark, tmp_path, texts):
     return d
 
 
-def test_bpe_survives_u001f_in_corpus(spark, tmp_path):
+def test_bpe_survives_u001f_in_corpus(spark, tmp_path, monkeypatch):
     # round-5 advice (medium): a document containing the internal wrap
     # separator U+001F crashed the whole BPE family — the '\x1f' piece
     # wrapped to '\x1f\x1f\x1f', the symbol array came back empty, and
@@ -358,13 +358,14 @@ def test_bpe_survives_u001f_in_corpus(spark, tmp_path):
             "wider widest low lower new new",
         ],
     )
-    merges = bpe.train_merges(spark, d, num_merges=3)
+    monkeypatch.setattr(bpe, "DEFAULT_MERGES", 3)
+    merges = bpe.train_merges(spark, d)
     assert len(merges) == 3
     assert all("\x1f" not in a + b for a, b in merges)
-    tok = {r["doc_id"]: r for r in bpe.bpe_tokenize(spark, d, 3).collect()}
+    tok = {r["doc_id"]: r for r in bpe.bpe_tokenize(spark, d).collect()}
     # the sep-only doc tokenizes as empty, not as a crash
     assert tok[1]["n_pieces"] == 0 and tok[1]["n_bpe_tokens"] == 0
-    enc = {r["doc_id"]: r for r in bpe.bpe_encode(spark, d, 3).collect()}
+    enc = {r["doc_id"]: r for r in bpe.bpe_encode(spark, d).collect()}
     assert enc[1]["n_tokens"] == 0 and list(enc[1]["token_ids"]) == []
     assert enc[0]["n_tokens"] == tok[0]["n_bpe_tokens"]
 

@@ -41,11 +41,13 @@ def test_candidate_jaccard_matches_all_pairs_on_candidates(spark, max_shingle_df
     /size math, different join shape) — also under a df cap that actually
     drops shingles (cap 3 removes pairs at sf0.001)."""
     from sbb_ocr_postcorrection_spark.operators.dedup import (
+        _jaccard,
+        _shingle_overlap,
         candidate_jaccard,
-        jaccard_pairs,
         minhash_doc_arrays,
         minhash_lsh_candidates_from,
         minhash_signatures_arr,
+        shingle_table,
     )
 
     base = minhash_doc_arrays(spark, SF_SMALL).cache()
@@ -56,9 +58,12 @@ def test_candidate_jaccard_matches_all_pairs_on_candidates(spark, max_shingle_df
     }
     all_pairs = {
         (r["id1"], r["id2"]): r["jaccard"]
-        for r in jaccard_pairs(
-            spark, SF_SMALL, threshold=0.0, k=1_000_000, max_shingle_df=max_shingle_df
-        ).collect()
+        for r in _shingle_overlap(shingle_table(spark, SF_SMALL), max_shingle_df)
+        .select(
+            "id1", "id2", _jaccard(F.col("n_common"), F.col("n_sh1"), F.col("n_sh2"))
+            .alias("jaccard")
+        )
+        .collect()
     }
     cand_keys = {(r["id1"], r["id2"]) for r in cands.collect()}
     base.unpersist()
@@ -91,26 +96,29 @@ def test_simhash_rotations_superset_of_single(spark):
     assert single <= multi
 
 
-def test_embedding_cosine_guard_refuses_large_input(spark):
-    from sbb_ocr_postcorrection_spark.operators.dedup import embedding_cosine_pairs
+def test_embedding_cosine_guard_refuses_large_input(spark, monkeypatch):
+    from sbb_ocr_postcorrection_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "COSINE_MAX_ROWS", 1)
     with pytest.raises(ValueError, match="lsh_bucketed_topk"):
-        embedding_cosine_pairs(spark, SF_SMALL, max_rows=1)
+        dedup.embedding_cosine_pairs(spark, SF_SMALL)
 
 
 # ------------------------------------------------------------------- ann --
 
-def test_multiprobe_recall_at_least_single_probe(spark):
+def test_multiprobe_recall_at_least_single_probe(spark, monkeypatch):
     """Hamming-1 multi-probe explores a superset of the single bucket, so
     per-probe recall vs brute force can only improve."""
+    from sbb_ocr_postcorrection_spark.operators import similarity as S
     from sbb_ocr_postcorrection_spark.operators.similarity import (
         brute_force_topk,
         lsh_bucketed_topk,
         lsh_multiprobe_topk,
     )
 
+    monkeypatch.setattr(S, "ANN_K", S.LSH_K)  # exact top-k at the LSH depth
     exact = {}
-    for r in brute_force_topk(spark, SF, k=3).collect():
+    for r in brute_force_topk(spark, SF).collect():
         exact.setdefault(r["probe_id"], set()).add(r["cand_id"])
     single = {}
     for r in lsh_bucketed_topk(spark, SF).collect():
@@ -299,15 +307,19 @@ def test_lsh_on_hot_bucket(spark, tmp_path):
     """Skew stress for the band-bucket self-join: all C(30,2) pairs of the
     hot bucket are candidates, a cap of 29 drops every bucket holding the
     30 identical docs, and a cap of 30 keeps everything (boundary: <=)."""
-    from sbb_ocr_postcorrection_spark.operators.dedup import minhash_lsh_candidates
+    from sbb_ocr_postcorrection_spark.operators.dedup import (
+        minhash_lsh_candidates_from,
+        minhash_signatures,
+    )
 
     d = str(tmp_path)
     hot = _hot_bucket_docs(spark, d)
 
-    def pairs(**kw):
+    def pairs(max_bucket_size=None):
+        sig = minhash_signatures(spark, d)
         return {
             (r["id1"], r["id2"])
-            for r in minhash_lsh_candidates(spark, d, **kw).collect()
+            for r in minhash_lsh_candidates_from(sig, max_bucket_size).collect()
         }
 
     plain = pairs()

@@ -131,7 +131,7 @@ def test_dsir_score_reference_and_discrimination(spark):
     assert min(like) > max(alien)
 
 
-def test_dsir_sample_reference(spark):
+def test_dsir_sample_reference(spark, monkeypatch):
     rows, d = _fixture_docs(spark)
     _, _, _, scores = _py_dsir(rows)
     k = 10
@@ -144,7 +144,8 @@ def test_dsir_sample_reference(spark):
         key = sel.DSIR_TAU * _ilog2(e1) - scores[doc_id][1]
         keys.append((key, doc_id))
     expect = [doc_id for _, doc_id in sorted(keys)[:k]]
-    got = sel.dsir_sample(spark, SF, k=k, docs=d).collect()
+    monkeypatch.setattr(sel, "DSIR_K", k)
+    got = sel.dsir_sample(spark, SF, docs=d).collect()
     assert sorted(r["doc_id"] for r in got) == sorted(expect)
     assert [r["race_key"] for r in got] == sorted(r["race_key"] for r in got)
     # the race resamples TOWARD the target: mostly target-like raw docs

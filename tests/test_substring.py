@@ -71,13 +71,13 @@ def test_separated_runs_stay_two_spans(spark):
     assert out[1]["text_deduped"] == " ".join(f"ma{i}" for i in range(60))
 
 
-def test_differential_vs_passage_dedup(spark):
+def test_differential_vs_passage_dedup(spark, monkeypatch):
     """Overlap differential: on a fixture where the duplicated block aligns
     exactly with passage_dedup's line chunking (2 lines x 3 tokens), the
-    token-level dedup at span_toks=6 removes EXACTLY the text the
+    token-level dedup at SUBSTR_L=6 removes EXACTLY the text the
     line-level passage dedup removes — and never less (token granularity
     subsumes aligned line granularity)."""
-    from sbb_ocr_postcorrection_spark.operators.lines import passage_dedup
+    from sbb_ocr_postcorrection_spark.operators import lines as L, substring as SUB
 
     boiler = "cookie banner text accept all terms"  # 6 toks = 2 lines of 3
     rows = [
@@ -85,18 +85,13 @@ def test_differential_vs_passage_dedup(spark):
         for i in range(1, 7)
     ]
     docs = _df(spark, rows)
-    sub = {
-        r["doc_id"]: r
-        for r in substring_dedup(
-            spark, SF, span_toks=6, dup_df=5, docs=docs
-        ).collect()
-    }
-    pas = {
-        r["doc_id"]: r
-        for r in passage_dedup(
-            spark, SF, p_lines=2, hot_df=5, n_line_toks=3, docs=docs
-        ).collect()
-    }
+    monkeypatch.setattr(SUB, "SUBSTR_L", 6)
+    monkeypatch.setattr(SUB, "SUBSTR_DUP_DF", 5)
+    sub = {r["doc_id"]: r for r in substring_dedup(spark, SF, docs=docs).collect()}
+    monkeypatch.setattr(L, "PASSAGE_LINES", 2)
+    monkeypatch.setattr(L, "HOT_PASSAGE_DF", 5)
+    monkeypatch.setattr(L, "LINE_TOKS", 3)
+    pas = {r["doc_id"]: r for r in L.passage_dedup(spark, SF, docs=docs).collect()}
     for d in sub:
         assert sub[d]["text_deduped"] == pas[d]["cleaned_text"]
         assert sub[d]["n_dropped"] >= (pas[d]["n_lines"] - pas[d]["n_kept"]) * 3

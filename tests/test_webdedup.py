@@ -275,8 +275,7 @@ def test_source_mix_sample_budget_law(spark):
     EVERYTHING; uncapped sources sample near rate = budget·w/(Σw·T_s)
     (md5-coin, so only statistically exact — allow ±40% relative on ~25-doc
     sources); both branches must be present at the fixture weights
-    (non-vacuous). Injected weights: unlisted sources surface with weight
-    0 and keep nothing, never vanish."""
+    (non-vacuous)."""
     from sbb_ocr_postcorrection_spark.operators import textstats as T
 
     rows = {r["source"]: r for r in T.source_mix_sample(spark, SF_DIR).collect()}
@@ -297,20 +296,8 @@ def test_source_mix_sample_budget_law(spark):
     for r in uncapped:  # a sampled source never keeps everything here
         assert r["tokens_kept"] <= r["tokens_total"]
 
-    got = {
-        r["source"]: r
-        for r in T.source_mix_sample(
-            spark, SF_DIR, weights={"src0": 1, "src1": 3}
-        ).collect()
-    }
-    assert len(got) == 20
-    assert got["src5"]["w"] == 0 and got["src5"]["n_kept"] == 0
-    assert got["src1"]["w"] == 3
-    # src0+src1 hold ~10% of tokens but the whole budget → both capped
-    assert got["src0"]["rate_capped"] == 1 and got["src1"]["rate_capped"] == 1
 
-
-def test_bloom_gate_no_false_negatives_and_real_false_positives(spark):
+def test_bloom_gate_no_false_negatives_and_real_false_positives(spark, monkeypatch):
     """Bloom semantics: every batch doc whose digest IS in history must be
     flagged (a Bloom filter can never false-negative), and at a dense
     geometry (m=512, k=4 → fill ~0.8 on the ~200-digest synth history)
@@ -328,9 +315,10 @@ def test_bloom_gate_no_false_negatives_and_real_false_positives(spark):
         for r in D.incremental_dedup(spark, SF_DIR).collect()
     }
     for m_bits, need_fp in ((512, True), (D.BLOOM_M_BITS, False)):
+        monkeypatch.setattr(D, "BLOOM_M_BITS", m_bits)
         bloom = {
             r["doc_id"]: r["bloom_hit"]
-            for r in D.bloom_gate(spark, SF_DIR, m_bits=m_bits).collect()
+            for r in D.bloom_gate(spark, SF_DIR).collect()
         }
         assert set(bloom) == set(truth)
         misses = [d for d, h in truth.items() if h == 1 and bloom[d] == 0]
@@ -357,7 +345,7 @@ def test_bloom_gate_no_false_negatives_and_real_false_positives(spark):
     assert rows[13]["content_hash"] == "null:13"
 
 
-def test_null_inputs_never_drop_rows(spark):
+def test_null_inputs_never_drop_rows(spark, monkeypatch):
     """Null url / null text must surface with a DEFINITE verdict, not
     vanish, cross-deduplicate, or emit NULL keep-bits that fall through
     when-chains (real crawl data has both)."""
@@ -417,7 +405,9 @@ def test_null_inputs_never_drop_rows(spark):
     pdocs = spark.createDataFrame(
         [(0, "a b c"), (1, None), (2, "d e")], "doc_id long, text string"
     )
-    out = P.sequence_pack(spark, SF_DIR, seq_len=8, bucket_docs=2, docs=pdocs).collect()
+    monkeypatch.setattr(P, "SEQ_LEN", 8)
+    monkeypatch.setattr(P, "BUCKET_DOCS", 2)
+    out = P.sequence_pack(spark, SF_DIR, docs=pdocs).collect()
     assert sum(r["n_tokens"] for r in out) == 4 + 1 + 3  # null doc = 1 slot
     assert {r["first_doc"] for r in out} | {r["last_doc"] for r in out} >= {0, 2}
     # incremental dedup: two distinct null-text batch docs are NOT
@@ -454,14 +444,11 @@ def _crafted_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_line_dedup_crafted(spark):
+def test_line_dedup_crafted(spark, monkeypatch):
     docs = _crafted_docs(spark)
-    out = {
-        r["doc_id"]: r
-        for r in L.line_dedup(
-            spark, SF_DIR, n_line_toks=2, hot_df=5, docs=docs
-        ).collect()
-    }
+    monkeypatch.setattr(L, "LINE_TOKS", 2)
+    monkeypatch.setattr(L, "HOT_LINE_DF", 5)
+    out = {r["doc_id"]: r for r in L.line_dedup(spark, SF_DIR, docs=docs).collect()}
     assert set(out) == {0, 1, 2, 3, 4, 5, 100, 101, 102}
     # the shared docs lose exactly the two boilerplate lines, keep tails in
     # order
@@ -587,7 +574,7 @@ def test_passage_dedup_fixture_strips_exactly_the_header(spark):
 # ---------------------------------------------------------- blocklist gate
 
 
-def test_url_blocklist_suffix_semantics(spark):
+def test_url_blocklist_suffix_semantics(spark, monkeypatch):
     """Blocking a registrable domain blocks every subdomain and spelling
     variant (www., case, scheme noise) via the EQUALITY suffix join — and
     nothing else: a host merely containing the blocked string as a label
@@ -603,14 +590,11 @@ def test_url_blocklist_suffix_semantics(spark):
         ],
         "doc_id long, url string",
     )
+    monkeypatch.setattr(U, "BLOCKED_HOSTS", ("example.com",))
+    monkeypatch.setattr(U, "BLOCKED_PATH_RE", "/casino($|[/?#])")
     out = {
         r["doc_id"]: r
-        for r in U.url_blocklist_gate(
-            spark, SF_DIR,
-            blocked_hosts=["example.com"],
-            blocked_path_re="/casino($|[/?#])",
-            docs=docs,
-        ).collect()
+        for r in U.url_blocklist_gate(spark, SF_DIR, docs=docs).collect()
     }
     assert set(out) == {0, 1, 2, 3, 4}
     assert out[0]["blocked_host"] == 1          # apex, uppercased
@@ -635,7 +619,7 @@ def test_url_blocklist_fixture_nonvacuous(spark):
         assert r["url_pass"] == int(not (r["blocked_host"] or r["blocked_path"]))
 
 
-def test_blocklist_normalizes_adversarial_host_spellings(spark):
+def test_blocklist_normalizes_adversarial_host_spellings(spark, monkeypatch):
     """Review finding (policy bypass): port, userinfo, and trailing-dot
     spellings of a blocked host must still match — the policy host strips
     what an adversary controls (_host_path_suffixes)."""
@@ -649,11 +633,10 @@ def test_blocklist_normalizes_adversarial_host_spellings(spark):
         ],
         "doc_id long, url string",
     )
+    monkeypatch.setattr(U, "BLOCKED_HOSTS", ("bad.test",))
     got = {
         r["doc_id"]: r["blocked_host"]
-        for r in U.url_blocklist_gate(
-            spark, SF_DIR, blocked_hosts=["bad.test"], docs=docs
-        ).collect()
+        for r in U.url_blocklist_gate(spark, SF_DIR, docs=docs).collect()
     }
     assert got == {0: 1, 1: 1, 2: 1, 3: 1, 4: 0}
 
