@@ -38,8 +38,6 @@ Layout:
   sources/       WARC scan and sink, robots.txt, sitemaps
   functions/     shared column-expression builders (exprs.md5_60, the one
                  keyed hash, among them) and the wordpiece vocabulary
-  streaming/     extract_dedup_stream: the batch kernel on a stream, then
-                 stateful first-seen dedup
   queries        the driver-facing queries()/oracle_sql() registry
                  (queries._pin pins the session for every entry)
 """

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from ..wordlists import ENGLISH_STOPWORDS, GERMAN_STOPWORDS
+
 #: the reference's 7 CER bands, in order
 CER_BANDS = ("0.00", "<0.02", "<0.04", "<0.06", "<0.08", "<0.10", ">=0.10")
 
@@ -50,14 +52,19 @@ def cer_band_expr(col) -> Column:
 LANG_CONF_THRESHOLD = 0.05  # lang_pass: confident non-tie at this share
 
 
-def lang_cols(text_col, stops_de, stops_en) -> dict[str, Column]:
+# pin the stopword sets used by BOTH Spark and the SQL oracle
+DE_STOPS = tuple(sorted(GERMAN_STOPWORDS))
+EN_STOPS = tuple(sorted(ENGLISH_STOPWORDS))
+
+
+def lang_cols(text_col) -> dict[str, Column]:
     """Stopword-hit language-ID columns (P5 analog) — ONE definition shared
     by the oracle-checked operator (operators/textstats.lang_id) and
     operators/urls.host_reputation_gate's per-doc bit, so the two can never
     drift — INCLUDING the lang_pass verdict and its threshold."""
     toks = tokens_expr(text_col)
-    de_arr = F.array(*[F.lit(w) for w in stops_de])
-    en_arr = F.array(*[F.lit(w) for w in stops_en])
+    de_arr = F.array(*[F.lit(w) for w in DE_STOPS])
+    en_arr = F.array(*[F.lit(w) for w in EN_STOPS])
     de_hits = F.size(F.filter(toks, lambda t: F.array_contains(de_arr, t)))
     en_hits = F.size(F.filter(toks, lambda t: F.array_contains(en_arr, t)))
     guess = (

@@ -7,7 +7,7 @@ BASELINE.json input_hint. Two ``mapInArrow`` stages share it (SURVEY.md
 §2.9 M1-M8 mapping):
 
 * ``extract_stage`` yields the extraction rows. ``extract_pages`` (the
-  registry queries and the streaming ``extract_dedup_stream``) uses it;
+  registry queries) uses it;
 * ``write_stage`` is the production job's writer: it writes its task's
   rows as one zstd parquet file per ``(dt, bkt)`` partition into a
   per-attempt staging directory and yields one row per file (its path

@@ -40,7 +40,9 @@ def curate_corpus(spark, sf_dir) -> DataFrame:
     repetitive > lm_rare_tokens > kept."""
     # projected BEFORE the persist: the cache holds only the columns the
     # content stages read (source/n_chars would bloat it and the persist
-    # boundary blocks column pruning)
+    # boundary blocks column pruning); and before the spread, which is why
+    # this is not spread_scan(...).select(...): that puts the Project above
+    # the round-robin Exchange, a different plan
     docs = persist_slot(
         "curation_docs",
         load(spark, sf_dir, "documents")

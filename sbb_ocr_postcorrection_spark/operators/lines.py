@@ -107,16 +107,17 @@ LINE_TOKS = 3
 HOT_LINE_DF = 5
 
 
-def _doc_lines(d, n: int):
+def _doc_lines(d):
     """(doc_id, lns): the corpus as PER-DOCUMENT arrays of consecutive
-    n-token chunks, ≥1 line per document (an empty/null doc gets one ''
-    sentinel line so it can never vanish from a reassembly). The ONE
+    LINE_TOKS-token chunks, ≥1 line per document (an empty/null doc gets
+    one '' sentinel line so it can never vanish from a reassembly). The ONE
     chunking definition line_dedup and passage_dedup share — r7 keeps it
     doc-level so reassembly is in-array row math instead of a corpus-wide
     explode → groupBy(doc_id) exchange; the exploded (doc_id, pos, line)
     view is a posexplode away when cross-document counting needs it."""
     from ..functions.exprs import tokens_expr
 
+    n = LINE_TOKS
     # tokens materialized as a column first: inlining the tokenizer into
     # the chunk lambda would re-evaluate split+filter per reference
     base = d.select("doc_id", tokens_expr(F.col("text")).alias("toks"))
@@ -179,7 +180,7 @@ def line_dedup(spark, sf_dir, docs=None) -> DataFrame:
     of vanishing (ADVICE r1 #3).
     """
     d = docs if docs is not None else load(spark, sf_dir, "documents")
-    base = persist_slot("line_dedup_base", _doc_lines(d, LINE_TOKS))
+    base = persist_slot("line_dedup_base", _doc_lines(d))
     rows = base.select("doc_id", F.posexplode("lns").alias("pos", "line"))
     hot = (
         rows.groupBy("line")
@@ -252,7 +253,7 @@ def passage_dedup(spark, sf_dir, docs=None) -> DataFrame:
         )
     else:
         d = docs
-    base = persist_slot("passage_dedup_base", _doc_lines(d, LINE_TOKS))
+    base = persist_slot("passage_dedup_base", _doc_lines(d))
     # NO truncated windows: a doc shorter than PASSAGE_LINES contributes no
     # passages (guarded — Spark's sequence(1, 0) counts DOWN, it is not
     # empty). Such docs can then never be covered and keep everything.

@@ -90,7 +90,7 @@ def link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rank_loop(
-    spark: SparkSession, sf_dir: str, iters: int, seed_mod: int | None
+    spark: SparkSession, sf_dir: str, seed_mod: int | None
 ) -> DataFrame:
     """Shared integer fixed-point rank iteration.
 
@@ -133,7 +133,7 @@ def _rank_loop(
         .cast("long")
         .alias("rank"),
     )
-    for _ in range(iters):
+    for _ in range(PR_ITERS):
         contribs = (
             edeg.join(ranks, edeg.src_id == ranks.id)
             .select(
@@ -253,7 +253,7 @@ def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Classic unweighted PageRank (distinct edges — multi-links collapse,
     the simple-graph convention) with uniform dangling redistribution.
     """
-    return _rank_loop(spark, sf_dir, PR_ITERS, seed_mod=None)
+    return _rank_loop(spark, sf_dir, seed_mod=None)
 
 
 TRUST_SEED_MOD = 10  # trusted seed set: host ids divisible by 10
@@ -267,7 +267,7 @@ def host_trustrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     because no teleport mass lands outside the seeds. Seed set here is
     the deterministic {id % 10 == 0}; a curated allowlist swaps in as a
     dimension relation without touching the loop."""
-    return _rank_loop(spark, sf_dir, PR_ITERS, seed_mod=TRUST_SEED_MOD)
+    return _rank_loop(spark, sf_dir, seed_mod=TRUST_SEED_MOD)
 
 
 def page_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:

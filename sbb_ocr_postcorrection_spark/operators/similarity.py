@@ -307,11 +307,11 @@ def _ivf_weight(cell: int, d: int) -> float:
     return 1.0 if h % 2 == 0 else -1.0
 
 
-def ivf_pinned_centroids(n_lists: int, dim: int) -> list[list[float]]:
+def ivf_pinned_centroids(dim: int) -> list[list[float]]:
     """The ONE definition of the pinned centroid matrix — interpolated into
     the Spark plan as literals AND into the DuckDB oracle as list literals,
     so the two engines can never drift."""
-    return [[_ivf_weight(c, d) for d in range(dim)] for c in range(n_lists)]
+    return [[_ivf_weight(c, d) for d in range(dim)] for c in range(IVF_LISTS)]
 
 
 def ivf_topk_pinned(spark, sf_dir) -> DataFrame:
@@ -337,7 +337,7 @@ def ivf_topk_pinned(spark, sf_dir) -> DataFrame:
             [], "probe_id long, rank int, cand_id long, cosine double"
         )
     dim = first["d"]
-    C = ivf_pinned_centroids(IVF_LISTS, dim)
+    C = ivf_pinned_centroids(dim)
     v = _as_double(F.col("embedding"))
     # per-cell dots as one array<struct<dot,cell>> column (plan literals)
     cd = F.array(
@@ -584,7 +584,7 @@ def semantic_dedup(spark, sf_dir) -> DataFrame:
             [], "vec_id long, cell int, n_dups long, keeper long, dropped int"
         )
     dim = first["d"]
-    C = ivf_pinned_centroids(IVF_LISTS, dim)
+    C = ivf_pinned_centroids(dim)
     e2 = e.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     dup = e2.where(F.col("vec_id") % SEM_DUP_MOD == 0).select(
         (F.col("vec_id") + SEM_DUP_ID_BASE).alias("vec_id"),

@@ -12,14 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .relational import docs_input, load
-from ..wordlists import ENGLISH_STOPWORDS, GERMAN_STOPWORDS
-
-# pin the stopword sets used by BOTH Spark and the SQL oracle
-DE_STOPS = tuple(sorted(GERMAN_STOPWORDS))
-EN_STOPS = tuple(sorted(ENGLISH_STOPWORDS))
-
-
-from ..functions.exprs import cer_band_expr, md5_60, tokens_expr as _tokens  # noqa: E402
+from ..functions.exprs import (
+    DE_STOPS,
+    EN_STOPS,
+    cer_band_expr,
+    md5_60,
+    tokens_expr as _tokens,
+)
 
 
 def lang_id(spark, sf_dir, docs=None) -> DataFrame:
@@ -34,7 +33,7 @@ def lang_id(spark, sf_dir, docs=None) -> DataFrame:
     from ..functions.exprs import lang_cols
 
     d = docs_input(spark, sf_dir, docs)
-    c = lang_cols(F.col("text"), DE_STOPS, EN_STOPS)
+    c = lang_cols(F.col("text"))
     return d.select(
         "doc_id",
         "lang",

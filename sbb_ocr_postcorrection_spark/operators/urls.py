@@ -162,7 +162,6 @@ def host_reputation_gate(spark, sf_dir, docs=None, per_doc=None) -> DataFrame:
     if per_doc is None:
         from ..functions.exprs import lang_cols
         from .relational import persist_slot
-        from .textstats import DE_STOPS, EN_STOPS
 
         d = docs if docs is not None else load(spark, sf_dir, "documents")
         if "url" in d.columns:
@@ -176,7 +175,7 @@ def host_reputation_gate(spark, sf_dir, docs=None, per_doc=None) -> DataFrame:
             )
         else:
             host = synth_host_expr(F.col("doc_id"))
-        c = lang_cols(F.col("text"), DE_STOPS, EN_STOPS)
+        c = lang_cols(F.col("text"))
         # persisted: per_doc feeds BOTH the stats aggregation and the
         # rejoin probe — without it the corpus-wide tokenize+stopword
         # pass (the dominant cost) executes twice

@@ -43,9 +43,8 @@ from .operators import (
     winnow,
 )
 from .sources import robots, sitemap, warc
-from .functions.exprs import LANG_CONF_THRESHOLD
+from .functions.exprs import DE_STOPS, EN_STOPS, LANG_CONF_THRESHOLD
 from .functions.wordpiece import WORDPIECE_K
-from .operators.textstats import DE_STOPS, EN_STOPS
 
 
 def _pin(fn: Callable[[SparkSession, str], DataFrame]):
@@ -407,7 +406,7 @@ def _ivf_cents_sql() -> str:
     """DuckDB VALUES relation of the pinned IVF centroids — interpolated
     from operators.similarity.ivf_pinned_centroids so one definition drives
     both engines."""
-    rows = similarity.ivf_pinned_centroids(similarity.IVF_LISTS, _EMB_DIM)
+    rows = similarity.ivf_pinned_centroids(_EMB_DIM)
     vals = ", ".join(
         f"({c}, CAST([{', '.join(repr(w) for w in row)}] AS DOUBLE[]))"
         for c, row in enumerate(rows)
@@ -1076,6 +1075,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: _pin(fn) for name, fn in registry.items()}
 
 
+# the BPE oracles' shared vocabulary: a document's pre-tokenized pieces,
+# a piece's chr(31)-wrapped symbol form, a wrapped word's symbol list and
+# merge k applied to a wrapped word
+_BPE_PIECES_SQL = (
+    "regexp_extract_all( replace(coalesce(text, ''), chr(31), ''), "
+    f"'{textstats._BPE_PATTERN}')"
+)
+# one row per (doc, 1-based piece position i) over t.ps
+_BPE_PIECE_POS_SQL = f"""(SELECT doc_id, {_BPE_PIECES_SQL} AS ps
+            FROM documents) t,
+           unnest(generate_series(1, len(t.ps))) AS u(i)"""
+
+
+def _bpe_wrap(piece: str) -> str:
+    return f"regexp_replace({piece}, '(.)', chr(31) || '\\1' || chr(31), 'gs')"
+
+
+def _bpe_syms(w: str) -> str:
+    return f"list_filter(string_split({w}, chr(31)), x -> x <> '')"
+
+
+def _bpe_merge(w: str, k: int) -> str:
+    l, r = f"(SELECT l FROM p{k})", f"(SELECT r FROM p{k})"
+    return (
+        f"replace({w}, chr(31) || {l} || chr(31) || chr(31) || {r} || chr(31),"
+        f" chr(31) || {l} || {r} || chr(31))"
+    )
+
+
 def _bpe_stages_sql() -> str:
     """CTE chain replaying operators.bpe.train_merges in DuckDB: per
     stage, adjacent-pair counts over the word-freq table, top-1 with the
@@ -1087,20 +1115,13 @@ def _bpe_stages_sql() -> str:
     merge SELECTION, not just the apply — the whole training loop is in
     the oracle. Generated (not hand-written) so DEFAULT_MERGES stays one
     constant shared with the Spark side."""
-    from .operators.textstats import _BPE_PATTERN
-
     parts = [
         f"""pieces AS MATERIALIZED (
-      SELECT doc_id,
-             unnest(regexp_extract_all(
-                 replace(coalesce(text, ''), chr(31), ''),
-                 '{_BPE_PATTERN}')) AS piece
+      SELECT doc_id, unnest({_BPE_PIECES_SQL}) AS piece
       FROM documents
     ),
     wf0 AS MATERIALIZED (
-      SELECT regexp_replace(piece, '(.)', chr(31) || '\\1' || chr(31), 'gs')
-               AS w,
-             count(*) AS freq
+      SELECT {_bpe_wrap('piece')} AS w, count(*) AS freq
       FROM pieces GROUP BY 1
     )"""
     ]
@@ -1108,21 +1129,13 @@ def _bpe_stages_sql() -> str:
         parts.append(
             f"""pr{k} AS MATERIALIZED (
       SELECT s.syms[t.i] AS l, s.syms[t.i + 1] AS r, sum(s.freq) AS cnt
-      FROM (SELECT list_filter(string_split(w, chr(31)), x -> x <> '')
-                     AS syms, freq
-            FROM wf{k}) s,
+      FROM (SELECT {_bpe_syms('w')} AS syms, freq FROM wf{k}) s,
            unnest(generate_series(1, len(s.syms) - 1)) AS t(i)
       GROUP BY 1, 2
     ),
     p{k} AS MATERIALIZED (SELECT l, r FROM pr{k} ORDER BY cnt DESC, l, r LIMIT 1),
     wf{k + 1} AS MATERIALIZED (
-      SELECT replace(w,
-          chr(31) || (SELECT l FROM p{k}) || chr(31) || chr(31)
-                  || (SELECT r FROM p{k}) || chr(31),
-          chr(31) || (SELECT l FROM p{k}) || (SELECT r FROM p{k}) || chr(31))
-            AS w,
-          freq
-      FROM wf{k})"""
+      SELECT {_bpe_merge('w', k)} AS w, freq FROM wf{k})"""
         )
     return "WITH " + ",\n".join(parts)
 
@@ -1136,28 +1149,25 @@ def _bpe_train_oracle() -> str:
     return _bpe_stages_sql() + "\n" + union
 
 
-def _bpe_tokenize_oracle() -> str:
+def _bpe_chain() -> str:
+    """The learned merges applied in rank order to a wrapped word ``w``."""
     chain = "w"
     for k in range(bpe.DEFAULT_MERGES):
-        chain = (
-            f"replace({chain}, chr(31) || (SELECT l FROM p{k}) || chr(31)"
-            f" || chr(31) || (SELECT r FROM p{k}) || chr(31),"
-            f" chr(31) || (SELECT l FROM p{k}) || (SELECT r FROM p{k})"
-            f" || chr(31))"
-        )
+        chain = _bpe_merge(chain, k)
+    return chain
+
+
+def _bpe_tokenize_oracle() -> str:
     return (
         _bpe_stages_sql()
         + f""",
     dw AS MATERIALIZED (
-      SELECT doc_id,
-             regexp_replace(piece, '(.)', chr(31) || '\\1' || chr(31), 'gs')
-               AS w
+      SELECT doc_id, {_bpe_wrap('piece')} AS w
       FROM pieces
     ),
     g AS MATERIALIZED (
       SELECT doc_id, count(*) AS n_pieces,
-             sum(len(list_filter(string_split({chain}, chr(31)),
-                                 x -> x <> ''))) AS n_tok
+             sum(len({_bpe_syms(_bpe_chain())})) AS n_tok
       FROM dw GROUP BY doc_id
     )
     SELECT d.doc_id,
@@ -1167,24 +1177,10 @@ def _bpe_tokenize_oracle() -> str:
     )
 
 
-def _bpe_chain() -> str:
-    """Nested replace expression applying the learned merges in rank
-    order to a wrapped-word column ``w`` (shared by the tokenize and
-    encode oracles)."""
-    chain = "w"
-    for k in range(bpe.DEFAULT_MERGES):
-        chain = (
-            f"replace({chain}, chr(31) || (SELECT l FROM p{k}) || chr(31)"
-            f" || chr(31) || (SELECT r FROM p{k}) || chr(31),"
-            f" chr(31) || (SELECT l FROM p{k}) || (SELECT r FROM p{k})"
-            f" || chr(31))"
-        )
-    return chain
-
-
-def _bpe_encode_oracle() -> str:
-    from .operators.textstats import _BPE_PATTERN
-
+def _bpe_vocab_sql() -> str:
+    """The training CTEs plus the learned vocabulary (symbol ids by
+    frequency DESC, then symbol) — the head of the encode and munch
+    oracles."""
     return (
         _bpe_stages_sql()
         + f""",
@@ -1193,27 +1189,24 @@ def _bpe_encode_oracle() -> str:
              CAST(row_number() OVER (ORDER BY vfreq DESC, symbol)
                   AS INTEGER) AS vocab_id
       FROM (SELECT s AS symbol, sum(freq) AS vfreq
-            FROM (SELECT unnest(list_filter(string_split(w, chr(31)),
-                                            x -> x <> '')) AS s, freq
+            FROM (SELECT unnest({_bpe_syms('w')}) AS s, freq
                   FROM wf{bpe.DEFAULT_MERGES})
             GROUP BY 1)
-    ),
+    )"""
+    )
+
+
+def _bpe_encode_oracle() -> str:
+    return (
+        _bpe_vocab_sql()
+        + f""",
     dp AS MATERIALIZED (
-      SELECT doc_id, i AS piece_pos,
-             regexp_replace(t.ps[i], '(.)', chr(31) || '\\1' || chr(31),
-                            'gs') AS w
-      FROM (SELECT doc_id,
-                   regexp_extract_all(
-                       replace(coalesce(text, ''), chr(31), ''),
-                       '{_BPE_PATTERN}') AS ps
-            FROM documents) t,
-           unnest(generate_series(1, len(t.ps))) AS u(i)
+      SELECT doc_id, i AS piece_pos, {_bpe_wrap('t.ps[i]')} AS w
+      FROM {_BPE_PIECE_POS_SQL}
     ),
     dsym AS MATERIALIZED (
       SELECT doc_id, piece_pos, j AS sym_pos, t.syms[j] AS symbol
-      FROM (SELECT doc_id, piece_pos,
-                   list_filter(string_split({_bpe_chain()},
-                                            chr(31)), x -> x <> '') AS syms
+      FROM (SELECT doc_id, piece_pos, {_bpe_syms(_bpe_chain())} AS syms
             FROM dp) t,
            unnest(generate_series(1, len(t.syms))) AS u(j)
     ),
@@ -1236,29 +1229,12 @@ def _bpe_munch_oracle() -> str:
     longest-prefix lookup (ORDER BY length DESC LIMIT 1), then advances
     the cursor. MUNCH_STAGES must cover the longest piece (fixture max is
     8 chars; the test pins this bound at every SF)."""
-    from .operators.textstats import _BPE_PATTERN
-
     parts = (
-        _bpe_stages_sql()
+        _bpe_vocab_sql()
         + f""",
-    vocab AS MATERIALIZED (
-      SELECT symbol,
-             CAST(row_number() OVER (ORDER BY vfreq DESC, symbol)
-                  AS INTEGER) AS vocab_id
-      FROM (SELECT s AS symbol, sum(freq) AS vfreq
-            FROM (SELECT unnest(list_filter(string_split(w, chr(31)),
-                                            x -> x <> '')) AS s, freq
-                  FROM wf{bpe.DEFAULT_MERGES})
-            GROUP BY 1)
-    ),
     mp AS MATERIALIZED (
       SELECT doc_id, i - 1 AS piece_pos, t.ps[i] AS piece
-      FROM (SELECT doc_id,
-                   regexp_extract_all(
-                       replace(coalesce(text, ''), chr(31), ''),
-                       '{_BPE_PATTERN}') AS ps
-            FROM documents) t,
-           unnest(generate_series(1, len(t.ps))) AS u(i)
+      FROM {_BPE_PIECE_POS_SQL}
     ),
     st0 AS MATERIALIZED (
       SELECT doc_id, piece_pos, piece, 1 AS pos, 0 AS ord
@@ -1296,47 +1272,89 @@ def _bpe_munch_oracle() -> str:
     )
 
 
-def _perceptron_stages_sql(epochs: int, train_where: str = "") -> str:
+# the confusion cells of b(p, t) and their metrics (the detector_eval
+# rollup), shared by every oracle that scores a 0/1 verdict p against a
+# 0/1 truth t
+_CONFUSION_SQL = """c AS (
+      SELECT CAST(sum(p * t) AS BIGINT) AS tp,
+             CAST(sum(p * (1 - t)) AS BIGINT) AS fp,
+             CAST(sum((1 - p) * t) AS BIGINT) AS fn,
+             CAST(sum((1 - p) * (1 - t)) AS BIGINT) AS tn
+      FROM b
+    )
+    SELECT tp, fp, fn, tn,
+           round(tp / greatest(tp + fp, 1), 6) AS prec,
+           round(tp / greatest(tp + fn, 1), 6) AS rec,
+           round(2 * (tp / greatest(tp + fp, 1)) * (tp / greatest(tp + fn, 1))
+                 / greatest(tp / greatest(tp + fp, 1)
+                            + tp / greatest(tp + fn, 1), 1e-12), 6) AS f1,
+           round((tp + tn) / (tp + fp + fn + tn), 6) AS accuracy
+    FROM c"""
+
+# the perceptron oracles' training fold (the held-out fifth is its
+# complement)
+_CLF_TRAIN_FOLD = f"WHERE doc_id % {textstats.CLF_EVAL_FOLD} != 0"
+
+
+def _clf_docs(where: str) -> str:
+    """(doc_id, text, toks) of the documents ``where`` keeps."""
+    return f"""SELECT doc_id, coalesce(text, '') AS text, {_TOKS_SQL} AS toks
+      FROM documents {where}"""
+
+
+def _clf_label(neg: int) -> str:
+    """The perceptron's training label over (text, toks): the
+    quality_score verdict, 1 for a keep and ``neg`` otherwise."""
+    return f"""CASE WHEN len(toks) >= 10
+                   AND round(length(regexp_replace(lower(text), '[^a-z]',
+                                                   '', 'g'))
+                             / greatest(length(text), 1), 4) > 0.6
+                  THEN 1 ELSE {neg} END"""
+
+
+def _clf_feats(src: str) -> str:
+    """(doc_id, bucket, cnt): the hashed token counts of ``src``'s toks."""
+    bucket = _hex2int("md5(token)") + f" % {textstats.CLF_DIM}"
+    return f"""SELECT doc_id, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
+      FROM (SELECT doc_id, unnest(toks) AS token FROM {src})
+      GROUP BY 1, 2"""
+
+
+def _clf_score(feats: str, w: str) -> str:
+    """(doc_id, s): each doc's score under the weight table ``w``."""
+    return f"""SELECT f.doc_id, sum(w.weight * f.cnt) AS s
+      FROM {feats} f JOIN {w} w USING (bucket) GROUP BY 1"""
+
+
+def _perceptron_stages_sql(train_where: str = "") -> str:
     """CTE chain replaying operators.textstats.train_perceptron in DuckDB
     (the _bpe_stages_sql pattern): per epoch, score under the current
     weights, mark mistakes (y·score ≤ 0), apply the summed integer
     update. Certifies weight LEARNING end-to-end — batch perceptron is
     deterministic and integer-only, so there is nothing to drift.
     MATERIALIZED for the same ~4^K-inlining reason as the BPE stages.
-    train_where (e.g. "WHERE doc_id % 5 != 0") restricts the TRAINING
-    fold for the held-out eval oracle."""
-    from .operators.textstats import CLF_DIM
-
-    bucket = _hex2int("md5(token)") + f" % {CLF_DIM}"
+    train_where (_CLF_TRAIN_FOLD) restricts the TRAINING fold for the
+    held-out oracles. The final weights are w{CLF_EPOCHS}."""
     parts = [
         f"""t AS MATERIALIZED (
-      SELECT doc_id, coalesce(text, '') AS text, {_TOKS_SQL} AS toks
-      FROM documents {train_where}
+      {_clf_docs(train_where)}
     ),
     lab AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 10
-                   AND round(length(regexp_replace(lower(text), '[^a-z]',
-                                                   '', 'g'))
-                             / greatest(length(text), 1), 4) > 0.6
-                  THEN 1 ELSE -1 END AS y
+      SELECT doc_id, {_clf_label(-1)} AS y
       FROM t
     ),
     feats AS MATERIALIZED (
-      SELECT doc_id, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
-      FROM (SELECT doc_id, unnest(toks) AS token FROM t)
-      GROUP BY 1, 2
+      {_clf_feats('t')}
     ),
     w0 AS MATERIALIZED (
-      SELECT unnest(generate_series(0, {CLF_DIM - 1})) AS bucket,
+      SELECT unnest(generate_series(0, {textstats.CLF_DIM - 1})) AS bucket,
              CAST(0 AS BIGINT) AS weight
     )"""
     ]
-    for k in range(epochs):
+    for k in range(textstats.CLF_EPOCHS):
         parts.append(
             f"""sc{k} AS MATERIALIZED (
-      SELECT f.doc_id, sum(w.weight * f.cnt) AS s
-      FROM feats f JOIN w{k} w USING (bucket) GROUP BY 1
+      {_clf_score('feats', f'w{k}')}
     ),
     mis{k} AS MATERIALIZED (
       SELECT l.doc_id, l.y FROM lab l LEFT JOIN sc{k} s USING (doc_id)
@@ -1354,23 +1372,22 @@ def _perceptron_stages_sql(epochs: int, train_where: str = "") -> str:
     return "WITH " + ",\n".join(parts)
 
 
-def _perceptron_train_oracle(epochs: int) -> str:
+def _perceptron_train_oracle() -> str:
     return (
-        _perceptron_stages_sql(epochs)
+        _perceptron_stages_sql()
         + f"""
     SELECT CAST(bucket AS INTEGER) AS bucket,
            CAST(weight AS BIGINT) AS weight
-    FROM w{epochs}"""
+    FROM w{textstats.CLF_EPOCHS}"""
     )
 
 
-def _perceptron_learned_oracle(epochs: int) -> str:
+def _perceptron_learned_oracle() -> str:
     return (
-        _perceptron_stages_sql(epochs)
+        _perceptron_stages_sql()
         + f""",
     scf AS MATERIALIZED (
-      SELECT f.doc_id, sum(w.weight * f.cnt) AS s
-      FROM feats f JOIN w{epochs} w USING (bucket) GROUP BY 1
+      {_clf_score('feats', f'w{textstats.CLF_EPOCHS}')}
     )
     SELECT l.doc_id,
            CAST(coalesce(s.s, 0) AS BIGINT) AS clf_score,
@@ -1382,100 +1399,90 @@ def _perceptron_learned_oracle(epochs: int) -> str:
     )
 
 
-def _perceptron_eval_oracle(epochs: int) -> str:
+def _perceptron_heldout_sql() -> str:
+    """Training on the 4/5 fold, then the held-out fifth (doc_id %
+    CLF_EVAL_FOLD == 0): its 0/1 labels ``labh`` and its scores ``sch``
+    under the final weights — the head of the eval and pr-curve
+    oracles."""
+    return (
+        _perceptron_stages_sql(_CLF_TRAIN_FOLD)
+        + f""",
+    th AS MATERIALIZED (
+      {_clf_docs(f"WHERE doc_id % {textstats.CLF_EVAL_FOLD} = 0")}
+    ),
+    labh AS MATERIALIZED (
+      SELECT doc_id, {_clf_label(0)} AS t
+      FROM th
+    ),
+    featsh AS MATERIALIZED (
+      {_clf_feats('th')}
+    ),
+    sch AS MATERIALIZED (
+      {_clf_score('featsh', f'w{textstats.CLF_EPOCHS}')}
+    )"""
+    )
+
+
+def _perceptron_eval_oracle() -> str:
     """Held-out P/R/F1 of the LEARNED classifier (VERDICT r4 next-step
     #6): replay training on the 4/5 fold (doc_id % CLF_EVAL_FOLD != 0),
     score the held-out fifth under the final weights, then fold the 4
     integer confusion cells into the detector_eval metric expressions —
     so the oracle certifies the training, the inference, AND the
     evaluation rollup in one statement."""
-    from .operators.textstats import CLF_DIM, CLF_EVAL_FOLD
-
-    bucket = _hex2int("md5(token)") + f" % {CLF_DIM}"
     return (
-        _perceptron_stages_sql(
-            epochs, f"WHERE doc_id % {CLF_EVAL_FOLD} != 0"
-        )
+        _perceptron_heldout_sql()
         + f""",
-    th AS MATERIALIZED (
-      SELECT doc_id, coalesce(text, '') AS text, {_TOKS_SQL} AS toks
-      FROM documents WHERE doc_id % {CLF_EVAL_FOLD} = 0
-    ),
-    labh AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 10
-                   AND round(length(regexp_replace(lower(text), '[^a-z]',
-                                                   '', 'g'))
-                             / greatest(length(text), 1), 4) > 0.6
-                  THEN 1 ELSE 0 END AS t
-      FROM th
-    ),
-    featsh AS MATERIALIZED (
-      SELECT doc_id, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
-      FROM (SELECT doc_id, unnest(toks) AS token FROM th)
-      GROUP BY 1, 2
-    ),
-    sch AS MATERIALIZED (
-      SELECT f.doc_id, sum(w.weight * f.cnt) AS s
-      FROM featsh f JOIN w{epochs} w USING (bucket) GROUP BY 1
-    ),
     b AS (
       SELECT CASE WHEN coalesce(s.s, 0) > 0 THEN 1 ELSE 0 END AS p, l.t
       FROM labh l LEFT JOIN sch s USING (doc_id)
     ),
-    c AS (
-      SELECT CAST(sum(p * t) AS BIGINT) AS tp,
-             CAST(sum(p * (1 - t)) AS BIGINT) AS fp,
-             CAST(sum((1 - p) * t) AS BIGINT) AS fn,
-             CAST(sum((1 - p) * (1 - t)) AS BIGINT) AS tn
-      FROM b
-    )
-    SELECT tp, fp, fn, tn,
-           round(tp / greatest(tp + fp, 1), 6) AS prec,
-           round(tp / greatest(tp + fn, 1), 6) AS rec,
-           round(2 * (tp / greatest(tp + fp, 1)) * (tp / greatest(tp + fn, 1))
-                 / greatest(tp / greatest(tp + fp, 1)
-                            + tp / greatest(tp + fn, 1), 1e-12), 6) AS f1,
-           round((tp + tn) / (tp + fp + fn + tn), 6) AS accuracy
-    FROM c"""
+    {_CONFUSION_SQL}"""
     )
 
 
-def _perceptron_pr_curve_oracle(epochs: int) -> str:
+# a threshold's confusion cells over (clf_score, n_pos, n_neg): a score
+# at or above the threshold is a predicted keep
+_PR_CELLS = {
+    "tp": (">=", "n_pos"),
+    "fp": (">=", "n_neg"),
+    "fn": ("<", "n_pos"),
+    "tn": ("<", "n_neg"),
+}
+
+
+def _pr_grid_ctes(p: str, cells: str) -> str:
+    """``{p}_mm`` → ``{p}_thr``: the PR_GRID + 1 integer cut points from
+    the lowest to the highest score of ``{p}_per(clf_score, n_pos,
+    n_neg)`` → ``{p}_cells``: each cut point's confusion ``cells``."""
+    grid = textstats.PR_GRID
+    sums = ",\n".join(
+        f"""             CAST(sum(CASE WHEN p.clf_score {op} th.thr THEN p.{col}
+                      ELSE 0 END) AS BIGINT) AS {c}"""
+        for c in cells.split()
+        for op, col in [_PR_CELLS[c]]
+    )
+    return f"""{p}_mm AS (SELECT min(clf_score) AS lo, max(clf_score) AS hi FROM {p}_per),
+    {p}_thr AS (
+      SELECT DISTINCT CAST(lo + (i * (hi - lo)) // {grid} AS BIGINT)
+               AS thr
+      FROM {p}_mm CROSS JOIN generate_series(0, {grid}) t(i)
+    ),
+    {p}_cells AS (
+      SELECT th.thr,
+{sums}
+      FROM {p}_thr th CROSS JOIN {p}_per p GROUP BY 1
+    )"""
+
+
+def _perceptron_pr_curve_oracle() -> str:
     """Threshold-sweep replay: training CTEs + held-out scoring (shared
     with _perceptron_eval_oracle) + the constant arithmetic grid and the
     grid × score-rollup conditional aggregation — all integers until the
     final guarded divisions."""
-    from .operators.textstats import CLF_DIM, CLF_EVAL_FOLD, PR_GRID
-
-    bucket = _hex2int("md5(token)") + f" % {CLF_DIM}"
     return (
-        _perceptron_stages_sql(
-            epochs, f"WHERE doc_id % {CLF_EVAL_FOLD} != 0"
-        )
+        _perceptron_heldout_sql()
         + f""",
-    th AS MATERIALIZED (
-      SELECT doc_id, coalesce(text, '') AS text, {_TOKS_SQL} AS toks
-      FROM documents WHERE doc_id % {CLF_EVAL_FOLD} = 0
-    ),
-    labh AS MATERIALIZED (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 10
-                   AND round(length(regexp_replace(lower(text), '[^a-z]',
-                                                   '', 'g'))
-                             / greatest(length(text), 1), 4) > 0.6
-                  THEN 1 ELSE 0 END AS t
-      FROM th
-    ),
-    featsh AS MATERIALIZED (
-      SELECT doc_id, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
-      FROM (SELECT doc_id, unnest(toks) AS token FROM th)
-      GROUP BY 1, 2
-    ),
-    sch AS MATERIALIZED (
-      SELECT f.doc_id, sum(w.weight * f.cnt) AS s
-      FROM featsh f JOIN w{epochs} w USING (bucket) GROUP BY 1
-    ),
     prc_sc AS (
       SELECT l.doc_id, CAST(coalesce(s.s, 0) AS BIGINT) AS clf_score, l.t
       FROM labh l LEFT JOIN sch s USING (doc_id)
@@ -1485,24 +1492,7 @@ def _perceptron_pr_curve_oracle(epochs: int) -> str:
              CAST(count(*) - sum(t) AS BIGINT) AS n_neg
       FROM prc_sc GROUP BY 1
     ),
-    prc_mm AS (SELECT min(clf_score) AS lo, max(clf_score) AS hi FROM prc_per),
-    prc_thr AS (
-      SELECT DISTINCT CAST(lo + (i * (hi - lo)) // {PR_GRID} AS BIGINT)
-               AS thr
-      FROM prc_mm CROSS JOIN generate_series(0, {PR_GRID}) t(i)
-    ),
-    prc_cells AS (
-      SELECT th.thr,
-             CAST(sum(CASE WHEN p.clf_score >= th.thr THEN p.n_pos
-                      ELSE 0 END) AS BIGINT) AS tp,
-             CAST(sum(CASE WHEN p.clf_score >= th.thr THEN p.n_neg
-                      ELSE 0 END) AS BIGINT) AS fp,
-             CAST(sum(CASE WHEN p.clf_score < th.thr THEN p.n_pos
-                      ELSE 0 END) AS BIGINT) AS fn,
-             CAST(sum(CASE WHEN p.clf_score < th.thr THEN p.n_neg
-                      ELSE 0 END) AS BIGINT) AS tn
-      FROM prc_thr th CROSS JOIN prc_per p GROUP BY 1
-    )
+    {_pr_grid_ctes('prc', 'tp fp fn tn')}
     SELECT thr, tp, fp, fn, tn,
            round(tp / greatest(tp + fp, 1), 6) AS prec,
            round(tp / greatest(tp + fn, 1), 6) AS rec,
@@ -1511,7 +1501,7 @@ def _perceptron_pr_curve_oracle(epochs: int) -> str:
     )
 
 
-def _perceptron_gate_calibrated_oracle(epochs: int) -> str:
+def _perceptron_gate_calibrated_oracle() -> str:
     """End-to-end calibrated-gate replay: train on the 4/5 fold, score
     the held-out fifth, rebuild the threshold grid cells, argmax-pick the
     max-F1 cutoff (unrounded IEEE F1, thr-asc tie), then score EVERY
@@ -1519,39 +1509,21 @@ def _perceptron_gate_calibrated_oracle(epochs: int) -> str:
     the full calibration loop certified in one statement. CTEs carry a
     qg_ prefix (the _perceptron_stages_sql chain already owns sc*/w*
     names)."""
-    from .operators.textstats import (
-        CLF_DIM,
-        CLF_EVAL_FOLD,
-        PR_GRID,
-    )
-
-    bucket = _hex2int("md5(token)") + f" % {CLF_DIM}"
     return (
-        _perceptron_stages_sql(
-            epochs, f"WHERE doc_id % {CLF_EVAL_FOLD} != 0"
-        )
+        _perceptron_stages_sql(_CLF_TRAIN_FOLD)
         + f""",
     qg_all AS MATERIALIZED (
-      SELECT doc_id, coalesce(text, '') AS text, {_TOKS_SQL} AS toks
-      FROM documents
+      {_clf_docs('')}
     ),
     qg_feats AS MATERIALIZED (
-      SELECT doc_id, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
-      FROM (SELECT doc_id, unnest(toks) AS token FROM qg_all)
-      GROUP BY 1, 2
+      {_clf_feats('qg_all')}
     ),
     qg_sc AS MATERIALIZED (
-      SELECT f.doc_id, sum(w.weight * f.cnt) AS s
-      FROM qg_feats f JOIN w{epochs} w USING (bucket) GROUP BY 1
+      {_clf_score('qg_feats', f'w{textstats.CLF_EPOCHS}')}
     ),
     qg_labh AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) >= 10
-                   AND round(length(regexp_replace(lower(text), '[^a-z]',
-                                                   '', 'g'))
-                             / greatest(length(text), 1), 4) > 0.6
-                  THEN 1 ELSE 0 END AS t
-      FROM qg_all WHERE doc_id % {CLF_EVAL_FOLD} = 0
+      SELECT doc_id, {_clf_label(0)} AS t
+      FROM qg_all WHERE doc_id % {textstats.CLF_EVAL_FOLD} = 0
     ),
     qg_per AS (
       SELECT CAST(coalesce(s.s, 0) AS BIGINT) AS clf_score,
@@ -1560,22 +1532,7 @@ def _perceptron_gate_calibrated_oracle(epochs: int) -> str:
       FROM qg_labh l LEFT JOIN qg_sc s USING (doc_id)
       GROUP BY 1
     ),
-    qg_mm AS (SELECT min(clf_score) AS lo, max(clf_score) AS hi FROM qg_per),
-    qg_thr AS (
-      SELECT DISTINCT CAST(lo + (i * (hi - lo)) // {PR_GRID} AS BIGINT)
-               AS thr
-      FROM qg_mm CROSS JOIN generate_series(0, {PR_GRID}) t(i)
-    ),
-    qg_cells AS (
-      SELECT th.thr,
-             CAST(sum(CASE WHEN p.clf_score >= th.thr THEN p.n_pos
-                      ELSE 0 END) AS BIGINT) AS tp,
-             CAST(sum(CASE WHEN p.clf_score >= th.thr THEN p.n_neg
-                      ELSE 0 END) AS BIGINT) AS fp,
-             CAST(sum(CASE WHEN p.clf_score < th.thr THEN p.n_pos
-                      ELSE 0 END) AS BIGINT) AS fn
-      FROM qg_thr th CROSS JOIN qg_per p GROUP BY 1
-    ),
+    {_pr_grid_ctes('qg', 'tp fp fn')},
     qg_pick AS (
       SELECT thr FROM (
         SELECT thr, row_number() OVER (
@@ -1594,17 +1551,24 @@ def _perceptron_gate_calibrated_oracle(epochs: int) -> str:
     )
 
 
-def _lpa_oracle(iters: int) -> str:
-    """Chained-CTE replay of host_communities: undirected adjacency from
-    the synth edge multiset, K synchronous min-tie-break majority-vote
-    rounds (the PageRank convention)."""
+def _host_edges_cte(name: str) -> str:
+    """The synth link multiset (linkgraph.synth_link_edges) as DISTINCT
+    (src_id, dst_id) host ids, self-links dropped."""
     H = linkgraph.N_HOSTS
-    parts = [
-        f"""e AS MATERIALIZED (
+    return f"""{name} AS MATERIALIZED (
       SELECT DISTINCT doc_id % {H} AS src_id,
                       (doc_id * 31 + j) % {H} AS dst_id
       FROM documents CROSS JOIN generate_series(1, {linkgraph.LINK_FANOUT}) t(j)
-      WHERE doc_id % {H} <> (doc_id * 31 + j) % {H})""",
+      WHERE doc_id % {H} <> (doc_id * 31 + j) % {H})"""
+
+
+def _lpa_oracle() -> str:
+    """Chained-CTE replay of host_communities: undirected adjacency from
+    the synth edge multiset, LPA_ITERS synchronous min-tie-break
+    majority-vote rounds (the PageRank convention)."""
+    iters = linkgraph.LPA_ITERS
+    parts = [
+        _host_edges_cte("e"),
         """adj AS MATERIALIZED (
       SELECT src_id AS v, dst_id AS u FROM e
       UNION SELECT dst_id, src_id FROM e)""",
@@ -1638,18 +1602,13 @@ def _lpa_oracle(iters: int) -> str:
     )
 
 
-def _hits_oracle(iters: int) -> str:
+def _hits_oracle() -> str:
     """Chained-CTE replay of host_hits: distinct edges, unnormalized
     integer power iteration, authorities-then-hubs update order (the
     PageRank-oracle convention — one MATERIALIZED pair per iteration)."""
-    H = linkgraph.N_HOSTS
+    iters = linkgraph.HITS_ITERS
     parts = [
-        f"""he AS MATERIALIZED (
-      SELECT DISTINCT doc_id % {H} AS src_id,
-                      (doc_id * 31 + j) % {H} AS dst_id
-      FROM documents
-      CROSS JOIN generate_series(1, {linkgraph.LINK_FANOUT}) t(j)
-      WHERE doc_id % {H} <> (doc_id * 31 + j) % {H})""",
+        _host_edges_cte("he"),
         """hn AS MATERIALIZED (
       SELECT DISTINCT id FROM (
         SELECT src_id AS id FROM he
@@ -1682,24 +1641,20 @@ def _hits_oracle(iters: int) -> str:
     )
 
 
-def _pagerank_oracle(iters: int, seed_mod: int | None = None) -> str:
+def _pagerank_oracle(seed_mod: int | None = None) -> str:
     """Full SQL replay of operators.linkgraph.host_pagerank /
     host_trustrank: rebuild the deterministic edge multiset from
     `documents`, then chain one MATERIALIZED CTE trio (contributions,
-    dangling mass, new ranks) per iteration. All arithmetic is int64
-    multiply / `//` / sum — integer sums are associative, so DuckDB's
-    serial loop equals Spark's parallel one bit-for-bit (the bpe_train /
-    ivf_trained convention). seed_mod restricts teleport + dangling mass
-    to the {id % seed_mod == 0} seed set (TrustRank)."""
-    H = linkgraph.N_HOSTS
+    dangling mass, new ranks) per iteration (PR_ITERS). All arithmetic
+    is int64 multiply / `//` / sum — integer sums are associative, so
+    DuckDB's serial loop equals Spark's parallel one bit-for-bit (the
+    bpe_train / ivf_trained convention). seed_mod restricts teleport +
+    dangling mass to the {id % seed_mod == 0} seed set (TrustRank)."""
+    iters = linkgraph.PR_ITERS
     S = linkgraph.PR_SCALE
     seed = "TRUE" if seed_mod is None else f"(id % {seed_mod} = 0)"
     parts = [
-        f"""e AS MATERIALIZED (
-      SELECT DISTINCT doc_id % {H} AS src_id,
-                      (doc_id * 31 + j) % {H} AS dst_id
-      FROM documents CROSS JOIN generate_series(1, {linkgraph.LINK_FANOUT}) t(j)
-      WHERE doc_id % {H} <> (doc_id * 31 + j) % {H})""",
+        _host_edges_cte("e"),
         """nodes AS MATERIALIZED (
       SELECT src_id AS id FROM e UNION SELECT dst_id FROM e)""",
         f"nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes WHERE {seed})",
@@ -1744,18 +1699,35 @@ def _pagerank_oracle(iters: int, seed_mod: int | None = None) -> str:
     )
 
 
-def _components_ctes() -> str:
-    """Shared recursive CTE chain replaying `duplicate_components`:
-    exact-dup + LSH-verified near-dup edges → min-label connected
-    components (`comp`) → component sizes (`szs`). `dedup_components`
-    projects it directly; `component_canonical` adds the keeper
-    selection on top."""
-    return f"""RECURSIVE {_minhash_sig_ctes(with_lang=True)},
-            sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+# exact Jaccard over sh(doc_id, lang, shingle): each doc's shingle count
+# (sizes), the shingles under a document-frequency cap (shf), each
+# same-lang pair's shared-shingle count (inter) and the pair's Jaccard
+def _shingle_cap_ctes(max_df: int) -> str:
+    return f"""sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
             shf AS (SELECT * FROM sh WHERE shingle NOT IN (
                       SELECT shingle FROM (
                         SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-                      WHERE df > {dedup.MAX_SHINGLE_DF})),
+                      WHERE df > {max_df}))"""
+
+
+_SHINGLE_INTER_CTE = """inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
+                      FROM shf a JOIN shf b
+                        ON a.lang = b.lang AND a.shingle = b.shingle
+                       AND a.doc_id < b.doc_id
+                      GROUP BY 1, 2)"""
+
+_JACCARD_SQL = "round(i.n_common / (sa.n_sh + sb.n_sh - i.n_common), 6)"
+
+
+def _near_dup_ctes(near_cols: str) -> str:
+    """The near-duplicate decision that `deduplicate_corpus` and
+    `duplicate_components` share (dedup.near_dup_pairs): LSH candidates
+    from buckets of 2..MAX_BUCKET_SIZE docs, verified at exact Jaccard
+    >= NEAR_DUP_JACCARD over the MAX_SHINGLE_DF-capped shingles (``near``,
+    projecting ``near_cols`` of inter i), and each exact-duplicate
+    group's keeper (``ex``)."""
+    return f"""{_minhash_sig_ctes(with_lang=True)},
+            {_shingle_cap_ctes(dedup.MAX_SHINGLE_DF)},
             bok AS (SELECT band, band_hash FROM bands
                     GROUP BY band, band_hash HAVING count(*) BETWEEN 2 AND {dedup.MAX_BUCKET_SIZE}),
             cands AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
@@ -1763,20 +1735,25 @@ def _components_ctes() -> str:
                       JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
                                   AND a.doc_id < b.doc_id
                       JOIN bok kk ON a.band = kk.band AND a.band_hash = kk.band_hash),
-            inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
-                      FROM shf a JOIN shf b
-                        ON a.lang = b.lang AND a.shingle = b.shingle
-                       AND a.doc_id < b.doc_id
-                      GROUP BY 1, 2),
-            near AS (SELECT i.id1, i.id2
+            {_SHINGLE_INTER_CTE},
+            near AS (SELECT {near_cols}
                      FROM inter i
                      JOIN sizes sa ON i.id1 = sa.doc_id
                      JOIN sizes sb ON i.id2 = sb.doc_id
                      JOIN cands c ON c.id1 = i.id1 AND c.id2 = i.id2
-                     WHERE round(i.n_common / (sa.n_sh + sb.n_sh - i.n_common), 6)
+                     WHERE {_JACCARD_SQL}
                            >= {dedup.NEAR_DUP_JACCARD}),
             ex AS (SELECT md5(text) AS chash, min(doc_id) AS keeper
-                   FROM documents GROUP BY 1),
+                   FROM documents GROUP BY 1)"""
+
+
+def _components_ctes() -> str:
+    """Shared recursive CTE chain replaying `duplicate_components`:
+    exact-dup + LSH-verified near-dup edges → min-label connected
+    components (`comp`) → component sizes (`szs`). `dedup_components`
+    projects it directly; `component_canonical` adds the keeper
+    selection on top."""
+    return f"""RECURSIVE {_near_dup_ctes('i.id1, i.id2')},
             exp AS (SELECT e.keeper AS id1, d.doc_id AS id2
                     FROM documents d JOIN ex e ON md5(d.text) = e.chash
                     WHERE d.doc_id <> e.keeper),
@@ -1863,6 +1840,205 @@ def _langid_learned_sql() -> str:
         FROM documents d JOIN best b ON b.doc_id = d.doc_id
         WHERE d.doc_id % {LP.LID_FOLD} = 0
     """
+
+
+# --- CTE fragments that two or more oracles in oracle_sql() share ------
+
+
+def _lines_ctes(src: str) -> str:
+    """toks → lns: the tokens of ``src`` cut into LINE_TOKS-token lines
+    (operators.lines). The per-line coalesce matters: DuckDB's
+    array_to_string over an EMPTY slice (a zero-token document's single
+    line) yields NULL, which list_filter would silently drop — Spark's
+    concat_ws yields '' and keeps the line."""
+    T = lines.LINE_TOKS
+    return f"""toks AS (
+              SELECT doc_id, {_TOKS_SQL} AS l FROM {src}
+            ), lns AS (
+              SELECT doc_id,
+                     list_transform(
+                       range(1, greatest(CAST(ceil(len(l) / {T}.0) AS BIGINT), 1) + 1),
+                       i -> coalesce(array_to_string(
+                              list_slice(l, (i-1)*{T} + 1,
+                                         (i-1)*{T} + {T}), ' '), '')
+                     ) AS lines
+              FROM toks
+            )"""
+
+
+def _pack_ctes() -> str:
+    """toks → counts → placed → spans: the seq_pack layout, computed with
+    the naive global-prefix window (equivalent because buckets are doc_id
+    ranges: bucket offset + within-bucket cumsum == global cumsum). A
+    null text is an empty doc (1 EOS slot), as in the operator; the
+    prefix sum is cast because DuckDB's sum() is HUGEINT and range()
+    needs BIGINT."""
+    S = packing.SEQ_LEN
+    return f"""toks AS (
+              SELECT doc_id, {_TOKS_SQL} AS l FROM documents
+            ), counts AS (
+              SELECT doc_id, coalesce(len(l) + 1, 1) AS n_slots FROM toks
+            ), placed AS (
+              SELECT doc_id, n_slots,
+                     CAST(coalesce(sum(n_slots) OVER (
+                       ORDER BY doc_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+                     AS BIGINT) AS off
+              FROM counts
+            ), spans AS (
+              SELECT doc_id, off, n_slots,
+                     unnest(range(off // {S},
+                                  (off + n_slots - 1) // {S} + 1))
+                     AS window_id
+              FROM placed
+            )"""
+
+
+# remap → c: the content remap (self-join on arithmetic base ids) that
+# synthesizes the duplicate groups the corpus lacks, mirrored exactly in
+# dedup.incremental_dedup. A left join: a doc whose base id is absent
+# keeps its own text (sparse doc_id ranges must not lose rows).
+_REMAP_CTES = """remap AS (
+              SELECT doc_id, text,
+                     CASE WHEN doc_id % 10 = 7 THEN doc_id - (doc_id % 100) + 7
+                          WHEN doc_id % 5 = 0 THEN doc_id - (doc_id % 20)
+                          ELSE doc_id END AS base_id
+              FROM documents
+            ), c AS (
+              SELECT r.doc_id, coalesce(b.text, r.text) AS text
+              FROM remap r LEFT JOIN documents b ON b.doc_id = r.base_id
+            )"""
+
+
+def _simhash_ctes() -> str:
+    """tok → h → votes → fp: each doc's SIMHASH_BITS-bit simhash, one
+    signed vote per bit of each token's md5-60 hash."""
+    bits = range(dedup.SIMHASH_BITS)
+    votes = ", ".join(
+        f"sum(CASE WHEN (h // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}"
+        for i in bits
+    )
+    fp = " + ".join(f"CASE WHEN v{i} > 0 THEN {2 ** i} ELSE 0 END" for i in bits)
+    return f"""tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS token FROM documents),
+            h AS (SELECT doc_id, CAST({_hex2int('md5(token)')} AS BIGINT) AS h FROM tok),
+            votes AS (SELECT doc_id,
+                      {votes}
+                      FROM h GROUP BY doc_id),
+            fp AS (SELECT doc_id,
+                   CAST({fp} AS BIGINT) AS simhash
+                   FROM votes)"""
+
+
+def _lsh_rank_sql() -> str:
+    """corpus → scored → ranked → each probe's top LSH_K: the cosine
+    re-rank of the caller's probes(probe_id, pb, pv, pn) against the
+    corpus vectors (vec_id >= ANN_PROBES) that share a bucket."""
+    return f"""corpus AS (SELECT vec_id AS cand_id, bucket AS cb, v AS cv, nm AS cn
+                       FROM sig WHERE vec_id >= {similarity.ANN_PROBES}),
+            scored AS (SELECT probe_id, cand_id,
+                              round(list_inner_product(pv, cv) / (pn * cn), 4)
+                                AS cosine
+                       FROM probes JOIN corpus ON pb = cb),
+            ranked AS (SELECT probe_id, cand_id, cosine,
+                              CAST(row_number() OVER (PARTITION BY probe_id
+                                   ORDER BY cosine DESC, cand_id) AS INTEGER)
+                                AS rank
+                       FROM scored)
+            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= {similarity.LSH_K}"""
+
+
+# t → bgx → bgf → c2, ctx → rt: each doc's adjacent-token bigrams and
+# each bigram's surprise r = ctx(w1) // c2(w1, w2), all integers
+# (textstats.lm_bigram_score)
+_BIGRAM_CTES = f"""t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
+            bgx AS (SELECT doc_id,
+                           unnest(list_transform(
+                             generate_series(1, len(toks) - 1),
+                             i -> struct_pack(w1 := toks[i],
+                                              w2 := toks[i+1]))) AS b
+                    FROM t WHERE len(toks) >= 2),
+            bgf AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bgx),
+            c2 AS (SELECT w1, w2, count(*) AS c2 FROM bgf GROUP BY 1, 2),
+            ctx AS (SELECT w1, count(*) AS ctx FROM bgf GROUP BY 1),
+            rt AS (SELECT c2.w1, c2.w2,
+                          CAST(ctx.ctx // c2.c2 AS BIGINT) AS r
+                   FROM c2 JOIN ctx USING (w1))"""
+
+
+def _warc_page_cte(where: str) -> str:
+    """h: each document's WARC record (url, warc_date and the page html
+    synth_pages_from_documents builds from the template pieces), for the
+    documents ``where`` keeps."""
+    pre, post = _PAGE_TMPL.split("{paras}")
+    return f"""h AS (
+              SELECT doc_id, {_URL_SQL} AS url,
+                     strftime(TIMESTAMP '2024-01-01 00:00:00'
+                              + to_seconds(doc_id * 61),
+                              '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
+                     {_sq(pre + "<p>")} || text
+                       || {_sq(_PROMO)} || reverse(text)
+                       || {_sq("</p>" + post)}
+                       AS html
+              FROM documents {where}
+            )"""
+
+
+# u → o → n: the crawl-diff fixture — the old crawl holds doc_id < 400,
+# the new one doc_id >= 100 with every fifth text edited — and each
+# url's verdict over o FULL OUTER JOIN n
+_SNAPSHOT_CTES = f"""u AS (
+              SELECT doc_id, {_URL_SQL} AS url, text
+              FROM documents
+            ), o AS (
+              SELECT url, md5(text) AS old_hash FROM u WHERE doc_id < 400
+            ), n AS (
+              SELECT url,
+                     md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2'
+                          ELSE text END) AS new_hash
+              FROM u WHERE doc_id >= 100
+            )"""
+_SNAPSHOT_STATUS_SQL = """CASE WHEN o.url IS NULL THEN 'added'
+                        WHEN n.url IS NULL THEN 'removed'
+                        WHEN o.old_hash = n.new_hash THEN 'unchanged'
+                        ELSE 'changed' END"""
+
+
+def _quote_docs_cte() -> str:
+    """docs2: the corpus plus, for every QUOTE_MOD-th doc, a quoting doc
+    holding its first 2/5 and QUOTE_SUFFIX (dedup.containment_pairs)."""
+    return f"""docs2 AS (
+          SELECT doc_id, lang, text FROM documents
+          UNION ALL
+          SELECT doc_id + {dedup.QUOTE_ID_BASE}, lang,
+                 substr(text, 1, greatest((length(text) * 2) // 5, 1))
+                   || {_sq(dedup.QUOTE_SUFFIX)}
+          FROM documents WHERE doc_id % {dedup.QUOTE_MOD} = 0)"""
+
+
+def _template_html_sql() -> str:
+    """The templated page of the template_* oracles: doc_id % LI_MOD list
+    items ahead of the synthesized page."""
+    pre, post = (_sq(s) for s in _PAGE_TMPL.split("{paras}"))
+    return (
+        f"'<ul>' || repeat('<li>i</li>', CAST(doc_id % {webstruct.LI_MOD} AS INT))"
+        f" || '</ul>' || {pre} || '<p>' || text || {_sq(_PROMO)}"
+        f" || reverse(text) || '</p>' || {post}"
+    )
+
+
+def _template_sig_sql(html: str) -> str:
+    """A page's template signature: md5 of its tag sequence."""
+    return (
+        f"md5(array_to_string(\n"
+        f"                   regexp_extract_all({html}, '{webstruct.TAG_RE}', 1), ','))"
+    )
+
+
+def _template_pages_cte() -> str:
+    return f"""pages AS (
+          SELECT {_URL_SQL} AS url,
+                 {_template_html_sql()} AS html2
+          FROM documents)"""
 
 
 def oracle_sql() -> dict[str, str]:
@@ -2094,26 +2270,13 @@ def oracle_sql() -> dict[str, str]:
                    epoch_us(ts) - epoch_us(ref_ts) AS lag_us
             FROM carried WHERE side = 'p'
         """,
-        "detector_eval": """
+        "detector_eval": f"""
             WITH b AS (
               SELECT CASE WHEN value > 15 THEN 1 ELSE 0 END AS p,
                      CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS t
               FROM events
-            ), c AS (
-              SELECT CAST(sum(p * t) AS BIGINT) AS tp,
-                     CAST(sum(p * (1 - t)) AS BIGINT) AS fp,
-                     CAST(sum((1 - p) * t) AS BIGINT) AS fn,
-                     CAST(sum((1 - p) * (1 - t)) AS BIGINT) AS tn
-              FROM b
-            )
-            SELECT tp, fp, fn, tn,
-                   round(tp / greatest(tp + fp, 1), 6) AS prec,
-                   round(tp / greatest(tp + fn, 1), 6) AS rec,
-                   round(2 * (tp / greatest(tp + fp, 1)) * (tp / greatest(tp + fn, 1))
-                         / greatest(tp / greatest(tp + fp, 1)
-                                    + tp / greatest(tp + fn, 1), 1e-12), 6) AS f1,
-                   round((tp + tn) / (tp + fp + fn + tn), 6) AS accuracy
-            FROM c
+            ),
+            {_CONFUSION_SQL}
         """,
         "stratified_split": """
             SELECT o_orderstatus,
@@ -2151,25 +2314,11 @@ def oracle_sql() -> dict[str, str]:
                    min(doc_id) AS keeper_id
             FROM canon GROUP BY canon_url
         """,
-        # the per-line coalesce matters: DuckDB's array_to_string over an
-        # EMPTY slice (a zero-token document's single line) yields NULL,
-        # which list_filter would silently drop — Spark's concat_ws yields
-        # '' and keeps the line. Same at the end for all-lines-dropped
-        # docs. Constants interpolated from lines.LINE_TOKS/HOT_LINE_DF so
-        # one definition drives both engines.
+        # the final coalesce keeps all-lines-dropped docs (see
+        # _lines_ctes). Constants interpolated from lines.LINE_TOKS/
+        # HOT_LINE_DF so one definition drives both engines.
         "line_dedup": f"""
-            WITH toks AS (
-              SELECT doc_id, {_TOKS_SQL} AS l FROM documents
-            ), lns AS (
-              SELECT doc_id,
-                     list_transform(
-                       range(1, greatest(CAST(ceil(len(l) / {lines.LINE_TOKS}.0) AS BIGINT), 1) + 1),
-                       i -> coalesce(array_to_string(
-                              list_slice(l, (i-1)*{lines.LINE_TOKS} + 1,
-                                         (i-1)*{lines.LINE_TOKS} + {lines.LINE_TOKS}), ' '), '')
-                     ) AS lines
-              FROM toks
-            ), inst AS (
+            WITH {_lines_ctes('documents')}, inst AS (
               SELECT DISTINCT doc_id, line
               FROM (SELECT doc_id, unnest(lines) AS line FROM lns)
             ), hot AS (
@@ -2196,18 +2345,7 @@ def oracle_sql() -> dict[str, str]:
                           THEN {_sq(lines.PASSAGE_BOILER + " ")} || coalesce(text, '')
                           ELSE text END AS text
               FROM documents
-            ), toks AS (
-              SELECT doc_id, {_TOKS_SQL} AS l FROM aug
-            ), lns AS (
-              SELECT doc_id,
-                     list_transform(
-                       range(1, greatest(CAST(ceil(len(l) / {lines.LINE_TOKS}.0) AS BIGINT), 1) + 1),
-                       i -> coalesce(array_to_string(
-                              list_slice(l, (i-1)*{lines.LINE_TOKS} + 1,
-                                         (i-1)*{lines.LINE_TOKS} + {lines.LINE_TOKS}), ' '), '')
-                     ) AS lines
-              FROM toks
-            ), pw AS (
+            ), {_lines_ctes('aug')}, pw AS (
               -- docs shorter than p_lines emit NO windows (CASE, mirroring
               -- the Spark guard — no truncated whole-doc passages)
               SELECT doc_id,
@@ -2371,31 +2509,10 @@ def oracle_sql() -> dict[str, str]:
                         AS INTEGER) AS n_folded
             FROM n
         """,
-        # the oracle computes the SAME layout with the naive global-prefix
-        # window (equivalent because buckets are doc_id ranges: bucket
-        # offset + within-bucket cumsum == global cumsum); constants
-        # interpolate from packing.SEQ_LEN/BUCKET_DOCS
+        # the packing layout of _pack_ctes; constants interpolate from
+        # packing.SEQ_LEN/BUCKET_DOCS
         "seq_pack": f"""
-            WITH toks AS (
-              SELECT doc_id, {_TOKS_SQL} AS l FROM documents
-            ), counts AS (
-              -- null text ≡ empty doc (1 EOS slot), as in the operator
-              SELECT doc_id, coalesce(len(l) + 1, 1) AS n_slots FROM toks
-            ), placed AS (
-              SELECT doc_id, n_slots,
-                     -- sum() is HUGEINT in DuckDB; range() needs BIGINT
-                     CAST(coalesce(sum(n_slots) OVER (
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                     AS BIGINT) AS off
-              FROM counts
-            ), spans AS (
-              SELECT doc_id, off, n_slots,
-                     unnest(range(off // {packing.SEQ_LEN},
-                                  (off + n_slots - 1) // {packing.SEQ_LEN} + 1))
-                     AS window_id
-              FROM placed
-            )
+            WITH {_pack_ctes()}
             SELECT window_id,
                    CAST(sum(least(off + n_slots, (window_id + 1) * {packing.SEQ_LEN})
                             - greatest(off, window_id * {packing.SEQ_LEN}))
@@ -2407,24 +2524,7 @@ def oracle_sql() -> dict[str, str]:
         # shard manifest: the seq_pack layout CTEs + attribute join +
         # per-(shard, source) dominant pick over the source dim
         "shard_manifest": f"""
-            WITH toks AS (
-              SELECT doc_id, {_TOKS_SQL} AS l FROM documents
-            ), counts AS (
-              SELECT doc_id, coalesce(len(l) + 1, 1) AS n_slots FROM toks
-            ), placed AS (
-              SELECT doc_id, n_slots,
-                     CAST(coalesce(sum(n_slots) OVER (
-                       ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                     AS BIGINT) AS off
-              FROM counts
-            ), spans AS (
-              SELECT doc_id, off, n_slots,
-                     unnest(range(off // {packing.SEQ_LEN},
-                                  (off + n_slots - 1) // {packing.SEQ_LEN} + 1))
-                     AS window_id
-              FROM placed
-            ), sp AS (
+            WITH {_pack_ctes()}, sp AS (
               SELECT s.doc_id,
                      s.window_id // {packing.SHARD_WINDOWS} AS shard_id,
                      s.window_id,
@@ -2461,22 +2561,9 @@ def oracle_sql() -> dict[str, str]:
                    round(r.en_slots * 100.0 / r.n_tokens, 6) AS en_pct
             FROM roll r JOIN top t USING (shard_id)
         """,
-        # content remap (self-join on arithmetic base ids) synthesizes the
-        # duplicate groups the corpus lacks — mirrored exactly in the
-        # Spark operator's driver path; see dedup.incremental_dedup
-        "dedup_incremental": """
-            WITH remap AS (
-              SELECT doc_id, text,
-                     CASE WHEN doc_id % 10 = 7 THEN doc_id - (doc_id % 100) + 7
-                          WHEN doc_id % 5 = 0 THEN doc_id - (doc_id % 20)
-                          ELSE doc_id END AS base_id
-              FROM documents
-            ), c AS (
-              -- left join: a doc whose arithmetic base id is absent keeps
-              -- its own text (sparse doc_id ranges must not lose rows)
-              SELECT r.doc_id, coalesce(b.text, r.text) AS text
-              FROM remap r LEFT JOIN documents b ON b.doc_id = r.base_id
-            ), hashed AS (
+        # over the content remap of _REMAP_CTES
+        "dedup_incremental": f"""
+            WITH {_REMAP_CTES}, hashed AS (
               SELECT doc_id, md5(text) AS content_hash FROM c
             ), hist AS (
               SELECT DISTINCT content_hash FROM hashed WHERE doc_id % 2 = 0
@@ -2539,26 +2626,10 @@ def oracle_sql() -> dict[str, str]:
         # snapshot diff: presence from the join sides, hash equality for
         # changed/unchanged — verdict classes replayed with the same
         # fixture arithmetic
-        "snapshot_diff": """
-            WITH u AS (
-              SELECT doc_id,
-                     'https://docs.example.org/' || source || '/'
-                       || CAST(doc_id AS VARCHAR) AS url,
-                     text
-              FROM documents
-            ), o AS (
-              SELECT url, md5(text) AS old_hash FROM u WHERE doc_id < 400
-            ), n AS (
-              SELECT url,
-                     md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2'
-                          ELSE text END) AS new_hash
-              FROM u WHERE doc_id >= 100
-            )
+        "snapshot_diff": f"""
+            WITH {_SNAPSHOT_CTES}
             SELECT coalesce(o.url, n.url) AS url, o.old_hash, n.new_hash,
-                   CASE WHEN o.url IS NULL THEN 'added'
-                        WHEN n.url IS NULL THEN 'removed'
-                        WHEN o.old_hash = n.new_hash THEN 'unchanged'
-                        ELSE 'changed' END AS status
+                   {_SNAPSHOT_STATUS_SQL} AS status
             FROM o FULL OUTER JOIN n ON o.url = n.url
         """,
         # Bloom gate: the oracle replays the bitmap semantically — all k
@@ -2566,16 +2637,7 @@ def oracle_sql() -> dict[str, str]:
         # driver certifies the kernel's FALSE POSITIVES too, not just true
         # hits. Geometry constants interpolate from operators.dedup.
         "dedup_bloom": f"""
-            WITH remap AS (
-              SELECT doc_id, text,
-                     CASE WHEN doc_id % 10 = 7 THEN doc_id - (doc_id % 100) + 7
-                          WHEN doc_id % 5 = 0 THEN doc_id - (doc_id % 20)
-                          ELSE doc_id END AS base_id
-              FROM documents
-            ), c AS (
-              SELECT r.doc_id, coalesce(b.text, r.text) AS text
-              FROM remap r LEFT JOIN documents b ON b.doc_id = r.base_id
-            ), hashed AS (
+            WITH {_REMAP_CTES}, hashed AS (
               -- batch side mirrors the Spark sentinel: null text keeps its
               -- per-doc identity and probes like any digest; history nulls
               -- are dropped before the filter build (nothing can match)
@@ -2913,27 +2975,13 @@ def oracle_sql() -> dict[str, str]:
             FROM bsz GROUP BY band
         """,
         "dedup_simhash": f"""
-            WITH tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS token FROM documents),
-            h AS (SELECT doc_id, CAST({_hex2int('md5(token)')} AS BIGINT) AS h FROM tok),
-            votes AS (SELECT doc_id,
-                      {', '.join(f"sum(CASE WHEN (h // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(dedup.SIMHASH_BITS))}
-                      FROM h GROUP BY doc_id),
-            fp AS (SELECT doc_id,
-                   CAST({' + '.join(f"CASE WHEN v{i} > 0 THEN {2 ** i} ELSE 0 END" for i in range(dedup.SIMHASH_BITS))} AS BIGINT) AS simhash
-                   FROM votes),
+            WITH {_simhash_ctes()},
             k AS (SELECT doc_id, CAST(simhash // {_SIMHASH_DIV} AS BIGINT) AS bucket FROM fp)
             SELECT a.doc_id AS id1, b.doc_id AS id2, a.bucket AS bucket
             FROM k a JOIN k b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
         """,
         "dedup_simhash_multiprobe": f"""
-            WITH tok AS (SELECT doc_id, unnest({_TOKS_SQL}) AS token FROM documents),
-            h AS (SELECT doc_id, CAST({_hex2int('md5(token)')} AS BIGINT) AS h FROM tok),
-            votes AS (SELECT doc_id,
-                      {', '.join(f"sum(CASE WHEN (h // {2 ** i}) % 2 = 1 THEN 1 ELSE -1 END) AS v{i}" for i in range(dedup.SIMHASH_BITS))}
-                      FROM h GROUP BY doc_id),
-            fp AS (SELECT doc_id,
-                   CAST({' + '.join(f"CASE WHEN v{i} > 0 THEN {2 ** i} ELSE 0 END" for i in range(dedup.SIMHASH_BITS))} AS BIGINT) AS simhash
-                   FROM votes),
+            WITH {_simhash_ctes()},
             k AS ({_simhash_rotated_buckets()}
             )
             SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
@@ -2941,33 +2989,7 @@ def oracle_sql() -> dict[str, str]:
               ON a.rot = b.rot AND a.bucket = b.bucket AND a.doc_id < b.doc_id
         """,
         "dedup_corpus_keep": f"""
-            WITH {_minhash_sig_ctes(with_lang=True)},
-            sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-            shf AS (SELECT * FROM sh WHERE shingle NOT IN (
-                      SELECT shingle FROM (
-                        SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-                      WHERE df > {dedup.MAX_SHINGLE_DF})),
-            bok AS (SELECT band, band_hash FROM bands
-                    GROUP BY band, band_hash HAVING count(*) BETWEEN 2 AND {dedup.MAX_BUCKET_SIZE}),
-            cands AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-                      FROM bands a
-                      JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
-                                  AND a.doc_id < b.doc_id
-                      JOIN bok kk ON a.band = kk.band AND a.band_hash = kk.band_hash),
-            inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_common
-                      FROM shf a JOIN shf b
-                        ON a.lang = b.lang AND a.shingle = b.shingle
-                       AND a.doc_id < b.doc_id
-                      GROUP BY 1, 2),
-            near AS (SELECT DISTINCT i.id2 AS doc_id
-                     FROM inter i
-                     JOIN sizes sa ON i.id1 = sa.doc_id
-                     JOIN sizes sb ON i.id2 = sb.doc_id
-                     JOIN cands c ON c.id1 = i.id1 AND c.id2 = i.id2
-                     WHERE round(i.n_common / (sa.n_sh + sb.n_sh - i.n_common), 6)
-                           >= {dedup.NEAR_DUP_JACCARD}),
-            ex AS (SELECT md5(text) AS chash, min(doc_id) AS keeper
-                   FROM documents GROUP BY 1),
+            WITH {_near_dup_ctes('DISTINCT i.id2 AS doc_id')},
             exl AS (SELECT d.doc_id, 'exact_dup' AS drop_reason
                     FROM documents d JOIN ex e ON md5(d.text) = e.chash
                     WHERE d.doc_id <> e.keeper),
@@ -3001,19 +3023,7 @@ def oracle_sql() -> dict[str, str]:
         # bigram surprise: ctx(w1) // c2(w1,w2) — all integers, div and
         # // agree (nonnegative); keep rule cross-multiplied
         "lm_bigram_score": f"""
-            WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
-            bgx AS (SELECT doc_id,
-                           unnest(list_transform(
-                             generate_series(1, len(toks) - 1),
-                             i -> struct_pack(w1 := toks[i],
-                                              w2 := toks[i+1]))) AS b
-                    FROM t WHERE len(toks) >= 2),
-            bgf AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bgx),
-            c2 AS (SELECT w1, w2, count(*) AS c2 FROM bgf GROUP BY 1, 2),
-            ctx AS (SELECT w1, count(*) AS ctx FROM bgf GROUP BY 1),
-            rt AS (SELECT c2.w1, c2.w2,
-                          CAST(ctx.ctx // c2.c2 AS BIGINT) AS r
-                   FROM c2 JOIN ctx USING (w1)),
+            WITH {_BIGRAM_CTES},
             per AS (SELECT doc_id,
                            CAST(count(*) AS BIGINT) AS n_bigrams,
                            CAST(sum(r) AS BIGINT) AS sum_r,
@@ -3183,18 +3193,7 @@ def oracle_sql() -> dict[str, str]:
             WITH {_lsh_sig_cte()},
             probes AS (SELECT vec_id AS probe_id, bucket AS pb, v AS pv, nm AS pn
                        FROM sig WHERE vec_id < {similarity.ANN_PROBES}),
-            corpus AS (SELECT vec_id AS cand_id, bucket AS cb, v AS cv, nm AS cn
-                       FROM sig WHERE vec_id >= {similarity.ANN_PROBES}),
-            scored AS (SELECT probe_id, cand_id,
-                              round(list_inner_product(pv, cv) / (pn * cn), 4)
-                                AS cosine
-                       FROM probes JOIN corpus ON pb = cb),
-            ranked AS (SELECT probe_id, cand_id, cosine,
-                              CAST(row_number() OVER (PARTITION BY probe_id
-                                   ORDER BY cosine DESC, cand_id) AS INTEGER)
-                                AS rank
-                       FROM scored)
-            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= {similarity.LSH_K}
+            {_lsh_rank_sql()}
         """,
         "ann_lsh_multiprobe": f"""
             WITH {_lsh_sig_cte()},
@@ -3204,18 +3203,7 @@ def oracle_sql() -> dict[str, str]:
                                 AS pb,
                               v AS pv, nm AS pn
                        FROM sig WHERE vec_id < {similarity.ANN_PROBES}),
-            corpus AS (SELECT vec_id AS cand_id, bucket AS cb, v AS cv, nm AS cn
-                       FROM sig WHERE vec_id >= {similarity.ANN_PROBES}),
-            scored AS (SELECT probe_id, cand_id,
-                              round(list_inner_product(pv, cv) / (pn * cn), 4)
-                                AS cosine
-                       FROM probes JOIN corpus ON pb = cb),
-            ranked AS (SELECT probe_id, cand_id, cosine,
-                              CAST(row_number() OVER (PARTITION BY probe_id
-                                   ORDER BY cosine DESC, cand_id) AS INTEGER)
-                                AS rank
-                       FROM scored)
-            SELECT probe_id, rank, cand_id, cosine FROM ranked WHERE rank <= {similarity.LSH_K}
+            {_lsh_rank_sql()}
         """,
         # lsh_signatures' buckets must equal the md5-parity plane formula
         "lsh_signatures_np": f"""
@@ -3365,17 +3353,7 @@ def oracle_sql() -> dict[str, str]:
         # from the interpolated template pieces), so a parser that
         # mis-advances the record cursor breaks every later record's hash
         "warc_scan": f"""
-            WITH h AS (
-              SELECT doc_id, {_URL_SQL} AS url,
-                     strftime(TIMESTAMP '2024-01-01 00:00:00'
-                              + to_seconds(doc_id * 61),
-                              '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                     {_sq(_PAGE_TMPL.split("{paras}")[0] + "<p>")} || text
-                       || {_sq(_PROMO)} || reverse(text)
-                       || {_sq("</p>" + _PAGE_TMPL.split("{paras}")[1])}
-                       AS html
-              FROM documents
-            )
+            WITH {_warc_page_cte('')}
             SELECT url, warc_date,
                    -- BYTE length (the Spark side frames the utf-8 payload):
                    -- char-count length() only coincides on ASCII text
@@ -3643,19 +3621,7 @@ def oracle_sql() -> dict[str, str]:
         # CCNet terciles: lm_bigram surprise chain + per-(lang, m)
         # histogram + cumulative window over the histogram dim
         "ccnet_buckets": f"""
-            WITH t AS (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents),
-            bgx AS (SELECT doc_id,
-                           unnest(list_transform(
-                             generate_series(1, len(toks) - 1),
-                             i -> struct_pack(w1 := toks[i],
-                                              w2 := toks[i+1]))) AS b
-                    FROM t WHERE len(toks) >= 2),
-            bgf AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bgx),
-            c2 AS (SELECT w1, w2, count(*) AS c2 FROM bgf GROUP BY 1, 2),
-            ctx AS (SELECT w1, count(*) AS ctx FROM bgf GROUP BY 1),
-            rt AS (SELECT c2.w1, c2.w2,
-                          CAST(ctx.ctx // c2.c2 AS BIGINT) AS r
-                   FROM c2 JOIN ctx USING (w1)),
+            WITH {_BIGRAM_CTES},
             per AS (SELECT doc_id, count(*) AS n_bigrams, sum(r) AS sum_r
                     FROM bgf JOIN rt USING (w1, w2) GROUP BY 1),
             sc AS (SELECT d.doc_id, d.lang,
@@ -3832,18 +3798,7 @@ def oracle_sql() -> dict[str, str]:
     # point reads through the CDX index must decode the same records the
     # synth closed form describes — md5 over the INFLATED payload bytes
     sql["warc_cdx_lookup"] = f"""
-        WITH h AS (
-          SELECT doc_id, {_URL_SQL} AS url,
-                 strftime(TIMESTAMP '2024-01-01 00:00:00'
-                          + to_seconds(doc_id * 61),
-                          '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                 {_sq(_PAGE_TMPL.split("{paras}")[0] + "<p>")} || text
-                   || {_sq(_PROMO)} || reverse(text)
-                   || {_sq("</p>" + _PAGE_TMPL.split("{paras}")[1])}
-                   AS html
-          FROM documents
-          WHERE doc_id % {warc.CDX_PROBE_MOD} = 0
-        )
+        WITH {_warc_page_cte(f"WHERE doc_id % {warc.CDX_PROBE_MOD} = 0")}
         SELECT url, warc_date, md5(html) AS payload_md5
         FROM h
     """
@@ -3939,17 +3894,7 @@ def oracle_sql() -> dict[str, str]:
     # contribute exactly one 'quarantined' row each — both branches in
     # closed form
     sql["warc_quarantine_scan"] = f"""
-        WITH h AS (
-          SELECT doc_id, {_URL_SQL} AS url,
-                 strftime(TIMESTAMP '2024-01-01 00:00:00'
-                          + to_seconds(doc_id * 61),
-                          '%Y-%m-%dT%H:%M:%SZ') AS warc_date,
-                 {_sq(_PAGE_TMPL.split("{paras}")[0] + "<p>")} || text
-                   || {_sq(_PROMO)} || reverse(text)
-                   || {_sq("</p>" + _PAGE_TMPL.split("{paras}")[1])}
-                   AS html
-          FROM documents
-        )
+        WITH {_warc_page_cte('')}
         SELECT CAST(doc_id // {warc.RECORDS_PER_FILE} AS BIGINT) AS file_id, url, warc_date,
                CAST(octet_length(encode(html)) AS BIGINT) AS content_length,
                md5(html) AS payload_md5, 'ok' AS status
@@ -4141,18 +4086,10 @@ def oracle_sql() -> dict[str, str]:
         FROM tk t LEFT JOIN sc USING (doc_id) LEFT JOIN g USING (doc_id)
     """
     # batch-perceptron training replay (learned weights + learned scoring)
-    sql["quality_classifier_train"] = _perceptron_train_oracle(
-        textstats.CLF_EPOCHS
-    )
-    sql["quality_classifier_learned"] = _perceptron_learned_oracle(
-        textstats.CLF_EPOCHS
-    )
-    sql["quality_classifier_eval"] = _perceptron_eval_oracle(
-        textstats.CLF_EPOCHS
-    )
-    sql["quality_classifier_pr_curve"] = _perceptron_pr_curve_oracle(
-        textstats.CLF_EPOCHS
-    )
+    sql["quality_classifier_train"] = _perceptron_train_oracle()
+    sql["quality_classifier_learned"] = _perceptron_learned_oracle()
+    sql["quality_classifier_eval"] = _perceptron_eval_oracle()
+    sql["quality_classifier_pr_curve"] = _perceptron_pr_curve_oracle()
     # Gopher signals: integer pairs + guarded divisions; the keep rule is
     # cross-multiplied integer comparisons (never rounded floats); the
     # bigram mode is a doc-partitioned row_number with pinned ties
@@ -4259,9 +4196,7 @@ def oracle_sql() -> dict[str, str]:
         SELECT 'precision_floor' AS pick, thr, tp, fp, fn, tn, prec, rec, f1
         FROM qtp_fl WHERE rn = 1
     """
-    sql["quality_gate_calibrated"] = _perceptron_gate_calibrated_oracle(
-        textstats.CLF_EPOCHS
-    )
+    sql["quality_gate_calibrated"] = _perceptron_gate_calibrated_oracle()
     # the composite curation verdict reuses the stage oracles as CTEs, so
     # the END-TO-END flow is hash-checked, not just its parts (DuckDB
     # supports nested WITH inside a CTE body)
@@ -4386,34 +4321,27 @@ def oracle_sql() -> dict[str, str]:
         FROM e WHERE src_id <> dst_id
         GROUP BY src_id, dst_id
     """
-    sql["host_pagerank"] = _pagerank_oracle(linkgraph.PR_ITERS)
-    sql["host_hits"] = _hits_oracle(linkgraph.HITS_ITERS)
-    sql["host_trustrank"] = _pagerank_oracle(
-        linkgraph.PR_ITERS, seed_mod=linkgraph.TRUST_SEED_MOD
-    )
+    sql["host_pagerank"] = _pagerank_oracle()
+    sql["host_hits"] = _hits_oracle()
+    sql["host_trustrank"] = _pagerank_oracle(linkgraph.TRUST_SEED_MOD)
     # spam mass: the two rank replays composed as subquery CTEs (each
     # carries its own WITH chain; names are scoped per subquery); the
     # greatest(·, 0) clamp keeps // and Spark's div on nonnegative
     # operands, where they agree
-    _sm = (
-        f"(greatest(pr.rank_fp - tr.rank_fp, 0) * {linkgraph.SPAM_SCALE})"
-        " // pr.rank_fp"
-    )
-    sql["host_communities"] = _lpa_oracle(linkgraph.LPA_ITERS)
-    _csm = (
-        f"(greatest(pagerank_fp - trustrank_fp, 0) * {linkgraph.SPAM_SCALE})"
-        " // pagerank_fp"
-    )
+    def spam_mass(pr: str, tr: str) -> str:
+        return f"(greatest({pr} - {tr}, 0) * {linkgraph.SPAM_SCALE}) // {pr}"
+
+    _sm = spam_mass("pr.rank_fp", "tr.rank_fp")
+    _spam_cand = f"CAST({_sm} >= {linkgraph.SPAM_THRESHOLD_FP} AS INTEGER)"
+    _ranks = f"""pr AS ({_pagerank_oracle()}),
+        tr AS ({_pagerank_oracle(linkgraph.TRUST_SEED_MOD)})"""
+    sql["host_communities"] = _lpa_oracle()
     sql["community_profiles"] = f"""
-        WITH comm AS ({_lpa_oracle(linkgraph.LPA_ITERS)}),
-        pr AS ({_pagerank_oracle(linkgraph.PR_ITERS)}),
-        tr AS ({_pagerank_oracle(linkgraph.PR_ITERS,
-                                 seed_mod=linkgraph.TRUST_SEED_MOD)}),
+        WITH comm AS ({_lpa_oracle()}),
+        {_ranks},
         sm AS (
           SELECT pr.host, pr.rank_fp AS h_pr, tr.rank_fp AS h_tr,
-                 CAST((greatest(pr.rank_fp - tr.rank_fp, 0)
-                       * {linkgraph.SPAM_SCALE}) // pr.rank_fp
-                      >= {linkgraph.SPAM_THRESHOLD_FP} AS INTEGER) AS cand
+                 {_spam_cand} AS cand
           FROM pr JOIN tr USING (host)),
         agg AS (
           SELECT c.community_id, count(*) AS n_hosts,
@@ -4423,18 +4351,16 @@ def oracle_sql() -> dict[str, str]:
           FROM comm c JOIN sm s USING (host)
           GROUP BY 1)
         SELECT community_id, n_hosts, pagerank_fp, trustrank_fp,
-               {_csm} AS spam_mass_fp, n_spam_hosts
+               {spam_mass('pagerank_fp', 'trustrank_fp')} AS spam_mass_fp,
+               n_spam_hosts
         FROM agg
     """
     sql["host_spam_mass"] = f"""
-        WITH pr AS ({_pagerank_oracle(linkgraph.PR_ITERS)}),
-        tr AS ({_pagerank_oracle(linkgraph.PR_ITERS,
-                                 seed_mod=linkgraph.TRUST_SEED_MOD)})
+        WITH {_ranks}
         SELECT pr.host, pr.rank_fp AS pagerank_fp,
                tr.rank_fp AS trustrank_fp,
                {_sm} AS spam_mass_fp,
-               CAST({_sm} >= {linkgraph.SPAM_THRESHOLD_FP} AS INTEGER)
-                 AS spam_candidate
+               {_spam_cand} AS spam_candidate
         FROM pr JOIN tr USING (host)
     """
     # trained language ID (Cavnar-Trenkle n-gram rank profiles): training
@@ -4508,34 +4434,17 @@ def oracle_sql() -> dict[str, str]:
     # r5 web-curation additions: anchor text, templates, mirrors,
     # collocations, canonical keepers, host language mix
     NH, LF = linkgraph.N_HOSTS, linkgraph.LINK_FANOUT
-    quote_suffix = dedup.QUOTE_SUFFIX.replace("'", "''")
     sql["containment_pairs"] = f"""
-        WITH docs2 AS (
-          SELECT doc_id, lang, text FROM documents
-          UNION ALL
-          SELECT doc_id + {dedup.QUOTE_ID_BASE}, lang,
-                 substr(text, 1, greatest((length(text) * 2) // 5, 1))
-                   || '{quote_suffix}'
-          FROM documents WHERE doc_id % {dedup.QUOTE_MOD} = 0),
+        WITH {_quote_docs_cte()},
         toks AS (SELECT doc_id, lang, {_TOKS_SQL} AS l FROM docs2),
         sh AS (SELECT doc_id, lang, unnest({_SHINGLES_SQL}) AS shingle
                FROM toks),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-        shf AS (SELECT * FROM sh WHERE shingle NOT IN (
-                  SELECT shingle FROM (
-                    SELECT shingle, count(*) AS df FROM sh GROUP BY 1)
-                  WHERE df > {dedup.CONTAIN_MAX_DF})),
-        inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-                         count(*) AS n_common
-                  FROM shf a JOIN shf b
-                    ON a.lang = b.lang AND a.shingle = b.shingle
-                   AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
+        {_shingle_cap_ctes(dedup.CONTAIN_MAX_DF)},
+        {_SHINGLE_INTER_CTE},
         sc AS (SELECT i.id1, i.id2, i.n_common,
                       round(i.n_common / sa.n_sh, 6) AS containment1,
                       round(i.n_common / sb.n_sh, 6) AS containment2,
-                      round(i.n_common / (sa.n_sh + sb.n_sh - i.n_common), 6)
-                        AS jaccard
+                      {_JACCARD_SQL} AS jaccard
                FROM inter i
                JOIN sizes sa ON i.id1 = sa.doc_id
                JOIN sizes sb ON i.id2 = sb.doc_id)
@@ -4565,20 +4474,11 @@ def oracle_sql() -> dict[str, str]:
                r.n_anchors, r.n_src_hosts, t.top_anchor, t.top_anchor_n
         FROM roll r JOIN top t USING (dst_id)
     """
-    tmpl_pre, tmpl_post = (s.replace("'", "''") for s in _PAGE_TMPL.split("{paras}"))
-    promo_sql = _PROMO.replace("'", "''")
     sql["template_fingerprint"] = f"""
-        WITH pages AS (
-          SELECT 'https://docs.example.org/' || source || '/' ||
-                   CAST(doc_id AS VARCHAR) AS url,
-                 '<ul>' || repeat('<li>i</li>', CAST(doc_id % {webstruct.LI_MOD} AS INT))
-                   || '</ul>' || '{tmpl_pre}' || '<p>' || text || '{promo_sql}'
-                   || reverse(text) || '</p>' || '{tmpl_post}' AS html2
-          FROM documents),
+        WITH {_template_pages_cte()},
         sig AS (
           SELECT url,
-                 md5(array_to_string(
-                   regexp_extract_all(html2, '{webstruct.TAG_RE}', 1), ','))
+                 {_template_sig_sql('html2')}
                    AS template_sig,
                  len(regexp_extract_all(html2, '{webstruct.TAG_RE}', 1)) AS n_tags
           FROM pages)
@@ -4625,25 +4525,9 @@ def oracle_sql() -> dict[str, str]:
         ORDER BY lift_fp DESC, b.w1, b.w2 LIMIT {index.COLL_K}
     """
     sql["crawl_change_rate"] = f"""
-        WITH u AS (
-          SELECT doc_id,
-                 'https://docs.example.org/' || source || '/'
-                   || CAST(doc_id AS VARCHAR) AS url,
-                 text
-          FROM documents
-        ), o AS (
-          SELECT url, md5(text) AS old_hash FROM u WHERE doc_id < 400
-        ), n AS (
-          SELECT url,
-                 md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2'
-                      ELSE text END) AS new_hash
-          FROM u WHERE doc_id >= 100
-        ), diff AS (
+        WITH {_SNAPSHOT_CTES}, diff AS (
           SELECT coalesce(o.url, n.url) AS url,
-                 CASE WHEN o.url IS NULL THEN 'added'
-                      WHEN n.url IS NULL THEN 'removed'
-                      WHEN o.old_hash = n.new_hash THEN 'unchanged'
-                      ELSE 'changed' END AS status
+                 {_SNAPSHOT_STATUS_SQL} AS status
           FROM o FULL OUTER JOIN n ON o.url = n.url
         ), agg AS (
           SELECT regexp_extract(url, 'org/([^/]+)/', 1) AS section,
@@ -4809,13 +4693,7 @@ def oracle_sql() -> dict[str, str]:
     # winnowing: quote-augmented corpus (the containment docs2 CTE) →
     # md5_60 k-gram hashes → rightmost-min window selection → matches
     _winnow_sel = f"""
-        docs2 AS (
-          SELECT doc_id, lang, text FROM documents
-          UNION ALL
-          SELECT doc_id + {dedup.QUOTE_ID_BASE}, lang,
-                 substr(text, 1, greatest((length(text) * 2) // 5, 1))
-                   || '{quote_suffix}'
-          FROM documents WHERE doc_id % {dedup.QUOTE_MOD} = 0),
+        {_quote_docs_cte()},
         wbase AS (SELECT doc_id, lower(coalesce(text, '')) AS t,
                          length(lower(coalesce(text, ''))) AS n
                   FROM docs2),
@@ -5072,21 +4950,9 @@ def oracle_sql() -> dict[str, str]:
           FROM (SELECT doc_id, lang, {_TOKS_SQL} AS l2 FROM documents
                 WHERE doc_id % {dedup.PARTIAL_MOD} = 0)),
         {_recall_sig},
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        shf AS (SELECT * FROM sh WHERE shingle NOT IN (
-                  SELECT shingle FROM (
-                    SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
-                  WHERE df > {dedup.MAX_SHINGLE_DF})),
-        inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-                         count(*) AS n_common
-                  FROM shf a JOIN shf b
-                    ON a.lang = b.lang AND a.shingle = b.shingle
-                   AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
-        truth AS (SELECT i.id1, i.id2,
-                         round(i.n_common
-                               / (sa.n_sh + sb.n_sh - i.n_common), 6)
-                           AS jaccard
+        {_shingle_cap_ctes(dedup.MAX_SHINGLE_DF)},
+        {_SHINGLE_INTER_CTE},
+        truth AS (SELECT i.id1, i.id2, {_JACCARD_SQL} AS jaccard
                   FROM inter i
                   JOIN sizes sa ON i.id1 = sa.doc_id
                   JOIN sizes sb ON i.id2 = sb.doc_id),
@@ -5135,14 +5001,7 @@ def oracle_sql() -> dict[str, str]:
     sql["template_extract_metrics"] = f"""
         WITH t AS (
           SELECT doc_id, text,
-                 md5(array_to_string(
-                   regexp_extract_all(
-                     '<ul>' || repeat('<li>i</li>',
-                                      CAST(doc_id % {webstruct.LI_MOD} AS INT))
-                       || '</ul>' || '{tmpl_pre}' || '<p>' || text
-                       || '{promo_sql}' || reverse(text) || '</p>'
-                       || '{tmpl_post}',
-                     '{webstruct.TAG_RE}', 1), ',')) AS template_sig
+                 {_template_sig_sql(_template_html_sql())} AS template_sig
           FROM documents),
         agg AS (
           SELECT template_sig, count(*) AS n_pages,
@@ -5159,17 +5018,10 @@ def oracle_sql() -> dict[str, str]:
         FROM agg
     """
     sql["template_sample"] = f"""
-        WITH pages AS (
-          SELECT 'https://docs.example.org/' || source || '/' ||
-                   CAST(doc_id AS VARCHAR) AS url,
-                 '<ul>' || repeat('<li>i</li>', CAST(doc_id % {webstruct.LI_MOD} AS INT))
-                   || '</ul>' || '{tmpl_pre}' || '<p>' || text || '{promo_sql}'
-                   || reverse(text) || '</p>' || '{tmpl_post}' AS html2
-          FROM documents),
+        WITH {_template_pages_cte()},
         sig AS (
           SELECT url,
-                 md5(array_to_string(
-                   regexp_extract_all(html2, '{webstruct.TAG_RE}', 1), ','))
+                 {_template_sig_sql('html2')}
                    AS template_sig
           FROM pages),
         sizes AS (SELECT template_sig, count(*) AS n_pages

@@ -9,7 +9,7 @@ Attribute, an import alias or an identifier-valued string constant.
 Names, not bindings: a reference to ``foo`` reaches every ``foo``, so
 the walk over-approximates and never flags a live definition. The one
 binding it does resolve is an import of a package module: ``from . import
-dedup_stream`` names the module, not the function ``dedup_stream`` in it.
+dedup`` names the module, not a function ``dedup`` anywhere in the package.
 
 A definition the walk does not reach is called only from ``tests/`` (or
 from nowhere): delete it, or move it into ``tests/`` if it is a
@@ -32,7 +32,6 @@ ALLOWLIST = {
     ("pipeline.py", "export_training_corpus"): "the paper's end product",
     ("operators/evaluation.py", "two_step_eval"): "the paper's two-step evaluation",
     ("operators/evaluation.py", "two_step_summary"): "its corpus-level summary",
-    ("streaming/dedup_stream.py", "extract_dedup_stream"): "the continuous-ingest shape",
 }
 
 
@@ -139,12 +138,15 @@ def test_every_package_definition_is_reached():
 
 
 def test_module_import_is_not_a_reference_to_a_same_named_function():
-    """``streaming/__init__.py`` imports the MODULE ``dedup_stream``; the
-    function ``dedup_stream.dedup_stream`` is reached only through the
-    allowlisted extract_dedup_stream, so dropping that entry flags it."""
-    defs, roots = _package()
-    roots |= _outside_roots()
-    fn = ("streaming/dedup_stream.py", "dedup_stream")
-    allow = set(ALLOWLIST) - {("streaming/dedup_stream.py", "extract_dedup_stream")}
-    assert fn in _reached(defs, roots, extra=ALLOWLIST)
-    assert fn not in _reached(defs, roots, extra=allow)
+    """An import of a package module, absolute or relative at any level,
+    names the MODULE: none of its names is a reference. An import of a
+    definition, and any other name, is."""
+    src = ast.parse(
+        "from . import dedup\n"
+        "from .. import kernel\n"
+        "import sbb_ocr_postcorrection_spark.pipeline\n"
+        "from .dedup import near_dup_pairs\n"
+        "from ..kernel import run_document as rd\n"
+    )
+    names = _names(src, f"{PKG.name}.operators")
+    assert names == {"near_dup_pairs", "run_document"}
